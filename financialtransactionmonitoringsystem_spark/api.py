@@ -7,7 +7,14 @@ process-local array lost on restart (``monitoring-service/src/main.rs:24-25``).
 ``TransactionStore`` is the drop-in Spark equivalent: same three verbs,
 same observable semantics (duplicates allowed, insertion order preserved,
 lookup returns the first match -- SURVEY.md §2.1), but parquet-durable,
-restart-safe, and unbounded in size.
+restart-safe, and unbounded in size.  It is the engine's only list-all
+and first-match lookup; the latest-row lookup over the compacted serving
+table is ``streaming.pipeline.serving_lookup``.
+
+A store that does not exist yet reads as empty.  Any other read failure
+(a corrupt part file) raises from the verb that hit it -- ``append``
+included, before it writes -- so a broken store never reads as empty
+and never restarts ``ingest_seq`` from 0.
 
 Scale notes:
 * ``ingest_seq`` is a global insertion sequence.  Here it continues from
@@ -25,7 +32,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .schemas import TRANSACTION_TABLE_SCHEMA
 from .sources import json_ingest
+from .tables import read_engine_table
 
 
 class TransactionStore:
@@ -66,13 +75,11 @@ class TransactionStore:
         return self._table().count()
 
     def _table(self) -> DataFrame:
-        try:
-            return self.spark.read.parquet(self.path)
-        except Exception:
+        df = read_engine_table(self.spark, self.path, TRANSACTION_TABLE_SCHEMA)
+        if df is None:  # no partitions: actions on it start no task
             return self.spark.createDataFrame(
-                [], json_ingest.with_derived(
-                    self.spark.createDataFrame([], json_ingest.TRANSACTION_JSON_SCHEMA)
-                ).schema)
+                self.spark.sparkContext.emptyRDD(), TRANSACTION_TABLE_SCHEMA)
+        return df
 
     def _max_seq(self) -> int:
         df = self._table()

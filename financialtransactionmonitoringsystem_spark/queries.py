@@ -13,24 +13,15 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from .functions import scalar
-from .operators import aggregates, relational, setops, topk, windows
+from .operators import (aggregates, curate, dedup, extras, layout,
+                        multimodal, relational, setops, similarity, skew,
+                        text, timeseries, topk, udfs, windows)
+from .sources import txfeed
+from .streaming import batch_twins
 
-_MODULES = [relational, aggregates, windows, setops, topk, scalar]
-
-# Extended modules land as milestones complete; import-guarded so a broken
-# module never takes down the whole registry during development.
-for _name in ("streaming.batch_twins", "operators.text", "operators.dedup",
-              "operators.similarity", "operators.multimodal",
-              "operators.extras", "operators.skew", "operators.curate",
-              "operators.timeseries", "operators.udfs", "operators.layout",
-              "sources.txfeed"):
-    try:
-        import importlib
-
-        _MODULES.append(
-            importlib.import_module(f"{__package__}.{_name}"))
-    except ImportError:
-        pass
+_MODULES = [relational, aggregates, windows, setops, topk, scalar,
+            batch_twins, text, dedup, similarity, multimodal, extras, skew,
+            curate, timeseries, udfs, layout, txfeed]
 
 
 # The driver's correctness gate evaluates queries() in registration order with

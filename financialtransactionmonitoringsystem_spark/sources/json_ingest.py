@@ -6,41 +6,24 @@ Behavioral parity decisions (SURVEY.md §2.1 quirks):
   matched by reading with an explicit schema.
 * Malformed rows become all-NULL rows rather than failing the batch
   (the Rust service returns 500 per bad request; a distributed engine
-  quarantines instead of crashing) -- exposed via ``_corrupt_record``.
-* The Rust service's struct has no ``type`` field, so ``type`` is lost on
-  that path (``main.rs:7-15``): ``rust_shape`` reproduces it.
+  quarantines instead of crashing); a field of the wrong type reads as
+  NULL.  Exception: under ANSI an unparseable ``timestamp`` fails the
+  whole batch when ``ts`` is derived.
 * Duplicate ``transaction_id`` values are allowed; lookups return the
   first match in ingest order (``main.go:67-71``) -- ``ingest_seq``
-  makes that deterministic in a distributed setting.
+  makes that deterministic in a distributed setting.  The verbs over
+  the stored table live in ``api.TransactionStore``; this module only
+  shapes rows into it.
 * The reference truncates request bodies at 1024 bytes (``main.rs:55-60``);
   the engine deliberately does NOT replicate that cliff (tested).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import ISO8601_MICROS, TRANSACTION_JSON_SCHEMA
-
-
-def read_transactions_json(spark: SparkSession, path: str,
-                           multi_line: bool = True) -> DataFrame:
-    """Batch-ingest a JSON file/array of transactions with the canonical
-    schema and derived columns.
-
-    ``ingest_seq`` derives from file order; this loader coalesces to one
-    partition to pin insertion order exactly (golden-fixture scale).  At
-    production scale the sequence comes from the streaming source offset
-    (Kafka partition+offset), not a global coalesce.
-    """
-    df = (
-        spark.read
-        .option("multiLine", "true" if multi_line else "false")
-        .schema(TRANSACTION_JSON_SCHEMA)
-        .json(path)
-    )
-    return with_derived(df.coalesce(1))
 
 
 def ingest_rows(spark: SparkSession, rows: list[dict]) -> DataFrame:
@@ -65,35 +48,6 @@ def with_derived(df: DataFrame, ingest_seq=None) -> DataFrame:
                     F.monotonically_increasing_id()
                     if ingest_seq is None else ingest_seq)
     )
-
-
-def rust_shape(df: DataFrame) -> DataFrame:
-    """The monitoring-service view of a transaction: ``type`` does not
-    exist in its struct and is silently dropped (``main.rs:7-15``)."""
-    return df.withColumn("type", F.lit(None).cast("string"))
-
-
-def list_all(df: DataFrame) -> DataFrame:
-    """O2 list-all: every row in insertion order (``main.go:51-53``)."""
-    return df.orderBy("ingest_seq")
-
-
-def point_lookup(df: DataFrame, transaction_id: str) -> DataFrame:
-    """O3 point lookup: FIRST row matching the id in ingest order
-    (``main.rs:94-95`` ``iter().find``; duplicates allowed)."""
-    return (
-        df.filter(F.col("transaction_id") == transaction_id)
-        .orderBy("ingest_seq")
-        .limit(1)
-    )
-
-
-def dedup_first(df: DataFrame) -> DataFrame:
-    """The ingest invariant the reference lacks: one row per
-    transaction_id, keeping the first by ingest order."""
-    w = W.partitionBy("transaction_id").orderBy("ingest_seq")
-    return df.withColumn("__rn", F.row_number().over(w)).filter(
-        F.col("__rn") == 1).drop("__rn")
 
 
 def stream_transactions_json(spark: SparkSession, dir_path: str) -> DataFrame:

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import apply_runtime_confs
-from ..tables import _normalize_events_ts
+from ..tables import _normalize_events_ts, read_engine_table
 from ..util import rnd
 
 # State-store provider for stateful streaming at scale (VERDICT r5 #8):
@@ -808,7 +808,7 @@ def ingest_pipeline_sink(score, out_dir: str, metrics_dir: str):
     An EMPTY micro-batch (a source trigger can fire with no files)
     lands zero rows, and a dynamic partition overwrite of an empty
     frame writes no partition at all -- so the read-back goes through
-    :func:`_read_existing_partitions`, which distinguishes "no table
+    :func:`tables.read_engine_table`, which distinguishes "no table
     yet" from a real read error; no data landed means no metrics rows
     for the epoch, which is itself the correct (conserved) funnel."""
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
@@ -819,11 +819,11 @@ def ingest_pipeline_sink(score, out_dir: str, metrics_dir: str):
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("__epoch")
          .parquet(out_dir))
-        landed = _read_existing_partitions(spark, out_dir, "__epoch",
-                                           [int(epoch_id)])
+        landed = read_engine_table(spark, out_dir)
         if landed is None:
             return
-        (landed.groupBy(F.coalesce("reject_stage", F.lit("admitted"))
+        (landed.filter(F.col("__epoch") == int(epoch_id))
+         .groupBy(F.coalesce("reject_stage", F.lit("admitted"))
                         .alias("verdict"))
          .agg(F.count(F.lit(1)).alias("n_docs"),
               F.sum("n_chars").alias("n_chars"))
@@ -1574,32 +1574,6 @@ def run_scoring(docs_stream: DataFrame, scorer, out_dir: str,
             .trigger(availableNow=True).start())
 
 
-def _read_existing_partitions(spark: SparkSession, out_dir: str,
-                              part_col: str, touched: list):
-    """Read only the touched partitions of a foreachBatch-maintained
-    parquet table, or ``None`` when the table does not exist yet (first
-    micro-batch).  Any other read failure propagates: a sink that treats
-    a real error as "first batch" silently discards history (ADVICE r3,
-    high -- the old bare ``except Exception`` did exactly that when a
-    schema drift made unionByName throw)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        df = spark.read.parquet(out_dir)
-    except AnalysisException as e:
-        # getCondition() replaces the deprecated getErrorClass() in
-        # PySpark 4; keep a fallback for 3.x runtimes.
-        cond = getattr(e, "getCondition", e.getErrorClass)() or ""
-        # PATH_NOT_FOUND: table dir absent.  UNABLE_TO_INFER_SCHEMA: dir
-        # exists but holds no data files (e.g. mkdtemp pre-created it).
-        # Both mean "no history yet"; anything else is a real read error
-        # and must propagate, not silently discard history.
-        if cond not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            raise
-        return None
-    return df.filter(F.col(part_col).isin(touched))
-
-
 def topk_per_window_sink(out_dir: str):
     """foreachBatch sink maintaining live windowed per-event-type totals
     for the top-k dashboard: ranking over an updating aggregate is not
@@ -1625,21 +1599,20 @@ def topk_per_window_sink(out_dir: str):
         touched = [r["__w"] for r in batch.select("__w").distinct().collect()]
         if not touched:
             return
-        existing = _read_existing_partitions(spark, out_dir, "__w", touched)
+        existing = read_engine_table(spark, out_dir)
         if existing is None:
             merged = batch
         else:
             # update-mode totals are cumulative: the new batch's row for a
             # (window, type) supersedes the stored one entirely.
-            merged = existing.select(*batch.columns).join(
-                batch.select("__w", "event_type").distinct(),
-                ["__w", "event_type"], "left_anti").unionByName(batch)
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.write.mode("overwrite").partitionBy("__w").parquet(out_dir)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            merged = (existing.filter(F.col("__w").isin(touched))
+                      .select(*batch.columns)
+                      .join(batch.select("__w", "event_type").distinct(),
+                            ["__w", "event_type"], "left_anti")
+                      .unionByName(batch))
+        (merged.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("__w").parquet(out_dir))
 
     return _sink
 
@@ -1772,21 +1745,17 @@ def compact_latest_to(serving_dir: str, key: str = "event_id",
         touched = [r["__kb"] for r in batch.select("__kb").distinct().collect()]
         if not touched:
             return
-        existing = _read_existing_partitions(spark, serving_dir, "__kb", touched)
+        existing = read_engine_table(spark, serving_dir)
         # first batch (no table yet) -> nothing to merge; real read errors
-        # propagate instead of silently dropping serving-table history
-        # (ADVICE r4 low: the old bare `except Exception` here kept the
-        # exact bug the topk sink fixed).
-        merged = batch if existing is None else existing.unionByName(batch)
+        # propagate instead of silently dropping serving-table history.
+        merged = batch if existing is None else (
+            existing.filter(F.col("__kb").isin(touched)).unionByName(batch))
         w = W.partitionBy(key).orderBy(F.col("ts").desc())
         latest = (merged.withColumn("__rn", F.row_number().over(w))
                   .filter(F.col("__rn") == 1).drop("__rn"))
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            latest.write.mode("overwrite").partitionBy("__kb").parquet(serving_dir)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        (latest.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("__kb").parquet(serving_dir))
 
     return _sink
 

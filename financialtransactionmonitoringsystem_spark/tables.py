@@ -1,4 +1,6 @@
-"""Loaders for the driver-generated testdata tables (TESTDATA.md).
+"""Loaders for the driver-generated testdata tables (TESTDATA.md), and
+the one reader for parquet tables the engine writes itself
+(:func:`read_engine_table`).
 
 Tables: region nation customer supplier part orders lineitem events
 documents embeddings -- one parquet file per table under
@@ -22,6 +24,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -63,9 +66,26 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str,
-                names: tuple[str, ...] = TABLE_NAMES) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
+def read_engine_table(spark: SparkSession, path: str,
+                      schema: T.StructType | None = None) -> DataFrame | None:
+    """Read a parquet table the engine itself writes (the transaction
+    store, a foreachBatch sink's output), or ``None`` when it does not
+    exist yet.
+
+    "Does not exist yet" is exactly ``PATH_NOT_FOUND`` (no directory) or
+    ``UNABLE_TO_INFER_SCHEMA`` (a directory with no data files, e.g. one
+    pre-created by ``mkdtemp``).  Any other failure propagates: a reader
+    that treats a real error as "no table" silently discards history.
+    With ``schema`` the read infers nothing, so an empty directory reads
+    as an empty frame and a corrupt part file fails the first action
+    instead of planning."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    try:
+        return reader.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise
+        return None
 
 
 def register_views(spark: SparkSession, sf_dir: str,
@@ -104,17 +124,21 @@ def _input_bytes(df: DataFrame) -> int | None:
     """Total on-disk bytes of ``df``'s input files, plan-time (no job:
     ``inputFiles()`` reads the already-resolved file index).  ``None``
     when any file's size cannot be read locally (e.g. an object-store
-    URI) -- callers treat unknown as "big" so behavior degrades to the
-    plain width-gated guard, never to a silently serial scan."""
-    from urllib.parse import urlparse
+    URI) or when ``df`` reads no files at all (an in-memory frame) --
+    callers treat unknown as "big" so behavior degrades to the plain
+    width-gated guard, never to a silently serial scan."""
+    from urllib.parse import unquote, urlparse
 
+    uris = df.inputFiles()
+    if not uris:
+        return None
     total = 0
-    for uri in df.inputFiles():
+    for uri in uris:
         p = urlparse(uri)
         if p.scheme not in ("", "file"):
             return None
         try:
-            total += os.path.getsize(p.path)
+            total += os.path.getsize(unquote(p.path))
         except OSError:
             return None
     return total

@@ -1,7 +1,10 @@
 from __future__ import annotations
 
 import os
+import random
 import sys
+import uuid
+from datetime import datetime, timedelta, timezone
 
 import pytest
 
@@ -37,3 +40,35 @@ def duck():
         )
     yield con
     con.close()
+
+
+TX_START = datetime(2025, 9, 27, 12, 42, 57, tzinfo=timezone.utc)
+_MERCHANTS = ("Jumia", "Konga", "Tesco", "Safaricom", "Amazon", "Uber")
+
+
+def make_tx_rows(n: int = 20, seed: int = 20250927) -> list[dict]:
+    """``n`` transactions in the reference's POST shape (SURVEY.md §1.3
+    domains): UUID-shaped ids, ``user_id`` 1001-1010, a ``merchant``
+    metadata key, µs ISO-8601 UTC timestamps one per 30-minute slot from
+    ``TX_START``.  Deterministic for a given ``seed``."""
+    rng = random.Random(seed)
+    rows = []
+    for i in range(n):
+        ts = TX_START + timedelta(minutes=30 * i,
+                                  microseconds=rng.randrange(1_000_000))
+        rows.append({
+            "transaction_id": str(uuid.UUID(int=rng.getrandbits(128), version=4)),
+            "user_id": rng.randint(1001, 1010),
+            "amount": round(rng.uniform(1.0, 5000.0), 2),
+            "currency": rng.choice(("EUR", "GBP", "KES", "NGN", "USD")),
+            "type": rng.choice(("credit", "debit")),
+            "metadata": {"merchant": rng.choice(_MERCHANTS)},
+            "timestamp": ts.strftime("%Y-%m-%dT%H:%M:%S.%fZ"),
+        })
+    return rows
+
+
+@pytest.fixture()
+def tx_rows() -> list[dict]:
+    """The 20-row transaction fixture; a fresh list per test."""
+    return make_tx_rows()

@@ -1,16 +1,16 @@
 """TransactionStore facade: the reference's three verbs (append /
 list-all / point-lookup) with its observable semantics, plus the
-durability the reference lacks."""
+durability the reference lacks.  Rows come from the generated 20-row
+fixture (``conftest.make_tx_rows``)."""
 
 from __future__ import annotations
 
-import json
+import glob
+import os
 
 import pytest
 
 from financialtransactionmonitoringsystem_spark.api import TransactionStore
-
-FIXTURE = "/root/reference/mock_transactions.json"
 
 
 @pytest.fixture()
@@ -18,32 +18,53 @@ def store(spark, tmp_path):
     return TransactionStore(spark, str(tmp_path / "txstore"))
 
 
-def _fixture_rows():
-    with open(FIXTURE) as fh:
-        return json.load(fh)
+def _part_files(path: str) -> list[str]:
+    return sorted(glob.glob(os.path.join(path, "part-*.parquet")))
 
 
-def test_replay_reference_fixture_preserves_order(spark, store):
-    rows = _fixture_rows()
-    for r in rows:                      # one POST per row, like the reference
+def test_replay_fixture_preserves_order(spark, store, tx_rows):
+    for r in tx_rows:                   # one POST per row, like the reference
         echoed = store.append([r])
         assert echoed.count() == 1
-    assert store.count() == len(rows)
+    assert store.count() == len(tx_rows)
     got_ids = [r.transaction_id for r in store.list_all().collect()]
-    assert got_ids == [r["transaction_id"] for r in rows]
+    assert got_ids == [r["transaction_id"] for r in tx_rows]
 
 
-def test_lookup_first_match_and_missing(spark, store):
-    rows = _fixture_rows()
-    store.append(rows)
-    dup = dict(rows[0], amount=999.99)  # duplicate id, different amount
+def test_lookup_first_match_and_missing(spark, store, tx_rows):
+    store.append(tx_rows)
+    dup = dict(tx_rows[0], amount=999.99)  # duplicate id, different amount
     store.append([dup])
-    hit = store.lookup(rows[0]["transaction_id"]).collect()
-    assert len(hit) == 1 and hit[0].amount == rows[0]["amount"]  # first wins
+    hit = store.lookup(tx_rows[0]["transaction_id"]).collect()
+    assert len(hit) == 1 and hit[0].amount == tx_rows[0]["amount"]  # first wins
     assert store.lookup("no-such-id").count() == 0
 
 
-def test_store_survives_restart(spark, store):
-    store.append(_fixture_rows()[:5])
+def test_store_survives_restart(spark, store, tx_rows):
+    store.append(tx_rows[:5])
     reopened = TransactionStore(spark, store.path)  # "process restart"
     assert reopened.count() == 5
+
+
+def test_corrupt_part_file_raises_instead_of_reading_empty(spark, store, tx_rows):
+    """A broken store must not read as empty: that would make ``append``
+    restart ``ingest_seq`` from 0 and change what "first match" means."""
+    store.append(tx_rows[:10])
+    store.append(tx_rows[10:])
+    parts = _part_files(store.path)
+    assert len(parts) >= 2
+    with open(parts[0], "wb") as fh:
+        fh.write(b"not a parquet file" * 8)
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        store.count()
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        store.append(tx_rows[:1])
+    assert _part_files(store.path) == parts  # the failed append wrote nothing
+
+
+def test_absent_or_empty_store_reads_empty(spark, store):
+    assert store.count() == 0                   # no directory yet
+    os.makedirs(store.path)                     # directory, no data files
+    assert store.count() == 0
+    assert store.lookup("no-such-id").count() == 0
+    assert store.list_all().collect() == []

@@ -307,14 +307,14 @@ def test_window_rotation():
 
 
 def test_registry_is_complete():
-    """queries.py import-guards extension modules; this pins the full key
-    set so a silently-failing module import fails CI loudly instead of
-    shrinking the registry."""
+    """Pins the full key set, so a key dropped from a module's
+    ``QUERIES`` (or a module dropped from ``queries._MODULES``) fails CI
+    instead of silently shrinking the registry."""
     import __spark_entry__ as E
 
     got = set(E.queries())
     missing = EXPECTED_KEYS - got
-    assert not missing, f"registry lost keys (broken module import?): {sorted(missing)}"
+    assert not missing, f"registry lost keys: {sorted(missing)}"
 
 
 def test_bench_headline_keys_all_resolve():

@@ -231,6 +231,26 @@ def test_scan_wide_light_work_size_gate(spark, sf_dir):
     assert rows_small == rows_big
 
 
+def test_input_bytes_reads_percent_encoded_paths(spark, tmp_path):
+    """``inputFiles()`` returns URIs, so a space arrives as ``%20``: the
+    size gate must decode it, not treat the input as unknown."""
+    from financialtransactionmonitoringsystem_spark.tables import _input_bytes
+
+    out = tmp_path / "with space"
+    spark.range(100).write.parquet(str(out))
+    assert _input_bytes(spark.read.parquet(str(out))) == sum(
+        f.stat().st_size for f in out.glob("part-*.parquet"))
+
+
+def test_input_bytes_unknown_for_in_memory_frames(spark):
+    """A frame with no input files has an unknown size (``None``, treated
+    as big), not 0 -- 0 would let the LIGHT_WORK gate skip the guard."""
+    from financialtransactionmonitoringsystem_spark.tables import _input_bytes
+
+    assert _input_bytes(spark.createDataFrame([(1,), (2,)], "x int")) is None
+    assert _input_bytes(spark.range(10)) is None
+
+
 def test_decontam_join_is_gram_keyed_not_pairwise(spark, sf_dir):
     """Decontamination joins on the exploded n-gram (an equi key), never
     a document-pair product."""

@@ -426,11 +426,14 @@ def test_fn_decimal_cents_equals_decimal_types_reference(spark, sf_dir):
               # r18 fast-path band edges: half-way traps across
               # magnitudes (the guarded rows must take the decimal
               # hop), near-half values just outside the band (fast
-              # path), negatives of both, and the overflow-bound edge
-              # (hop branch without ANSI overflow).
+              # path), negatives of both, and both sides of the
+              # overflow bound 10^11 - 1: 99999999998.99 is the fast
+              # path just below it, 99999999999.5 takes the hop branch
+              # and still fits decimal(13,2), so no ANSI overflow.
               0.015, 0.025, 0.065, 1.015, 2.005, 4.005, -1.005,
               -2.675, -0.005, 123456.785, 9999999.995, 12345678.905,
-              1.0050001, 50.4999999, -123456.785, 99999999998.99]
+              1.0050001, 50.4999999, -123456.785, 99999999998.99,
+              99999999999.5]
     planted = [(f"f{i % 3}", p, d)
                for i, p in enumerate(prices)
                for d in (0.0, 0.05, 0.1, None)]

@@ -99,7 +99,9 @@ def main() -> None:
             budget -= 1
             print(f"[gate] run {run}: bench rc={proc.returncode}; "
                   f"stderr tail: {proc.stderr[-500:]} "
+                  f"-- waiting {args.retry_wait}s "
                   f"({budget} retries left)", flush=True)
+            time.sleep(args.retry_wait)
             continue
         rec = json.loads(line[-1])
         rec["load_at_launch"] = ld
