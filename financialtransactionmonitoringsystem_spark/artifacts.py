@@ -129,6 +129,8 @@ def parquet_artifact_or(spark, base: str, subdir: str, fingerprint: str,
                         fallback):
     """The read half: the persisted parquet when the marker is current
     for ``fingerprint``, else ``fallback()`` (the inline derivation)."""
+    from .tables import read_parquet
+
     if marker_current(os.path.join(base, "_BUILT"), fingerprint):
-        return spark.read.parquet(os.path.join(base, subdir))
+        return read_parquet(spark, os.path.join(base, subdir))
     return fallback()

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..artifacts import corpus_slug
-from ..tables import load_table, scan_wide
+from ..tables import load_table, read_parquet, scan_wide
 from ..util import rnd, sql_round as R
 from .dedup import SQL_COSINE, dot_fold, norm_fold
 
@@ -308,8 +308,8 @@ def ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     if key not in _IVF_CACHE:
         base = build_ivf_index(spark, sf_dir)
         _IVF_CACHE[key] = (
-            spark.read.parquet(os.path.join(base, "cells")),
-            spark.read.parquet(os.path.join(base, "centers")),
+            read_parquet(spark, os.path.join(base, "cells")),
+            read_parquet(spark, os.path.join(base, "centers")),
         )
     return _IVF_CACHE[key]
 

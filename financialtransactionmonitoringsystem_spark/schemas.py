@@ -48,5 +48,6 @@ TRANSACTION_TABLE_SCHEMA = T.StructType(
 ISO8601_MICROS = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSX"
 
 # The events table's physical ts form varies by testdata generation
-# (int64 nanos vs TIMESTAMP micros); readers probe the parquet footer and
-# normalize via tables._normalize_events_ts rather than pinning a schema.
+# (int64 nanos vs TIMESTAMP micros), so no schema is pinned for it:
+# tables.load_table reads it with the schema tables.read_parquet infers
+# (once per file set) and normalizes ts via tables._normalize_events_ts.

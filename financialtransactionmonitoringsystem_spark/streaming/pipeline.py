@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import apply_runtime_confs
-from ..tables import _normalize_events_ts, read_engine_table
+from ..tables import _normalize_events_ts, read_engine_table, read_parquet
 from ..util import rnd
 
 # State-store provider for stateful streaming at scale (VERDICT r5 #8):
@@ -109,7 +109,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The file stream source needs an upfront schema; probe the parquet
     # footer via a batch read (driver-side metadata only, no data scan) so
     # the stream matches whichever physical ts form the testdata has.
-    file_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    file_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     raw = (
         spark.readStream
         .schema(file_schema)
@@ -233,8 +233,10 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fintxmon_docstream_" + sf_dir.strip("/").replace("/", "_"))
     os.makedirs(stage, exist_ok=True)
     _stage_symlink(stage, "documents.parquet", f"{sf_dir}/documents.parquet")
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    return spark.readStream.schema(schema).parquet(stage)
+    schema = read_parquet(spark, f"{sf_dir}/documents.parquet").schema
+    return (spark.readStream
+            .schema(schema)
+            .parquet(stage))
 
 
 def novelty_scorer(ref_docs: DataFrame):
@@ -854,7 +856,7 @@ def read_ingest_metrics(spark: SparkSession, metrics_dir: str) -> DataFrame:
     -- the observability feed an ingest operator watches (reject-rate
     drift per stage is the canary for a poisoned crawl or a stale
     corpus index)."""
-    return spark.read.parquet(metrics_dir)
+    return read_parquet(spark, metrics_dir)
 
 
 # Absolute per-stage rate deviation from the trailing mean at or above
@@ -1025,8 +1027,8 @@ def evolving_neardup_gate(corpus_docs: DataFrame, state_dir: str):
         fsio.write_text(spark, marker, fingerprint + "\n")
 
     def _state_table(name: str, gen: int, epoch_id: int) -> DataFrame:
-        base = spark.read.parquet(
-            os.path.join(_gen_path(state_dir, gen), name))
+        base = read_parquet(
+            spark, os.path.join(_gen_path(state_dir, gen), name))
         appends = os.path.join(state_dir, name)
         # the appends table may not exist yet (no batch has written) or
         # may be an empty husk (compaction deleted every partition) --
@@ -1036,7 +1038,7 @@ def evolving_neardup_gate(corpus_docs: DataFrame, state_dir: str):
             return base
         # a replayed epoch must not gate the batch against its own
         # earlier attempt's admissions
-        app = (spark.read.parquet(appends)
+        app = (read_parquet(spark, appends)
                .filter(F.col("__epoch") < int(epoch_id)).drop("__epoch"))
         return base.unionByName(app)
 
@@ -1054,8 +1056,8 @@ def evolving_neardup_gate(corpus_docs: DataFrame, state_dir: str):
         admitted = dedup._scoped_build(admitted)
         adm_toks = dedup._tok_sets(admitted).select(
             "doc_id", "lang", "toks", "n_toks")
-        frozen_freq = spark.read.parquet(
-            os.path.join(_gen_path(state_dir, gen), "freq"))
+        frozen_freq = read_parquet(
+            spark, os.path.join(_gen_path(state_dir, gen), "freq"))
         _write_state(adm_toks, dedup._prefix_table(adm_toks, frozen_freq),
                      epoch_id)
         return admitted.select("doc_id", "lang", "source", "n_chars")
@@ -1175,10 +1177,10 @@ def compact_gate_state(spark: SparkSession, state_dir: str) -> None:
     # later (or torn) is left for the next run / the replay
     fold_ids = sorted(_epochs("toks") & _epochs("pref"))
 
-    base_toks = spark.read.parquet(
-        os.path.join(_gen_path(state_dir, cur), "toks"))
+    base_toks = read_parquet(
+        spark, os.path.join(_gen_path(state_dir, cur), "toks"))
     if fold_ids:
-        app = (spark.read.parquet(os.path.join(state_dir, "toks"))
+        app = (read_parquet(spark, os.path.join(state_dir, "toks"))
                .filter(F.col("__epoch").isin(fold_ids)).drop("__epoch"))
         base_toks = base_toks.unionByName(app)
     # dropDuplicates heals the crash-between-commit-and-cleanup case:
@@ -1262,14 +1264,14 @@ def evolving_embed_gate(corpus_vecs: DataFrame, state_dir: str):
 
     def score(batch: DataFrame, epoch_id: int) -> DataFrame:
         gen = _current_gen(spark, state_dir)
-        state = spark.read.parquet(
-            os.path.join(_gen_path(state_dir, gen), "vecs"))
+        state = read_parquet(
+            spark, os.path.join(_gen_path(state_dir, gen), "vecs"))
         appends = os.path.join(state_dir, "vecs")
         if any(n.startswith("__epoch=")
                for n in fsio.list_names(spark, appends)):
             # a replayed epoch must not gate the batch against its own
             # earlier attempt's admissions
-            app = (spark.read.parquet(appends)
+            app = (read_parquet(spark, appends)
                    .filter(F.col("__epoch") < int(epoch_id)).drop("__epoch"))
             state = state.unionByName(app)
 
@@ -1322,10 +1324,10 @@ def compact_embed_gate_state(spark: SparkSession, state_dir: str) -> None:
     fold_ids = sorted(
         int(n.split("=", 1)[1])
         for n in fsio.list_names(spark, appends) if n.startswith("__epoch="))
-    vecs = spark.read.parquet(
-        os.path.join(_gen_path(state_dir, cur), "vecs"))
+    vecs = read_parquet(
+        spark, os.path.join(_gen_path(state_dir, cur), "vecs"))
     if fold_ids:
-        app = (spark.read.parquet(appends)
+        app = (read_parquet(spark, appends)
                .filter(F.col("__epoch").isin(fold_ids)).drop("__epoch"))
         vecs = vecs.unionByName(app)
     from ..operators import dedup
@@ -1412,13 +1414,13 @@ def evolving_embed_gate_ivf(corpus_cells: DataFrame, centers: DataFrame,
     def score(batch: DataFrame, epoch_id: int) -> DataFrame:
         gen = _current_gen(spark, state_dir)
         gen_dir = _gen_path(state_dir, gen)
-        frozen_centers = spark.read.parquet(
-            os.path.join(gen_dir, "centers"))
-        state = spark.read.parquet(os.path.join(gen_dir, "cells"))
+        frozen_centers = read_parquet(
+            spark, os.path.join(gen_dir, "centers"))
+        state = read_parquet(spark, os.path.join(gen_dir, "cells"))
         appends = os.path.join(state_dir, "cells")
         if any(n.startswith("__epoch=")
                for n in fsio.list_names(spark, appends)):
-            app = (spark.read.parquet(appends)
+            app = (read_parquet(spark, appends)
                    .filter(F.col("__epoch") < int(epoch_id)).drop("__epoch"))
             state = state.unionByName(app)
 
@@ -1471,10 +1473,10 @@ def compact_embed_gate_ivf_state(spark: SparkSession, state_dir: str,
     fold_ids = sorted(
         int(n.split("=", 1)[1])
         for n in fsio.list_names(spark, appends) if n.startswith("__epoch="))
-    vecs = spark.read.parquet(
-        os.path.join(_gen_path(state_dir, cur), "cells")).drop("cell")
+    vecs = read_parquet(
+        spark, os.path.join(_gen_path(state_dir, cur), "cells")).drop("cell")
     if fold_ids:
-        app = (spark.read.parquet(appends)
+        app = (read_parquet(spark, appends)
                .filter(F.col("__epoch").isin(fold_ids))
                .drop("__epoch", "cell"))
         vecs = vecs.unionByName(app)
@@ -1556,7 +1558,7 @@ def scoring_sink(scorer, out_dir: str):
 def read_scores(spark: SparkSession, out_dir: str) -> DataFrame:
     """Read a :func:`run_scoring` landing table without the sink's
     ``__epoch`` bookkeeping partition column."""
-    return spark.read.parquet(out_dir).drop("__epoch")
+    return read_parquet(spark, out_dir).drop("__epoch")
 
 
 def run_scoring(docs_stream: DataFrame, scorer, out_dir: str,
@@ -1625,7 +1627,7 @@ def topk_dashboard(spark: SparkSession, out_dir: str, k: int = 3) -> DataFrame:
 
     w = W.partitionBy("__w").orderBy(F.col("total").desc(),
                                      F.col("event_type").asc())
-    return (spark.read.parquet(out_dir)
+    return (read_parquet(spark, out_dir)
             .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= k))
 
@@ -1773,7 +1775,7 @@ def serving_lookup(spark: SparkSession, serving_dir: str, key_value,
     equality prunes to one partition directory, then the key equality is
     pushed into that partition's parquet scan.  ``n_buckets`` MUST match
     the value the sink was built with (it defines the hash layout)."""
-    df = spark.read.parquet(serving_dir)
+    df = read_parquet(spark, serving_dir)
     # xxhash64 is type-sensitive: hash the literal at the key column's
     # exact type or the bucket won't match the one the sink computed.
     bucket = F.pmod(

@@ -1,6 +1,7 @@
-"""Loaders for the driver-generated testdata tables (TESTDATA.md), and
-the one reader for parquet tables the engine writes itself
-(:func:`read_engine_table`).
+"""Loaders for the driver-generated testdata tables (TESTDATA.md), the
+one reader for parquet tables the engine writes itself
+(:func:`read_engine_table`), and :func:`read_parquet`, the only place
+in the engine that reads parquet in batch.
 
 Tables: region nation customer supplier part orders lineitem events
 documents embeddings -- one parquet file per table under
@@ -18,17 +19,39 @@ plain TIMESTAMP(MICROS) without timezone (read as TIMESTAMP_NTZ).  Either
 way DuckDB sees a naive microsecond TIMESTAMP, so ``_normalize_events_ts``
 dispatches on the physical type and lands both on session-UTC
 ``TimestampType`` -- value-identical to the oracle's view of the file.
+
+Schema cache: a ``spark.read.parquet(path)`` with no schema runs one
+Spark job while the plan is built, to read a footer and infer the
+schema.  :func:`read_parquet` keeps each inferred ``StructType`` in a
+per-process LRU of :data:`SCHEMA_CACHE_SIZE` entries and reads with
+``.schema(cached)`` on a hit, which plans with no job.  The key is the
+path plus ``artifacts.corpus_fingerprint`` of it (every file's relative
+name, size and mtime_ns) and of the confs that change the inferred
+types (:data:`SCHEMA_CONFS`).  Adding, removing or rewriting any file
+under the path, or flipping one of those confs, changes the key, so the
+next read infers again.  A file rewritten in place with the same size
+and mtime_ns is not detected -- the same trade the artifact markers
+make.  The cache holds schemas only, never rows: a part file corrupted
+after a cached read still fails the first action that reads it.  A
+failed inference (absent path, empty directory, corrupt footer) raises
+as an uncached read does and stores nothing, and a non-local URI
+(``hdfs://``, ``s3a://``, ...) is read uncached because its files
+cannot be stat'ed here.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
+from urllib.parse import unquote, urlparse
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .artifacts import corpus_fingerprint
 from .session import apply_runtime_confs
 
 TABLE_NAMES = (
@@ -56,11 +79,71 @@ def _normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+# Entries of the inferred-schema LRU; a StructType is a few KB at most.
+SCHEMA_CACHE_SIZE = 64
+
+# Confs that change the types a parquet footer is inferred as.
+SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+_schema_cache: OrderedDict[tuple[str, str], T.StructType] = OrderedDict()
+# foreachBatch sinks read from streaming query threads.
+_schema_lock = threading.Lock()
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple[str, str] | None:
+    """Cache key for ``path`` under the session's current confs, or
+    ``None`` when the files cannot be stat'ed locally (a non-local URI,
+    an absent path, a glob)."""
+    p = urlparse(path)
+    if p.scheme not in ("", "file"):
+        return None
+    local = path.split(":", 1)[1] if p.scheme else path
+    params = {k: spark.conf.get(k) for k in SCHEMA_CONFS}
+    try:
+        return path, corpus_fingerprint([local], params)
+    except OSError:
+        return None
+
+
+def read_parquet(spark: SparkSession, path: str,
+                 schema: T.StructType | None = None) -> DataFrame:
+    """``spark.read.parquet(path)``, with ``schema`` when given and
+    otherwise with the schema inferred for this exact file set at an
+    earlier call (see the module docstring).  Raises exactly as the
+    inferring read does when there is nothing to infer from."""
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    # Fingerprint BEFORE reading: a file changing between the two then
+    # stores the newer schema under the older key, which nothing asks
+    # for again -- never an older schema under the newer key.
+    key = _schema_key(spark, path)
+    cached = None
+    if key is not None:
+        with _schema_lock:
+            cached = _schema_cache.get(key)
+            if cached is not None:
+                _schema_cache.move_to_end(key)
+    if cached is not None:
+        return spark.read.schema(cached).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None:
+        with _schema_lock:
+            _schema_cache[key] = df.schema
+            while len(_schema_cache) > SCHEMA_CACHE_SIZE:
+                _schema_cache.popitem(last=False)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table as a DataFrame with engine-canonical types."""
     apply_runtime_confs(spark)
-    path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = _normalize_events_ts(df)
     return df
@@ -79,9 +162,8 @@ def read_engine_table(spark: SparkSession, path: str,
     With ``schema`` the read infers nothing, so an empty directory reads
     as an empty frame and a corrupt part file fails the first action
     instead of planning."""
-    reader = spark.read if schema is None else spark.read.schema(schema)
     try:
-        return reader.parquet(path)
+        return read_parquet(spark, path, schema)
     except AnalysisException as e:
         if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
             raise
@@ -127,8 +209,6 @@ def _input_bytes(df: DataFrame) -> int | None:
     URI) or when ``df`` reads no files at all (an in-memory frame) --
     callers treat unknown as "big" so behavior degrades to the plain
     width-gated guard, never to a silently serial scan."""
-    from urllib.parse import unquote, urlparse
-
     uris = df.inputFiles()
     if not uris:
         return None

@@ -7,6 +7,9 @@ cartesian, un-broadcast dimension join) even if answers are still right.
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
 from pyspark.sql import functions as F
 
 from financialtransactionmonitoringsystem_spark.operators import relational, topk, aggregates
@@ -813,3 +816,37 @@ def test_novelty_bloom_probe_stays_below_the_gram_exchange(spark, sf_dir):
     if "Exchange hashpartitioning(gram" in s:
         below = s.split("Exchange hashpartitioning(gram", 1)[1]
         assert "element_at(bloom" in below, s[:2000]
+
+
+def _reads_via_spark_read(node) -> bool:
+    """True when a ``.parquet(`` call's receiver chain passes through a
+    ``.read`` attribute (``spark.read.parquet``, ``spark.read.schema(s)
+    .parquet``); ``.write`` and ``.readStream`` chains are not reads."""
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Call):
+            node = node.func
+        elif node.attr == "read":
+            return True
+        else:
+            node = node.value
+    return False
+
+
+def test_parquet_reads_go_through_one_helper():
+    """Only ``tables.py`` calls ``spark.read...parquet(``: every other
+    batch parquet read in the engine goes through ``tables.read_parquet``
+    and its inferred-schema cache."""
+    import financialtransactionmonitoringsystem_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for f in sorted(root.rglob("*.py")):
+        if f == root / "tables.py":
+            continue
+        for node in ast.walk(ast.parse(f.read_text(), str(f))):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "parquet"
+                    and _reads_via_spark_read(node.func.value)):
+                offenders.append(f"{f.relative_to(root)}:{node.lineno}")
+    assert not offenders, offenders
