@@ -152,45 +152,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "n_tokens", "seq_id", "seq_off")
 
 
-def pack_audit_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Packing-efficiency audit over :func:`q_pack_sequences`' layout:
-    per language -- documents, total tokens, sequence count, and how
-    many documents SPAN a sequence boundary (``seq_off + n_tokens >
-    budget``).  Spanning documents lose attention context at training
-    time, so the span fraction is the metric a packing policy is tuned
-    against (budget vs median doc length); the contiguous layout itself
-    wastes nothing, making this the packing dashboard's one
-    non-trivial number.
-
-    Shape at scale: one O(langs) map-side-combinable aggregate on top
-    of the pack's existing per-lang running sums -- the audit adds no
-    exchange beyond what the pack already does.
-
-    Tested-but-unregistered twin (registry at rotation capacity; the
-    former shard_balance_twin shows the path -- it registered as
-    ``q_shard_balance`` in round 13); ``PACK_AUDIT_ORACLE`` composes the
-    q_pack_sequences oracle verbatim, so the two can never drift.
-    """
-    p = q_pack_sequences(spark, sf_dir)
-    spanning = (F.col("seq_off") + F.col("n_tokens") > PACK_BUDGET)
-    # n_seqs = sequences OCCUPIED = ceil(total/budget), in pure integer
-    # arithmetic -- NOT max(seq_id)+1, which counts only STARTING
-    # sequences and undercounts when a lang's final doc spans the
-    # boundary (caught by the planted test before this ever shipped)
-    return (
-        p.groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n_docs"),
-             F.sum("n_tokens").alias("total_tokens"),
-             F.sum(spanning.cast("long")).alias("n_spanning"))
-        .select("lang", "n_docs", "total_tokens",
-                F.expr(f"CAST((total_tokens + {PACK_BUDGET - 1})"
-                       f" DIV {PACK_BUDGET} AS BIGINT)").alias("n_seqs"),
-                "n_spanning",
-                rnd(F.col("n_spanning") / F.col("n_docs"), 4)
-                .alias("span_frac"))
-    )
-
-
 def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified deterministic sampling (data mixing): keep 50% of
     English documents and 12.5% of everything else by md5-prefix
@@ -434,194 +395,6 @@ SHARD_BALANCE_ORACLE = f"""
 """
 
 
-# Discrete per-domain token cap: the rank-ceil(3n/4) smallest domain
-# total (P75 BY RANK, no interpolation -- totals are integer token
-# sums and the rank formula is pure integer arithmetic, so the cap is
-# bit-identical on any engine; the interpolated-percentile
-# cross-engine hazard q_agg_stats neutralizes with a shared explicit
-# formula simply never arises here).
-MIXTURE_CAP_NUM, MIXTURE_CAP_DEN = 3, 4
-
-
-def mixture_cap_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantile-bucketed mixture caps (the PLANS candidate composing
-    the exact-quantile and token-budget shapes): cap every source
-    domain's contribution to the training mix at the 75th-percentile
-    per-domain token total, keeping each over-cap domain's BEST
-    documents (type-token ratio desc, doc_id tiebreak) up to the cap --
-    the static head-domain clamp that stops a handful of giant domains
-    from dominating the mixture, with the cap derived from the corpus
-    itself instead of a hand-tuned constant (q_curate_mixture's clamp
-    is the weight-space form of the same idea).
-
-    Shape at scale: per-domain totals are ONE map-side-combinable
-    exchange to O(domains) rows; the cap is a rank over that
-    metadata-sized table (single-task window over O(domains) rows --
-    at 10^7+ domains the q_curate_budget _ranged_running_sum machinery
-    is the drop-in for this rank too); the per-doc running sum windows
-    on (source) -- parallelism = domain count -- and the cap attaches
-    as a one-row broadcast.  A domain whose best document alone
-    exceeds the cap keeps zero docs: the cap is strict by design
-    (document-splitting is a packing concern, q_pack_sequences' job).
-
-    Registry queue: would register as ``q_curate_mixture_cap`` with
-    ``MIXTURE_CAP_ORACLE`` -- but the registry is at its rotation
-    capacity (PLANS round 10: the 50-key window x 3-round staleness
-    caps it at 150, and the two r11 registrations consumed the final
-    slack), so this ships as a tested-but-unregistered twin, the
-    former-shard_balance_twin precedent (registered round 13).
-    """
-    return _mixture_cap_core(load_table(spark, sf_dir, "documents"))
-
-
-def _mixture_cap_core(docs: DataFrame) -> DataFrame:
-    """:func:`mixture_cap_twin` over an explicit docs table (the
-    planted-cap test constructs a guaranteed over-cap domain, which a
-    tied corpus -- max total == the P75 total -- cannot promise).
-
-    Null-text docs are excluded SYMMETRICALLY with the oracle's
-    ``WHERE text IS NOT NULL`` (ADVICE r10: Spark ``size(split(NULL))``
-    is -1 where DuckDB ``len(string_split(NULL))`` is NULL -- a latent
-    parity break, and a zero-token doc has no business in a token-cap
-    decision anyway)."""
-    toks = F.split(F.col("text"), " ")
-    base = docs.filter(F.col("text").isNotNull()).select(
-        "doc_id", "source",
-        F.size(toks).alias("n_tok"),
-        (F.size(F.array_distinct(toks)).cast("double")
-         / F.size(toks)).alias("ttr"))
-    return _domain_cap(base)
-
-
-def mixture_cap_epochs_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Epoch-WEIGHTED mixture cap -- :func:`mixture_cap_twin` on the
-    token volume a trainer actually sees: each doc's weight is
-    ``n_tok x epochs`` under :func:`q_curate_epochs`' quality-tier rule
-    (integer cross-multiplication, no float ratio), so a domain of
-    high-quality docs that repeat 3 epochs hits the cap three times
-    faster than its raw token count suggests.  Composes the two
-    attested shapes end-to-end: the rank-P75 cap machinery is shared
-    with mixture_cap_twin (:func:`_domain_cap`), only the weight
-    changes.
-
-    Shape at scale: identical to mixture_cap_twin -- the epoch tier is
-    a pure projection over the same scan (zero added exchange).
-
-    Tested-but-unregistered twin (rotation capacity);
-    ``MIXTURE_CAP_EPOCHS_ORACLE`` is the DuckDB side.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    n = F.size(toks)
-    d = F.size(F.array_distinct(toks))
-    epochs = F.when(4 * d >= 3 * n, 3).when(2 * d >= n, 2).otherwise(1)
-    base = docs.filter(F.col("text").isNotNull()).select(
-        "doc_id", "source",
-        (n * epochs).alias("n_tok"),
-        (d.cast("double") / n).alias("ttr"))
-    return _domain_cap(base)
-
-
-def _domain_cap(base: DataFrame) -> DataFrame:
-    """The shared P75-by-rank domain-cap skeleton over ``base(doc_id,
-    source, n_tok, ttr)``: cap = the rank-ceil(3n/4) smallest domain
-    total of ``n_tok``; each over-cap domain keeps its best docs (ttr
-    desc, doc_id tiebreak) up to the cap.  ``n_tok`` is whatever
-    weight the caller projects (raw tokens for mixture_cap_twin,
-    epoch-weighted tokens for mixture_cap_epochs_twin)."""
-    dom = base.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tok").alias("tok_total"))
-    ranked = dom.select(
-        "tok_total",
-        F.row_number().over(W.orderBy("tok_total", "source")).alias("r"),
-        F.count(F.lit(1)).over(
-            W.rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
-        .alias("nd"))
-    cap_tbl = (ranked.filter(F.col("r") == F.expr(
-        f"CAST(({MIXTURE_CAP_NUM} * nd + {MIXTURE_CAP_DEN - 1})"
-        f" DIV {MIXTURE_CAP_DEN} AS INT)"))
-        .select(F.col("tok_total").alias("cap")))
-    wrun = (W.partitionBy("source").orderBy(F.col("ttr").desc(), "doc_id")
-            .rowsBetween(W.unboundedPreceding, 0))
-    kept = (base.select("source", "n_tok",
-                        F.sum("n_tok").over(wrun).alias("run"))
-            .crossJoin(F.broadcast(cap_tbl))
-            .filter(F.col("run") <= F.col("cap"))
-            .groupBy("source")
-            .agg(F.count(F.lit(1)).alias("n_kept"),
-                 F.sum("n_tok").alias("tokens_kept")))
-    return (
-        dom.crossJoin(F.broadcast(cap_tbl))
-        .join(kept, "source", "left")
-        .select("source", "n_docs", "tok_total", "cap",
-                F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
-                F.coalesce("tokens_kept", F.lit(0)).alias("tokens_kept"),
-                (F.col("tok_total") > F.col("cap")).alias("capped"))
-    )
-
-
-# The shared P75-by-rank domain-cap tail (dom/ranked/cap/kept + final
-# select) composed under both mixture-cap oracles -- one definition so
-# the two can't drift from _domain_cap.
-_DOMAIN_CAP_TAIL_SQL = f"""dom AS (
-      SELECT source, COUNT(*) AS n_docs,
-             CAST(SUM(n_tok) AS BIGINT) AS tok_total
-      FROM base GROUP BY source
-    ), ranked AS (
-      SELECT tok_total,
-             row_number() OVER (ORDER BY tok_total, source) AS r,
-             COUNT(*) OVER () AS nd
-      FROM dom
-    ), cap AS (
-      SELECT tok_total AS cap FROM ranked
-      WHERE r = ({MIXTURE_CAP_NUM} * nd + {MIXTURE_CAP_DEN - 1})
-                // {MIXTURE_CAP_DEN}
-    ), kept AS (
-      SELECT source, COUNT(*) AS n_kept,
-             CAST(SUM(n_tok) AS BIGINT) AS tokens_kept
-      FROM (
-        SELECT source, n_tok,
-               SUM(n_tok) OVER (PARTITION BY source
-                                ORDER BY ttr DESC, doc_id
-                                ROWS UNBOUNDED PRECEDING) AS run
-        FROM base
-      ) CROSS JOIN cap WHERE run <= cap GROUP BY source
-    )
-    SELECT d.source, d.n_docs, d.tok_total, c.cap,
-           COALESCE(k.n_kept, 0) AS n_kept,
-           CAST(COALESCE(k.tokens_kept, 0) AS BIGINT) AS tokens_kept,
-           d.tok_total > c.cap AS capped
-    FROM dom d CROSS JOIN cap c LEFT JOIN kept k ON k.source = d.source
-"""
-
-MIXTURE_CAP_ORACLE = f"""
-    WITH base AS (
-      SELECT doc_id, source,
-             len(string_split(text, ' ')) AS n_tok,
-             CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-                 / len(string_split(text, ' ')) AS ttr
-      FROM documents WHERE text IS NOT NULL
-    ), {_DOMAIN_CAP_TAIL_SQL}
-"""
-
-# DuckDB oracle for mixture_cap_epochs_twin: the same tail over the
-# epoch-weighted token volume (q_curate_epochs' integer
-# cross-multiplication tier rule, no float ratio in the tier cut).
-MIXTURE_CAP_EPOCHS_ORACLE = f"""
-    WITH base AS (
-      SELECT doc_id, source,
-             n * (CASE WHEN 4 * d >= 3 * n THEN 3
-                       WHEN 2 * d >= n THEN 2 ELSE 1 END) AS n_tok,
-             CAST(d AS DOUBLE) / n AS ttr
-      FROM (SELECT doc_id, source,
-                   len(string_split(text, ' ')) AS n,
-                   len(list_distinct(string_split(text, ' '))) AS d
-            FROM documents WHERE text IS NOT NULL)
-    ), {_DOMAIN_CAP_TAIL_SQL}
-"""
-
-
 # Target mixture as integer percents (sum 100): the pretraining-mix
 # shape where the corpus must be downsampled to prescribed language
 # shares rather than per-stratum keep RATES (q_sample_stratified).
@@ -856,8 +629,7 @@ _MIX_TARGET_ROWS = ", ".join(
 _MIX_W_SQL = R(
     "least(1e1, greatest(1e-1, tot / (nd * n_tokens)))", 6)
 
-# The q_pack_sequences oracle body, shared with PACK_AUDIT_ORACLE (one
-# definition of the packing layout both sides of the audit compose).
+# The q_pack_sequences oracle body.
 _PACK_SQL = f"""
         SELECT doc_id, lang, n_tokens,
                CAST(floor(start_tok / {PACK_BUDGET}.0) AS BIGINT) AS seq_id,
@@ -872,21 +644,6 @@ _PACK_SQL = f"""
                 FROM documents)
         )
     """
-
-# DuckDB oracle for pack_audit_twin (tested-but-unregistered; registers
-# only if rotation capacity ever opens).
-PACK_AUDIT_ORACLE = f"""
-    WITH p AS ({_PACK_SQL})
-    SELECT lang, COUNT(*) AS n_docs,
-           CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-           CAST((SUM(n_tokens) + {PACK_BUDGET - 1}) // {PACK_BUDGET}
-                AS BIGINT) AS n_seqs,
-           CAST(SUM(CASE WHEN seq_off + n_tokens > {PACK_BUDGET}
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_spanning,
-           {R('CAST(SUM(CASE WHEN seq_off + n_tokens > ' + str(PACK_BUDGET) + ' THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*)', 4)}
-               AS span_frac
-    FROM p GROUP BY lang
-"""
 
 ORACLES: dict[str, str] = {
     "q_shard_balance": SHARD_BALANCE_ORACLE,

@@ -58,10 +58,9 @@ JACCARD_THRESHOLD = 0.8
 # losslessness test).  All prune math must use these integers.
 JACCARD_NUM, JACCARD_DEN = 4, 5
 
-# Embedding-cosine near-dup threshold, shared by q_dedup_embed, the
-# incremental embed_gate_twin + its oracle, and the streaming gates in
-# streaming/pipeline.py -- ONE constant so a tune cannot silently
-# desynchronize the stream/batch/oracle triple (review finding, r12).
+# Embedding-cosine near-dup threshold, shared by q_dedup_embed's
+# operator forms and its oracle -- ONE constant so a tune cannot
+# silently desynchronize them (review finding, r12).
 EMBED_NEARDUP_THRESHOLD = 0.35
 assert JACCARD_NUM / JACCARD_DEN == JACCARD_THRESHOLD
 # Verification emits pairs on the ROUNDED predicate rnd(J, 6) >= 0.8
@@ -519,28 +518,16 @@ def prefix_candidates(docs: DataFrame,
     return _prefix_join(_prefix_table(_tok_sets(docs)))
 
 
-def _prefix_table(toksets: DataFrame, freq: DataFrame | None = None) -> DataFrame:
+def _prefix_table(toksets: DataFrame) -> DataFrame:
     """Rarest-first prefix-token table (doc_id, lang, tok, pos, n_toks)
     from a token-set table (:func:`_tok_sets` / :func:`corpus_tok_sets`):
-    the tokens a qualifying partner MUST share one of.
-
-    ``freq`` (a (tok, gf) table) overrides the default input-derived
-    token frequencies -- the evolving-gate append path ranks NEW docs
-    under the FROZEN seed-corpus frequencies so index entries stay
-    immutable; tokens absent from it rank as frequency 0 = rarest =
-    maximally selective.  Any fixed frequency choice is lossless (the
-    prefix principle needs only the prefix LENGTH); frequency order is
-    selectivity only."""
+    the tokens a qualifying partner MUST share one of.  Any fixed
+    frequency order is lossless (the prefix principle needs only the
+    prefix LENGTH); frequency order is selectivity only."""
     p, q = PRUNE_NUM, PRUNE_DEN
     tok = toksets.select("doc_id", "lang", "n_toks", F.explode("toks").alias("tok"))
-    if freq is None:
-        freq = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("gf"))
-        joined = tok.join(freq, "tok")  # derived: every token present
-    else:
-        # no broadcast hint: the frequency table is corpus-VOCABULARY-
-        # sized and grows with the corpus (VERDICT r2 #2)
-        joined = (tok.join(freq, "tok", "left")
-                  .withColumn("gf", F.coalesce("gf", F.lit(0))))
+    freq = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("gf"))
+    joined = tok.join(freq, "tok")
     w = W.partitionBy("doc_id").orderBy(F.col("gf").asc(), F.col("tok").asc())
     # Smallest qualifying overlap with ANY partner is ceil(t*n) (at the
     # minimum partner size t*n), so the prefix is n - ceil(t*n) + 1
@@ -740,7 +727,7 @@ def _scoped_build(build_side: DataFrame) -> DataFrame:
 # align gram-table decision generalized -- VERDICT r8 design note):
 # unlike the bounded build tables above, a handful of operators share
 # an O(corpus) intermediate between two consumers (tfidf's per-doc tf
-# table, linededup's chunk table, align's gram table).  Checkpointing
+# table, linededup's chunk table).  Checkpointing
 # such a table trades ONE saved re-derivation (a columnar scan +
 # codegen explode, CPU-bound and embarrassingly parallel) for a
 # corpus-sized write + two reads against the scoped-build store --
@@ -749,9 +736,7 @@ def _scoped_build(build_side: DataFrame) -> DataFrame:
 # round-trip is object-store bandwidth, billed and slow: set
 # "rederive" and pay the second explode instead.  Measured crossover
 # (round 9, align's gram table): checkpoint -35% at sf0.1, parity at
-# 10x on local NVMe, unstable at 50x.  Align keeps its dedicated conf
-# (ALIGN_GRAM_MODE_CONF, same semantics plus band-table handling);
-# this shared conf governs the rest of the family.
+# 10x on local NVMe, unstable at 50x.
 CORPUS_MATERIALIZE_CONF = "spark.fintxmon.corpusTable.materialize"
 
 
@@ -1427,13 +1412,6 @@ def norm_fold(v: Column) -> Column:
     return F.sqrt(dot_fold(v, v))
 
 
-def cosine_fold(a: Column, b: Column) -> Column:
-    """Cosine similarity as a sequential double fold.  For pair joins
-    prefer ``dot_fold(a, b) / (nrm_a * nrm_b)`` with norms precomputed
-    per row (see :func:`norm_fold`) -- identical doubles, 3x less work."""
-    return dot_fold(a, b) / (norm_fold(a) * norm_fold(b))
-
-
 # Dim-agnostic: ranging over len(vector) instead of a hardcoded 64 keeps
 # the fold order identical while surviving a corpus regenerated at any
 # dimensionality (review finding: a 32-dim corpus made the out-of-bounds
@@ -1562,56 +1540,6 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str,
     return (emb.groupBy("label")
             .applyInPandas(block_pairs,
                            "vec_a long, vec_b long, label int, cos double"))
-
-
-def embed_gate_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental embedding-space admission -- ``q_dedup_incremental``
-    for the vector modality (tested-but-unregistered twin; joins the
-    capacity queue).  Admit a delta vector (vec_id % DELTA_MOD ==
-    DELTA_REM, the text twin's split) iff no CORPUS vector in its label
-    block reaches cosine >= 0.35 (``q_dedup_embed``'s threshold);
-    output = admitted (vec_id, label).
-
-    Scale shape is q_dedup_embed's: the block join shuffles both sides
-    on ``label`` -- at 10^9 vectors the block key is the shuffle key and
-    each block's pair space stays partition-local; the delta side is
-    ingest-sized, so per-run work is O(|delta| x label block), never
-    corpus x corpus.  The ANN path for blocks too hot to brute-force is
-    the persisted IVF index (``build_ivf_index`` / ``q_sim_ivf``):
-    probe nprobe cells instead of the whole block, recall-tested there.
-    Streaming form: ``pipeline.embed_gate_scorer`` (equality-pinned).
-    """
-    emb = load_table(spark, sf_dir, "embeddings") \
-        .withColumn("nrm", norm_fold(F.col("embedding")))
-    a = emb.filter(~(F.col("vec_id") % DELTA_MOD == DELTA_REM)).alias("a")
-    b = emb.filter(F.col("vec_id") % DELTA_MOD == DELTA_REM).alias("b")
-    cos = dot_fold(F.col("a.embedding"), F.col("b.embedding")) \
-        / (F.col("a.nrm") * F.col("b.nrm"))
-    rejected = (
-        a.join(b, F.col("a.label") == F.col("b.label"))
-        .filter(rnd(cos, 6) >= EMBED_NEARDUP_THRESHOLD)
-        .select(F.col("b.vec_id").alias("vec_id")).distinct()
-    )
-    return (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") % DELTA_MOD == DELTA_REM)
-        .join(rejected, "vec_id", "left_anti")
-        .select("vec_id", "label")
-    )
-
-
-EMBED_GATE_ORACLE: str = f"""
-    WITH rejected AS (
-      SELECT DISTINCT b.vec_id
-      FROM embeddings a JOIN embeddings b ON a.label = b.label
-      WHERE a.vec_id % {DELTA_MOD} <> {DELTA_REM}
-        AND b.vec_id % {DELTA_MOD} = {DELTA_REM}
-        AND {R(SQL_COSINE.format(a='a.embedding', b='b.embedding'), 6)} >= {EMBED_NEARDUP_THRESHOLD}
-    )
-    SELECT e.vec_id, e.label FROM embeddings e
-    ANTI JOIN rejected r ON e.vec_id = r.vec_id
-    WHERE e.vec_id % {DELTA_MOD} = {DELTA_REM}
-"""
 
 
 def connected_components(edges: DataFrame, src: str = "doc_a",

@@ -10,8 +10,9 @@ COMPRESSED path is real too: ``decode_png`` is a complete pure-stdlib
 baseline PNG decoder (chunk walk + CRC, zlib inflate, full scanline
 unfiltering incl. Paeth) that ``decode_image`` falls back to when
 Pillow is absent; Pillow, when installed, extends coverage to JPEG and
-friends.  ``fake_decode`` (a deterministic 4x4 grayscale from the
-content's md5) keeps ``q_mm_features`` stable for its hash-match check.
+friends.  ``q_mm_features`` decodes nothing: its worker maps each
+payload to a deterministic 4x4 grayscale from the content's md5, which
+keeps the key stable for its hash-match check.
 
 Scale notes: ``mapInPandas`` streams Arrow record batches through the
 Python worker -- constant memory per batch regardless of table size, no
@@ -20,7 +21,6 @@ shuffle (a pure map).  Binary payloads stay off the driver entirely.
 
 from __future__ import annotations
 
-import hashlib
 import struct as _struct
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
@@ -78,8 +78,7 @@ def decode_image(content: bytes) -> tuple[int, int, str, bytes]:
         if content[:8] == _PNG_SIG:
             return decode_png(content)
         raise NotImplementedError(
-            "non-PNG image decoding requires Pillow; "
-            "use fake_decode for plumbing tests") from None
+            "non-PNG image decoding requires Pillow") from None
 
 
 def decode_png(content: bytes) -> tuple[int, int, str, bytes]:
@@ -234,13 +233,6 @@ def encode_png(width: int, height: int, mode: str, pixels: bytes,
             + chunk(b"IDAT", zlib.compress(bytes(raw), 9)) + chunk(b"IEND", b""))
 
 
-def fake_decode(content: bytes) -> tuple[int, int, list[int]]:
-    """Deterministic stand-in decode: 4x4 grayscale whose pixels are the
-    md5 digest bytes of the content."""
-    digest = hashlib.md5(content).digest()
-    return 4, 4, list(digest)
-
-
 def _make_extract_features():
     """Factory returning the mapInPandas feature worker as a CLOSURE.
 
@@ -264,7 +256,7 @@ def _make_extract_features():
             out = []
             for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
                 raw = bytes(content)
-                # inline fake_decode: 4x4 grayscale = md5 digest bytes
+                # stand-in decode: 4x4 grayscale = md5 digest bytes
                 px = list(hashlib.md5(raw).digest())
                 out.append((doc_id, 4, 4, len(raw), sum(px) / len(px) / 255.0))
             yield pd.DataFrame(
@@ -799,11 +791,12 @@ ORACLES: dict[str, str] = {
                CAST({_box_sql(1, 1)} AS BIGINT) AS q11
         FROM b
     """,
-    # fake_decode is md5-derived and DuckDB has md5(): rebuild the digest
-    # bytes from hex pairs and reproduce width/height/n_bytes/mean_px
-    # exactly (round-2 VERDICT "Next round" #5 -- graduates the key from
-    # rows-only to hash-match).  mean_px: int sum <= 4080, /16 is exact in
-    # double, then one IEEE division by 255 -- bit-identical both engines.
+    # the worker's stand-in decode is md5-derived and DuckDB has md5():
+    # rebuild the digest bytes from hex pairs and reproduce
+    # width/height/n_bytes/mean_px exactly (round-2 VERDICT "Next round"
+    # #5 -- graduates the key from rows-only to hash-match).  mean_px:
+    # int sum <= 4080, /16 is exact in double, then one IEEE division by
+    # 255 -- bit-identical both engines.
     # 2.55e2 (not 255.0): bare decimals parse as DECIMAL in DuckDB.
     "q_mm_features": f"""
         WITH b AS (

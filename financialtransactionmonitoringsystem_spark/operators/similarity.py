@@ -21,8 +21,9 @@ Scale notes:
   never shuffles -- each partition scores its vectors against the
   broadcast queries and keeps a local top-k, and only k rows per
   partition reach the final merge (window over (query, rank)).
-* Cosine is a sequential double fold (``dedup.cosine_fold``) so Spark
-  and DuckDB produce bit-identical doubles -> identical rankings.
+* Cosine is a sequential double fold (``dedup.dot_fold`` over
+  ``dedup.norm_fold`` norms) so Spark and DuckDB produce bit-identical
+  doubles -> identical rankings.
 * The LSH variant trades recall for a bucket equi-join: vectors only
   compare within their sign-pattern bucket.  A test quantifies recall
   against the brute-force ground truth.
@@ -413,7 +414,7 @@ def q_embed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max/avg -- the sanity pass a pipeline runs before indexing
     (catching zero vectors, unnormalized batches, dead labels).
 
-    The norm is the same sequential double fold as ``cosine_fold`` so
+    The norm is the same sequential double fold (``dedup.norm_fold``) so
     per-row values are bit-identical to DuckDB's list_reduce; min/max are
     order-insensitive exactly, avg is rounded to 4 places (cross-engine
     summation-order noise is ~1e-15 relative).

@@ -97,26 +97,15 @@ def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _quality_metrics():
-    """The (n_tokens, ttr, keep) expression triple behind the quality
-    filter -- ONE copy shared by :func:`q_text_quality` and the composed
-    streaming ingest pipeline (``streaming.pipeline.ingest_pipeline``),
-    so the batch operator and the gate stage cannot drift (the
-    ``_gate_rejects`` one-copy convention).  Pure codegen projections
-    over the ``text`` column of any DataFrame."""
-    toks = _toks()
-    n_tokens = F.size(toks)
-    ttr = F.size(F.array_distinct(toks)).cast("double") / n_tokens
-    keep = (n_tokens >= QUALITY_MIN_TOKENS) & (ttr > QUALITY_MIN_TTR)
-    return n_tokens, ttr, keep
-
-
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: length, type-token ratio, mean token length,
     digit ratio, and a composite keep/drop flag (the pretraining-filter
     shape)."""
     docs = scan_wide(load_table(spark, sf_dir, "documents"), "doc_id")
-    n_tokens, ttr, keep = _quality_metrics()
+    toks = _toks()
+    n_tokens = F.size(toks)
+    ttr = F.size(F.array_distinct(toks)).cast("double") / n_tokens
+    keep = (n_tokens >= QUALITY_MIN_TOKENS) & (ttr > QUALITY_MIN_TTR)
     # single-spaced text: total token chars = length - (n_tokens - 1)
     avg_tok_len = (F.length("text") - n_tokens + 1).cast("double") / n_tokens
     digit_ratio = F.regexp_count(F.col("text"), F.lit("[0-9]")).cast("double") / F.length("text")
@@ -256,67 +245,6 @@ def q_text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "n_toks", "nll_micro",
             rnd(F.col("nll_micro").cast("double") / F.lit(1e6)
                 / F.col("n_toks"), 4).alias("avg_nll"))
-    )
-
-
-def perplexity_bigram_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bigram-LM perplexity filtering: score each document by average
-    negative log-likelihood of its token TRANSITIONS under an
-    add-one-smoothed bigram model P(w | prev) = (c2(prev,w) + 1) /
-    (c1(prev) + V) trained on the corpus itself -- the next step up
-    from :func:`q_text_perplexity`'s unigram model (a doc of common
-    words in garbled ORDER scores fluent under unigram; only the
-    transition model catches it).
-
-    Scale shape: ONE corpus gram pass feeds BOTH model tables -- the
-    prefix counts are c1(prev) = sum of c2(prev, w) over the
-    vocabulary-sized bigram-count table, a metadata-sized rollup, not
-    a second corpus aggregation; V comes from the token explode the
-    unigram model already prices.  Per-doc scoring is the unigram
-    join shape with ``gram`` as the key.  Same micro-nat snapping:
-    each transition's NLL is floored to integer micro-nats BEFORE the
-    per-doc sum, so cross-engine double-sum associativity cannot
-    change a row (the q_text_perplexity determinism note, including
-    its ~ulp ``ln`` caveat).
-
-    Docs with no transition (zero or one token) are absent from the
-    output by construction -- the gram explode yields nothing for
-    them, which also keeps the avg division ANSI-safe.
-
-    Tested-but-unregistered twin (registry at rotation capacity);
-    ``PERPLEXITY_BIGRAM_ORACLE`` is the DuckDB side.
-    """
-    return _perplexity_bigram_core(load_table(spark, sf_dir, "documents"))
-
-
-def _perplexity_bigram_core(docs: DataFrame) -> DataFrame:
-    """:func:`perplexity_bigram_twin` over an explicit docs table
-    (planted tests construct known fluent/garbled transition mixes)."""
-    grams = docs.select("doc_id",
-                        F.explode(_wordgrams(F.col("text"), 2)).alias("gram"))
-    doc_gram = grams.groupBy("doc_id", "gram").agg(
-        F.count(F.lit(1)).alias("cnt"))
-    c2 = (grams.groupBy("gram").agg(F.count(F.lit(1)).alias("c2"))
-          .withColumn("prev", F.substring_index("gram", " ", 1)))
-    c1 = c2.groupBy("prev").agg(F.sum("c2").alias("c1"))
-    vocab = (docs.select(F.explode(_toks()).alias("tok"))
-             .filter(F.length("tok") > 0)
-             .agg(F.countDistinct("tok").alias("v")))
-    logp = F.ln((F.col("c2") + 1).cast("double")
-                / (F.col("c1") + F.col("v")).cast("double"))
-    model = (c2.join(c1, "prev")
-             .crossJoin(F.broadcast(vocab))
-             .select("gram",
-                     (-F.floor(logp * F.lit(1e6) + F.lit(0.5)))
-                     .alias("nll_t")))
-    return (
-        doc_gram.join(model, "gram")
-        .groupBy("doc_id")
-        .agg(F.sum("cnt").alias("n_trans"),
-             F.sum(F.col("cnt") * F.col("nll_t")).alias("nll_micro"))
-        .select("doc_id", "n_trans", "nll_micro",
-                rnd(F.col("nll_micro").cast("double") / F.lit(1e6)
-                    / F.col("n_trans"), 4).alias("avg_nll"))
     )
 
 
@@ -518,17 +446,16 @@ def q_text_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     the equality reference via :func:`decontam_stringgram`).
     Interleaved A/B on replicas (r17, warm artifacts, min-of-2):
     1.93 vs 1.42 s at 1x, 8.89 vs 6.02 at 10x, 42.89 vs 23.49 at 50x
-    (1.83x and DIVERGING).  streaming/pipeline.py's decontam_scorer
-    shares :func:`_decontam_fps` in lockstep.
+    (1.83x and DIVERGING).
     """
     return _decontam_from_fps(spark, sf_dir, _decontam_fps())
 
 
 def _decontam_fps():
     """The gram-fingerprint identity the decontam family shares (core
-    operator, bylang child, streaming scorer -- one definition; no
-    fingerprint is persisted across sessions, so it can evolve freely
-    as long as every consumer routes through here).  Grams shuffle as
+    operator and bylang child -- one definition; no fingerprint is
+    persisted across sessions, so it can evolve freely as long as every
+    consumer routes through here).  Grams shuffle as
     64-bit fingerprints, not ~40-byte strings; a collision would alias
     two distinct grams (odds ~|grams|^2 / 2^64, ~1e-8 here) -- the
     standard n-gram-fingerprint trade.  Since r17 the fingerprint is
@@ -618,10 +545,9 @@ def decontam_stringgram(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a planned r19 execution window under the judge's
     composed-child contract (child q_text_decontam_bylang oracle MATCH
     at sf0.01 + sf0.1 in the swap session, child re-attestation next
-    window, streaming decontam_scorer in lockstep); executed in the
-    r17 optimization round, where the driver re-oracles the full
-    registry and the contract's verification steps were run and
-    recorded in PLANS."""
+    window); executed in the r17 optimization round, where the driver
+    re-oracles the full registry and the contract's verification steps
+    were run and recorded in PLANS."""
     return _decontam_from_fps(spark, sf_dir, _decontam_fps_stringgram())
 
 
@@ -747,10 +673,10 @@ def q_text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _novelty_fps():
     """Per-doc distinct word-5-gram fingerprints (the gram identity the
-    whole novelty family shares -- one definition for the core, the
-    reference build, and the streaming scorer; no fingerprint is ever
-    persisted across sessions, so the definition can evolve freely as
-    long as every consumer goes through this one function).
+    whole novelty family shares -- one definition for the core and the
+    reference build; no fingerprint is ever persisted across sessions,
+    so the definition can evolve freely as long as every consumer goes
+    through this one function).
 
     r17 in-window swap (q_text_novelty is r14-attested): fingerprints
     are now the CHAINED token hash (:func:`_hashed_wordgrams` -- no
@@ -858,9 +784,7 @@ def _novelty_probe(cand: DataFrame, ref: DataFrame, bloom: DataFrame,
 def _novelty_core(docs: DataFrame) -> DataFrame:
     """:func:`q_text_novelty` over an explicit docs table (planted-edge
     tests construct known novelty fractions).  Pure composition of the
-    pieces above -- the plan is unchanged by the round-11 extraction
-    (the streaming scorer in streaming/pipeline.py reuses the pieces
-    with a build-once reference)."""
+    pieces above -- the plan is unchanged by the round-11 extraction."""
     docs = scan_wide(docs, "doc_id")
     is_ref = F.col("doc_id") % NOVELTY_REF_MOD == NOVELTY_REF_REM
     ref = _novelty_ref_grams(docs.filter(is_ref))
@@ -884,24 +808,6 @@ ALIGN_NGRAM = 8
 ALIGN_DF_MIN, ALIGN_DF_MAX = 2, 6
 ALIGN_MIN_SHARED = 2
 
-# Gram-table materialization policy -- OBSOLETE as of the r17
-# optimization round, retained for conf compatibility.  The policy
-# existed because the gram table had TWO consumers (the df aggregate
-# and the band join), so one had to choose between materializing the
-# corpus-sized table ("checkpoint", the r8 -35% at sf0.1) and running
-# the corpus explode twice ("rederive", the 100 TB object-store
-# setting; full decision rule and round-8/9 measurements in the git
-# history of this block).  The r17 form computes the df band as a
-# WINDOW COUNT over the single exploded gram stream -- one consumer,
-# one corpus-gram exchange, nothing corpus-sized ever materialized --
-# so both modes now produce the identical plan and the conf is
-# accepted and ignored.  At cluster scale the window's
-# hashpartitioning(gram) exchange is the same exchange the old
-# rederive-mode df aggregate + SMJ band join needed anyway; the
-# window's per-partition sort replaces the SMJ's, and the second
-# corpus explode and the df join disappear outright.
-ALIGN_GRAM_MODE_CONF = "spark.fintxmon.align.gramMaterialize"
-
 
 def q_align_crosslingual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-lingual document alignment by shared rare n-grams
@@ -922,10 +828,11 @@ def q_align_crosslingual(spark: SparkSession, sf_dir: str) -> DataFrame:
     COUNT over the single exploded gram stream, so the gram table has
     ONE consumer and nothing corpus-sized is ever materialized -- only
     the TINY banded posting table (<= ALIGN_DF_MAX rows per rare gram)
-    is checkpointed for the self-join's two sides.  This obsoleted the
-    round-8 checkpoint/rederive policy (``ALIGN_GRAM_MODE_CONF``, kept
-    for conf compatibility); measured 1.87 -> 1.07 s at sf0.1 vs the
-    checkpointed df-join form, row-identical.
+    is checkpointed for the self-join's two sides.  This replaced
+    round 8's choice between checkpointing the corpus-sized gram table
+    and exploding the corpus twice (the gram table then had two
+    consumers, the df aggregate and the band join); measured 1.87 ->
+    1.07 s at sf0.1 vs the checkpointed df-join form, row-identical.
 
     r17 in-window swap: grams travel as CHAINED-TOKEN-HASH longs
     (:func:`_hashed_wordgrams` -- no 8-gram string is ever built;
@@ -964,9 +871,10 @@ def _align_from_gram_expr(spark: SparkSession, docs: DataFrame,
     """Shared body of the alignment query over any per-doc gram-array
     expression (string grams or hashed keys): distinct grams per doc,
     df band via a WINDOW COUNT over the exploded gram stream
-    (r17 optimization round -- see the ALIGN_GRAM_MODE_CONF note for
-    why this obsoleted the checkpoint/rederive policy), bounded
-    self-join, (doc_a, doc_b) rollup.
+    (r17 optimization round -- one consumer of the gram stream, so
+    nothing corpus-sized is materialized; see
+    :func:`q_align_crosslingual`), bounded self-join, (doc_a, doc_b)
+    rollup.
 
     The docs scan rides :func:`_pinned_repartition_if_narrow` keyed by
     doc_id: the sf-scale documents parquet is a single split (one row
@@ -1148,35 +1056,6 @@ NOVELTY_ORACLE = f"""
     FROM (SELECT doc_id FROM documents
           WHERE doc_id % {NOVELTY_REF_MOD} != {NOVELTY_REF_REM}) d
     LEFT JOIN per ON per.doc_id = d.doc_id
-"""
-
-# DuckDB oracle for perplexity_bigram_twin (tested-but-unregistered;
-# registers only if rotation capacity ever opens).
-PERPLEXITY_BIGRAM_ORACLE = f"""
-    WITH g AS ({_grams_sql(2)}),
-    doc_gram AS (
-      SELECT doc_id, gram, COUNT(*) AS cnt FROM g GROUP BY 1, 2
-    ), c2 AS (
-      SELECT gram, split_part(gram, ' ', 1) AS prev, COUNT(*) AS c2
-      FROM g GROUP BY 1, 2
-    ), c1 AS (
-      SELECT prev, CAST(SUM(c2) AS BIGINT) AS c1 FROM c2 GROUP BY 1
-    ), vocab AS (
-      SELECT COUNT(DISTINCT tok) AS v
-      FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
-      WHERE length(tok) > 0
-    ), model AS (
-      SELECT gram,
-             CAST(-floor(ln(CAST(c2.c2 + 1 AS DOUBLE)
-                            / CAST(c1.c1 + v AS DOUBLE)) * 1e6
-                         + 5e-1) AS BIGINT) AS nll_t
-      FROM c2 JOIN c1 USING (prev), vocab
-    )
-    SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_trans,
-           CAST(SUM(cnt * nll_t) AS BIGINT) AS nll_micro,
-           {R('CAST(SUM(cnt * nll_t) AS DOUBLE) / 1e6'
-              ' / CAST(SUM(cnt) AS BIGINT)', 4)} AS avg_nll
-    FROM doc_gram JOIN model USING (gram) GROUP BY doc_id
 """
 
 ORACLES: dict[str, str] = {

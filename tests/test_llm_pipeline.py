@@ -1422,27 +1422,6 @@ def test_scoped_build_reliable_mode(spark, sf_dir, tmp_path):
         spark.conf.unset(SCOPED_BUILD_MODE_CONF)
 
 
-def test_align_gram_rederive_mode_output_identical(spark, sf_dir):
-    """Round-9 at-scale policy knob: `spark.fintxmon.align.gramMaterialize
-    =rederive` must produce row-identical alignment pairs to the default
-    "checkpoint" mode (the two differ ONLY in whether the corpus-sized
-    gram table is materialized or the explode re-derived per consumer),
-    and the default must remain "checkpoint" so the attested bench plan
-    is unchanged."""
-    from financialtransactionmonitoringsystem_spark.operators.text import (
-        ALIGN_GRAM_MODE_CONF)
-
-    assert spark.conf.get(ALIGN_GRAM_MODE_CONF, "checkpoint") == "checkpoint"
-    base = sorted(map(tuple, text.q_align_crosslingual(spark, sf_dir).collect()))
-    spark.conf.set(ALIGN_GRAM_MODE_CONF, "rederive")
-    try:
-        rows = sorted(map(tuple,
-                          text.q_align_crosslingual(spark, sf_dir).collect()))
-    finally:
-        spark.conf.unset(ALIGN_GRAM_MODE_CONF)
-    assert rows == base and rows
-
-
 def test_reliable_mode_refuses_local_default_off_local_master():
     """ADVICE r6: reliable mode with no checkpoint dir set must REFUSE
     on a non-local master instead of silently defaulting to a
@@ -1501,86 +1480,6 @@ def test_decontam_bylang_no_cartesian(spark, sf_dir):
     from financialtransactionmonitoringsystem_spark.plans import inspect as P
 
     assert not P.has_cartesian(text.q_text_decontam_bylang(spark, sf_dir))
-
-
-def test_mixture_cap_twin_oracle_parity(spark, duck, sf_dir):
-    """The quantile-bucketed mixture-cap twin: exact rows vs its DuckDB
-    oracle, plus the closed-form invariants -- every domain keeps at
-    most the cap's tokens, under-cap domains keep everything, and the
-    cap equals the rank-ceil(3n/4) domain total.  A domain is capped
-    iff its total exceeds the cap -- which a regenerated corpus cannot
-    promise any domain does (a max total TIED with the P75 total caps
-    nothing -- ADVICE r10, the q_retention_funnel flake class), so the
-    some-domain-capped guarantee lives in the planted test below and
-    here the capped flag is only checked for consistency."""
-    from financialtransactionmonitoringsystem_spark.operators import curate
-    from tests.compare import assert_frames_match
-
-    twin = curate.mixture_cap_twin(spark, sf_dir)
-    assert_frames_match(twin.toPandas(),
-                        duck.execute(curate.MIXTURE_CAP_ORACLE).df(),
-                        "mixture_cap_twin")
-    rows = twin.collect()
-    caps = {r.cap for r in rows}
-    assert len(caps) == 1
-    cap = caps.pop()
-    totals = sorted(r.tok_total for r in rows)
-    import math
-    assert cap == totals[math.ceil(3 * len(totals) / 4) - 1]
-    for r in rows:
-        assert r.tokens_kept <= r.cap, r
-        assert r.capped == (r.tok_total > r.cap), r
-        if not r.capped:
-            assert r.n_kept == r.n_docs and r.tokens_kept == r.tok_total, r
-    assert any(not r.capped for r in rows)
-    # the current corpus does have an over-cap domain; if a future
-    # regeneration ties max with the P75 this (correct-precondition)
-    # form skips rather than flakes
-    if max(totals) > cap:
-        assert any(r.capped for r in rows)
-
-
-def test_mixture_cap_planted_over_cap_domain(spark):
-    """Planted mixture-cap edges over an explicit docs table (the
-    guarantee the corpus test above cannot make): eight domains with
-    totals 2/3/4/5/6/8/40/60 give cap = rank-ceil(24/4)=6 total = 8;
-    the 60-token domain is capped and keeps its BEST docs (ttr desc)
-    up to the cap; a domain whose best single doc exceeds the cap
-    keeps zero docs (the strict cap); and a null-text doc is excluded
-    symmetrically (ADVICE r10)."""
-    from financialtransactionmonitoringsystem_spark.operators import curate
-
-    def doc(i, src, words):
-        return (i, src, " ".join(words))
-
-    rows = [
-        doc(1, "a", ["x", "y"]),                       # a: 2 tokens
-        doc(2, "b", ["x", "y", "z"]),                  # b: 3 tokens
-        doc(3, "c", ["x", "y", "z", "w"]),             # c: 4 tokens
-        doc(4, "f", ["x"] * 5),                        # f: 5 tokens
-        doc(5, "g", ["x"] * 6),                        # g: 6 tokens
-        doc(6, "h", ["x"] * 8),                        # h: 8 tokens (= cap)
-        # d: 60 tokens across 3 docs; best-first keep order by ttr desc
-        # is doc 7 (ttr 1.0, 4 toks, run 4) then doc 8 (ttr 0.5, 4
-        # toks, run 8 = cap, still fits) then doc 9 (run 60, over)
-        doc(7, "d", ["p", "q", "r", "s"]),
-        doc(8, "d", ["p", "p", "q", "q"]),
-        doc(9, "d", ["e"] * 52),
-        # e: one 40-token doc -- its BEST doc alone exceeds the cap, so
-        # the strict cap keeps zero docs
-        doc(10, "e", ["f", "g"] * 20),
-        (11, "e", None),                               # null text: excluded
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    got = {r.source: r for r in curate._mixture_cap_core(docs).collect()}
-    assert {s: g.tok_total for s, g in got.items()} == \
-        {"a": 2, "b": 3, "c": 4, "f": 5, "g": 6, "h": 8, "d": 60, "e": 40}
-    assert all(g.cap == 8 for g in got.values())
-    assert {s for s, g in got.items() if g.capped} == {"d", "e"}
-    assert (got["d"].n_kept, got["d"].tokens_kept) == (2, 8)
-    assert (got["e"].n_kept, got["e"].tokens_kept) == (0, 0)
-    assert got["e"].n_docs == 1  # the null-text doc never entered
-    assert (got["h"].n_kept, got["h"].tokens_kept) == (1, 8)  # at-cap keeps all
 
 
 def test_shard_balance_invariants(spark, duck, sf_dir):
@@ -1705,110 +1604,6 @@ def test_corpus_materialize_rederive_output_identical(spark, sf_dir):
         assert rows == base and rows, fn.__name__
 
 
-def test_pack_audit_twin_oracle_parity(spark, duck, sf_dir):
-    """The packing-efficiency audit: exact rows vs its DuckDB oracle
-    (which composes the q_pack_sequences oracle verbatim), plus the
-    closed-form invariants -- per-lang n_seqs equals ceil(total_tokens
-    / budget) under contiguous packing, the span fraction matches its
-    own counts, and doc totals reconcile with the pack itself."""
-    import math
-
-    from financialtransactionmonitoringsystem_spark.operators import curate
-    from tests.compare import assert_frames_match
-
-    twin = curate.pack_audit_twin(spark, sf_dir)
-    assert_frames_match(twin.toPandas(),
-                        duck.execute(curate.PACK_AUDIT_ORACLE).df(),
-                        "pack_audit_twin")
-    rows = twin.collect()
-    assert rows
-    pack = curate.q_pack_sequences(spark, sf_dir)
-    n_by_lang = {r.lang: r.n for r in
-                 pack.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-                 .collect()}
-    for r in rows:
-        assert r.n_seqs == math.ceil(r.total_tokens / curate.PACK_BUDGET), r
-        assert 0 <= r.n_spanning <= r.n_docs, r
-        assert r.n_docs == n_by_lang[r.lang], r
-    # correct precondition, not corpus luck (the mixture_cap lesson): a
-    # doc longer than the budget MUST span; if the corpus has one, some
-    # lang must report a crossing
-    max_tok = pack.agg(F.max("n_tokens")).first()[0]
-    if max_tok > curate.PACK_BUDGET:
-        assert any(r.n_spanning > 0 for r in rows)
-
-
-def test_pack_audit_planted_spans(spark, duck):
-    """Planted packing-audit edges via the oracle side over a tiny
-    registered table (the twin's Spark side is a pure composition over
-    q_pack_sequences, itself oracle-checked): budget 512; lang 'a'
-    packs 500+20 so doc 2 crosses the boundary (1 spanning, 2 seqs);
-    lang 'b' packs 512 exactly then 1 (no crossing, 2 seqs); lang 'c'
-    is a single 1030-token doc spanning 3 seqs (counts once)."""
-    import pandas as pd
-
-    from financialtransactionmonitoringsystem_spark.operators import curate
-
-    def doc(i, lang, n):
-        return {"doc_id": i, "lang": lang, "text": " ".join(["w"] * n)}
-
-    pdf = pd.DataFrame([doc(1, "a", 500), doc(2, "a", 20),
-                        doc(3, "b", 512), doc(4, "b", 1),
-                        doc(5, "c", 1030)])
-    duck.register("documents_planted", pdf)
-    try:
-        sql = curate.PACK_AUDIT_ORACLE.replace("FROM documents",
-                                               "FROM documents_planted")
-        got = {r.lang: r for r in
-               duck.execute(sql).df().itertuples(index=False)}
-    finally:
-        duck.unregister("documents_planted")
-    assert (got["a"].n_seqs, got["a"].n_spanning) == (2, 1)
-    assert (got["b"].n_seqs, got["b"].n_spanning) == (2, 0)
-    assert (got["c"].n_seqs, got["c"].n_spanning) == (3, 1)
-
-
-def test_perplexity_bigram_twin_oracle_parity(spark, duck, sf_dir):
-    """The bigram-LM perplexity twin: exact rows vs its DuckDB oracle
-    (micro-nat integer snapping makes the per-doc sums associativity-
-    proof across engines, the q_text_perplexity convention), plus the
-    structural invariants: only docs with >= 1 transition appear, and
-    every score is positive (add-one smoothing means no transition has
-    probability 1 on a corpus with a vocabulary)."""
-    from tests.compare import assert_frames_match
-
-    twin = text.perplexity_bigram_twin(spark, sf_dir)
-    assert_frames_match(twin.toPandas(),
-                        duck.execute(text.PERPLEXITY_BIGRAM_ORACLE).df(),
-                        "perplexity_bigram_twin")
-    rows = twin.collect()
-    assert rows and all(r.n_trans >= 1 and r.avg_nll > 0 for r in rows)
-
-
-def test_perplexity_bigram_orders_garbled_above_fluent(spark):
-    """The reason the bigram model exists: two docs with the SAME token
-    multiset -- one in the corpus-dominant order, one shuffled -- must
-    score differently, fluent below garbled (a unigram model scores
-    them identically by construction).  Corpus: many repeats of 'a b
-    c d' make those transitions common; the probe docs reuse exactly
-    the tokens a/b/c/d."""
-    fluent = "a b c d a b c d"
-    garbled = "a c b d d c b a"
-    docs = spark.createDataFrame(
-        [(i, "a b c d") for i in range(1, 21)]
-        + [(100, fluent), (101, garbled)],
-        "doc_id long, text string")
-    got = {r.doc_id: r for r in
-           text._perplexity_bigram_core(docs).collect()}
-    assert got[100].n_trans == got[101].n_trans == 7
-    assert got[100].avg_nll < got[101].avg_nll, (got[100], got[101])
-    # a single-token doc has no transition and must be absent
-    docs2 = docs.union(spark.createDataFrame([(102, "a")],
-                                             "doc_id long, text string"))
-    assert 102 not in {r.doc_id for r in
-                       text._perplexity_bigram_core(docs2).collect()}
-
-
 def test_corpus_contract_text_never_null(spark, sf_dir):
     """The curate family's shared token counter (curate._n_tokens /
     _N_TOKENS_SQL) diverges between engines on NULL text (Spark
@@ -1828,28 +1623,6 @@ def test_corpus_contract_text_never_null(spark, sf_dir):
     assert docs.select("doc_id").distinct().count() == docs.count()
 
 
-def test_mixture_cap_epochs_twin_oracle_parity(spark, duck, sf_dir):
-    """The epoch-weighted mixture cap: exact rows vs its DuckDB oracle
-    (the shared rank-P75 tail over epoch-weighted token volume), plus
-    the composition invariants -- every tok_total equals the raw twin's
-    total scaled by a 1/2/3 epoch blend (so between 1x and 3x), and
-    the weighting can reorder which domains are capped."""
-    from financialtransactionmonitoringsystem_spark.operators import curate
-    from tests.compare import assert_frames_match
-
-    twin = curate.mixture_cap_epochs_twin(spark, sf_dir)
-    assert_frames_match(twin.toPandas(),
-                        duck.execute(curate.MIXTURE_CAP_EPOCHS_ORACLE).df(),
-                        "mixture_cap_epochs_twin")
-    eff = {r.source: r for r in twin.collect()}
-    raw = {r.source: r for r in curate.mixture_cap_twin(spark, sf_dir).collect()}
-    assert set(eff) == set(raw)
-    for s in eff:
-        assert raw[s].tok_total <= eff[s].tok_total <= 3 * raw[s].tok_total, s
-        assert eff[s].tokens_kept <= eff[s].cap, s
-        assert eff[s].capped == (eff[s].tok_total > eff[s].cap), s
-
-
 def test_dedup_ngram_private_form_oracle_parity(spark, duck, sf_dir):
     """The all-pairs Jaccard ground truth was RETIRED from the registry
     in round 12 (quadratic enumeration; judge-approved two-step swap)
@@ -1864,28 +1637,6 @@ def test_dedup_ngram_private_form_oracle_parity(spark, duck, sf_dir):
                         duck.execute(dedup.DEDUP_NGRAM_ORACLE).df(),
                         "_dedup_ngram[private]")
     assert dedup.DEDUP_NGRAM_ORACLE == dedup.ORACLES["q_dedup_prefix"]
-
-
-def test_embed_gate_twin_oracle_parity(spark, duck, sf_dir):
-    """Incremental embedding-space admission (the vector-modality
-    q_dedup_incremental; tested-but-unregistered twin): exact rows vs
-    its DuckDB oracle, plus the split invariants -- admitted ∪ rejected
-    partitions the delta, and every rejected delta vector really has a
-    same-label corpus vector at cos >= 0.35 (spot-checked through the
-    registered q_dedup_embed pair predicate)."""
-    from tests.compare import assert_frames_match
-
-    twin = dedup.embed_gate_twin(spark, sf_dir)
-    assert_frames_match(twin.toPandas(),
-                        duck.execute(dedup.EMBED_GATE_ORACLE).df(),
-                        "embed_gate_twin")
-    from financialtransactionmonitoringsystem_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    n_delta = emb.filter(
-        F.col("vec_id") % dedup.DELTA_MOD == dedup.DELTA_REM).count()
-    n_adm = twin.count()
-    assert 0 < n_adm < n_delta  # the gate rejects something, not all
 
 
 def test_embed_pairs_vectorized_matches_fold_form_and_oracle(spark, duck,
@@ -1959,8 +1710,8 @@ def test_corpus_contract_embeddings_finite_nonzero_norm(spark, sf_dir):
     cosine NaN, and the engines DISAGREE on the threshold comparison --
     Spark/IEEE says NaN >= 0.35 is false, DuckDB says TRUE (NaN orders
     above everything).  Every cosine consumer (q_dedup_embed,
-    q_sim_cosine, q_sim_knn_per_label, q_sim_lsh's verify,
-    embed_gate_twin) would silently hash-diverge.  Those keys span
+    q_sim_cosine, q_sim_knn_per_label, q_sim_lsh's verify) would
+    silently hash-diverge.  Those keys span
     several attestation cohorts, so a symmetric both-engine guard can
     never land in one free-swap round -- instead the generated corpus
     CONTRACT is pinned here: embeddings are non-null, fixed-width,
@@ -2227,8 +1978,7 @@ def test_decontam_hashed_equals_stringgram_reference(spark, sf_dir):
     exactly when no cross-representation collision exists, which the
     cardinality check asserts directly).  The composed child
     q_text_decontam_bylang was oracle-MATCHed at sf0.01 + sf0.1 in the
-    swap session per the judge's contract, and decontam_scorer shares
-    text._decontam_fps in lockstep."""
+    swap session per the judge's contract."""
     from financialtransactionmonitoringsystem_spark.operators import text
     from financialtransactionmonitoringsystem_spark.tables import load_table
 

@@ -37,9 +37,9 @@ def _plan_jobs(spark, build):
 
 
 def _compacted(spark, serving: str, n_rows: int = 12) -> None:
-    """A serving table written by the compaction sink (4 key buckets)."""
+    """A serving table written by the compaction sink."""
     t0 = datetime.datetime(2025, 1, 1)
-    pipeline.compact_latest_to(serving, key="event_id", n_buckets=4)(
+    pipeline.compact_latest_to(serving, key="event_id")(
         spark.createDataFrame([(i, t0, float(i)) for i in range(n_rows)],
                               "event_id bigint, ts timestamp, value double"),
         0)
@@ -70,9 +70,9 @@ def test_warm_reads_plan_without_jobs(spark, sf_dir, tmp_path):
 
     serving = str(tmp_path / "serving")
     _compacted(spark, serving)
-    pipeline.serving_lookup(spark, serving, 3, n_buckets=4)
+    pipeline.serving_lookup(spark, serving, 3)
     df, warm = _plan_jobs(
-        spark, lambda: pipeline.serving_lookup(spark, serving, 5, n_buckets=4))
+        spark, lambda: pipeline.serving_lookup(spark, serving, 5))
     assert warm == 0
     assert [r.value for r in df.collect()] == [5.0]
 

@@ -123,7 +123,7 @@ def test_compaction_rewrites_only_touched_buckets(spark):
     tmp = tempfile.mkdtemp(prefix="fintxmon_bucketed_")
     serving = f"{tmp}/serving"
     try:
-        sink = pipeline.compact_latest_to(serving, key="event_id", n_buckets=4)
+        sink = pipeline.compact_latest_to(serving, key="event_id")
         t0 = datetime.datetime(2025, 1, 1)
         sink(spark.createDataFrame(
             [(i, t0, float(i)) for i in range(16)], schema), 0)
@@ -145,7 +145,7 @@ def test_compaction_rewrites_only_touched_buckets(spark):
             assert p in after and after[p] == t, f"untouched bucket rewritten: {p}"
         assert any(p not in before for p in after), "touched bucket not rewritten"
 
-        got = pipeline.serving_lookup(spark, serving, 3, n_buckets=4).collect()
+        got = pipeline.serving_lookup(spark, serving, 3).collect()
         assert len(got) == 1 and got[0].value == 99.0
         assert spark.read.parquet(serving).count() == 16  # still 1 row/key
     finally:
@@ -534,271 +534,14 @@ def test_stream_dedup_reemits_after_state_expiry(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_novelty_stream_matches_batch_twin(spark, sf_dir):
-    """Streaming novelty scoring (build-once scorer + foreachBatch)
-    must equal the registered batch operator exactly: the candidate
-    docs are staged as TWO files and drained one file per micro-batch
-    (>= 2 commits asserted via the checkpoint), and the union of the
-    scored batches is row-identical to ``q_text_novelty`` -- per-doc
-    scoring is stateless, so batch boundaries cannot change a row."""
-    import os
-
-    from financialtransactionmonitoringsystem_spark.operators import text
-    from financialtransactionmonitoringsystem_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    is_ref = F.col("doc_id") % text.NOVELTY_REF_MOD == text.NOVELTY_REF_REM
-    scorer = pipeline.novelty_scorer(docs.filter(is_ref))
-
-    tmp = tempfile.mkdtemp(prefix="novelty_stream_")
-    try:
-        stage, out, ckpt = f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt"
-        os.makedirs(stage)
-        cand = docs.filter(~is_ref)
-        for i in range(2):
-            half = cand.filter(F.col("doc_id") % 2 == i).coalesce(1)
-            half.write.parquet(f"{tmp}/half{i}")
-            part = next(f for f in os.listdir(f"{tmp}/half{i}")
-                        if f.endswith(".parquet"))
-            os.rename(f"{tmp}/half{i}/{part}", f"{stage}/batch{i}.parquet")
-        src = (spark.readStream.schema(cand.schema)
-               .option("maxFilesPerTrigger", "1").parquet(stage))
-        pipeline.run_scoring(src, scorer, out, ckpt).awaitTermination()
-
-        assert len(os.listdir(f"{ckpt}/commits")) >= 2  # really multi-batch
-        got = {tuple(r) for r in pipeline.read_scores(spark, out).collect()}
-        want = {tuple(r) for r in text.q_text_novelty(spark, sf_dir).collect()}
-        assert got == want and len(got) > 0
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_novelty_scorer_pays_zero_reference_work_per_batch(spark, sf_dir):
-    """The scorer's per-batch plan must carry the bloom as a
-    driver-LOCAL one-row table (``Scan ExistingRDD[bloom...]`` -- the
-    createDataFrame re-injection) -- the reference-corpus aggregation
-    that builds it ran ONCE at scorer construction, so a micro-batch
-    pays probe cost only.  The batch operator's plan, by contrast, has
-    no local bloom (its bloom is the distributed aggregate) -- pinning
-    that the two forms differ exactly where the build-once design says
-    they should."""
-    from financialtransactionmonitoringsystem_spark.operators import text
-    from financialtransactionmonitoringsystem_spark.plans import inspect as P
-    from financialtransactionmonitoringsystem_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    is_ref = F.col("doc_id") % text.NOVELTY_REF_MOD == text.NOVELTY_REF_REM
-    scorer = pipeline.novelty_scorer(docs.filter(is_ref))
-    s = P.plan_str(scorer(docs.filter(~is_ref).limit(10)), "simple")
-    assert "ExistingRDD[bloom" in s and "element_at(bloom" in s, s
-    batch_plan = P.plan_str(text.q_text_novelty(spark, sf_dir), "simple")
-    assert "ExistingRDD[bloom" not in batch_plan
-
-
-def test_decontam_stream_matches_batch_twin(spark, sf_dir):
-    """Streaming decontamination (build-once benchmark + foreachBatch)
-    must equal the registered batch operator exactly: candidate docs
-    drained in two micro-batches, union of scored batches row-identical
-    to ``q_text_decontam`` -- per-doc hit counts are stateless, so
-    batch boundaries cannot change a row.  This also pins the scorer's
-    gram derivation in lockstep with the batch operator's."""
-    import os
-
-    from financialtransactionmonitoringsystem_spark.operators import text
-    from financialtransactionmonitoringsystem_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    scorer = pipeline.decontam_scorer(docs.filter(F.col("doc_id") % 50 == 0))
-
-    tmp = tempfile.mkdtemp(prefix="decontam_stream_")
-    try:
-        stage, out, ckpt = f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt"
-        os.makedirs(stage)
-        cand = docs.filter(F.col("doc_id") % 50 != 0)
-        for i in range(2):
-            half = cand.filter(F.col("doc_id") % 2 == i).coalesce(1)
-            half.write.parquet(f"{tmp}/half{i}")
-            part = next(f for f in os.listdir(f"{tmp}/half{i}")
-                        if f.endswith(".parquet"))
-            os.rename(f"{tmp}/half{i}/{part}", f"{stage}/batch{i}.parquet")
-        src = (spark.readStream.schema(cand.schema)
-               .option("maxFilesPerTrigger", "1").parquet(stage))
-        pipeline.run_scoring(src, scorer, out, ckpt).awaitTermination()
-
-        assert len(os.listdir(f"{ckpt}/commits")) >= 2
-        got = {tuple(r) for r in pipeline.read_scores(spark, out).collect()}
-        want = {tuple(r) for r in text.q_text_decontam(spark, sf_dir).collect()}
-        assert got == want and len(got) > 0
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_decontam_scorer_pays_zero_benchmark_work_per_batch(spark, sf_dir):
-    """The scorer's per-batch plan must scan ONLY the batch: exactly one
-    FileScan (the candidates), with the benchmark pairs arriving as the
-    driver-local re-injection (Scan ExistingRDD) -- the benchmark corpus
-    was read once at scorer construction.  The batch operator, by
-    contrast, derives the bench side from the corpus scan each run."""
-    from financialtransactionmonitoringsystem_spark.plans import inspect as P
-    from financialtransactionmonitoringsystem_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    scorer = pipeline.decontam_scorer(docs.filter(F.col("doc_id") % 50 == 0))
-    s = P.plan_str(scorer(docs.filter(F.col("doc_id") % 50 != 0).limit(10)),
-                   "simple")
-    assert s.count("FileScan") == 1, s
-    assert "ExistingRDD" in s, s
-
-
-def test_scoring_sink_restart_is_exactly_once(spark, sf_dir):
-    """The scorers' restart-safety claim: re-starting run_scoring with
-    the SAME checkpoint after a completed drain must process nothing
-    (the file source's committed offsets cover the backlog), leaving
-    the output byte-identical -- no re-scored duplicates.  A NEW file
-    arriving after the restart is scored exactly once."""
-    import os
-
-    from financialtransactionmonitoringsystem_spark.operators import text
-    from financialtransactionmonitoringsystem_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    is_ref = F.col("doc_id") % text.NOVELTY_REF_MOD == text.NOVELTY_REF_REM
-    scorer = pipeline.novelty_scorer(docs.filter(is_ref))
-
-    tmp = tempfile.mkdtemp(prefix="novelty_restart_")
-    try:
-        stage, out, ckpt = f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt"
-        os.makedirs(stage)
-        cand = docs.filter(~is_ref)
-
-        def stage_file(frag, name):
-            frag.coalesce(1).write.parquet(f"{tmp}/{name}")
-            part = next(f for f in os.listdir(f"{tmp}/{name}")
-                        if f.endswith(".parquet"))
-            os.rename(f"{tmp}/{name}/{part}", f"{stage}/{name}.parquet")
-
-        def src():
-            return spark.readStream.schema(cand.schema).parquet(stage)
-
-        stage_file(cand.filter(F.col("doc_id") % 2 == 0), "b0")
-        pipeline.run_scoring(src(), scorer, out, ckpt).awaitTermination()
-        first = sorted(map(tuple, pipeline.read_scores(spark, out).collect()))
-
-        # restart with nothing new: zero re-processing
-        pipeline.run_scoring(src(), scorer, out, ckpt).awaitTermination()
-        assert sorted(map(tuple, pipeline.read_scores(spark, out).collect())) == first
-
-        # restart with one new file: only its docs are appended
-        stage_file(cand.filter(F.col("doc_id") % 2 == 1), "b1")
-        pipeline.run_scoring(src(), scorer, out, ckpt).awaitTermination()
-        got = sorted(map(tuple, pipeline.read_scores(spark, out).collect()))
-        want = sorted(map(tuple, text.q_text_novelty(spark, sf_dir).collect()))
-        assert got == want  # exactly once overall: batch-op identical
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_scoring_sink_epoch_replay_is_idempotent(spark, sf_dir):
-    """The at-least-once window ADVICE r11 flagged: foreachBatch can
-    replay a micro-batch with the SAME epoch_id after a crash between
-    the parquet write and the checkpoint commit.  Driving the sink
-    function directly IS that replay -- scoring the same batch twice
-    under one epoch_id must leave the landing table byte-identical
-    (the epoch partition is overwritten, not appended), while a new
-    epoch_id accumulates normally."""
-    import os
-
-    from financialtransactionmonitoringsystem_spark.operators import text
-    from financialtransactionmonitoringsystem_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    is_ref = F.col("doc_id") % text.NOVELTY_REF_MOD == text.NOVELTY_REF_REM
-    scorer = pipeline.novelty_scorer(docs.filter(is_ref))
-    cand = docs.filter(~is_ref)
-    b0 = cand.filter(F.col("doc_id") % 2 == 0)
-    b1 = cand.filter(F.col("doc_id") % 2 == 1)
-
-    tmp = tempfile.mkdtemp(prefix="novelty_replay_")
-    try:
-        out = f"{tmp}/out"
-        sink = pipeline.scoring_sink(scorer, out)
-        sink(b0, 0)
-        first = sorted(map(tuple, pipeline.read_scores(spark, out).collect()))
-        assert first
-        sink(b0, 0)  # crash-replay of epoch 0
-        assert sorted(map(tuple,
-                          pipeline.read_scores(spark, out).collect())) == first
-        sink(b1, 1)  # the next epoch still lands
-        got = sorted(map(tuple, pipeline.read_scores(spark, out).collect()))
-        want = sorted(map(tuple, text.q_text_novelty(spark, sf_dir).collect()))
-        assert got == want
-        # exactly one file set per epoch partition, no append residue
-        assert sorted(d for d in os.listdir(out)
-                      if d.startswith("__epoch=")) == ["__epoch=0",
-                                                       "__epoch=1"]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_decontam_scorer_benchmark_size_guard_trips(spark, sf_dir, monkeypatch):
-    """The build-once premise is guarded, not assumed (VERDICT r11 #4):
-    a 'benchmark' whose distinct (bench_id, gram) pairs exceed the
-    driver-local cap must fail LOUDLY at scorer construction, naming
-    the distributed batch operator as the fallback -- never a silent
-    driver OOM.  The cap is monkeypatched down so the planted oversize
-    is cheap; a real benchmark-sized input still constructs fine."""
-    from financialtransactionmonitoringsystem_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 50 == 0)
-    monkeypatch.setattr(pipeline, "DECONTAM_SCORER_MAX_PAIRS", 10)
-    with pytest.raises(ValueError, match="q_text_decontam"):
-        pipeline.decontam_scorer(bench)
-    monkeypatch.setattr(pipeline, "DECONTAM_SCORER_MAX_PAIRS", 5_000_000)
-    assert pipeline.decontam_scorer(bench) is not None
-
-
-def test_stream_documents_drains_table_and_heals_dangling_link(spark, sf_dir):
-    """stream_documents is the ingest side of streaming scoring: one
-    availableNow drain must deliver exactly the batch documents table.
-    The staging symlink guard must use lexists semantics -- a DANGLING
-    link left by a deleted/regenerated sf_dir previously made
-    os.symlink raise FileExistsError on the next call (ADVICE r11)."""
-    import os
-    import tempfile as _tf
-
-    from financialtransactionmonitoringsystem_spark.tables import load_table
-
-    stage = os.path.join(
-        _tf.gettempdir(),
-        "fintxmon_docstream_" + sf_dir.strip("/").replace("/", "_"))
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, "documents.parquet")
-    if os.path.lexists(link):
-        os.unlink(link)
-    os.symlink(f"{sf_dir}/does_not_exist.parquet", link)  # dangling
-
-    tmp = tempfile.mkdtemp(prefix="docstream_")
-    try:
-        src = pipeline.stream_documents(spark, sf_dir)  # must heal the link
-        out, ckpt = f"{tmp}/out", f"{tmp}/ckpt"
-        (src.writeStream.format("parquet").option("path", out)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start().awaitTermination())
-        got = sorted(map(tuple, spark.read.parquet(out).collect()))
-        want = sorted(map(tuple, load_table(spark, sf_dir, "documents")
-                          .collect()))
-        assert got == want and len(got) > 0
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 def test_stage_symlink_race_tolerant_and_validates_target(tmp_path):
     """_stage_symlink's TOCTOU close (ADVICE r12): a concurrent stager
     winning the create race with the SAME target is success (the EEXIST
     is swallowed and the link re-validated), while a link to a
     DIFFERENT target still raises loudly instead of silently serving
-    another corpus's file."""
+    another corpus's file.  A DANGLING link (the leftover of a deleted
+    or regenerated sf_dir) is healed, not reported as a clash: the old
+    exists()-guarded create raised FileExistsError on it (ADVICE r11)."""
     import os
 
     target = tmp_path / "data.parquet"
@@ -818,1483 +561,12 @@ def test_stage_symlink_race_tolerant_and_validates_target(tmp_path):
     os.symlink(str(target), stage / "race.parquet")
     pipeline._stage_symlink(str(stage), "race.parquet", str(target))
 
+    # a dangling link left by a deleted target is replaced
+    os.symlink(str(tmp_path / "deleted.parquet"), stage / "stale.parquet")
+    pipeline._stage_symlink(str(stage), "stale.parquet", str(target))
+    assert os.path.realpath(stage / "stale.parquet") == str(target)
+
     # a DIFFERENT target under our name is never acceptable
     os.symlink(str(other), stage / "clash.parquet")
     with pytest.raises(FileExistsError, match="points at"):
         pipeline._stage_symlink(str(stage), "clash.parquet", str(target))
-
-
-def test_neardup_gate_stream_matches_batch_twin(spark, sf_dir):
-    """Streaming near-dup ingest gate (build-once corpus index +
-    foreachBatch) must equal the registered batch operator exactly:
-    the delta docs are drained in TWO micro-batches and the union of
-    admitted rows is row-identical to ``q_dedup_incremental`` --
-    admission is corpus-gated only (never batch-vs-batch), so batch
-    boundaries cannot change a verdict, exactly the associativity the
-    batch operator's docstring claims for concurrent ingest."""
-    import os
-
-    from financialtransactionmonitoringsystem_spark.operators import dedup
-    from financialtransactionmonitoringsystem_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    is_delta = F.col("doc_id") % dedup.DELTA_MOD == dedup.DELTA_REM
-    scorer = pipeline.neardup_gate_scorer(docs.filter(~is_delta))
-
-    tmp = tempfile.mkdtemp(prefix="neardup_gate_")
-    try:
-        stage, out, ckpt = f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt"
-        os.makedirs(stage)
-        cand = docs.filter(is_delta)
-        for i in range(2):
-            half = cand.filter(F.col("doc_id") % 2 == i).coalesce(1)
-            half.write.parquet(f"{tmp}/half{i}")
-            part = next(f for f in os.listdir(f"{tmp}/half{i}")
-                        if f.endswith(".parquet"))
-            os.rename(f"{tmp}/half{i}/{part}", f"{stage}/batch{i}.parquet")
-        src = (spark.readStream.schema(cand.schema)
-               .option("maxFilesPerTrigger", "1").parquet(stage))
-        pipeline.run_scoring(src, scorer, out, ckpt).awaitTermination()
-
-        assert len(os.listdir(f"{ckpt}/commits")) >= 2  # really multi-batch
-        got = {tuple(r) for r in pipeline.read_scores(spark, out).collect()}
-        want = {tuple(r)
-                for r in dedup.q_dedup_incremental(spark, sf_dir).collect()}
-        assert got == want and len(got) > 0
-        # the gate actually rejects something on this corpus
-        assert len(got) < cand.count()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_neardup_gate_scorer_pays_zero_corpus_work_per_batch(spark, sf_dir):
-    """The gate's per-batch plan must do zero CORPUS work: the corpus
-    prefix index and token table arrive as the construction-time
-    localCheckpoint blocks (two ``Scan ExistingRDD``) -- corpus
-    tokenization/indexing ran ONCE at scorer construction, never per
-    micro-batch.  Every FileScan in the plan reads the BATCH side (the
-    micro-batch is consumed by probe, verify and the final anti-join;
-    in a real stream those are block reads of the already-materialized
-    micro-batch): here corpus and delta share one parquet file, so the
-    corpus side is distinguishable by its negated pushed filter --
-    none may appear under a FileScan."""
-    from financialtransactionmonitoringsystem_spark.operators import dedup
-    from financialtransactionmonitoringsystem_spark.plans import inspect as P
-    from financialtransactionmonitoringsystem_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    is_delta = F.col("doc_id") % dedup.DELTA_MOD == dedup.DELTA_REM
-    scorer = pipeline.neardup_gate_scorer(docs.filter(~is_delta))
-    s = P.plan_str(scorer(docs.filter(is_delta).limit(10)), "simple")
-    scans = [ln for ln in s.splitlines() if "FileScan" in ln]
-    assert scans, s
-    # a corpus-side scan would push NOT ((doc_id % 20) = 7)
-    assert all("NOT" not in ln for ln in scans), s
-    assert s.count("ExistingRDD") >= 2, s
-
-
-def test_neardup_gate_adversarial_and_randomized(spark):
-    """Corpus-luck-proofing for the gate's LOSSLESS claim (the planted
-    component-generator pattern): the corpus parity test above only
-    exercises pairs the generated corpus happens to contain.  Here the
-    gate runs against a pure-Python reference on (a) planted edge
-    classes -- overlap at exactly ceil(t*n) hiding in the corpus doc's
-    SUFFIX under its own rarest-first order (the single-sided prefix
-    principle's boundary), a pair exactly AT the 0.8 threshold after
-    floor-rounding, just below it, identical docs, same text in a
-    different lang (lang-blocked), unseen-vocabulary docs, repeated
-    tokens -- and (b) a seeded randomized corpus/batch over a small
-    alphabet dense in near-dups."""
-    import random
-
-    from financialtransactionmonitoringsystem_spark.operators import dedup
-
-    def py_admitted(corpus, batch):
-        out = set()
-        for bid, blang, btext in batch:
-            if not any(clang == blang
-                       and _j6(ctext, btext) >= dedup.JACCARD_THRESHOLD
-                       for _, clang, ctext in corpus):
-                out.add(bid)
-        return out
-
-    def run(corpus, batch):
-        cdf = spark.createDataFrame(
-            [(i, l, t, len(t)) for i, l, t in corpus],
-            "doc_id long, lang string, text string, n_chars long"
-        ).withColumn("source", F.lit("c")).select(
-            "doc_id", "text", "lang", "source", "n_chars")
-        bdf = spark.createDataFrame(
-            [(i, l, t, len(t)) for i, l, t in batch],
-            "doc_id long, lang string, text string, n_chars long"
-        ).withColumn("source", F.lit("b")).select(
-            "doc_id", "text", "lang", "source", "n_chars")
-        got = {r.doc_id for r in
-               pipeline.neardup_gate_scorer(cdf)(bdf).collect()}
-        assert got == py_admitted(corpus, batch), (corpus, batch)
-
-    # --- planted edges ------------------------------------------------
-    # 10-token corpus doc; a batch doc sharing exactly 9 = ceil(.8*10)+1
-    # ... plant both sides of the boundary: j = 9/11 = 0.818 (reject)
-    # and j = 8/12 = 0.667 (admit); and the exact-threshold pair
-    # j = 8/10 via 8 shared of sets sized 9 and 9: j = 8/10 = 0.8.
-    base = [f"t{i}" for i in range(10)]
-    corpus = [
-        (1, "en", " ".join(base)),
-        (2, "en", "alpha beta gamma delta epsilon zeta eta theta iota"),
-        (3, "fr", "un deux trois quatre"),
-    ]
-    batch = [
-        # 9 shared + 1 new: j = 9/11 >= .8 is False (0.8181... >= .8 True!)
-        (100, "en", " ".join(base[:9] + ["x1"])),          # j=9/11=.818 reject
-        (101, "en", " ".join(base[:8] + ["x1", "x2"])),    # j=8/12=.667 admit
-        # exact threshold: |A|=9,|B|=9, inter=8 -> j=8/10=.8 reject
-        (102, "en", "alpha beta gamma delta epsilon zeta eta theta kappa"),
-        # identical text -> j=1 reject; same text other lang -> admit
-        (103, "en", " ".join(base)),
-        (104, "de", " ".join(base)),
-        # unseen vocabulary -> admit; repeated tokens collapse
-        (105, "en", "q w e r q w"),
-        (106, "fr", "un deux trois quatre un"),            # j=1 after distinct
-    ]
-    run(corpus, batch)
-
-    # --- seeded randomized sweep ---------------------------------------
-    rng = random.Random(12)
-    alpha = [f"w{i}" for i in range(12)]
-    corpus = [(i, rng.choice(["en", "fr"]),
-               " ".join(rng.sample(alpha, rng.randint(4, 9))))
-              for i in range(30)]
-    batch = [(1000 + i, rng.choice(["en", "fr"]),
-              " ".join(rng.sample(alpha, rng.randint(4, 9))))
-             for i in range(25)]
-    run(corpus, batch)
-
-
-def _gate_df(spark, rows, src="c"):
-    return (spark.createDataFrame(
-        [(i, l, t, len(t)) for i, l, t in rows],
-        "doc_id long, lang string, text string, n_chars long")
-        .withColumn("source", F.lit(src))
-        .select("doc_id", "text", "lang", "source", "n_chars"))
-
-
-def _tset(t):
-    return set(t.split(" "))
-
-
-def _j6(a, b):
-    """Rounded token-set Jaccard, ONE copy of util.rnd's floor formula
-    for every pure-Python gate/funnel reference in this module (review
-    finding: three drifting copies)."""
-    import math
-
-    inter = len(_tset(a) & _tset(b))
-    j = inter / (len(_tset(a)) + len(_tset(b)) - inter)
-    return math.floor(j * 1e6 + 0.5) / 1e6
-
-
-def _py_sequential_admit(corpus, batches):
-    """Pure-Python sequential reference: batch k gated against corpus +
-    admissions from batches < k (never against itself)."""
-    from financialtransactionmonitoringsystem_spark.operators import dedup
-
-    ref = list(corpus)
-    out = []
-    for batch in batches:
-        adm = [(i, l, t) for i, l, t in batch
-               if not any(cl == l and _j6(ct, t) >= dedup.JACCARD_THRESHOLD
-                          for _, cl, ct in ref)]
-        out.append({i for i, _, _ in adm})
-        ref += adm
-    return out
-
-
-def test_evolving_gate_catches_cross_batch_dups(spark):
-    """The whole point vs the static gate: a near-duplicate arriving a
-    micro-batch AFTER its original -- neither in the seed corpus --
-    must be rejected by the evolving gate (the original's prefixes
-    joined the index at admission) while the static corpus-only gate,
-    by contract, admits it."""
-    corpus = [(1, "en", "seed one two three four five")]
-    a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    a_dup = "alpha beta gamma delta epsilon zeta eta theta iota lambda"  # j=9/11
-    b1 = [(100, "en", a)]
-    b2 = [(200, "en", a_dup),                       # cross-batch dup
-          (201, "en", "seed one two three four six"),  # corpus dup j=5/7<.8 -> admit
-          (202, "en", "seed one two three four five"),  # corpus exact -> reject
-          (203, "fr", a_dup)]                       # other lang -> admit
-
-    tmp = tempfile.mkdtemp(prefix="evogate_")
-    try:
-        gate = pipeline.evolving_neardup_gate(
-            _gate_df(spark, corpus), f"{tmp}/state")
-        adm1 = {r.doc_id for r in gate(_gate_df(spark, b1, "b"), 0).collect()}
-        assert adm1 == {100}
-        adm2 = {r.doc_id for r in gate(_gate_df(spark, b2, "b"), 1).collect()}
-        assert adm2 == {201, 203}, adm2
-        # contrast: the static gate admits the cross-batch dup
-        static = pipeline.neardup_gate_scorer(_gate_df(spark, corpus))
-        got = {r.doc_id for r in static(_gate_df(spark, b2, "b")).collect()}
-        assert 200 in got
-        # reference agrees end-to-end
-        assert _py_sequential_admit(corpus, [b1, b2]) == [adm1, adm2]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_evolving_gate_matches_sequential_reference_randomized(spark):
-    """Seeded randomized batches over a small near-dup-dense alphabet:
-    the evolving gate's per-batch admissions must equal the pure-Python
-    sequential reference exactly -- order across batches matters, order
-    within a batch must not."""
-    import random
-
-    rng = random.Random(7)
-    alpha = [f"w{i}" for i in range(10)]
-    pool: list[tuple[int, str, str]] = []
-
-    def doc(i):
-        if pool and rng.random() < 0.5:
-            # mutate an earlier doc: same lang, one token swapped/added
-            # -> dense in >= .8 Jaccard pairs, including cross-batch
-            _, l, t = rng.choice(pool)
-            toks = t.split(" ")
-            extra = [w for w in alpha if w not in toks]
-            if extra and rng.random() < 0.5:
-                toks = toks + [rng.choice(extra)]
-            elif extra:
-                toks[rng.randrange(len(toks))] = rng.choice(extra)
-            d = (i, l, " ".join(dict.fromkeys(toks)))
-        else:
-            d = (i, rng.choice(["en", "fr"]),
-                 " ".join(rng.sample(alpha, rng.randint(5, 9))))
-        pool.append(d)
-        return d
-
-    corpus = [doc(i) for i in range(12)]
-    batches = [[doc(100 * (k + 1) + i) for i in range(8)] for k in range(3)]
-
-    tmp = tempfile.mkdtemp(prefix="evogate_rand_")
-    try:
-        gate = pipeline.evolving_neardup_gate(
-            _gate_df(spark, corpus), f"{tmp}/state")
-        got = [ {r.doc_id for r in gate(_gate_df(spark, b, "b"), k).collect()}
-                for k, b in enumerate(batches)]
-        assert got == _py_sequential_admit(corpus, batches)
-        # something was actually gated across batches at least once
-        n_adm = sum(len(s) for s in got)
-        assert 0 < n_adm < sum(len(b) for b in batches)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_evolving_gate_epoch_replay_is_idempotent(spark):
-    """A replayed epoch must not gate the batch against its OWN earlier
-    attempt's admissions (the state read filters __epoch < epoch_id),
-    and must leave both state and admissions byte-identical -- the
-    scoring_sink exactly-once argument applied to state + output
-    together."""
-    corpus = [(1, "en", "seed one two three four five")]
-    b1 = [(100, "en", "alpha beta gamma delta epsilon zeta eta theta")]
-    b2 = [(200, "en", "alpha beta gamma delta epsilon zeta eta iota")]
-
-    tmp = tempfile.mkdtemp(prefix="evogate_replay_")
-    try:
-        gate = pipeline.evolving_neardup_gate(
-            _gate_df(spark, corpus), f"{tmp}/state")
-        first = {r.doc_id for r in gate(_gate_df(spark, b1, "b"), 0).collect()}
-        replay = {r.doc_id for r in gate(_gate_df(spark, b1, "b"), 0).collect()}
-        assert first == replay == {100}
-        state_toks = spark.read.parquet(f"{tmp}/state/toks")
-        assert state_toks.filter(F.col("__epoch") == 0).count() == 1
-        # the next epoch still sees epoch-0 admissions: b2 is a near-dup
-        # of the epoch-0 admission (j = 7/9 < .8? -> compute: shared 7 of
-        # 8+8 -> j = 7/9 = .778 admit)... use the exact-dup instead
-        adm2 = {r.doc_id for r in gate(_gate_df(spark, b2, "b"), 1).collect()}
-        assert adm2 == _py_sequential_admit(corpus, [b1, b2])[1]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_evolving_gate_streaming_drain(spark, tmp_path):
-    """run_evolving_gate end-to-end: a two-file drain where file 2
-    holds a near-dup of file 1's admission must land epoch-partitioned
-    output equal to the sequential reference."""
-    import os
-
-    corpus = [(1, "en", "seed one two three four five")]
-    a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    a_dup = "alpha beta gamma delta epsilon zeta eta theta iota lambda"
-    b1 = [(100, "en", a)]
-    b2 = [(200, "en", a_dup), (201, "en", "totally fresh words here")]
-
-    tmp = str(tmp_path)
-    stage = f"{tmp}/in"
-    os.makedirs(stage)
-    for i, rows in enumerate((b1, b2)):
-        df = _gate_df(spark, rows, "b").coalesce(1)
-        df.write.parquet(f"{tmp}/half{i}")
-        part = next(f for f in os.listdir(f"{tmp}/half{i}")
-                    if f.endswith(".parquet"))
-        os.rename(f"{tmp}/half{i}/{part}", f"{stage}/batch{i}.parquet")
-
-    gate = pipeline.evolving_neardup_gate(
-        _gate_df(spark, corpus), f"{tmp}/state")
-    src = (spark.readStream
-           .schema(_gate_df(spark, corpus).schema)
-           .option("maxFilesPerTrigger", "1").parquet(stage))
-    pipeline.run_evolving_gate(src, gate, f"{tmp}/out", f"{tmp}/ckpt"
-                               ).awaitTermination()
-    assert len(os.listdir(f"{tmp}/ckpt/commits")) >= 2
-    got = {r.doc_id for r in
-           pipeline.read_scores(spark, f"{tmp}/out").collect()}
-    want = set().union(*_py_sequential_admit(corpus, [b1, b2]))
-    assert got == want == {100, 201}
-
-
-def test_compact_gate_state_preserves_verdicts_and_folds_epochs(spark):
-    """Compaction is an offline rewrite, never a semantic change: after
-    folding all epoch partitions into a new committed baseline
-    generation and refreshing the frozen frequencies, the gate's
-    verdicts on the next batch are IDENTICAL (a cross-batch near-dup of
-    a pre-compaction admission is still rejected), the state holds only
-    the new generation (no epoch partitions, no older generations), and
-    epoch numbering continues unchanged."""
-    import os
-
-    corpus = [(1, "en", "seed one two three four five")]
-    a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    a_dup = "alpha beta gamma delta epsilon zeta eta theta iota lambda"
-    b1 = [(100, "en", a)]
-    b2 = [(200, "en", a_dup), (201, "en", "totally fresh words here")]
-
-    tmp = tempfile.mkdtemp(prefix="evogate_compact_")
-    try:
-        state = f"{tmp}/state"
-        gate = pipeline.evolving_neardup_gate(_gate_df(spark, corpus), state)
-        assert {r.doc_id
-                for r in gate(_gate_df(spark, b1, "b"), 0).collect()} == {100}
-
-        want = _py_sequential_admit(corpus, [b1, b2])[1]
-        pipeline.compact_gate_state(spark, state)
-        epochs = {d for d in os.listdir(f"{state}/toks")
-                  if d.startswith("__epoch=")}
-        assert epochs == set()  # all folded into the new generation
-        assert pipeline._current_gen(spark, state) == 1
-        assert not os.path.exists(f"{state}/gen=0")  # old gen cleaned up
-        got = {r.doc_id for r in gate(_gate_df(spark, b2, "b"), 1).collect()}
-        assert got == want == {201}
-        # frequencies were refreshed from the full state, not the seed
-        freq = {r.tok: r.gf for r in
-                spark.read.parquet(f"{state}/gen=1/freq").collect()}
-        import pyspark.sql.functions as SF
-        alpha_fp = spark.range(1).select(
-            SF.xxhash64(SF.lit("alpha")).alias("h")).first().h
-        assert freq.get(alpha_fp) == 1  # the epoch-0 admission's token
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_embed_gate_stream_matches_batch_twin(spark, sf_dir):
-    """Streaming embedding-space admission (build-once normed corpus +
-    foreachBatch) must equal the batch twin exactly: delta vectors
-    drained in two micro-batches, union of admissions row-identical to
-    dedup.embed_gate_twin -- admission is corpus-gated, so batch
-    boundaries cannot change a verdict."""
-    import os
-
-    from financialtransactionmonitoringsystem_spark.operators import dedup
-    from financialtransactionmonitoringsystem_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    is_delta = F.col("vec_id") % dedup.DELTA_MOD == dedup.DELTA_REM
-    scorer = pipeline.embed_gate_scorer(emb.filter(~is_delta))
-
-    tmp = tempfile.mkdtemp(prefix="embed_gate_")
-    try:
-        stage, out, ckpt = f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt"
-        os.makedirs(stage)
-        cand = emb.filter(is_delta)
-        for i in range(2):
-            half = cand.filter(F.col("vec_id") % 2 == i).coalesce(1)
-            half.write.parquet(f"{tmp}/half{i}")
-            part = next(f for f in os.listdir(f"{tmp}/half{i}")
-                        if f.endswith(".parquet"))
-            os.rename(f"{tmp}/half{i}/{part}", f"{stage}/batch{i}.parquet")
-        src = (spark.readStream.schema(cand.schema)
-               .option("maxFilesPerTrigger", "1").parquet(stage))
-        pipeline.run_scoring(src, scorer, out, ckpt).awaitTermination()
-
-        assert len(os.listdir(f"{ckpt}/commits")) >= 2
-        got = {tuple(r) for r in pipeline.read_scores(spark, out).collect()}
-        want = {tuple(r) for r in dedup.embed_gate_twin(spark, sf_dir).collect()}
-        assert got == want and len(got) > 0
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_embed_gate_ivf_precision_recall_vs_exact(spark, sf_dir):
-    """The ANN gate against the real persisted index: every IVF
-    rejection must be a TRUE rejection (the cosine filter on probed
-    candidates is exact -> admitted_exact ⊆ admitted_ivf), and on this
-    corpus the probe catches >= 60% of the exact twin's rejections
-    (measured 2/3 at sf0.001, 1.0 at sf0.01)."""
-    from financialtransactionmonitoringsystem_spark.operators import dedup, similarity
-    from financialtransactionmonitoringsystem_spark.tables import load_table
-
-    cells, centers = similarity.ivf_index(spark, sf_dir)
-    is_delta = F.col("vec_id") % dedup.DELTA_MOD == dedup.DELTA_REM
-    scorer = pipeline.embed_gate_scorer_ivf(cells.filter(~is_delta), centers)
-    batch = load_table(spark, sf_dir, "embeddings").filter(is_delta)
-    adm_ivf = {r.vec_id for r in scorer(batch).collect()}
-    adm_exact = {r.vec_id
-                 for r in dedup.embed_gate_twin(spark, sf_dir).collect()}
-    assert adm_exact <= adm_ivf  # precision 1.0: no false rejections
-    n = batch.count()
-    rej_ivf, rej_exact = n - len(adm_ivf), n - len(adm_exact)
-    assert rej_exact > 0, "corpus should reject something"
-    assert rej_ivf / rej_exact >= 0.6
-
-
-def test_embed_gate_ivf_planted_cells_pin_probe_semantics(spark):
-    """Hand-assigned cells pin the two guarantees the docstring makes:
-    an EXACT-duplicate corpus vector is caught at nprobe=1 (identical
-    vector -> identical centroid distances -> its cell IS the top
-    probe), while a near-dup living in a non-probed cell is missed at
-    nprobe=1 and caught at nprobe=2 -- recall trades to probe width,
-    precision never does."""
-    centers = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "cell int, center array<double>")
-    corpus = spark.createDataFrame(
-        [(1, "X", [0.9, 0.1], 0),    # cell 0
-         (2, "L", [0.45, 0.55], 1)], # cell 1
-        "vec_id long, label string, embedding array<double>, cell int")
-    # batch 100: identical to corpus 1 (label X), top cell 0 -> caught
-    # batch 101: label L, top cell 0 (d2 .4525 < .5525), but its only
-    #            same-label near-dup (corpus 2, cos .989) sits in cell 1
-    batch = spark.createDataFrame(
-        [(100, "X", [0.9, 0.1]), (101, "L", [0.55, 0.5])],
-        "vec_id long, label string, embedding array<double>")
-
-    adm1 = {r.vec_id for r in pipeline.embed_gate_scorer_ivf(
-        corpus, centers, nprobe=1)(batch).collect()}
-    assert adm1 == {101}  # dup caught, cross-cell near-dup missed
-    adm2 = {r.vec_id for r in pipeline.embed_gate_scorer_ivf(
-        corpus, centers, nprobe=2)(batch).collect()}
-    assert adm2 == set()  # wider probe closes the miss
-
-
-def test_embed_gate_ivf_probe_broadcast_guard_trips(spark, monkeypatch):
-    """The forced probes-side broadcast is bounded (ADVICE r12): a
-    micro-batch whose probe table (rows x nprobe) exceeds the cap must
-    raise loudly naming the fixes, not build an unbounded broadcast --
-    and the same batch passes once the cap accommodates it."""
-    centers = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "cell int, center array<double>")
-    corpus = spark.createDataFrame(
-        [(1, "X", [0.9, 0.1], 0)],
-        "vec_id long, label string, embedding array<double>, cell int")
-    batch = spark.createDataFrame(
-        [(100, "X", [0.9, 0.1]), (101, "L", [0.55, 0.5])],
-        "vec_id long, label string, embedding array<double>")
-
-    monkeypatch.setattr(pipeline, "EMBED_GATE_IVF_MAX_PROBE_ROWS", 3)
-    scorer = pipeline.embed_gate_scorer_ivf(corpus, centers, nprobe=2)
-    with pytest.raises(ValueError, match="MAX_PROBE_ROWS"):
-        scorer(batch)  # 2 rows x nprobe 2 = 4 > 3
-    monkeypatch.setattr(pipeline, "EMBED_GATE_IVF_MAX_PROBE_ROWS", 4)
-    assert {r.vec_id for r in scorer(batch).collect()} == {101}
-
-
-def _vec_df(spark, rows):
-    return spark.createDataFrame(
-        [(i, l, [float(x) for x in v]) for i, l, v in rows],
-        "vec_id long, label string, embedding array<double>")
-
-
-def _py_seq_embed_admit(corpus, batches, thr=0.35):
-    """Pure-Python sequential reference for the evolving embed gate:
-    batch k gated against corpus + admissions from batches < k (never
-    itself); same left-fold dot order and floor-round as the Spark
-    form, so equality is exact."""
-    import math
-
-    state = [(l, v) for _, l, v in corpus]
-    out = []
-    for b in batches:
-        adm = set()
-        for vid, l, v in b:
-            rej = False
-            for sl, sv in state:
-                if sl != l:
-                    continue
-                dot = sum(float(x) * float(y) for x, y in zip(sv, v))
-                c = dot / (math.sqrt(sum(float(x) ** 2 for x in sv))
-                           * math.sqrt(sum(float(x) ** 2 for x in v)))
-                if math.floor(c * 1e6 + 0.5) / 1e6 >= thr:
-                    rej = True
-                    break
-            if not rej:
-                adm.add(vid)
-        state += [(l, v) for vid, l, v in b if vid in adm]
-        out.append(adm)
-    return out
-
-
-def test_evolving_embed_gate_catches_cross_batch_dups(spark):
-    """The embedding-modality evolving gate's whole point vs the static
-    embed_gate_scorer: a same-label near-dup (cos >= 0.35) of a vector
-    ADMITTED in an earlier micro-batch must be rejected -- neither is
-    in the seed corpus, so the static gate, by contract, admits it."""
-    corpus = [(1, "X", [1.0, 0.0])]
-    b1 = [(100, "X", [0.0, 1.0])]            # orthogonal to corpus: admit
-    b2 = [(200, "X", [0.1, 1.0]),            # near-dup of 100: cos .995
-          (201, "Y", [0.1, 1.0]),            # other label: admit
-          (202, "X", [1.0, 0.05])]           # near-dup of CORPUS: reject
-
-    tmp = tempfile.mkdtemp(prefix="evoembed_")
-    try:
-        gate = pipeline.evolving_embed_gate(
-            _vec_df(spark, corpus), f"{tmp}/state")
-        adm1 = {r.vec_id for r in gate(_vec_df(spark, b1), 0).collect()}
-        assert adm1 == {100}
-        adm2 = {r.vec_id for r in gate(_vec_df(spark, b2), 1).collect()}
-        assert adm2 == {201}, adm2
-        # contrast: the static gate admits the cross-batch dup
-        static = pipeline.embed_gate_scorer(_vec_df(spark, corpus))
-        got = {r.vec_id for r in static(_vec_df(spark, b2)).collect()}
-        assert 200 in got
-        # reference agrees end-to-end
-        assert _py_seq_embed_admit(corpus, [b1, b2]) == [adm1, adm2]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_evolving_embed_gate_matches_sequential_reference_randomized(spark):
-    """Seeded randomized batches over a near-dup-dense 4-d vector pool:
-    per-batch admissions must equal the pure-Python sequential
-    reference exactly (the text gate's corpus-luck lesson applied to
-    vectors: mutations are PLANTED, not hoped for)."""
-    import random
-
-    rng = random.Random(13)
-    pool = []
-
-    def vec(i):
-        if pool and rng.random() < 0.5:
-            # perturb an earlier vector: same label, cos ~0.999
-            _, l, v = rng.choice(pool)
-            d = (i, l, [x + rng.uniform(-0.02, 0.02) for x in v])
-        else:
-            d = (i, rng.choice(["X", "Y"]),
-                 [rng.uniform(-1, 1) for _ in range(4)])
-        pool.append(d)
-        return d
-
-    corpus = [vec(i) for i in range(10)]
-    batches = [[vec(100 * (k + 1) + i) for i in range(6)] for k in range(3)]
-
-    tmp = tempfile.mkdtemp(prefix="evoembed_rand_")
-    try:
-        gate = pipeline.evolving_embed_gate(
-            _vec_df(spark, corpus), f"{tmp}/state")
-        got = [{r.vec_id for r in gate(_vec_df(spark, b), k).collect()}
-               for k, b in enumerate(batches)]
-        assert got == _py_seq_embed_admit(corpus, batches)
-        n_adm = sum(len(s) for s in got)
-        assert 0 < n_adm < sum(len(b) for b in batches)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_evolving_embed_gate_epoch_replay_and_compaction(spark):
-    """Replayed epochs are idempotent (the state read filters
-    __epoch < epoch_id), and compaction preserves verdicts: after
-    folding every epoch into a new committed generation, a near-dup of
-    a pre-compaction admission is still rejected, the state holds only
-    the new generation, and epoch numbering continues."""
-    import os
-
-    corpus = [(1, "X", [1.0, 0.0])]
-    b1 = [(100, "X", [0.0, 1.0])]
-    b2 = [(200, "X", [0.1, 1.0]), (201, "X", [-1.0, -0.05])]
-
-    tmp = tempfile.mkdtemp(prefix="evoembed_compact_")
-    try:
-        state = f"{tmp}/state"
-        gate = pipeline.evolving_embed_gate(_vec_df(spark, corpus), state)
-        first = {r.vec_id for r in gate(_vec_df(spark, b1), 0).collect()}
-        replay = {r.vec_id for r in gate(_vec_df(spark, b1), 0).collect()}
-        assert first == replay == {100}
-        n_e0 = (spark.read.parquet(f"{state}/vecs")
-                .filter(F.col("__epoch") == 0).count())
-        assert n_e0 == 1  # no double-append on replay
-
-        want = _py_seq_embed_admit(corpus, [b1, b2])[1]
-        pipeline.compact_embed_gate_state(spark, state)
-        assert pipeline._current_gen(spark, state) == 1
-        assert not os.path.exists(f"{state}/gen=0")
-        assert {d for d in os.listdir(f"{state}/vecs")
-                if d.startswith("__epoch=")} == set()
-        got = {r.vec_id for r in gate(_vec_df(spark, b2), 1).collect()}
-        assert got == want == {201}, got  # 200 gated by folded admission
-        # the folded baseline holds corpus + epoch-0 admission, deduped
-        assert spark.read.parquet(f"{state}/gen=1/vecs").count() == 2
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_evolving_embed_gate_streaming_drain(spark, tmp_path):
-    """run_evolving_gate drives the embedding gate unchanged (the gate
-    contract is modality-independent): a two-file drain where file 2
-    holds a near-dup of file 1's admission must land epoch-partitioned
-    output equal to the sequential reference."""
-    import os
-
-    corpus = [(1, "X", [1.0, 0.0])]
-    b1 = [(100, "X", [0.0, 1.0])]
-    b2 = [(200, "X", [0.1, 1.0]),      # near-dup of file 1's admission
-          (201, "X", [-1.0, -0.05])]   # cos vs corpus -0.999, vs 100 -0.05
-
-    tmp = str(tmp_path)
-    stage = f"{tmp}/in"
-    os.makedirs(stage)
-    for i, rows in enumerate((b1, b2)):
-        df = _vec_df(spark, rows).coalesce(1)
-        df.write.parquet(f"{tmp}/half{i}")
-        part = next(f for f in os.listdir(f"{tmp}/half{i}")
-                    if f.endswith(".parquet"))
-        os.rename(f"{tmp}/half{i}/{part}", f"{stage}/batch{i}.parquet")
-
-    gate = pipeline.evolving_embed_gate(_vec_df(spark, corpus),
-                                        f"{tmp}/state")
-    src = (spark.readStream
-           .schema(_vec_df(spark, corpus).schema)
-           .option("maxFilesPerTrigger", "1").parquet(stage))
-    pipeline.run_evolving_gate(src, gate, f"{tmp}/out", f"{tmp}/ckpt"
-                               ).awaitTermination()
-    assert len(os.listdir(f"{tmp}/ckpt/commits")) >= 2
-    got = {r.vec_id for r in
-           pipeline.read_scores(spark, f"{tmp}/out").collect()}
-    want = set().union(*_py_seq_embed_admit(corpus, [b1, b2]))
-    assert got == want == {100, 201}
-
-
-def test_evolving_embed_gate_rejects_other_corpus_and_resumes(spark):
-    """Same-corpus reconstruction resumes (prior admissions still
-    gate); a different corpus -- including one with identical ids but
-    DIFFERENT vectors, which only the content hash can tell apart --
-    fails loudly at construction."""
-    corpus_a = [(1, "X", [1.0, 0.0])]
-    corpus_b = [(1, "X", [0.0, 1.0])]  # same id, different content
-    b1 = [(100, "X", [0.0, 1.0])]
-
-    tmp = tempfile.mkdtemp(prefix="evoembed_ident_")
-    try:
-        state = f"{tmp}/state"
-        gate = pipeline.evolving_embed_gate(_vec_df(spark, corpus_a), state)
-        assert gate(_vec_df(spark, b1), 0).count() == 1
-        gate2 = pipeline.evolving_embed_gate(_vec_df(spark, corpus_a), state)
-        assert gate2(_vec_df(spark, b1), 1).count() == 0  # dup of e0
-        with pytest.raises(ValueError, match="DIFFERENT corpus"):
-            pipeline.evolving_embed_gate(_vec_df(spark, corpus_b), state)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _cells_df(spark, rows):
-    return spark.createDataFrame(
-        [(i, l, [float(x) for x in v], c) for i, l, v, c in rows],
-        "vec_id long, label string, embedding array<double>, cell int")
-
-
-def test_evolving_embed_gate_ivf_cross_batch_and_probe_semantics(spark):
-    """The evolving IVF gate's two guarantees, planted: an EXACT
-    duplicate of a vector admitted in an EARLIER batch is caught at
-    nprobe=1 (frozen centers make the admission's cell exactly the
-    later probe's top cell -- the static gate, by contract, admits
-    it), while a cross-batch NEAR-dup living in a non-probed cell is
-    missed at nprobe=1 and caught at nprobe=2 -- recall trades to
-    probe width, cross-batch precision never does."""
-    centers = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "cell int, center array<double>")
-    corpus = [(1, "X", [0.9, 0.1], 0)]
-    b1 = [(100, "L", [0.45, 0.55])]          # admitted -> cell 1
-    b2 = [(200, "L", [0.45, 0.55]),          # exact dup of 100
-          (201, "X", [0.9, 0.1]),            # exact dup of corpus
-          (202, "L", [0.55, 0.5])]           # near-dup of 100, top cell 0
-
-    for nprobe, want in ((1, {202}), (2, set())):
-        tmp = tempfile.mkdtemp(prefix="evoivf_")
-        try:
-            gate = pipeline.evolving_embed_gate_ivf(
-                _cells_df(spark, corpus), centers, f"{tmp}/state",
-                nprobe=nprobe)
-            adm1 = {r.vec_id for r in
-                    gate(_vec_df(spark, b1), 0).collect()}
-            assert adm1 == {100}
-            adm2 = {r.vec_id for r in
-                    gate(_vec_df(spark, b2), 1).collect()}
-            assert adm2 == want, (nprobe, adm2)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-    # contrast: the STATIC IVF gate admits the cross-batch exact dup
-    static = pipeline.embed_gate_scorer_ivf(
-        _cells_df(spark, corpus), centers, nprobe=2)
-    got = {r.vec_id for r in static(_vec_df(spark, b2)).collect()}
-    assert 200 in got
-
-
-def test_evolving_embed_gate_ivf_replay_and_compaction(spark):
-    """Replay idempotence (state filter __epoch < epoch_id) and the
-    compaction contract: after the quantizer RE-TRAINS on the full
-    admitted state and gen=<G+1> commits, the exact-duplicate
-    guarantee still holds for both seed-corpus and pre-compaction
-    admissions (cells move, but a duplicate moves WITH its original),
-    epochs are folded, and old generations are gone."""
-    import os
-
-    centers = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "cell int, center array<double>")
-    corpus = [(1, "X", [0.9, 0.1], 0), (2, "Y", [0.1, 0.9], 1)]
-    b1 = [(100, "L", [0.45, 0.55])]
-
-    tmp = tempfile.mkdtemp(prefix="evoivf_compact_")
-    try:
-        state = f"{tmp}/state"
-        gate = pipeline.evolving_embed_gate_ivf(
-            _cells_df(spark, corpus), centers, state, nprobe=1)
-        first = {r.vec_id for r in gate(_vec_df(spark, b1), 0).collect()}
-        replay = {r.vec_id for r in gate(_vec_df(spark, b1), 0).collect()}
-        assert first == replay == {100}
-        n_e0 = (spark.read.parquet(f"{state}/cells")
-                .filter(F.col("__epoch") == 0).count())
-        assert n_e0 == 1
-
-        pipeline.compact_embed_gate_ivf_state(spark, state, nlist=2)
-        assert pipeline._current_gen(spark, state) == 1
-        assert not os.path.exists(f"{state}/gen=0")
-        assert {d for d in os.listdir(f"{state}/cells")
-                if d.startswith("__epoch=")} == set()
-        folded = spark.read.parquet(f"{state}/gen=1/cells")
-        assert folded.count() == 3  # corpus 2 + admission, deduped
-        # exact dups of the corpus AND the folded admission still caught
-        b2 = [(200, "L", [0.45, 0.55]), (201, "X", [0.9, 0.1]),
-              (202, "Z", [0.5, 0.5])]
-        got = {r.vec_id for r in gate(_vec_df(spark, b2), 1).collect()}
-        assert got == {202}, got
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_evolving_gate_rejects_state_dir_from_other_corpus(spark):
-    """Reconstruction over an existing state_dir is legal only for the
-    SAME seed corpus (a stream restart); a different corpus would
-    silently gate new batches against another stream's admissions --
-    must fail loudly at construction instead, and a same-corpus
-    reconstruction must keep prior epochs visible (the resume path)."""
-    corpus_a = [(1, "en", "seed one two three four five")]
-    corpus_b = [(2, "en", "other corpus entirely different words")]
-    b1 = [(100, "en", "alpha beta gamma delta epsilon zeta eta theta")]
-
-    tmp = tempfile.mkdtemp(prefix="evogate_ident_")
-    try:
-        state = f"{tmp}/state"
-        gate = pipeline.evolving_neardup_gate(_gate_df(spark, corpus_a), state)
-        assert gate(_gate_df(spark, b1, "b"), 0).count() == 1
-        # same corpus: resume is fine, epoch-0 admissions still gate
-        gate2 = pipeline.evolving_neardup_gate(_gate_df(spark, corpus_a), state)
-        assert gate2(_gate_df(spark, b1, "b"), 1).count() == 0  # dup of e0
-        with pytest.raises(ValueError, match="DIFFERENT corpus"):
-            pipeline.evolving_neardup_gate(_gate_df(spark, corpus_b), state)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_evolving_gate_reconstruct_after_compaction_keeps_admissions(spark):
-    """The review-found composition bug, pinned: compact_gate_state
-    folds every admission into the __epoch=-1 baseline, so a
-    stream-restart reconstruction (same corpus, same state_dir) must
-    treat the existing state as authoritative and NOT re-seed -- the
-    old unconditional seed overwrote the compacted baseline with
-    corpus-only state, silently destroying every admission.  A
-    near-dup of a pre-compaction admission must still be rejected
-    after compact + reconstruct."""
-    corpus = [(1, "en", "seed one two three four five")]
-    a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    a_dup = "alpha beta gamma delta epsilon zeta eta theta iota lambda"
-
-    tmp = tempfile.mkdtemp(prefix="evogate_compact_resume_")
-    try:
-        state = f"{tmp}/state"
-        gate = pipeline.evolving_neardup_gate(_gate_df(spark, corpus), state)
-        assert gate(_gate_df(spark, [(100, "en", a)], "b"), 0).count() == 1
-        pipeline.compact_gate_state(spark, state)
-        gate2 = pipeline.evolving_neardup_gate(_gate_df(spark, corpus), state)
-        got = {r.doc_id for r in gate2(_gate_df(
-            spark, [(200, "en", a_dup), (201, "en", "fresh words only here")],
-            "b"), 1).collect()}
-        assert got == {201}, got  # 200 still gated by the folded admission
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_compact_crash_before_commit_preserves_baseline(spark, monkeypatch):
-    """The ADVICE-r12 crash scenario, pinned: a compaction that dies
-    AFTER writing the new generation's data but BEFORE creating its
-    _COMMITTED marker must leave the old baseline untouched and
-    authoritative -- the old in-place overwrite could lose the ONLY
-    copy of the seed corpus + past admissions at exactly this point.
-    Verdicts are unchanged through the crash, and recovery is simply
-    re-running compact_gate_state."""
-    import os
-
-    from financialtransactionmonitoringsystem_spark import fsio
-
-    corpus = [(1, "en", "seed one two three four five")]
-    a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    a_dup = "alpha beta gamma delta epsilon zeta eta theta iota lambda"
-    b2 = [(200, "en", a_dup), (201, "en", "totally fresh words here")]
-
-    tmp = tempfile.mkdtemp(prefix="evogate_crash_")
-    try:
-        state = f"{tmp}/state"
-        gate = pipeline.evolving_neardup_gate(_gate_df(spark, corpus), state)
-        assert gate(_gate_df(spark, [(100, "en", a)], "b"), 0).count() == 1
-
-        real_marker = fsio.create_marker
-
-        def crash_at_commit(sp, path):
-            raise RuntimeError("simulated crash before commit")
-
-        monkeypatch.setattr(fsio, "create_marker", crash_at_commit)
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            pipeline.compact_gate_state(spark, state)
-        monkeypatch.setattr(fsio, "create_marker", real_marker)
-
-        # old generation intact and still current; debris uncommitted
-        assert pipeline._current_gen(spark, state) == 0
-        assert os.path.exists(f"{state}/gen=0/_COMMITTED")
-        assert not os.path.exists(f"{state}/gen=1/_COMMITTED")
-        # verdicts unchanged through the crash: 200 still gated by the
-        # epoch-0 admission, which the debris generation must not hide
-        got = {r.doc_id for r in
-               gate(_gate_df(spark, b2, "b"), 1).collect()}
-        assert got == {201}, got
-        # recovery = re-run; epoch 1's state now exists and folds too
-        pipeline.compact_gate_state(spark, state)
-        assert pipeline._current_gen(spark, state) == 1
-        assert not os.path.exists(f"{state}/gen=0")
-        assert {d for d in os.listdir(f"{state}/toks")
-                if d.startswith("__epoch=")} == set()
-        # the folded baseline holds corpus + both epochs' admissions
-        n = spark.read.parquet(f"{state}/gen=1/toks").count()
-        assert n == 3  # docs 1, 100, 201
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_compact_crash_after_commit_heals_on_rerun(spark, monkeypatch):
-    """A compaction that dies AFTER the atomic commit but BEFORE
-    cleanup leaves redundant copies (folded epochs + the old
-    generation).  Redundancy must be verdict-neutral, and a re-run must
-    fold without duplicating rows (the doc_id dedupe) and finish the
-    cleanup."""
-    import os
-
-    from financialtransactionmonitoringsystem_spark import fsio
-
-    corpus = [(1, "en", "seed one two three four five")]
-    a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    a_dup = "alpha beta gamma delta epsilon zeta eta theta iota lambda"
-
-    tmp = tempfile.mkdtemp(prefix="evogate_crash2_")
-    try:
-        state = f"{tmp}/state"
-        gate = pipeline.evolving_neardup_gate(_gate_df(spark, corpus), state)
-        assert gate(_gate_df(spark, [(100, "en", a)], "b"), 0).count() == 1
-
-        monkeypatch.setattr(fsio, "delete", lambda sp, path: None)
-        pipeline.compact_gate_state(spark, state)  # commit lands, no cleanup
-        monkeypatch.undo()
-
-        assert pipeline._current_gen(spark, state) == 1
-        assert os.path.exists(f"{state}/gen=0")          # leftover
-        assert os.path.exists(f"{state}/toks/__epoch=0")  # leftover
-        # verdict-neutral: 200 still rejected, 201 admitted, despite the
-        # epoch-0 rows existing in BOTH the new baseline and the epoch
-        got = {r.doc_id for r in gate(_gate_df(
-            spark, [(200, "en", a_dup), (201, "en", "fresh words here")],
-            "b"), 1).collect()}
-        assert got == {201}, got
-        # re-run folds (epochs 0 redundant + 1 new) without duplicates
-        pipeline.compact_gate_state(spark, state)
-        assert pipeline._current_gen(spark, state) == 2
-        assert not os.path.exists(f"{state}/gen=0")
-        toks = spark.read.parquet(f"{state}/gen=2/toks")
-        assert toks.count() == toks.select("doc_id").distinct().count() == 3
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_compact_skips_torn_epoch(spark):
-    """An epoch whose toks partition exists but whose pref twin is
-    missing is a batch that crashed mid-score and WILL be replayed:
-    folding it into the baseline would gate the replay against its own
-    earlier attempt.  Compaction must neither fold nor delete it."""
-    corpus = [(1, "en", "seed one two three four five")]
-    a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-
-    tmp = tempfile.mkdtemp(prefix="evogate_torn_")
-    try:
-        state = f"{tmp}/state"
-        gate = pipeline.evolving_neardup_gate(_gate_df(spark, corpus), state)
-        assert gate(_gate_df(spark, [(100, "en", a)], "b"), 0).count() == 1
-        # simulate the torn write: epoch 1's toks landed, pref did not
-        import os
-
-        from financialtransactionmonitoringsystem_spark.operators import dedup
-        torn = dedup._tok_sets(
-            _gate_df(spark, [(999, "en", "torn epoch partial state")], "b")
-        ).select("doc_id", "lang", "toks", "n_toks")
-        (torn.withColumn("__epoch", F.lit(1))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("__epoch").parquet(f"{state}/toks"))
-
-        pipeline.compact_gate_state(spark, state)
-        # complete epoch 0 folded + deleted; torn epoch 1 untouched
-        assert {d for d in os.listdir(f"{state}/toks")
-                if d.startswith("__epoch=")} == {"__epoch=1"}
-        folded = {r.doc_id for r in
-                  spark.read.parquet(f"{state}/gen=1/toks").collect()}
-        assert folded == {1, 100}  # 999 NOT folded
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-# ---------------------------------------------------------------------------
-# Composed ingest pipeline (quality -> decontam -> near-dup gate -> novelty)
-
-
-def test_ingest_pipeline_attribution_and_priority_planted(spark):
-    """Synthetic corpus/bench/batch where every stage fires, pinning
-    (a) the batch partition: every doc exactly once, reject_stage in
-    {NULL, quality, decontam, neardup}; (b) FIRST-STAGE-WINS priority:
-    a doc that is both low-quality and a near-dup attributes to
-    quality, one that is both contaminated and a near-dup attributes
-    to decontam; (c) only admitted rows carry novelty columns, and a
-    fully-unseen doc scores novelty 1.0.  Stages are per-doc predicates
-    (corpus/benchmark-gated, never batch-vs-batch), so the expected
-    attribution is computable by hand."""
-    w = [f"w{i:02d}" for i in range(60)]
-    fresh = [f"z{i:02d}" for i in range(25)]
-    bench_gram = "b1 b2 b3 b4 b5"
-    c0 = " ".join(w[:30])                      # near-dup anchor
-    c1 = bench_gram + " " + " ".join(w[30:50])  # corpus doc carrying the bench gram
-    c2 = " ".join(w[40:50])                    # 10-token corpus doc (anchor for E)
-    corpus = _gate_df(spark, [(1000, "en", c0), (1001, "en", c1),
-                              (1002, "en", c2)])
-    bench = _gate_df(spark, [(5000, "en", bench_gram + " filler only")], "b")
-
-    batch = _gate_df(spark, [
-        (1, "en", "tiny doc"),                             # quality (too short)
-        (2, "en", bench_gram + " " + " ".join(w[50:60] + fresh[:10])),  # decontam
-        (3, "en", " ".join(w[1:30] + ["extra"])),          # neardup of c0 (j=29/31)
-        (4, "en", " ".join(fresh)),                        # admitted, novelty 1.0
-        (5, "en", c2),                                     # quality AND neardup -> quality
-        (6, "en", c1 + " " + " ".join(w[50:55])),          # decontam AND neardup -> decontam
-    ], "b")
-
-    score = pipeline.ingest_pipeline(corpus, bench)
-    rows = {r.doc_id: r for r in score(batch).collect()}
-    assert set(rows) == {1, 2, 3, 4, 5, 6}
-    got = {i: rows[i].reject_stage for i in rows}
-    assert got == {1: "quality", 2: "decontam", 3: "neardup",
-                   4: None, 5: "quality", 6: "decontam"}
-    # novelty columns: admitted-only, and doc 4's grams are all unseen
-    assert rows[4].novelty == 1.0 and rows[4].n_grams == 21
-    for i in (1, 2, 3, 5, 6):
-        assert rows[i].novelty is None and rows[i].n_grams is None
-    # metadata survives composition
-    assert rows[4].lang == "en" and rows[4].source == "b" \
-        and rows[4].n_chars == len(" ".join(fresh))
-
-
-def test_ingest_pipeline_matches_independent_stage_application(spark, sf_dir):
-    """On the standard corpus/delta split the composed short-circuit
-    pipeline must equal applying each member scorer INDEPENDENTLY to
-    the full batch and attributing by priority -- equivalent because
-    every stage is a per-doc predicate, which is exactly the
-    associativity the composition relies on."""
-    from financialtransactionmonitoringsystem_spark.operators import dedup, text
-    from financialtransactionmonitoringsystem_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    is_delta = F.col("doc_id") % dedup.DELTA_MOD == dedup.DELTA_REM
-    corpus, batch = docs.filter(~is_delta), docs.filter(is_delta)
-    bench = docs.filter(F.col("doc_id") % 50 == 0)
-
-    got = {r.doc_id: r.reject_stage
-           for r in pipeline.ingest_pipeline(corpus, bench)(batch).collect()}
-
-    keep = text._quality_metrics()[2]
-    q_fail = {r.doc_id for r in batch.filter(~keep).collect()}
-    contam = {r.doc_id
-              for r in pipeline.decontam_scorer(bench)(batch).collect()}
-    admitted = {r.doc_id for r in
-                pipeline.neardup_gate_scorer(corpus)(batch).collect()}
-    want = {}
-    for r in batch.select("doc_id").collect():
-        i = r.doc_id
-        want[i] = ("quality" if i in q_fail else
-                   "decontam" if i in contam else
-                   "neardup" if i not in admitted else None)
-    assert got == want and len(got) > 0
-    assert "quality" in got.values() and "neardup" in got.values()
-
-
-def test_ingest_pipeline_stream_metrics_and_replay(spark, sf_dir):
-    """Two-micro-batch drain of the composed pipeline: (a) landed
-    verdicts equal the single-batch run (batch-size invariance); (b)
-    the metrics table is the landed data's aggregate, per epoch, and
-    conserves the funnel (sum n_docs == batch size); (c) replaying an
-    epoch through the sink (the foreachBatch crash-replay) rewrites
-    both tables without duplication -- exactly-once together."""
-    import os
-
-    from financialtransactionmonitoringsystem_spark.operators import dedup
-    from financialtransactionmonitoringsystem_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    is_delta = F.col("doc_id") % dedup.DELTA_MOD == dedup.DELTA_REM
-    corpus, cand = docs.filter(~is_delta), docs.filter(is_delta)
-    bench = docs.filter(F.col("doc_id") % 50 == 0)
-    score = pipeline.ingest_pipeline(corpus, bench)
-
-    tmp = tempfile.mkdtemp(prefix="ingest_pipe_")
-    try:
-        stage = f"{tmp}/in"
-        out, met, ckpt = f"{tmp}/out", f"{tmp}/metrics", f"{tmp}/ckpt"
-        os.makedirs(stage)
-        # delta doc_ids are all ~7 (mod 20); halve on doc_id // 20 so
-        # BOTH micro-batches are non-empty
-        for i in range(2):
-            half = cand.filter((F.col("doc_id") / 20).cast("long") % 2
-                               == i).coalesce(1)
-            assert half.count() > 0
-            half.write.parquet(f"{tmp}/half{i}")
-            part = next(f for f in os.listdir(f"{tmp}/half{i}")
-                        if f.endswith(".parquet"))
-            os.rename(f"{tmp}/half{i}/{part}", f"{stage}/batch{i}.parquet")
-        src = (spark.readStream.schema(cand.schema)
-               .option("maxFilesPerTrigger", "1").parquet(stage))
-        pipeline.run_ingest_pipeline(src, score, out, met,
-                                     ckpt).awaitTermination()
-        assert len(os.listdir(f"{ckpt}/commits")) >= 2
-
-        landed = pipeline.read_scores(spark, out)
-        got = {tuple(r) for r in landed.collect()}
-        want = {tuple(r) for r in score(cand).collect()}
-        assert got == want and len(got) == cand.count()
-
-        m = pipeline.read_ingest_metrics(spark, met)
-        # funnel conservation, summed across epochs
-        assert m.agg(F.sum("n_docs")).first()[0] == cand.count()
-        # metrics == landed-data aggregate, per epoch
-        agg = {(r["__epoch"], r.verdict): (r.n_docs, r.n_chars)
-               for r in spark.read.parquet(out)
-               .groupBy("__epoch",
-                        F.coalesce("reject_stage", F.lit("admitted"))
-                        .alias("verdict"))
-               .agg(F.count(F.lit(1)).alias("n_docs"),
-                    F.sum("n_chars").alias("n_chars")).collect()}
-        mrows = {(r["__epoch"], r.verdict): (r.n_docs, r.n_chars)
-                 for r in m.collect()}
-        assert mrows == agg
-
-        # crash-replay epoch 0: both tables rewritten, no duplication.
-        # Rebuild the epoch-0 input from its landed doc_ids (a replay
-        # re-presents the same micro-batch).
-        epoch0 = spark.read.parquet(out).filter(F.col("__epoch") == 0)
-        n_out, n_met = (spark.read.parquet(out).count(),
-                        spark.read.parquet(met).count())
-        b0 = cand.join(epoch0.select("doc_id"), "doc_id", "left_semi")
-        pipeline.ingest_pipeline_sink(score, out, met)(b0, 0)
-        assert spark.read.parquet(out).count() == n_out
-        assert spark.read.parquet(met).count() == n_met
-        assert {tuple(r) for r in
-                pipeline.read_scores(spark, out).collect()} == want
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_ingest_pipeline_pays_zero_corpus_work_per_batch(spark, sf_dir):
-    """The composed per-batch plan must inherit every member's
-    zero-corpus-work property: corpus/benchmark/reference tables arrive
-    as construction-time blocks (``Scan ExistingRDD`` / driver-local
-    rows), and every FileScan reads the BATCH side only -- here corpus
-    and delta share one parquet file, so a corpus-side scan would carry
-    the negated pushed filter (the neardup-gate pin, composed)."""
-    from financialtransactionmonitoringsystem_spark.operators import dedup
-    from financialtransactionmonitoringsystem_spark.plans import inspect as P
-    from financialtransactionmonitoringsystem_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    is_delta = F.col("doc_id") % dedup.DELTA_MOD == dedup.DELTA_REM
-    score = pipeline.ingest_pipeline(docs.filter(~is_delta),
-                                     docs.filter(F.col("doc_id") % 50 == 0))
-    s = P.plan_str(score(docs.filter(is_delta).limit(10)), "simple")
-    scans = [ln for ln in s.splitlines() if "FileScan" in ln]
-    assert scans, s
-    assert all("NOT" not in ln for ln in scans), s
-    assert s.count("ExistingRDD") >= 2, s
-
-
-def test_ingest_pipeline_evolving_cross_batch_and_reject_anchors(spark):
-    """The evolving funnel: (a) a near-dup of a doc ADMITTED in an
-    earlier batch is rejected at the neardup stage (the static funnel,
-    by contract, admits it -- contrast-pinned); (b) a doc rejected by
-    an earlier CHEAP stage never enters the growing state, so its later
-    near-dup is judged on its own merits and admitted -- the evolving
-    index is the index of admitted data only."""
-    w = [f"w{i:02d}" for i in range(40)]
-    fresh = [f"z{i:02d}" for i in range(25)]
-    seed = _gate_df(spark, [(1000, "en", " ".join(w[:30]))])
-    bench = _gate_df(spark, [(5000, "en", "b1 b2 b3 b4 b5 filler")], "b")
-
-    short = " ".join(f"q{i:02d}" for i in range(19))  # 19 toks: quality-fail
-    b0 = _gate_df(spark, [
-        (10, "en", " ".join(fresh)),   # admitted -> enters state
-        (11, "en", short),             # quality reject -> NOT in state
-    ], "b")
-    b1 = _gate_df(spark, [
-        (20, "en", " ".join(fresh[1:] + ["y00", "y01"])),  # near-dup of 10 (j=24/27)
-        (21, "en", short + " q99"),    # 20 toks, near-dup of 11 -> must ADMIT
-    ], "b")
-
-    tmp = tempfile.mkdtemp(prefix="ingest_evol_")
-    try:
-        ev = pipeline.ingest_pipeline_evolving(seed, bench, f"{tmp}/state")
-        got0 = {r.doc_id: r.reject_stage for r in ev(b0, 0).collect()}
-        got1 = {r.doc_id: r.reject_stage for r in ev(b1, 1).collect()}
-        assert got0 == {10: None, 11: "quality"}
-        assert got1 == {20: "neardup", 21: None}
-        # replaying epoch 1 must not gate the batch against its own
-        # earlier attempt's admissions (nor flip any verdict)
-        assert {r.doc_id: r.reject_stage
-                for r in ev(b1, 1).collect()} == got1
-        # contrast: the static funnel admits the cross-batch dup
-        st = pipeline.ingest_pipeline(seed, bench)
-        assert {r.doc_id: r.reject_stage
-                for r in st(b1).collect()}[20] is None
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_ingest_pipeline_evolving_stream_drain_metrics(spark):
-    """Two-file availableNow drain of the evolving funnel through
-    run_ingest_pipeline_evolving: verdicts land epoch-partitioned with
-    the cross-batch rejection visible, and the funnel metrics conserve
-    per epoch."""
-    import os
-
-    w = [f"w{i:02d}" for i in range(40)]
-    fresh = [f"z{i:02d}" for i in range(25)]
-    seed = _gate_df(spark, [(1000, "en", " ".join(w[:30]))])
-    bench = _gate_df(spark, [(5000, "en", "b1 b2 b3 b4 b5 filler")], "b")
-    b0 = _gate_df(spark, [(10, "en", " ".join(fresh))], "b")
-    b1 = _gate_df(spark, [(20, "en", " ".join(fresh[1:] + ["y00", "y01"]))],
-                  "b")
-
-    tmp = tempfile.mkdtemp(prefix="ingest_evol_stream_")
-    try:
-        stage = f"{tmp}/in"
-        out, met, ckpt = f"{tmp}/out", f"{tmp}/metrics", f"{tmp}/ckpt"
-        os.makedirs(stage)
-        for i, b in enumerate((b0, b1)):
-            b.coalesce(1).write.parquet(f"{tmp}/half{i}")
-            part = next(f for f in os.listdir(f"{tmp}/half{i}")
-                        if f.endswith(".parquet"))
-            os.rename(f"{tmp}/half{i}/{part}", f"{stage}/batch{i}.parquet")
-        ev = pipeline.ingest_pipeline_evolving(seed, bench, f"{tmp}/state")
-        src = (spark.readStream.schema(b0.schema)
-               .option("maxFilesPerTrigger", "1").parquet(stage))
-        pipeline.run_ingest_pipeline_evolving(src, ev, out, met,
-                                              ckpt).awaitTermination()
-        assert len(os.listdir(f"{ckpt}/commits")) >= 2
-
-        landed = {r.doc_id: r.reject_stage
-                  for r in pipeline.read_scores(spark, out).collect()}
-        assert landed == {10: None, 20: "neardup"}
-        m = pipeline.read_ingest_metrics(spark, met)
-        assert m.agg(F.sum("n_docs")).first()[0] == 2
-        per_epoch = {(r["__epoch"], r.verdict): r.n_docs
-                     for r in m.collect()}
-        assert sum(n for (e, v), n in per_epoch.items()) == 2
-        assert any(v == "neardup" for (e, v) in per_epoch)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_ingest_pipeline_evolving_verdicts_survive_compaction(spark):
-    """compact_gate_state on the FUNNEL's state dir (the funnel reuses
-    the evolving gate's generation layout) must preserve verdicts: a
-    near-dup of a pre-compaction funnel admission is still rejected
-    after the epochs fold into a new committed baseline generation."""
-    fresh = [f"z{i:02d}" for i in range(25)]
-    seed = _gate_df(spark, [(1000, "en",
-                             " ".join(f"w{i:02d}" for i in range(30)))])
-    bench = _gate_df(spark, [(5000, "en", "b1 b2 b3 b4 b5 filler")], "b")
-    b0 = _gate_df(spark, [(10, "en", " ".join(fresh))], "b")
-    dup = _gate_df(spark, [(20, "en", " ".join(fresh[1:] + ["y00", "y01"]))],
-                   "b")
-
-    tmp = tempfile.mkdtemp(prefix="ingest_evol_compact_")
-    try:
-        state = f"{tmp}/state"
-        ev = pipeline.ingest_pipeline_evolving(seed, bench, state)
-        assert {r.doc_id: r.reject_stage
-                for r in ev(b0, 0).collect()} == {10: None}
-        pipeline.compact_gate_state(spark, state)
-        # reconstruction over the compacted state is the resume path
-        ev2 = pipeline.ingest_pipeline_evolving(seed, bench, state)
-        assert {r.doc_id: r.reject_stage
-                for r in ev2(dup, 1).collect()} == {20: "neardup"}
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_ingest_pipeline_null_text_attributes_to_quality(spark):
-    """A NULL ``text`` makes the quality keep expression NULL, and a
-    naive filter pair drops the doc from BOTH branches (review
-    finding): the funnel must instead attribute it to the quality
-    stage so the every-doc-exactly-once conservation contract holds on
-    arbitrary stream input (the corpus-contract no-nulls pin covers
-    generated corpora only)."""
-    seed = _gate_df(spark, [(1000, "en",
-                             " ".join(f"w{i:02d}" for i in range(30)))])
-    bench = _gate_df(spark, [(5000, "en", "b1 b2 b3 b4 b5 filler")], "b")
-    batch = spark.createDataFrame(
-        [(1, None, "en", "b", 0),
-         (2, " ".join(f"z{i:02d}" for i in range(25)), "en", "b", 99)],
-        "doc_id long, text string, lang string, source string, n_chars long")
-
-    score = pipeline.ingest_pipeline(seed, bench)
-    rows = {r.doc_id: r.reject_stage for r in score(batch).collect()}
-    assert rows == {1: "quality", 2: None}
-
-
-def test_ingest_pipeline_evolving_matches_python_reference_randomized(spark):
-    """Seeded randomized corpus/bench/batches with PLANTED mutation
-    classes (short docs, embedded bench 5-grams, corpus near-dups,
-    near-dups of EARLIER-batch docs -- whether those were admitted or
-    rejected; the corpus-luck lesson: plant, don't hope) against a
-    pure-Python sequential funnel reference implementing the same
-    quality/decontam/neardup priority and the admitted-only growing
-    state.  Per-batch attribution equality, exact."""
-    import random
-
-    from financialtransactionmonitoringsystem_spark.operators import dedup, text
-
-    rng = random.Random(20260816)
-    vocab = [f"v{i:03d}" for i in range(300)]
-
-    def mk(n):
-        return " ".join(rng.sample(vocab, n))
-
-    corpus = [(1000 + i, "en", mk(rng.randint(22, 30))) for i in range(25)]
-    bench = [(5000 + i, "en", mk(24)) for i in range(3)]
-
-    batches, prior, nid = [], [], 0
-    for _ in range(3):
-        b = []
-        for _ in range(8):
-            nid += 1
-            r = rng.random()
-            if r < 0.15:
-                b.append((nid, "en", mk(rng.randint(5, 19))))
-            elif r < 0.3:
-                bt = rng.choice(bench)[2].split(" ")
-                s = rng.randrange(len(bt) - 4)
-                b.append((nid, "en",
-                          " ".join(bt[s:s + 5]) + " " + mk(20)))
-            elif r < 0.5:
-                ct = rng.choice(corpus)[2].split(" ")
-                ct[rng.randrange(len(ct))] = f"m{nid}"
-                b.append((nid, "en", " ".join(ct)))
-            elif r < 0.65 and prior:
-                pt = rng.choice(prior).split(" ")
-                pt[rng.randrange(len(pt))] = f"x{nid}"
-                b.append((nid, "en", " ".join(pt)))
-            else:
-                b.append((nid, "en", mk(rng.randint(21, 28))))
-        prior += [t for _, _, t in b]
-        batches.append(b)
-
-    def grams5(t):
-        ws = t.split(" ")
-        return {tuple(ws[i:i + 5]) for i in range(len(ws) - 4)}
-
-    bench_grams = set().union(*(grams5(t) for _, _, t in bench))
-    ref = [(l, t) for _, l, t in corpus]
-    want = []
-    for batch in batches:
-        verd, adm = {}, []
-        for i, l, t in batch:
-            ws = t.split(" ")
-            if not (len(ws) >= text.QUALITY_MIN_TOKENS
-                    and len(set(ws)) / len(ws) > text.QUALITY_MIN_TTR):
-                verd[i] = "quality"
-            elif grams5(t) & bench_grams:
-                verd[i] = "decontam"
-            elif any(cl == l and _j6(ct, t) >= dedup.JACCARD_THRESHOLD
-                     for cl, ct in ref):
-                verd[i] = "neardup"
-            else:
-                verd[i] = None
-                adm.append((l, t))
-        ref += adm  # within-batch never gated, admissions append after
-        want.append(verd)
-
-    tmp = tempfile.mkdtemp(prefix="ingest_evol_rand_")
-    try:
-        ev = pipeline.ingest_pipeline_evolving(
-            _gate_df(spark, corpus), _gate_df(spark, bench, "b"),
-            f"{tmp}/state")
-        for k, batch in enumerate(batches):
-            got = {r.doc_id: r.reject_stage
-                   for r in ev(_gate_df(spark, batch, "b"), k).collect()}
-            assert got == want[k], f"batch {k}: {got} != {want[k]}"
-        # the planted classes actually fired across the run
-        flat = [v for w in want for v in w.values()]
-        assert {"quality", "decontam", "neardup", None} <= set(flat)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_ingest_drift_report_flags_planted_regime_change(spark):
-    """Planted funnel-metrics history: four stable epochs (~20% neardup
-    share) then a regime flip (neardup 80%, admitted collapses, and the
-    decontam stage VANISHES from the metrics entirely).  The drift
-    report must flag the flipped epoch's moved stages, keep the stable
-    epochs unflagged, report the first epoch as deviation 0, and
-    dense-fill the vanished stage: a stage whose steady share is AT
-    the threshold (decontam at 20%) vanishes with |deviation| == 0.2,
-    which a strict-> flag would miss (review finding) -- the vanish
-    clause must flag it regardless of the threshold comparison."""
-    tmp = tempfile.mkdtemp(prefix="ingest_drift_")
-    try:
-        met = f"{tmp}/metrics"
-        rows = []
-        for e in range(4):  # stable regime: 60 admitted / 20 neardup / 20 decontam
-            rows += [(e, "admitted", 60, 6000), (e, "neardup", 20, 2000),
-                     (e, "decontam", 20, 2000)]
-        rows += [(4, "admitted", 20, 2000), (4, "neardup", 80, 8000)]
-        (spark.createDataFrame(
-            rows, "__epoch int, verdict string, n_docs long, n_chars long")
-         .write.partitionBy("__epoch").parquet(met))
-
-        rep = {(r["__epoch"], r.verdict): (r.rate, r.deviation, r.drifted)
-               for r in pipeline.ingest_drift_report(spark, met).collect()}
-        # first epoch: no trailing history -> deviation 0, unflagged
-        assert rep[(0, "admitted")][1] == 0.0 and not rep[(0, "admitted")][2]
-        # stable epochs unflagged
-        assert not any(rep[(e, v)][2] for e in range(4)
-                       for v in ("admitted", "neardup", "decontam"))
-        # the flip: all three stages flagged, including the VANISHED
-        # decontam stage at the exact threshold boundary (rate 0,
-        # trailing 0.2, deviation -0.2): >= catches the boundary and
-        # the vanish clause would catch it even below the threshold
-        assert rep[(4, "neardup")] == (0.8, 0.6, True)
-        assert rep[(4, "admitted")] == (0.2, -0.4, True)
-        assert rep[(4, "decontam")] == (0.0, -0.2, True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_ingest_drift_report_over_real_evolving_funnel_run(spark):
-    """The composed loop the canary exists for, end to end: drive
-    run_ingest_pipeline_evolving over five staged micro-batches --
-    four with a stable 60/20/20 admitted/neardup/decontam shape, then
-    a planted regime flip whose near-dups are copies of EARLIER
-    EPOCHS' ADMISSIONS (one per prior epoch, so the flip also proves
-    the evolving state accumulated across the whole run) and whose
-    decontam stage vanishes -- then run ingest_drift_report over the
-    REAL landed metrics table, not planted rows.  The stable epochs
-    must read unflagged, the flip epoch's three stages must all flag
-    (including the vanished decontam at the exact threshold
-    boundary), and the funnel metrics must conserve per epoch."""
-    import os
-
-    corpus_toks = [f"w{i:02d}" for i in range(30)]
-    seed = _gate_df(spark, [(1000, "en", " ".join(corpus_toks))])
-    bench = _gate_df(spark, [(5000, "en", "b1 b2 b3 b4 b5 filler")], "b")
-
-    def adm_toks(e, j):
-        return [f"e{e}a{j}t{i:02d}" for i in range(25)]
-
-    batches = []
-    for e in range(4):  # stable regime: 3 admitted / 1 neardup / 1 decontam
-        rows = [(e * 100 + j, "en", " ".join(adm_toks(e, j)))
-                for j in range(3)]
-        if e == 0:  # near-dup of the SEED corpus doc: J = 25/30
-            dup = " ".join(corpus_toks[:25])
-        else:       # near-dup of the PREVIOUS epoch's admission: J = 24/26
-            dup = " ".join(adm_toks(e - 1, 0)[:-1] + [f"x{e}"])
-        rows.append((e * 100 + 3, "en", dup))
-        rows.append((e * 100 + 4, "en",
-                     " ".join(["b1 b2 b3 b4 b5"]
-                              + [f"e{e}c{i:02d}" for i in range(20)])))
-        batches.append(rows)
-    # the flip: 1 admitted / 4 near-dups (one per prior epoch's
-    # admission -- state from every earlier batch) / 0 decontam
-    flip = [(400, "en", " ".join(adm_toks(4, 0)))]
-    flip += [(401 + k, "en", " ".join(adm_toks(k, 0)[:-1] + [f"x4{k}"]))
-             for k in range(4)]
-    batches.append(flip)
-
-    tmp = tempfile.mkdtemp(prefix="ingest_drift_e2e_")
-    try:
-        stage = f"{tmp}/in"
-        out, met, ckpt = f"{tmp}/out", f"{tmp}/metrics", f"{tmp}/ckpt"
-        os.makedirs(stage)
-        for i, rows in enumerate(batches):
-            _gate_df(spark, rows, "b").coalesce(1) \
-                .write.parquet(f"{tmp}/half{i}")
-            part = next(f for f in os.listdir(f"{tmp}/half{i}")
-                        if f.endswith(".parquet"))
-            dst = f"{stage}/batch{i}.parquet"
-            os.rename(f"{tmp}/half{i}/{part}", dst)
-            os.utime(dst, (1_000_000_000 + i, 1_000_000_000 + i))
-
-        ev = pipeline.ingest_pipeline_evolving(seed, bench, f"{tmp}/state")
-        src = (spark.readStream.schema(_gate_df(spark, flip, "b").schema)
-               .option("maxFilesPerTrigger", "1").parquet(stage))
-        pipeline.run_ingest_pipeline_evolving(src, ev, out, met,
-                                              ckpt).awaitTermination()
-        assert len(os.listdir(f"{ckpt}/commits")) >= 5
-
-        # real metrics conserve per epoch before the canary reads them
-        per_epoch = {(r["__epoch"], r.verdict): r.n_docs
-                     for r in pipeline.read_ingest_metrics(spark,
-                                                           met).collect()}
-        for e in range(4):
-            assert per_epoch[(e, "admitted")] == 3
-            assert per_epoch[(e, "neardup")] == 1
-            assert per_epoch[(e, "decontam")] == 1
-        assert per_epoch[(4, "admitted")] == 1
-        assert per_epoch[(4, "neardup")] == 4
-        assert (4, "decontam") not in per_epoch
-
-        rep = {(r["__epoch"], r.verdict): (r.rate, r.deviation, r.drifted)
-               for r in pipeline.ingest_drift_report(spark, met).collect()}
-        assert not any(rep[(e, v)][2] for e in range(4)
-                       for v in ("admitted", "neardup", "decontam"))
-        assert rep[(0, "admitted")][1] == 0.0
-        assert rep[(4, "neardup")] == (0.8, 0.6, True)
-        assert rep[(4, "admitted")] == (0.2, -0.4, True)
-        assert rep[(4, "decontam")] == (0.0, -0.2, True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)

@@ -75,64 +75,3 @@ def test_novelty_core_matches_python_reference(spark, texts):
     got = {r.doc_id: (r.n_grams, r.n_novel)
            for r in _novelty_core(docs).collect()}
     assert got == ref_novelty(rows)
-
-
-def _domain_cap_python(rows):
-    """Independent Python reference for curate._domain_cap over
-    (doc_id, source, text) rows: per-domain totals, the
-    rank-ceil(3n/4) cap, best-ttr-first keeps."""
-    import math
-
-    docs = []
-    for doc_id, source, text in rows:
-        toks = text.split(" ")
-        docs.append((doc_id, source, len(toks),
-                     len(set(toks)) / len(toks)))
-    dom = {}
-    for _, s, n, _ in docs:
-        a = dom.setdefault(s, [0, 0])
-        a[0] += 1
-        a[1] += n
-    totals = sorted(v[1] for v in dom.values())
-    cap = totals[math.ceil(3 * len(totals) / 4) - 1]
-    out = {}
-    for s, (n_docs, tok_total) in dom.items():
-        run, n_kept, tokens_kept = 0, 0, 0
-        for doc_id, src, n, ttr in sorted(
-                docs, key=lambda d: (-d[3], d[0])):
-            if src != s:
-                continue
-            run += n
-            if run <= cap:
-                n_kept += 1
-                tokens_kept += n
-        out[s] = (n_docs, tok_total, cap, n_kept, tokens_kept,
-                  tok_total > cap)
-    return out
-
-
-@settings(max_examples=10, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(docs=st.lists(
-    st.tuples(st.sampled_from("abcde"),
-              st.lists(st.sampled_from(["x", "y", "z", "w"]),
-                       min_size=1, max_size=9)),
-    min_size=1, max_size=20))
-def test_domain_cap_matches_python_reference(spark, docs):
-    """curate._domain_cap (the rank-P75 cap + best-ttr keeps shared by
-    both mixture-cap twins) == an independent Python implementation on
-    arbitrary domain/doc distributions -- including single-domain
-    corpora, all-tied totals, and runs that land exactly on the cap.
-
-    The per-domain running sum is global best-ttr order filtered to the
-    domain (equivalent to per-domain order since the sum only advances
-    on the domain's own docs) -- mirrored in the reference."""
-    from financialtransactionmonitoringsystem_spark.operators import curate
-
-    rows = [(i, src, " ".join(toks))
-            for i, (src, toks) in enumerate(docs)]
-    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    got = {r.source: (r.n_docs, r.tok_total, r.cap, r.n_kept,
-                      r.tokens_kept, r.capped)
-           for r in curate._mixture_cap_core(df).collect()}
-    assert got == _domain_cap_python(rows)

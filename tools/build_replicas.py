@@ -28,7 +28,7 @@ in PLANS.md:
   the documents it embeds, so pinning it at 1x made every embedding
   sweep measure JVM warmth, not scale (VERDICT r12 #6).  The label
   shift is what keeps the replication honest for the label-blocked
-  operators (q_dedup_embed, q_sim_knn_per_label, embed_gate): replica
+  operators (q_dedup_embed, q_sim_knn_per_label): replica
   copies are bit-identical vectors, but they can never meet a copy of
   themselves inside a label block, so near-dup density per block stays
   exactly the source corpus's instead of every vector becoming an

@@ -37,14 +37,7 @@ spark.sparkContext.setLogLevel("ERROR")
 import __spark_entry__ as E
 
 qs = E.queries()  # q_text_decontam_bylang / q_text_novelty registered r11
-from financialtransactionmonitoringsystem_spark.operators import curate as _cur
-from financialtransactionmonitoringsystem_spark.operators import text as _txt
-qs["mixture_cap_twin"] = _cur.mixture_cap_twin
-qs["pack_audit_twin"] = _cur.pack_audit_twin
-qs["perplexity_bigram_twin"] = _txt.perplexity_bigram_twin
-qs["mixture_cap_epochs_twin"] = _cur.mixture_cap_epochs_twin
 from financialtransactionmonitoringsystem_spark.operators import dedup as _ddp
-qs["embed_gate_twin"] = _ddp.embed_gate_twin
 # the vectorized form IS q_dedup_embed since the r14 swap; the pre-swap
 # sequential-fold join form is the unregistered twin now
 qs["embed_pairs_fold"] = _ddp.embed_pairs_fold
