@@ -1,16 +1,15 @@
-"""Hadoop-FileSystem I/O for persisted state artifacts.
+"""Hadoop-FileSystem I/O for small persisted state artifacts.
 
-The evolving-gate state (markers, baseline generations, epoch
-partitions) is pitched as a 100 TB deployment artifact living on
-HDFS / an object store, but the first implementation managed it with
-driver-local primitives (``open()``, ``os.listdir``, ``shutil.rmtree``)
-that silently break the moment ``state_dir`` is not a local path
-(ADVICE r12).  Every marker read/write, directory listing, and
-partition delete routes through here instead: the same
-``org.apache.hadoop.fs.FileSystem`` API Spark's own committers use, so
-whatever filesystem the session can read parquet from, state
-maintenance works on too (local paths resolve to ``RawLocalFileSystem``
--- behavior on the test host is unchanged).
+Markers, fingerprints, directory listings and partition deletes go
+through the same ``org.apache.hadoop.fs.FileSystem`` API Spark's own
+committers use, so whatever filesystem the session can read parquet
+from (``file://``, ``hdfs://``, ``s3a://``, ...) these helpers work on
+too; a bare local path resolves to ``RawLocalFileSystem``.  Driver-local
+primitives (``open()``, ``os.listdir``, ``shutil.rmtree``) silently
+break the moment a state directory is not a local path.
+
+No engine module calls these helpers at present; they are kept as a
+tested primitive for state kept beside the transaction store.
 
 Scope note: these helpers go through the JVM gateway
 (``spark.sparkContext._jvm``), which exists in classic local/cluster
@@ -22,9 +21,8 @@ Atomicity contract: :func:`create_marker` is the commit primitive --
 local filesystems (object stores without atomic create degrade to
 "PUT visible-or-not", which still never exposes a torn marker).
 :func:`write_text` is NOT atomic and must only carry values that are
-written once and never rewritten in place (the corpus-identity
-fingerprint); anything that switches state versions uses marker files,
-never in-place rewrites.
+written once and never rewritten in place; anything that switches
+state versions uses marker files, never in-place rewrites.
 """
 
 from __future__ import annotations

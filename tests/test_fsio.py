@@ -1,10 +1,10 @@
 """Direct contract tests for the fsio Hadoop-FileSystem helpers.
 
-The evolving gates exercise fsio end-to-end; these pin the primitive
-contracts the generation protocol leans on -- especially the edge
-behaviors a refactor could silently change (listing a missing dir is
-[], delete of a missing path is a no-op, create_marker is
-create-if-absent) -- against the local filesystem the suite runs on.
+These pin the primitive contracts a marker-committed state protocol
+leans on -- especially the edge behaviors a refactor could silently
+change (listing a missing dir is [], delete of a missing path is a
+no-op, create_marker is create-if-absent) -- against the local
+filesystem the suite runs on.
 """
 
 import pytest
