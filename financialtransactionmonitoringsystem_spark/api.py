@@ -22,6 +22,10 @@ Scale notes:
   at production ingest rates the sequence comes from the streaming source
   offset (Kafka partition+offset), which is what ``streaming.pipeline``
   demonstrates -- a driver-side max() per batch would serialize ingest.
+* ``append`` hands its batch to the JVM as one Arrow table
+  (``json_ingest.ingest_rows``), so its write task starts no Python
+  worker; the whole batch is built in local memory, which suits a POST
+  body.  Bulk loads go through ``json_ingest.stream_transactions_json``.
 * Point lookups scan parquet with the id predicate pushed to row-group
   stats; for hot serving, ``streaming.pipeline.compact_latest_to``
   maintains a compacted keyed table instead.

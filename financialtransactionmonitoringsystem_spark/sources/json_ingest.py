@@ -7,8 +7,11 @@ Behavioral parity decisions (SURVEY.md §2.1 quirks):
 * Malformed rows become all-NULL rows rather than failing the batch
   (the Rust service returns 500 per bad request; a distributed engine
   quarantines instead of crashing); a field of the wrong type reads as
-  NULL.  Exception: under ANSI an unparseable ``timestamp`` fails the
-  whole batch when ``ts`` is derived.
+  NULL.  Exception, by decision: under ANSI (the session default) an
+  unparseable ``timestamp`` fails the whole batch when ``ts`` is
+  derived, so ``TransactionStore.append`` raises
+  ``CANNOT_PARSE_TIMESTAMP`` and writes nothing -- the fail-loud
+  posture of ``session.apply_runtime_confs`` (tested).
 * Duplicate ``transaction_id`` values are allowed; lookups return the
   first match in ingest order (``main.go:67-71``) -- ``ingest_seq``
   makes that deterministic in a distributed setting.  The verbs over
@@ -16,10 +19,20 @@ Behavioral parity decisions (SURVEY.md §2.1 quirks):
   shapes rows into it.
 * The reference truncates request bodies at 1024 bytes (``main.rs:55-60``);
   the engine deliberately does NOT replicate that cliff (tested).
+
+Transport: ``ingest_rows`` hands the JVM its serialized bodies as one
+Arrow table (a ``LocalRelation``), not as a list of Python rows, which
+Spark would parallelize as pickled batches and unpickle in a Python
+worker for every write task.  Parsing stays on the JVM side in
+``from_json(body, TRANSACTION_JSON_SCHEMA)``, so all of the rules above
+are ``from_json``'s, whatever carries the strings.
 """
 
 from __future__ import annotations
 
+import json
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,10 +40,13 @@ from ..schemas import ISO8601_MICROS, TRANSACTION_JSON_SCHEMA
 
 
 def ingest_rows(spark: SparkSession, rows: list[dict]) -> DataFrame:
-    """Ingest in-memory JSON rows (the POST-body path, one echo per row)."""
-    import json as _json
+    """Ingest in-memory JSON rows (the POST-body path, one echo per row).
 
-    raw = spark.createDataFrame([(_json.dumps(r),) for r in rows], "body STRING")
+    The bodies reach the JVM as one Arrow table of strings, so the frame
+    plans as a ``LocalTableScan`` and no task starts a Python worker;
+    ``from_json`` still parses every field (see the module docstring)."""
+    body = pa.array([json.dumps(r) for r in rows], pa.string())
+    raw = spark.createDataFrame(pa.table({"body": body}))
     parsed = raw.select(F.from_json("body", TRANSACTION_JSON_SCHEMA).alias("t"))
     return with_derived(parsed.select("t.*").coalesce(1))
 

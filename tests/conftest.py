@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import glob
 import os
 import random
 import sys
@@ -72,3 +73,8 @@ def make_tx_rows(n: int = 20, seed: int = 20250927) -> list[dict]:
 def tx_rows() -> list[dict]:
     """The 20-row transaction fixture; a fresh list per test."""
     return make_tx_rows()
+
+
+def part_files(path: str) -> list[str]:
+    """The parquet part files directly under a store directory, sorted."""
+    return sorted(glob.glob(os.path.join(path, "part-*.parquet")))

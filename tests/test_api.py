@@ -5,21 +5,17 @@ fixture (``conftest.make_tx_rows``)."""
 
 from __future__ import annotations
 
-import glob
 import os
 
 import pytest
 
 from financialtransactionmonitoringsystem_spark.api import TransactionStore
+from tests.conftest import part_files
 
 
 @pytest.fixture()
 def store(spark, tmp_path):
     return TransactionStore(spark, str(tmp_path / "txstore"))
-
-
-def _part_files(path: str) -> list[str]:
-    return sorted(glob.glob(os.path.join(path, "part-*.parquet")))
 
 
 def test_replay_fixture_preserves_order(spark, store, tx_rows):
@@ -51,7 +47,7 @@ def test_corrupt_part_file_raises_instead_of_reading_empty(spark, store, tx_rows
     restart ``ingest_seq`` from 0 and change what "first match" means."""
     store.append(tx_rows[:10])
     store.append(tx_rows[10:])
-    parts = _part_files(store.path)
+    parts = part_files(store.path)
     assert len(parts) >= 2
     with open(parts[0], "wb") as fh:
         fh.write(b"not a parquet file" * 8)
@@ -59,7 +55,7 @@ def test_corrupt_part_file_raises_instead_of_reading_empty(spark, store, tx_rows
         store.count()
     with pytest.raises(Exception, match="FAILED_READ_FILE"):
         store.append(tx_rows[:1])
-    assert _part_files(store.path) == parts  # the failed append wrote nothing
+    assert part_files(store.path) == parts  # the failed append wrote nothing
 
 
 def test_absent_or_empty_store_reads_empty(spark, store):
