@@ -19,9 +19,10 @@ and never restarts ``ingest_seq`` from 0.
 Scale notes:
 * ``ingest_seq`` is a global insertion sequence.  Here it continues from
   the stored maximum per batch (exact reference parity at fixture scale);
-  at production ingest rates the sequence comes from the streaming source
-  offset (Kafka partition+offset), which is what ``streaming.pipeline``
-  demonstrates -- a driver-side max() per batch would serialize ingest.
+  at production ingest rates the sequence would have to come from the
+  streaming source offset (Kafka partition+offset) -- a driver-side
+  max() per batch serializes ingest.  The engine has no such source
+  yet.
 * ``append`` hands its batch to the JVM as one Arrow table
   (``json_ingest.ingest_rows``), so its write task starts no Python
   worker; the whole batch is built in local memory, which suits a POST

@@ -493,7 +493,7 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (anti-join on the key), updated rows are replaced, deleted keys drop.
 
     Scale: the base snapshot is the 100 TB side -- bucketed on the merge
-    key (sources.write_bucketed) its anti-join needs no base-side
+    key (``bucketBy`` + ``saveAsTable``) its anti-join needs no base-side
     shuffle, only the (small) changeset shuffles; with a Delta/Iceberg
     sink the identical plan becomes a native MERGE INTO and rewrites
     only the files the changeset touches.

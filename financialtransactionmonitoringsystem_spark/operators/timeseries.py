@@ -112,13 +112,14 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     whenever the gap since the previous event exceeds 30 minutes; each
     session reports its span, event count, and spend.
 
-    This is the batch/historical twin of the streaming
-    ``session_window`` (pipeline.session_per_user): the streaming form
-    can only sessionize the live tail, while reprocessing 100 TB of
-    history needs this window+aggregate form.  Ties in ``ts`` break on
-    ``event_id`` so the session assignment is a total order.  Boundary
-    semantics differ from ``session_window`` by design: Spark's gap is
-    exclusive at microsecond precision (a gap of exactly 30:00.000000
+    This is the batch/historical counterpart of a streaming
+    ``session_window`` (batch_twins.q_stream_session is its batch
+    statement): a streaming form can only sessionize the live tail,
+    while reprocessing 100 TB of history needs this window+aggregate
+    form.  Ties in ``ts`` break on ``event_id`` so the session
+    assignment is a total order.  Boundary semantics differ from
+    ``session_window`` by design: Spark's gap is exclusive at
+    microsecond precision (a gap of exactly 30:00.000000
     starts a new session), while this operator splits on
     whole-second gaps STRICTLY greater than the threshold -- the
     convention its DuckDB oracle can replicate exactly.

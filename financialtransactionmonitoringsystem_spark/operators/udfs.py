@@ -3,8 +3,7 @@
 
 The reference has no extension mechanism at all (204 LoC of hard-coded
 handlers); SURVEY.md §2.2 commits this engine to the standard PySpark
-surface instead.  ``mapInPandas`` (multimodal.py) and
-``applyInPandasWithState`` (streaming/stateful.py) are attested
+surface instead.  ``mapInPandas`` (multimodal.py) is attested
 elsewhere; ``q_udaf_centsum`` attests the grouped-agg pandas UDF with
 a registry key + oracle, and the grouped-map surface is attested by
 :func:`udtf_gaps_pandas` (the r17 pre-swap q_udtf_gaps, test-pinned

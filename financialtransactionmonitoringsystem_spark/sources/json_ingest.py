@@ -51,18 +51,14 @@ def ingest_rows(spark: SparkSession, rows: list[dict]) -> DataFrame:
     return with_derived(parsed.select("t.*").coalesce(1))
 
 
-def with_derived(df: DataFrame, ingest_seq=None) -> DataFrame:
+def with_derived(df: DataFrame) -> DataFrame:
     """Add the engine's derived columns (SURVEY.md §1.2 canonical
-    schema).  ``ingest_seq`` defaults to a per-batch monotonic id; a
-    source with a real ordering key passes its own expression (the Kafka
-    path packs partition/offset) so every ingest route lands on the SAME
-    canonical table schema."""
+    schema).  ``ingest_seq`` is a per-batch monotonic id, which
+    ``TransactionStore.append`` offsets past the stored maximum."""
     return (
         df.withColumn("metadata_json", F.to_json("metadata"))
         .withColumn("ts", F.to_timestamp("timestamp", ISO8601_MICROS))
-        .withColumn("ingest_seq",
-                    F.monotonically_increasing_id()
-                    if ingest_seq is None else ingest_seq)
+        .withColumn("ingest_seq", F.monotonically_increasing_id())
     )
 
 

@@ -1,12 +1,13 @@
-"""Batch twins of the streaming operators (SURVEY.md §2.2 "Streaming").
+"""Batch forms of the event-time streaming operators (SURVEY.md §2.2
+"Streaming"), registered in ``queries()``.
 
-Each streaming aggregation (tumbling/sliding/session window, threshold
-alerting) has a batch-mode equivalent over the same ``events`` table --
-identical Spark expressions, minus the watermark -- so the DuckDB oracle
-can verify the window semantics exactly.  The true streaming forms (with
-watermarks and incremental state) live in ``pipeline.py`` and are
-exercised by tests with the memory sink; their per-window results equal
-these batch twins when no data is late.
+Each one (tumbling/sliding/session window, alert rules, running-sum
+crossing, top-k, distinct users, keyed dedup, interval join) is the
+batch-mode statement of an event-time streaming aggregation over the
+``events`` table -- the streaming expression minus the watermark -- so
+the DuckDB oracle can verify the window semantics exactly.  The engine
+keeps no live streaming form of these; its one streaming path is the
+serving path in ``pipeline.py``.
 
 Scale notes: windowed aggregations shuffle once on (window, key); Spark's
 ``window()`` is a generated column, not an explode, for tumbling windows
@@ -74,21 +75,17 @@ def q_stream_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the custom stateful operator
-    (``stateful.balance_alerts_stateful``): the first event at which each
-    user's running total crosses the threshold.
+    """Running-sum crossing alert: the first event at which each user's
+    running total crosses the threshold.
 
     The running sum is an ordered sequential fold on both engines
-    (window ROWS UNBOUNDED PRECEDING), so totals are bit-identical to
-    the streaming operator's per-key accumulation.
+    (window ROWS UNBOUNDED PRECEDING), so totals are bit-identical.
 
     The fold orders by (ts, event_id) -- the event_id tiebreak (round 9,
     closing the round-8 review residual; same convention as
     q_scd2/q_sessionize) makes the accumulation order, and hence the
     first-crossing row, fully deterministic even if a corpus ever
-    contains duplicate (user_id, ts) pairs.  The live stateful forms
-    (``stateful.balance_alerts_stateful`` / ``balance_alerts_tws``)
-    sort each micro-batch by the same pair.
+    contains duplicate (user_id, ts) pairs.
     """
     from pyspark.sql import Window as W
 
@@ -112,10 +109,9 @@ TOPK_PER_WINDOW = 3
 def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Windowed top-k: the top-3 event types by hourly total value (the
     dashboard's "top merchants this hour" panel).  Ranking over an
-    updating aggregate is not expressible inside a streaming query, so
-    the live form re-ranks per micro-batch in ``foreachBatch``
-    (``pipeline.topk_per_window_sink``); this batch twin defines the
-    per-window truth both must converge to.
+    updating aggregate is not expressible inside a streaming query (a
+    live form would re-rank per micro-batch in ``foreachBatch``); this
+    batch form defines the per-window truth.
     """
     from pyspark.sql import Window as W
 
@@ -131,10 +127,10 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hourly active-user counts: exact distinct twin of the streaming
-    sketch form (``pipeline.distinct_users`` uses approx_count_distinct,
-    whose HLL state is mergeable across micro-batches; exactness is the
-    batch-side luxury the oracle can check)."""
+    """Hourly active-user counts, exact (a streaming form would use
+    approx_count_distinct, whose HLL state is mergeable across
+    micro-batches; exactness is the batch-side luxury the oracle can
+    check)."""
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"))
@@ -145,14 +141,12 @@ def q_stream_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of keyed streaming dedup
-    (``pipeline.dedup_submissions``): collapse duplicate submissions --
-    events by the same user, of the same type, in the same hour -- to
-    the FIRST event, ordered by (ts, event_id) like every fold in this
-    engine.  The live form is ``dropDuplicatesWithinWatermark``, which
-    keeps the first ARRIVAL per key with watermark-bounded state; the
-    two agree whenever the source is in-order per key (the same
-    source contract as the stateful running-sum operator).
+    """Keyed dedup: collapse duplicate submissions -- events by the same
+    user, of the same type, in the same hour -- to the FIRST event,
+    ordered by (ts, event_id) like every fold in this engine.  A
+    streaming form (``dropDuplicatesWithinWatermark``) keeps the first
+    ARRIVAL per key with watermark-bounded state; the two agree whenever
+    the source is in-order per key.
 
     Scale shape: ONE hash exchange on the dedup key; the first row per
     group comes from a packed-struct MIN aggregate -- map-side
@@ -176,9 +170,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# DuckDB oracle for q_stream_dedup (registered into ORACLES below; kept
-# as a module-level name because the live-vs-twin streaming test pins
-# the twin against it directly).
+# DuckDB oracle for q_stream_dedup (registered into ORACLES below).
 STREAM_DEDUP_ORACLE = """
     SELECT user_id, event_type, hour, ts, event_id, value FROM (
       SELECT user_id, event_type,
@@ -192,17 +184,15 @@ STREAM_DEDUP_ORACLE = """
 
 
 def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the stream-stream interval join
-    (``pipeline.purchases_with_errors``): each purchase paired with
-    error events by the same user in the following 30 minutes -- the
-    attribution join every event pipeline runs, previously attested only
-    by the live-vs-``interval_join_bucketed`` test, now oracle-checked.
+    """Interval join: each purchase paired with error events by the
+    same user in the following 30 minutes -- the attribution join every
+    event pipeline runs, oracle-checked.
 
     Scale shape: an equi-join on ``user_id`` with the time range as a
     join residual -- one hash shuffle per side, never a time-range
     cross-product (the bucketed form of ``q_join_interval`` applies
-    unchanged for time-skewed keys).  The streaming form bounds its
-    state with watermarks + the 30-minute range; see pipeline.py.
+    unchanged for time-skewed keys).  A stream-stream form would bound
+    its state with watermarks + the 30-minute range.
     """
     ev = load_table(spark, sf_dir, "events")
     p = ev.filter(F.col("event_type") == "purchase").select(
@@ -219,11 +209,10 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the CHAINED stateful pipeline (stream-stream join ->
-    windowed aggregation, ``pipeline.purchase_error_rate``): hourly
-    counts of purchase-error pairs.  Two stateful operators in one
-    streaming query is the Spark 3.5+/4 multi-stateful capability; the
-    batch form is just the join twin grouped by the purchase hour."""
+    """Hourly counts of purchase-error pairs: the interval join chained
+    into a windowed aggregation (in a streaming query, two stateful
+    operators -- the Spark 3.5+/4 multi-stateful capability); the batch
+    form is just the join grouped by the purchase hour."""
     j = q_stream_join(spark, sf_dir)
     return (
         j.groupBy(F.window("p_ts", "1 hour").alias("w"))

@@ -1,374 +1,27 @@
-"""Structured Streaming pipelines: the reference's ingest/monitoring path
-(O1, ``monitoring-service/src/main.rs:79-89``) restated as incremental
-dataflow (SURVEY.md §3 E2).
+"""Structured Streaming serving path: the reference's ingest/monitoring
+path (O1, ``monitoring-service/src/main.rs:79-89``) restated as
+incremental dataflow (SURVEY.md §3 E2).
 
-Two paths live here, nothing else:
+One path lives here: ``sources.json_ingest.stream_transactions_json`` ->
+:func:`compact_latest_to` -> :func:`serving_lookup`, one hash-bucket
+layout (:func:`_key_bucket`) shared by the sink and the lookup.
 
-* the event path: :func:`stream_events` feeds the watermarked event-time
-  forms (windows, sessions, dedup, alert rules, joins) whose batch twins
-  are registered in ``queries()`` (``batch_twins``), plus the live top-k
-  dashboard sink;
-* the serving path: ``sources.json_ingest.stream_transactions_json`` ->
-  :func:`compact_latest_to` -> :func:`serving_lookup`, one hash-bucket
-  layout (:func:`_key_bucket`) shared by the sink and the lookup.
-
-Design (holds at 100 TB / 1000 executors):
-* Source: file stream here (driver testdata); swap ``readStream.format``
-  for ``kafka`` in production -- every transformation below is
-  source-agnostic.
-* Event time + watermark bound all state: windowed aggs and streaming
-  dedup drop state older than the watermark, so state size is
-  O(keys x windows in the watermark horizon), not O(stream length) --
-  unlike the reference, which grows a process-local Vec forever
-  (``main.rs:25``) and loses it on restart (checkpointing replaces that).
+Design:
+* Source: a JSON file stream; swap ``readStream.format`` for ``kafka``
+  in production -- the sink is source-agnostic.
 * ``foreachBatch`` compaction keeps a small serving table for point
   lookups: the reference's O(n)-scan-per-request GET becomes a keyed
-  parquet table refreshed per micro-batch.
+  parquet table refreshed per micro-batch, and the checkpoint replaces
+  the reference's process-local Vec (``main.rs:25``), which is lost on
+  restart.
 """
 
 from __future__ import annotations
 
-import os
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import apply_runtime_confs
-from ..tables import _normalize_events_ts, read_engine_table, read_parquet
-from ..util import rnd
-
-# State-store provider for stateful streaming at scale (VERDICT r5 #8):
-# the default HDFSBackedStateStoreProvider holds EVERY live state key in
-# executor heap -- watermarks bound the key count in time but a hot hour
-# over 10^9 users still has to fit in memory.  RocksDB spills state to
-# executor-local disk with an in-memory working set, bounding heap by
-# block cache size instead of key cardinality; its changelog
-# checkpointing keeps commit cost proportional to the delta.  The conf
-# is per-query-start, so one session can run both providers.
-STATE_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
-ROCKSDB_STATE_PROVIDER = ("org.apache.spark.sql.execution.streaming.state."
-                          "RocksDBStateStoreProvider")
-
-
-@contextmanager
-def state_store_provider(spark: SparkSession,
-                         provider: str = ROCKSDB_STATE_PROVIDER):
-    """Scoped state-store provider switch: queries STARTED inside the
-    block use ``provider``; the previous provider is restored on exit
-    (already-running queries keep the provider they started with)."""
-    old = spark.conf.get(STATE_PROVIDER_CONF)
-    spark.conf.set(STATE_PROVIDER_CONF, provider)
-    try:
-        yield
-    finally:
-        spark.conf.set(STATE_PROVIDER_CONF, old)
-
-
-def _stage_symlink(stage: str, name: str, target: str) -> None:
-    """Ensure ``stage/name`` is a symlink to ``target``, healing ONLY a
-    dangling link (lexists-true, exists-false -- the leftover of a
-    deleted/regenerated sf_dir, which made the old exists()-guarded
-    os.symlink raise FileExistsError; ADVICE r11).  A VALID existing
-    link is left untouched: unconditionally unlink-and-recreate would
-    open a window where a concurrently draining stream sees the staged
-    file vanish (review finding, r12).
-
-    The create itself is race-tolerant (ADVICE r12): two sessions
-    staging the same sf_dir can both pass the lexists pre-check, so the
-    loser's ``os.symlink`` EEXIST is caught and the link re-validated
-    instead of propagated -- whoever won created the same target, which
-    is the success condition.  A surviving mismatch (someone staged a
-    DIFFERENT target under our name) still raises loudly."""
-    link = os.path.join(stage, name)
-    if os.path.lexists(link) and not os.path.exists(link):
-        try:
-            os.unlink(link)
-        except FileNotFoundError:
-            pass  # concurrent healer got there first
-    if not os.path.lexists(link):
-        try:
-            os.symlink(target, link)
-        except FileExistsError:
-            pass  # concurrent stager won the race; validate below
-    if os.path.realpath(link) != os.path.realpath(target):
-        raise FileExistsError(
-            f"{link} exists but points at {os.path.realpath(link)!r}, "
-            f"not {target!r}")
-
-
-def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events table as an unbounded stream (file source stand-in for
-    Kafka).  Same ts normalization as the batch loader.
-
-    The file stream source wants a *directory* to poll; the testdata
-    table is a single file, so it is staged into a scratch directory via
-    symlink.  A production deployment points this at a landing directory
-    or swaps the source for Kafka -- everything downstream is unchanged.
-    """
-    import tempfile
-
-    apply_runtime_confs(spark)
-    stage = os.path.join(tempfile.gettempdir(),
-                         "fintxmon_stream_" + sf_dir.strip("/").replace("/", "_"))
-    os.makedirs(stage, exist_ok=True)
-    _stage_symlink(stage, "events.parquet", f"{sf_dir}/events.parquet")
-    # The file stream source needs an upfront schema; probe the parquet
-    # footer via a batch read (driver-side metadata only, no data scan) so
-    # the stream matches whichever physical ts form the testdata has.
-    file_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
-    raw = (
-        spark.readStream
-        .schema(file_schema)
-        .parquet(stage)
-    )
-    return _normalize_events_ts(raw)
-
-
-def tumbling_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """Streaming twin of ``batch_twins.q_stream_tumbling``: late rows
-    beyond the watermark are dropped (append-only, no updates -- the
-    reference's own semantics)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), rnd(F.sum("value")).alias("total"))
-        .select(F.col("w.start").alias("ws"), "event_type", "n", "total")
-    )
-
-
-def sliding_spend(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"), rnd(F.sum("value")).alias("total"))
-        .select(F.col("w.start").alias("ws"), "n", "total")
-    )
-
-
-def session_per_user(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"), rnd(F.sum("value")).alias("total"))
-        .select(F.col("w.start").alias("session_start"),
-                F.col("w.end").alias("session_end"),
-                "user_id", "n_events", "total")
-    )
-
-
-def dedup_stream(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """Streaming dedup on the event key within the watermark horizon --
-    the ingest invariant the reference lacks (duplicate ids are appended
-    unconditionally, ``main.rs:82-84``), with bounded state."""
-    return (
-        events.withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(["event_id"])
-    )
-
-
-def dedup_submissions(events: DataFrame,
-                      watermark: str = "10 minutes") -> DataFrame:
-    """Keyed streaming dedup: collapse duplicate submissions (same user,
-    same event type, same hour) to the first arrival, with
-    watermark-bounded state -- the retry-storm collapse
-    ``dedup_stream`` (exact id dedup) cannot express.  Exactly-once per
-    key within the horizon; state is O(live keys) and expires with the
-    watermark.  ``batch_twins.q_stream_dedup`` is the batch ground
-    truth (first by (ts, event_id)); the two agree when the source is
-    in-order per key.
-
-    Horizon contract (pinned by
-    test_stream_dedup_reemits_after_state_expiry): a same-key row
-    arriving after the watermark passes first_ts + delay AND a later
-    batch commits (eviction runs in the commit phase) is emitted
-    AGAIN -- the delay is a correctness knob at scale, sized to the
-    producer's retry horizon, not just a state-size bound."""
-    return (
-        events.withColumn("hour", F.date_trunc("hour", F.col("ts")))
-        .withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(["user_id", "event_type", "hour"])
-    )
-
-
-def threshold_alerts(events: DataFrame, threshold: float = 180.0) -> DataFrame:
-    """Stateless high-value alert (amount > threshold fraud rule)."""
-    return events.filter(F.col("value") > threshold).select(
-        "event_id", "user_id", "ts", "value",
-        F.lit("HIGH_VALUE").alias("alert"))
-
-
-def velocity_alerts(events: DataFrame, watermark: str = "10 minutes",
-                    max_per_hour: int = 3) -> DataFrame:
-    """Stateful velocity rule: more than N events per user per hour."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= max_per_hour)
-        .select(F.col("w.start").alias("ws"), "user_id", "n",
-                F.lit("VELOCITY").alias("alert"))
-    )
-
-
-def distinct_users(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """Hourly active-user sketch: ``approx_count_distinct`` keeps one
-    HLL register set per window in the state store (mergeable across
-    micro-batches, fixed size per window) -- exact distinct in a stream
-    would need unbounded per-window key state.  Twin:
-    ``batch_twins.q_stream_distinct`` (exact; the sketch must land within
-    HLL error of it)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.approx_count_distinct("user_id").alias("n_users"),
-             F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("ws"), "n_users", "n_events")
-    )
-
-
-def topk_per_window_sink(out_dir: str):
-    """foreachBatch sink maintaining live windowed per-event-type totals
-    for the top-k dashboard: ranking over an updating aggregate is not
-    expressible in a streaming query, so the windowed totals run in
-    update mode and each micro-batch rewrites ONLY the window partitions
-    it changed (dynamic partition overwrite) -- O(touched windows), not
-    O(history).  Feed it ``tumbling_counts``-shaped updates
-    (ws, event_type, n, total).
-
-    The table stores ALL (window, event_type) totals; the top-k cut
-    happens at read time (:func:`topk_dashboard`).  Persisting only the
-    ranked survivors (the old form) meant an evicted event type could
-    never re-enter a window's top-k unless its own total changed, and
-    was permanently wrong if totals can decrease (ADVICE r3).  Rows per
-    window are bounded by event-type cardinality, so the storage delta
-    is small and the read-time rank runs over pruned partitions.
-    """
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.withColumn(
-            "__w", F.date_format("ws", "yyyyMMddHH"))
-        touched = [r["__w"] for r in batch.select("__w").distinct().collect()]
-        if not touched:
-            return
-        existing = read_engine_table(spark, out_dir)
-        if existing is None:
-            merged = batch
-        else:
-            # update-mode totals are cumulative: the new batch's row for a
-            # (window, type) supersedes the stored one entirely.
-            merged = (existing.filter(F.col("__w").isin(touched))
-                      .select(*batch.columns)
-                      .join(batch.select("__w", "event_type").distinct(),
-                            ["__w", "event_type"], "left_anti")
-                      .unionByName(batch))
-        (merged.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("__w").parquet(out_dir))
-
-    return _sink
-
-
-def topk_dashboard(spark: SparkSession, out_dir: str, k: int = 3) -> DataFrame:
-    """Read-time top-k over the live dashboard table: rank within each
-    window partition and keep the first ``k``.  A dashboard query touches
-    few windows, so partition pruning on ``__w`` keeps this cheap."""
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("__w").orderBy(F.col("total").desc(),
-                                     F.col("event_type").asc())
-    return (read_parquet(spark, out_dir)
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k))
-
-
-def run_topk_dashboard(events: DataFrame, out_dir: str,
-                       checkpoint_dir: str) -> None:
-    """Drive the tumbling totals into the live dashboard totals table
-    (read it back with :func:`topk_dashboard`)."""
-    q = (
-        tumbling_counts(events).writeStream
-        .outputMode("update")
-        .foreachBatch(topk_per_window_sink(out_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def enrich_with_customers(events: DataFrame, customers: DataFrame) -> DataFrame:
-    """Stream-static join: enrich the event stream with the customer
-    dimension.  The static side is re-read per micro-batch (picking up
-    dim updates) and broadcast by Catalyst at dim size -- no stream-side
-    state at all."""
-    dim = customers.select(F.col("c_custkey").alias("user_id"),
-                           "c_name", "c_mktsegment")
-    return events.join(dim, "user_id", "left")
-
-
-def purchases_with_errors(events: DataFrame,
-                          watermark: str = "10 minutes") -> DataFrame:
-    """Stream-stream interval join: each purchase paired with error
-    events by the same user in the following 30 minutes (the streaming
-    twin of ``relational.q_join_interval``).
-
-    Both sides are watermarked and the join condition bounds event time
-    on both sides, so the state store holds only the 30-minute horizon
-    per side -- the unbounded-state stream-stream join is rejected by
-    Spark outright.
-    """
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(F.col("event_id").alias("p_event_id"),
-                F.col("user_id").alias("p_user_id"),
-                F.col("ts").alias("p_ts"))
-        .withWatermark("p_ts", watermark)
-    )
-    errors = (
-        events.filter(F.col("event_type") == "error")
-        .select(F.col("user_id").alias("e_user_id"),
-                F.col("ts").alias("e_ts"))
-        .withWatermark("e_ts", watermark)
-    )
-    return purchases.join(
-        errors,
-        (F.col("p_user_id") == F.col("e_user_id"))
-        & (F.col("e_ts") >= F.col("p_ts"))
-        & (F.col("e_ts") < F.col("p_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "inner",
-    ).select("p_event_id", F.col("p_user_id").alias("user_id"), "p_ts", "e_ts")
-
-
-def purchase_error_rate(events: DataFrame,
-                        watermark: str = "10 minutes") -> DataFrame:
-    """CHAINED stateful operators in one streaming query: the
-    stream-stream interval join feeds a windowed aggregation (hourly
-    pair counts) -- two state stores, one pipeline (Spark 3.5+/4
-    multi-stateful support; append mode only).  The join's purchase-side
-    event time carries through, so the window operator derives its
-    watermark from the join's and emits an hour once no in-flight
-    purchase can still land in it.  Twin:
-    ``batch_twins.q_stream_join_agg``."""
-    return (
-        purchases_with_errors(events, watermark)
-        .groupBy(F.window("p_ts", "1 hour").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_pairs"))
-        .select(F.col("w.start").alias("ws"), "n_pairs")
-    )
-
-
-def run_to_memory(df: DataFrame, name: str, output_mode: str = "append") -> None:
-    """Drive a streaming DataFrame to completion into a memory-sink table
-    (test/smoke harness: one availableNow pass over all input)."""
-    q = (
-        df.writeStream.outputMode(output_mode)
-        .format("memory").queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+from ..tables import read_engine_table, read_parquet
 
 
 SERVING_BUCKETS = 16
@@ -380,10 +33,11 @@ def compact_latest_to(serving_dir: str, key: str = "event_id"):
     (``main.rs:94-95``) into a keyed scan over a small table.
 
     The table is hash-bucketed on the key (partition column ``__kb``) and
-    each micro-batch rewrites ONLY the buckets it touches via dynamic
-    partition overwrite -- O(batch + touched buckets), not O(table) per
-    batch (round-2 VERDICT "What's wrong" #4: the old read-all + full
-    overwrite was a scale-killer for a continuously-growing key space).
+    each micro-batch rewrites only the buckets it touches via dynamic
+    partition overwrite: O(batch + touched buckets).  That is O(table)
+    for any batch with many more keys than buckets.  ``n`` random keys
+    touch ``16 x (1 - (15/16)^n)`` of the 16 buckets on average, so a
+    50-key batch touches about 15.4 and rewrites about 96% of the table.
     The touched-bucket list collected to the driver is at most
     ``SERVING_BUCKETS`` integers.  Point lookups get partition pruning
     for free by filtering on the same :func:`_key_bucket` (see
@@ -430,14 +84,3 @@ def serving_lookup(spark: SparkSession, serving_dir: str, key_value,
     # exact type or the bucket won't match the one the sink computed.
     bucket = _key_bucket(F.lit(key_value).cast(df.schema[key].dataType))
     return df.filter(F.col("__kb") == bucket).filter(F.col(key) == key_value)
-
-
-def run_compaction(events: DataFrame, serving_dir: str, checkpoint_dir: str) -> None:
-    q = (
-        events.writeStream
-        .foreachBatch(compact_latest_to(serving_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -110,6 +110,50 @@ def test_ddsketch_quantiles_within_relative_error_envelope(spark, sf_dir):
         assert lo <= e <= hi, (flag, pct, e, exact)
 
 
+def test_stream_state_twin_tiebreak_on_planted_tied_timestamps(spark,
+                                                                tmp_path):
+    """The corpus has zero tied (user_id, ts) pairs, so the parity test
+    can never attest q_stream_state's (ts, event_id) tiebreak -- this
+    plants a tie where the ORDER decides the reported crossing total
+    (both rows individually cross the threshold): the registered form
+    picks the LOWER event_id first, and the DuckDB oracle agrees."""
+    import duckdb
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from financialtransactionmonitoringsystem_spark.streaming import batch_twins
+
+    t0 = "2024-01-01 00:00:00"
+    rows = [
+        # user 1: two rows at the SAME ts, each alone >= 1000.  First by
+        # event_id is id 1 (value 1200) -> crossing total must be 1200,
+        # not 1500.
+        (2, t0, 1, "purchase", 1500.0, "{}"),
+        (1, t0, 1, "purchase", 1200.0, "{}"),
+        # user 2: untied control, crosses at the second event.
+        (3, t0, 2, "purchase", 700.0, "{}"),
+        (4, "2024-01-01 01:00:00", 2, "purchase", 400.0, "{}"),
+    ]
+    pdf = pd.DataFrame(rows, columns=[
+        "event_id", "ts", "user_id", "event_type", "value", "props"])
+    pdf["ts"] = pd.to_datetime(pdf["ts"])
+    d = str(tmp_path)
+    pq.write_table(pa.Table.from_pandas(pdf), f"{d}/events.parquet")
+
+    twin = {(r.user_id, r.total) for r in
+            ALL["q_stream_state"](spark, d).collect()}
+    assert twin == {(1, 1200.0), (2, 1100.0)}
+
+    con = duckdb.connect()
+    con.execute("SET TimeZone='UTC'")
+    con.execute(f"CREATE VIEW events AS SELECT * FROM "
+                f"read_parquet('{d}/events.parquet')")
+    oracle = {(r[0], r[2]) for r in con.execute(
+        batch_twins.ORACLES["q_stream_state"]).fetchall()}
+    assert oracle == twin
+
+
 EXPECTED_KEYS = {
     "q_agg_approx",
     "q_agg_approx_quantile",

@@ -1,117 +1,7 @@
-"""Source/sink round-trips: every supported format preserves the
-transaction rows, partitioned writes prune on the partition column, and
-unavailable connectors fail with clear errors."""
+"""The custom Python DataSource ``txfeed``: a deterministic,
+partition-parallel transaction feed, in batch and streaming form."""
 
 from __future__ import annotations
-
-import os
-
-import pytest
-from pyspark.sql import functions as F
-
-from financialtransactionmonitoringsystem_spark.plans import inspect as P
-from financialtransactionmonitoringsystem_spark.sources import registry
-from financialtransactionmonitoringsystem_spark.tables import load_table
-
-
-@pytest.fixture(scope="module")
-def events(spark, sf_dir):
-    return load_table(spark, sf_dir, "events").cache()
-
-
-@pytest.mark.parametrize("fmt", ["parquet", "orc", "json", "csv"])
-def test_format_round_trip(spark, events, tmp_path_factory, fmt):
-    path = str(tmp_path_factory.mktemp(f"rt_{fmt}") / "t")
-    df = events.select("event_id", "user_id", "event_type", "value")
-    registry.write_table(df, fmt, path)
-    schema = "event_id long, user_id long, event_type string, value double"
-    back = registry.read_table(spark, fmt, path, schema=schema)
-    assert back.count() == df.count()
-    a = sorted(map(tuple, df.collect()))
-    b = sorted(map(tuple, back.collect()))
-    assert a == b
-
-
-def test_schema_required_for_text_formats(spark):
-    with pytest.raises(ValueError, match="explicit schema"):
-        registry.read_table(spark, "json", "/nonexistent")
-
-
-def test_partitioned_write_enables_partition_pruning(spark, events, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("part") / "events_by_dt")
-    registry.write_partitioned(events, path)
-    back = spark.read.parquet(path)
-    one_day = back.filter(F.col("dt") == "2024-01-02")
-    plan = P.plan_str(one_day)
-    assert "PartitionFilters" in plan and "dt" in plan
-    assert one_day.count() > 0
-    # partition column pruned at the file level: fewer files scanned
-    assert "PartitionFilters: []" not in plan
-
-
-_KAFKA = os.environ.get("SPARK_GRAFT_KAFKA_BOOTSTRAP")
-
-
-@pytest.mark.skipif(bool(_KAFKA), reason="kafka jar/broker configured")
-def test_unavailable_connectors_raise_cleanly(spark):
-    with pytest.raises(NotImplementedError, match="kafka"):
-        registry.read_kafka(spark, "localhost:9092", "tx")
-    with pytest.raises(NotImplementedError, match="driver"):
-        registry.read_jdbc(spark, "jdbc:postgresql://x/y", "t")
-
-
-@pytest.mark.skipif(not _KAFKA, reason=(
-    "set SPARK_GRAFT_KAFKA_BOOTSTRAP=<host:port> (with the "
-    "spark-sql-kafka package on the classpath) to attest read_kafka "
-    "against a live broker"))
-def test_kafka_roundtrip_attests_read_kafka(spark, tmp_path):
-    """VERDICT r4 missing #1: the one BASELINE noun ('Structured
-    Streaming + Kafka source') with no attestation path.  With a broker
-    reachable at $SPARK_GRAFT_KAFKA_BOOTSTRAP and the kafka jar on the
-    classpath: publish via Spark's batch kafka sink, read back through
-    registry.read_kafka with an availableNow trigger, compare values."""
-    topic = f"fintxmon_it_{os.getpid()}"
-    bodies = [
-        (str(i),
-         f'{{"transaction_id": "t-{i}", "user_id": {1000 + i}, '
-         f'"amount": {i}.5, "currency": "USD", "type": "credit", '
-         f'"metadata": {{}}, '
-         f'"timestamp": "2025-09-27T12:42:57.289182Z"}}')
-        for i in range(5)
-    ]
-    (spark.createDataFrame(bodies, "key string, value string")
-        .write.format("kafka")
-        .option("kafka.bootstrap.servers", _KAFKA)
-        .option("topic", topic).save())
-    # same parse stage the broker-free test attests: connector + logic
-    # are one continuous path
-    q = (registry.parse_kafka_transactions(
-            registry.read_kafka(spark, _KAFKA, topic))
-         .writeStream.format("memory").queryName("t_kafka_it")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {(r.transaction_id, r.user_id)
-           for r in spark.sql(
-               "SELECT transaction_id, user_id FROM t_kafka_it").collect()}
-    assert got == {(f"t-{i}", 1000 + i) for i in range(5)}
-
-
-def test_bucketed_tables_join_without_shuffle(spark, events, tmp_path_factory):
-    """Two tables bucketed on the join key by the same bucket count
-    sort-merge-join with no shuffle exchange (co-located join layout)."""
-    base = tmp_path_factory.mktemp("bucketed")
-    ev = events.select("event_id", "user_id", "value")
-    per_user = events.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
-    registry.write_bucketed(ev, "ev_b", str(base / "ev"), "user_id")
-    registry.write_bucketed(per_user, "pu_b", str(base / "pu"), "user_id")
-    try:
-        joined = spark.table("ev_b").join(spark.table("pu_b"), "user_id")
-        assert P.n_shuffles(joined) == 0, P.plan_str(joined)
-        assert joined.count() == ev.count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS ev_b")
-        spark.sql("DROP TABLE IF EXISTS pu_b")
 
 
 def test_txfeed_batch_deterministic_and_partitioned(spark):
@@ -157,99 +47,3 @@ def test_txfeed_stream_replays_same_rows(spark, tmp_path_factory):
     want = spark.read.format("txfeed").option("rows", 360).load() \
         .orderBy("ingest_seq").collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
-
-
-def test_jsonl_sink_datasource_roundtrip(spark, sf_dir, tmp_path):
-    """Custom Python DataSource WRITER: executor-parallel JSONL export
-    with a driver-side _SUCCESS barrier.  Round-trip: write a slice of
-    events through the sink, read the part files back with spark.read
-    .json, compare contents; the manifest must list every part file."""
-    import os
-
-    from financialtransactionmonitoringsystem_spark.sources.jsonl_sink import (
-        JsonlSinkDataSource)
-    from financialtransactionmonitoringsystem_spark.tables import load_table
-
-    spark.dataSource.register(JsonlSinkDataSource)
-    out = str(tmp_path / "export")
-    src = (load_table(spark, sf_dir, "events")
-           .select("event_id", "user_id", "event_type", "value")
-           .repartition(4))
-    src.write.format("jsonlsink").option("path", out).mode("append").save()
-
-    assert os.path.exists(f"{out}/_SUCCESS")
-    manifest = open(f"{out}/_SUCCESS").read().split()
-    parts = sorted(p for p in os.listdir(out) if p.endswith(".jsonl"))
-    assert manifest == parts and len(parts) == 4
-
-    back = spark.read.json(f"{out}/*.jsonl")
-    assert back.count() == src.count()
-    a = {(r.event_id, r.user_id, r.event_type, round(r.value, 6))
-         for r in back.collect()}
-    b = {(r.event_id, r.user_id, r.event_type, round(r.value, 6))
-         for r in src.collect()}
-    assert a == b
-
-
-def test_kafka_wire_parse_without_broker(spark, tmp_path_factory):
-    """The Kafka pipeline's logic half, attested broker-free: a
-    synthetic frame with the connector's exact record schema
-    (KAFKA_WIRE_SCHEMA) runs through parse_kafka_transactions in BOTH
-    batch and streaming form.  Checks: typed columns parse, a malformed
-    value yields a NULL-field row (not a crash), and ingest_seq orders
-    rows exactly as (partition, offset) does."""
-    import datetime
-
-    bodies = [
-        (0, 0, b'{"transaction_id": "t-1", "user_id": 1001, "amount": 10.5,'
-               b' "currency": "USD", "type": "credit",'
-               b' "metadata": {"merchant": "Amazon"},'
-               b' "timestamp": "2025-09-27T12:42:57.289182Z"}'),
-        (0, 1, b'{"transaction_id": "t-2", "user_id": 1002, "amount": 3.25,'
-               b' "currency": "EUR", "type": "debit", "metadata": {},'
-               b' "timestamp": "2025-09-27T13:42:57.289182Z"}'),
-        (1, 0, b"not json at all"),
-    ]
-    ts = datetime.datetime(2025, 9, 27, 12, 0, 0)
-    wire = spark.createDataFrame(
-        [(None, v, "tx", p, o, ts, 0) for p, o, v in bodies],
-        registry.KAFKA_WIRE_SCHEMA)
-
-    out = registry.parse_kafka_transactions(wire)
-    rows = {r.transaction_id: r for r in out.collect()}
-    assert rows["t-1"].user_id == 1001 and rows["t-1"].currency == "USD"
-    assert rows["t-2"].amount == 3.25
-    assert None in rows  # malformed value -> NULL fields, row preserved
-    # canonical derived columns (same schema as every other ingest path)
-    assert rows["t-1"].metadata_json == '{"merchant":"Amazon"}'
-    assert rows["t-1"].ts is not None and rows["t-1"].ts.year == 2025
-    seqs = sorted((r.ingest_seq, r.transaction_id) for r in out.collect())
-    assert [t for _, t in seqs] == ["t-1", "t-2", None]  # (partition, offset)
-
-    # NULL partition/offset (hand-built frame): row preserved with a
-    # NULL ingest_seq, same policy as a malformed value
-    nullp = spark.createDataFrame(
-        [(None, bodies[0][2], "tx", None, None, ts, 0)],
-        registry.KAFKA_WIRE_SCHEMA)
-    r0 = registry.parse_kafka_transactions(nullp).collect()[0]
-    assert r0.transaction_id == "t-1" and r0.ingest_seq is None
-
-    # streaming path: same schema from a file stream, same results
-    src = tmp_path_factory.mktemp("kafka_wire")
-    wire.write.mode("overwrite").parquet(str(src / "raw"))
-    stream = (spark.readStream.schema(registry.KAFKA_WIRE_SCHEMA)
-              .parquet(str(src / "raw")))
-    q = (registry.parse_kafka_transactions(stream)
-         .writeStream.format("memory").queryName("t_kafka_wire")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(60)
-    got = {r.transaction_id: r.ingest_seq
-           for r in spark.sql("SELECT * FROM t_kafka_wire").collect()}
-    assert got == {r.transaction_id: r.ingest_seq for r in out.collect()}
-
-    # the ingest_seq packing must fail loudly past its bounds, never
-    # silently collide across partitions
-    bad = spark.createDataFrame(
-        [(None, b"{}", "tx", 0, 1 << 48, ts, 0)], registry.KAFKA_WIRE_SCHEMA)
-    with pytest.raises(Exception, match="overflow"):
-        registry.parse_kafka_transactions(bad).collect()

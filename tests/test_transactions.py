@@ -155,14 +155,18 @@ def test_no_1kb_request_cliff(store):
 def test_streaming_ingest_matches_batch(spark, tmp_path, store, tx_rows):
     """O1 as a stream: line-delimited replay through the streaming source
     equals the batch ingest, row for row."""
-    from financialtransactionmonitoringsystem_spark.streaming.pipeline import run_to_memory
-
     stream_dir = tmp_path / "txstream"
     stream_dir.mkdir()
     with open(stream_dir / "batch1.json", "w") as f:
         for r in tx_rows:
             f.write(json.dumps(r) + "\n")
-    run_to_memory(J.stream_transactions_json(spark, str(stream_dir)), "t_txingest")
+    q = (J.stream_transactions_json(spark, str(stream_dir))
+         .writeStream.format("memory").queryName("t_txingest")
+         .trigger(availableNow=True).start())
+    try:
+        assert q.awaitTermination(300), "ingest query did not finish"
+    finally:
+        q.stop()
     store.append(tx_rows)
     streamed = spark.sql("SELECT * FROM t_txingest").select(*_COLS).collect()
     batch = store.list_all().select(*_COLS).collect()
