@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..tables import LIGHT_WORK, load_table, scan_wide
+from ..tables import load_table, scan_wide
 from ..util import rnd, sql_round as R
 
 
@@ -337,14 +337,14 @@ def q_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     The scan rides :func:`tables.scan_wide` (r17 optimization round):
     the Expand (rows x |cols|) and the partial distinct aggregate fuse
     into the scan stage, ONE task on the one-row-group testdata file.
-    r18: declared LIGHT_WORK -- the per-row cost is hash-map upkeep,
+    r18: declared ``light`` -- the per-row cost is hash-map upkeep,
     so below the size threshold the guard's extra stage cost more than
     the serial pass it parallelized (VERDICT r17 #1: the guard made
     q_profile the most expensive bench key at sf0.1, -0.77 s, while
     the 10x/50x wins, 1.8x/2.3x, all sit above the threshold).
     """
     ev = scan_wide(load_table(spark, sf_dir, "events"), "event_id",
-                   min_bytes=LIGHT_WORK)
+                   light=True)
     cells = [
         F.struct(
             F.lit(c).alias("column"),

@@ -43,7 +43,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..artifacts import corpus_slug
-from ..tables import load_table, scan_wide
+from ..tables import load_table, scan_wide, shuffle_width
 from ..util import rnd, sql_round as R
 
 N_MINHASH = 16
@@ -271,14 +271,14 @@ def q_dedup_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     The scan rides :func:`tables.scan_wide` (r17 optimization round):
     URL construction + canonicalization regexes fuse into the scan
     stage (A/B: 3.47 -> 1.82 s at 50x, 1.12 -> 0.98 at 10x).  r18:
-    declared LIGHT_WORK -- regex projection over a (doc_id, source)
+    declared ``light`` -- regex projection over a (doc_id, source)
     payload is cheap per row, and at sf0.1 the guard's extra stage
     cost -0.15 s for nothing (VERDICT r17 #1); the 10x/50x wins sit
     above the size threshold."""
-    from ..tables import LIGHT_WORK, scan_wide
+    from ..tables import scan_wide
 
     urls = _doc_urls(scan_wide(load_table(spark, sf_dir, "documents"),
-                               "doc_id", min_bytes=LIGHT_WORK))
+                               "doc_id", light=True))
     return (
         urls.select("doc_id", "url", canonical_url(F.col("url")).alias("canon"))
         .groupBy(F.col("canon").alias("canonical_url"))
@@ -618,7 +618,7 @@ def _prefix_probe(index: DataFrame, probe: DataFrame,
     comparisons.  Full measurements in PLANS.md (round 15).
 
     r17 optimization round: the index side rides
-    :func:`_pinned_repartition` ON ``doc_id``, NOT on the join keys.
+    :func:`tables.scan_wide` ON ``doc_id``, NOT on the join keys.
     Without any pin the pair ENUMERATION runs at the parallelism of
     the prefix-artifact FILE SCAN -- a few-hundred-KB parquet = ONE
     task emitting all 3.2M matched rows at sf0.1 (measured: the
@@ -652,7 +652,7 @@ def _prefix_probe(index: DataFrame, probe: DataFrame,
     pin-wins at 1x/10x (1.59/3.39 vs 3.64/3.93 unpinned) and pin-loses
     at 50x (20.9 vs 17.8), exactly the crossover this gate encodes."""
     p, q = PRUNE_NUM, PRUNE_DEN
-    a = _pinned_repartition_if_narrow(index, "doc_id").alias("a")
+    a = scan_wide(index, "doc_id").alias("a")
     b = probe.alias("b")
     # widened to long: with the million-scale PRUNE rationals an int32
     # product q * n_toks wraps for any doc past ~1.3k tokens
@@ -673,21 +673,6 @@ def _prefix_probe(index: DataFrame, probe: DataFrame,
     )
 
 
-# Materialization mode for _scoped_build.  "local" (default) =
-# localCheckpoint: blocks live on executors only -- fastest on local[*]
-# (measured 3-6.5x vs recompute) but NOT fault-tolerant; losing an
-# executor mid-job on a preemptible cluster kills the query
-# unrecoverably.  "reliable" = checkpoint() into the engine checkpoint
-# dir (HDFS/object store on a cluster): survives executor loss at the
-# cost of a write+read round-trip -- the production setting for 100 TB
-# runs (VERDICT r5 #2).
-SCOPED_BUILD_MODE_CONF = "spark.fintxmon.scopedBuild.mode"
-
-_CHECKPOINT_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    "spark-warehouse", "_checkpoints")
-
-
 def _scoped_build(build_side: DataFrame) -> DataFrame:
     """Materialize a self-join's build table ONCE -- the scoped
     replacement for the old unscoped ``persist`` (VERDICT r4 #5).  The
@@ -698,74 +683,16 @@ def _scoped_build(build_side: DataFrame) -> DataFrame:
     registers in the DataFrame cache manager.  Build tables here are
     O(|docs| * prefix/band/chunk factor) -- derived, bounded, and orders
     of magnitude smaller than the exploded intermediates that produce
-    them.
+    them.  Corpus-sized intermediates shared by several consumers
+    (tfidf's per-doc tf table, linededup's chunk table, the novelty
+    reference grams) go through here too: one write beats re-deriving
+    per consumer at bench scale (round 9, align's gram table:
+    checkpoint -35% at sf0.1).
 
-    Mode (``spark.fintxmon.scopedBuild.mode``):
-
-    * ``local`` (default): eager ``localCheckpoint`` -- blocks are
-      reference-tracked and reclaimed by the ContextCleaner when the
-      frame goes out of scope.  Right on local[*] and on clusters
-      without preemption.
-    * ``reliable``: eager ``checkpoint()`` to the session checkpoint
-      dir (set it to durable storage on a cluster; defaults to the
-      engine's ``spark-warehouse/_checkpoints`` when unset).  Survives
-      executor loss; enable
-      ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` so
-      out-of-scope checkpoint files are garbage-collected.
+    An eager ``localCheckpoint``: blocks are reference-tracked and
+    reclaimed by the ContextCleaner when the frame goes out of scope.
     """
-    spark = build_side.sparkSession
-    if spark.conf.get(SCOPED_BUILD_MODE_CONF, "local") == "reliable":
-        sc = spark.sparkContext
-        if sc.getCheckpointDir() is None:
-            _guard_reliable_checkpoint_default(sc.master)
-            sc.setCheckpointDir(_CHECKPOINT_DIR)
-        return build_side.checkpoint(eager=True)
     return build_side.localCheckpoint(eager=True)
-
-
-# Materialization policy for CORPUS-SIZED shared intermediates (the
-# align gram-table decision generalized -- VERDICT r8 design note):
-# unlike the bounded build tables above, a handful of operators share
-# an O(corpus) intermediate between two consumers (tfidf's per-doc tf
-# table, linededup's chunk table).  Checkpointing
-# such a table trades ONE saved re-derivation (a columnar scan +
-# codegen explode, CPU-bound and embarrassingly parallel) for a
-# corpus-sized write + two reads against the scoped-build store --
-# a win only while that store is the fast tier (executor memory /
-# local disk).  On a 100 TB run with reliable checkpointing the
-# round-trip is object-store bandwidth, billed and slow: set
-# "rederive" and pay the second explode instead.  Measured crossover
-# (round 9, align's gram table): checkpoint -35% at sf0.1, parity at
-# 10x on local NVMe, unstable at 50x.
-CORPUS_MATERIALIZE_CONF = "spark.fintxmon.corpusTable.materialize"
-
-
-def _corpus_scoped_build(build_side: DataFrame) -> DataFrame:
-    """:func:`_scoped_build` for corpus-sized shared intermediates,
-    honoring ``spark.fintxmon.corpusTable.materialize``: "checkpoint"
-    (default -- the measured bench-scale win) materializes once via
-    ``_scoped_build``; "rederive" returns the lazy plan unchanged so
-    each consumer re-derives it fused into its own stage and nothing
-    corpus-sized is ever written.  Output-identical by construction
-    (materialization only); tests pin both modes per caller."""
-    spark = build_side.sparkSession
-    if spark.conf.get(CORPUS_MATERIALIZE_CONF, "checkpoint") == "rederive":
-        return build_side
-    return _scoped_build(build_side)
-
-
-def _guard_reliable_checkpoint_default(master: str) -> None:
-    """The repo-local checkpoint default only makes sense on a local
-    master: on a multi-node cluster -- the exact scenario reliable mode
-    targets -- local-filesystem checkpoints do not survive executor
-    loss, silently defeating the mode (ADVICE r6).  Refuse rather than
-    degrade quietly."""
-    if not master.startswith("local"):
-        raise RuntimeError(
-            "scopedBuild.mode=reliable on a non-local master "
-            f"({master!r}) requires an explicit durable "
-            "sc.setCheckpointDir(...) (HDFS/object store); "
-            "refusing the repo-local default")
 
 
 def q_dedup_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -928,35 +855,10 @@ def _pinned_repartition(df: DataFrame, *keys: str) -> DataFrame:
     heuristics are blind; an exchange whose width must survive a
     fan-out needs an explicit count.  At cluster scale an SMJ requires
     this same hash partitioning, so the exchange is absorbed into
-    ENSURE_REQUIREMENTS instead of doubling up.
-
-    The width comes from spark.sql.shuffle.partitions when numeric;
-    platforms that set it non-numerically (e.g. "auto") fall back to
-    the scheduler's default parallelism instead of crashing at
-    plan-construction time (review finding)."""
-    spark = df.sparkSession
-    try:
-        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n = spark.sparkContext.defaultParallelism
-    return df.repartition(n, *[F.col(k) for k in keys])
-
-
-def _pinned_repartition_if_narrow(df: DataFrame, *keys: str) -> DataFrame:
-    """:func:`_pinned_repartition`, skipped when ``df``'s physical scan
-    already spans at least the target width (r17 optimization round).
-
-    The pin exists to rescue a fan-out join from file-scan-width
-    parallelism (one task on a few-hundred-KB artifact); once the
-    input genuinely has >= width splits the scan provides the
-    parallelism and the exchange is pure cost.  Since the guard turned
-    out to be the general cure for the one-row-group testdata scans
-    (not just artifact scans), the single copy of the logic and the
-    full rationale now live in :func:`tables.scan_wide`; this name is
-    kept for the band/chunk/prefix call sites and their tests."""
-    from ..tables import scan_wide
-
-    return scan_wide(df, *keys)
+    ENSURE_REQUIREMENTS instead of doubling up.  The width is
+    :func:`tables.shuffle_width`."""
+    return df.repartition(shuffle_width(df.sparkSession),
+                          *[F.col(k) for k in keys])
 
 
 def _band_join(exploded: DataFrame) -> DataFrame:
@@ -1561,11 +1463,8 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     which nests one level deeper per iteration -- by ~10 rounds merely
     *rendering* that plan (explainString) OOMs a default-1g driver, long
     before any executor runs out.  Checkpointed labels are a few rows per
-    node; the cost per round is one small materialization.  Truncation
-    goes through :func:`_scoped_build` so the reliable mode
-    (``spark.fintxmon.scopedBuild.mode=reliable``) also covers the
-    iterative state here -- an executor lost in round k of a cluster
-    build otherwise restarts the whole build.
+    node; the cost per round is one small materialization
+    (:func:`_scoped_build`).
     """
     fwd = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # Checkpoint the undirected edge table up front: every iteration (and

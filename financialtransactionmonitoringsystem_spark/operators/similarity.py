@@ -88,7 +88,7 @@ def _queries_and_corpus(spark: SparkSession, sf_dir: str):
     width the entire cosine workload was ONE task (A/B: q_sim_cosine
     11.33 -> 1.81 s at 50x, 2.79 -> 0.93 at 10x).
 
-    r18 NO-CHANGE verdict (measured, do not re-apply): the LIGHT_WORK
+    r18 NO-CHANGE verdict (measured, do not re-apply): the ``light``
     size gate that reclaimed the other VERDICT r17 #1 keys was applied
     here, measured, and REVERTED.  At sf0.1 the guard is a wash
     (interleaved min-of-3: q_sim_lsh 0.95 guarded vs 1.00 gated-off,

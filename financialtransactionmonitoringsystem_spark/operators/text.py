@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..tables import LIGHT_WORK, load_table, scan_wide
+from ..tables import load_table, scan_wide
 from ..util import rnd, sql_round as R
 
 # The pretraining quality gate, shared with curate.q_pipeline_curate
@@ -151,16 +151,13 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically whenever tf is equal (and nearly so otherwise), so the
     exact form keeps the oracle bit-deterministic.
     """
-    from .dedup import _corpus_scoped_build
+    from .dedup import _scoped_build
 
     docs = scan_wide(load_table(spark, sf_dir, "documents"), "doc_id")
     # tf feeds BOTH the document-frequency aggregate and the score join;
     # materialize it once so the token explode runs once -- measured 30%
-    # off the query at the 50k-doc replica scale.  The tf table is
-    # CORPUS-sized, so the materialization is policy-governed
-    # (dedup.CORPUS_MATERIALIZE_CONF): "rederive" skips it for 100 TB
-    # object-store runs at the cost of a second fused explode.
-    tf = _corpus_scoped_build(
+    # off the query at the 50k-doc replica scale.
+    tf = _scoped_build(
         docs.select("doc_id", F.explode(_toks()).alias("tok"))
         .filter(F.length("tok") > 0)
         .groupBy("doc_id", "tok")
@@ -217,14 +214,14 @@ def q_text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     negligible at test vocabularies, worth knowing at multi-million-
     token ones; review finding against the earlier blanket claim).
 
-    r18: the scan guard is declared LIGHT_WORK -- the per-row work
+    r18: the scan guard is declared ``light`` -- the per-row work
     here is one token split feeding two map-side-combinable partial
     aggregates, light enough that at sf0.1 the guard's extra stage
     was a -0.28 s regression (VERDICT r17 #1) while the 10x/50x wins
     (2.8x/5.2x) all sit above the size threshold.
     """
     docs = scan_wide(load_table(spark, sf_dir, "documents"), "doc_id",
-                     min_bytes=LIGHT_WORK)
+                     light=True)
     tok = (docs.select("doc_id", F.explode(_toks()).alias("tok"))
            .filter(F.length("tok") > 0))
     doc_tok = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("cnt"))
@@ -705,18 +702,16 @@ def _novelty_fps_stringgram():
 
 
 def _novelty_ref_grams(ref_docs: DataFrame) -> DataFrame:
-    """Distinct reference gram fingerprints through the shared
-    corpus-table materialization policy.  The table feeds THREE
-    consumers (the sizing count, the bloom build, the exact FP-cleanup
-    join) and Catalyst re-derives shared subtrees per consumer, so it
-    goes through the tfidf/linededup conf: "checkpoint" scans the
-    reference corpus once, "rederive" writes nothing corpus-sized.
-    Measured PARITY on the replica corpora (50x: 42.4 checkpoint vs
-    40.9 rederive; 1x: 1.9 vs 2.4 -- the 10% slice re-derives nearly
-    for free, the align-gram-table outcome), so the policy knob
-    decides by the deployment's fast tier, not by this operator."""
-    from .dedup import _corpus_scoped_build
-    return _corpus_scoped_build(
+    """Distinct reference gram fingerprints, materialized once
+    (:func:`dedup._scoped_build`, as for tfidf's tf table and
+    linededup's chunk table).  The table feeds THREE consumers (the
+    sizing count, the bloom build, the exact FP-cleanup join) and
+    Catalyst re-derives shared subtrees per consumer, so one
+    materialization scans the reference corpus once.  Measured PARITY
+    against re-deriving on the replica corpora (50x: 42.4 vs 40.9 s;
+    1x: 1.9 vs 2.4 s -- the 10% slice re-derives nearly for free)."""
+    from .dedup import _scoped_build
+    return _scoped_build(
         ref_docs.select(F.explode(_novelty_fps()).alias("gram")).distinct())
 
 
@@ -876,15 +871,15 @@ def _align_from_gram_expr(spark: SparkSession, docs: DataFrame,
     :func:`q_align_crosslingual`), bounded self-join, (doc_a, doc_b)
     rollup.
 
-    The docs scan rides :func:`_pinned_repartition_if_narrow` keyed by
+    The docs scan rides :func:`tables.scan_wide` keyed by
     doc_id: the sf-scale documents parquet is a single split (one row
     group), so without the pin the gram hashing of the whole corpus
     runs as ONE task (measured 0.65 s single-task at sf0.1); at real
     input widths the guard sees >= width splits and skips the
     exchange."""
-    from .dedup import _pinned_repartition_if_narrow, _scoped_build
+    from .dedup import _scoped_build
 
-    g = _pinned_repartition_if_narrow(docs, "doc_id").select(
+    g = scan_wide(docs, "doc_id").select(
         "doc_id", "lang",
         F.explode(F.array_distinct(gram_expr)).alias("gram"))
     post = _scoped_build(
@@ -924,19 +919,15 @@ def q_text_linededup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup.  The chunk table feeds BOTH join sides, so it is materialized
     once (the dedup-family ``_scoped_build`` localCheckpoint) instead of
     re-running the split+explode per side -- measured 6.5x at 10x scale
-    (10.4 s -> 1.6 s on the 50k-doc replica corpus).  The chunk table
-    is CORPUS-sized (one row per 8-token chunk), so the materialization
-    is policy-governed (dedup.CORPUS_MATERIALIZE_CONF): "rederive"
-    trades a second fused split+explode for zero corpus-sized writes
-    on object-store-checkpointed runs.
+    (10.4 s -> 1.6 s on the 50k-doc replica corpus).
     """
     docs = scan_wide(load_table(spark, sf_dir, "documents"), "doc_id")
     toks = _toks()
     starts = F.sequence(F.lit(1), F.greatest(F.size(toks), F.lit(1)),
                         F.lit(CHUNK_TOKENS))
-    from .dedup import _corpus_scoped_build
+    from .dedup import _scoped_build
 
-    chunks = _corpus_scoped_build(
+    chunks = _scoped_build(
         docs.select("doc_id", toks.alias("toks"), F.explode(starts).alias("s"))
         .select(
             "doc_id",
@@ -973,13 +964,13 @@ def q_text_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     no driver-side pair table.  (n_pairs, pair) is a total order, so the
     LIMIT is deterministic.
 
-    r18: the scan guard is declared LIGHT_WORK -- one 2-gram explode
+    r18: the scan guard is declared ``light`` -- one 2-gram explode
     into a map-side-combined count is light per row; at sf0.1 the
     guard's extra stage was a -0.21 s regression (VERDICT r17 #1)
     while the 10x/50x wins (4.4x/10.3x) sit above the size threshold.
     """
     docs = scan_wide(load_table(spark, sf_dir, "documents"), "doc_id",
-                     min_bytes=LIGHT_WORK)
+                     light=True)
     pairs = docs.select(F.explode(_wordgrams(F.col("text"), 2)).alias("pair"))
     return (
         pairs.groupBy("pair").agg(F.count(F.lit(1)).alias("n_pairs"))

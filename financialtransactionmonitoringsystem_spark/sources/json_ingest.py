@@ -48,29 +48,23 @@ def ingest_rows(spark: SparkSession, rows: list[dict]) -> DataFrame:
     body = pa.array([json.dumps(r) for r in rows], pa.string())
     raw = spark.createDataFrame(pa.table({"body": body}))
     parsed = raw.select(F.from_json("body", TRANSACTION_JSON_SCHEMA).alias("t"))
-    return with_derived(parsed.select("t.*").coalesce(1))
+    # ingest_seq is a per-batch monotonic id, which
+    # ``TransactionStore.append`` offsets past the stored maximum.
+    return (with_derived(parsed.select("t.*").coalesce(1))
+            .withColumn("ingest_seq", F.monotonically_increasing_id()))
 
 
 def with_derived(df: DataFrame) -> DataFrame:
-    """Add the engine's derived columns (SURVEY.md §1.2 canonical
-    schema).  ``ingest_seq`` is a per-batch monotonic id, which
-    ``TransactionStore.append`` offsets past the stored maximum."""
+    """Add the derived columns both ingest routes share (SURVEY.md §1.2
+    canonical schema)."""
     return (
         df.withColumn("metadata_json", F.to_json("metadata"))
         .withColumn("ts", F.to_timestamp("timestamp", ISO8601_MICROS))
-        .withColumn("ingest_seq", F.monotonically_increasing_id())
     )
 
 
 def stream_transactions_json(spark: SparkSession, dir_path: str) -> DataFrame:
     """Streaming ingest of line-delimited transaction JSON files (the O1
     POST endpoint as an unbounded table; Kafka in production)."""
-    raw = (
-        spark.readStream
-        .schema(TRANSACTION_JSON_SCHEMA)
-        .json(dir_path)
-    )
-    return (
-        raw.withColumn("metadata_json", F.to_json("metadata"))
-        .withColumn("ts", F.to_timestamp("timestamp", ISO8601_MICROS))
-    )
+    return with_derived(
+        spark.readStream.schema(TRANSACTION_JSON_SCHEMA).json(dir_path))

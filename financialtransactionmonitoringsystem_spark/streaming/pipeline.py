@@ -27,7 +27,7 @@ from ..tables import read_engine_table, read_parquet
 SERVING_BUCKETS = 16
 
 
-def compact_latest_to(serving_dir: str, key: str = "event_id"):
+def compact_latest_to(serving_dir: str, key: str = "transaction_id"):
     """foreachBatch sink: maintain a compacted latest-row-per-key parquet
     serving table, turning the reference's O(n) point lookup
     (``main.rs:94-95``) into a keyed scan over a small table.
@@ -75,7 +75,7 @@ def _key_bucket(key_col: "F.Column") -> "F.Column":
 
 
 def serving_lookup(spark: SparkSession, serving_dir: str, key_value,
-                   key: str = "event_id") -> DataFrame:
+                   key: str = "transaction_id") -> DataFrame:
     """Point lookup against the compacted serving table: the ``__kb``
     equality prunes to one partition directory, then the key equality is
     pushed into that partition's parquet scan."""

@@ -59,9 +59,6 @@ TABLE_NAMES = (
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-# Small dimension tables that should always be broadcast in joins.
-BROADCAST_DIMS = frozenset({"region", "nation", "supplier"})
-
 
 def _normalize_events_ts(df: DataFrame) -> DataFrame:
     """Land ``ts`` on session-UTC TimestampType whatever its physical form.
@@ -177,7 +174,7 @@ def register_views(spark: SparkSession, sf_dir: str,
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-# Conf key + default for scan_wide's ``min_bytes=LIGHT_WORK`` callers:
+# The size threshold for scan_wide's ``light=True`` callers:
 # the compressed-input size below which the guard exchange cannot pay
 # for LIGHT per-row work.  Rationale (r18 optimization round, VERDICT
 # r17 #1): the guard's cost at bench scale is not shuffle bytes but the
@@ -185,21 +182,16 @@ def register_views(spark: SparkSession, sf_dir: str,
 # ~0.2-0.5 s at local[32]); its payoff is parallelizing the fused
 # per-row work.  For heavy per-row operators (gram hashing, MinHash
 # folds) that payoff exists at ANY corpus size, so they call with the
-# default min_bytes=0.  For light per-row work (a regex projection, a
+# default light=False.  For light per-row work (a regex projection, a
 # distinct-map probe) the serial cost of a few-MB input is below one
 # stage's overhead, so the exchange only pays once the input outgrows
 # this threshold.  4 MiB compressed (~10x that in memory) sits at the
 # measured crossover: interleaved A/Bs (OPTIMIZATION_r18.md) show the
 # light keys losing 0.1-0.5 s with the guard at sf0.1 (<= 2 MB inputs)
 # and winning 1.9-10x with it on the 10x/50x replicas (>= 5.8 MB).
-# Conf-settable (spark.fintxmon.scanWide.lightMinBytes) so a cluster
-# deployment can retune without a code change; at real input widths
-# the width gate no-ops first and this threshold never evaluates.
-SCAN_WIDE_LIGHT_MIN_BYTES_CONF = "spark.fintxmon.scanWide.lightMinBytes"
+# At real input widths the width gate no-ops first and this threshold
+# never evaluates.
 SCAN_WIDE_LIGHT_MIN_BYTES = 4 << 20
-
-# Sentinel for callers declaring their per-row work LIGHT (see above).
-LIGHT_WORK = -1
 
 
 def _input_bytes(df: DataFrame) -> int | None:
@@ -224,12 +216,21 @@ def _input_bytes(df: DataFrame) -> int | None:
     return total
 
 
-def scan_wide(df: DataFrame, *keys: str, min_bytes: int = 0) -> DataFrame:
-    """Hash-repartition ``df`` on ``keys`` up to the session's shuffle
-    width IF its physical plan is narrower than that width -- the
-    shared narrow-input parallelism guard (r17 optimization round;
-    generalizes ``dedup._pinned_repartition_if_narrow``, which now
-    delegates here so there is exactly one copy of the rationale).
+def shuffle_width(spark: SparkSession) -> int:
+    """The session's shuffle width: ``spark.sql.shuffle.partitions``
+    when numeric.  Platforms that set it non-numerically (e.g. "auto")
+    fall back to the scheduler's default parallelism instead of crashing
+    at plan-construction time."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism
+
+
+def scan_wide(df: DataFrame, *keys: str, light: bool = False) -> DataFrame:
+    """Hash-repartition ``df`` on ``keys`` up to :func:`shuffle_width`
+    IF its physical plan is narrower than that width -- the shared
+    narrow-input parallelism guard (r17 optimization round).
 
     Why it exists: a parquet ROW GROUP is the unit of scan parallelism
     (the vectorized reader cannot split one), and the sf-scale testdata
@@ -253,30 +254,21 @@ def scan_wide(df: DataFrame, *keys: str, min_bytes: int = 0) -> DataFrame:
     q_dedup_prefix lesson: hashing a skewed key concentrates, not
     spreads (PLANS r17).
 
-    ``min_bytes`` (r18 optimization round): callers whose fused
-    per-row work is LIGHT pass ``min_bytes=LIGHT_WORK`` (or an explicit
-    byte count) and the guard additionally no-ops while the compressed
-    input is smaller than the threshold -- below it, one extra stage
-    costs more than the serial work it parallelizes (see
-    :data:`SCAN_WIDE_LIGHT_MIN_BYTES`).  Size comes from the input
-    file listing (plan-time, deterministic for a file set); when it
-    cannot be read (remote URIs) the guard conservatively treats the
-    input as big.  Heavy-work callers keep the default 0: their
-    exchange pays at any size that reaches this gate.
+    ``light`` (r18 optimization round): callers whose fused per-row
+    work is LIGHT pass ``light=True`` and the guard additionally no-ops
+    while the compressed input is smaller than
+    :data:`SCAN_WIDE_LIGHT_MIN_BYTES` -- below it, one extra stage
+    costs more than the serial work it parallelizes.  Size comes from
+    the input file listing (plan-time, deterministic for a file set);
+    when it cannot be read (remote URIs) the guard conservatively
+    treats the input as big.  Heavy-work callers keep the default:
+    their exchange pays at any size that reaches this gate.
     """
-    spark = df.sparkSession
-    try:
-        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n = spark.sparkContext.defaultParallelism
+    n = shuffle_width(df.sparkSession)
     if df.rdd.getNumPartitions() >= n:
         return df
-    if min_bytes:
-        if min_bytes == LIGHT_WORK:
-            min_bytes = int(spark.conf.get(
-                SCAN_WIDE_LIGHT_MIN_BYTES_CONF,
-                str(SCAN_WIDE_LIGHT_MIN_BYTES)))
+    if light:
         size = _input_bytes(df)
-        if size is not None and size < min_bytes:
+        if size is not None and size < SCAN_WIDE_LIGHT_MIN_BYTES:
             return df
     return df.repartition(n, *[F.col(k) for k in keys])

@@ -1381,61 +1381,6 @@ def test_checkpoint_backed_queries_are_run_to_run_deterministic(spark, sf_dir):
         assert a == b and a, fn.__name__
 
 
-def test_scoped_build_reliable_mode(spark, sf_dir, tmp_path):
-    """VERDICT r5 #2: `spark.fintxmon.scopedBuild.mode=reliable` must
-    (a) produce row-identical results to the default localCheckpoint
-    mode for every _scoped_build-backed operator family, and (b) cut
-    RELIABLE checkpoints -- files on (distributed) storage that survive
-    executor loss -- not executor-block-only local checkpoints."""
-    import os
-
-    from financialtransactionmonitoringsystem_spark.operators import (
-        curate, timeseries)
-    from financialtransactionmonitoringsystem_spark.operators.dedup import (
-        SCOPED_BUILD_MODE_CONF, connected_components)
-
-    sc = spark.sparkContext
-    ckpt = str(tmp_path / "ckpt")
-    sc.setCheckpointDir(ckpt)
-    fns = (text.q_text_tfidf, text.q_text_linededup,
-           curate.q_export_shards, timeseries.q_ts_resample,
-           dedup.q_dedup_minhash,
-           # r8: the checkpoint-feeds-both-sides-of-a-self-join shape
-           text.q_align_crosslingual)
-    local = {f.__name__: sorted(map(tuple, f(spark, sf_dir).collect()))
-             for f in fns}
-    spark.conf.set(SCOPED_BUILD_MODE_CONF, "reliable")
-    try:
-        for f in fns:
-            rows = sorted(map(tuple, f(spark, sf_dir).collect()))
-            assert rows == local[f.__name__] and rows, f.__name__
-        # iterative CC state also honors the mode
-        edges = spark.createDataFrame(
-            [(1, 2), (2, 3), (7, 8)], "doc_a long, doc_b long")
-        comp = dict(connected_components(edges).collect())
-        assert comp == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
-        # reliable = real checkpoint files under the configured dir
-        written = [os.path.join(dp, f) for dp, _, fs in os.walk(ckpt)
-                   for f in fs]
-        assert written, "reliable mode wrote no checkpoint files"
-    finally:
-        spark.conf.unset(SCOPED_BUILD_MODE_CONF)
-
-
-def test_reliable_mode_refuses_local_default_off_local_master():
-    """ADVICE r6: reliable mode with no checkpoint dir set must REFUSE
-    on a non-local master instead of silently defaulting to a
-    repo-local path that would not survive executor loss."""
-    from financialtransactionmonitoringsystem_spark.operators.dedup import (
-        _guard_reliable_checkpoint_default)
-
-    _guard_reliable_checkpoint_default("local[8]")          # fine
-    _guard_reliable_checkpoint_default("local-cluster[2,1,1024]")
-    for master in ("spark://host:7077", "yarn", "k8s://https://host"):
-        with pytest.raises(RuntimeError, match="durable"):
-            _guard_reliable_checkpoint_default(master)
-
-
 def test_decontam_prefiltered_identical(spark, sf_dir):
     """Round-9 scale path, registered as q_text_decontam in round 10
     (sweep finding: the old plan distinct-shuffles EVERY corpus gram,
@@ -1578,30 +1523,6 @@ def test_decontam_prefiltered_semi_is_broadcast(spark, sf_dir):
     plan = P.plan_str(df)
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan
     assert not P.has_cartesian(df)
-
-
-def test_corpus_materialize_rederive_output_identical(spark, sf_dir):
-    """The shared corpus-table materialization policy (the align knob
-    generalized): under `spark.fintxmon.corpusTable.materialize =
-    rederive` the tfidf tf table, the linededup chunk table, and the
-    novelty reference gram table are never checkpointed -- each
-    consumer re-derives the explode fused into its own stage -- and
-    the output must be byte-identical to the default "checkpoint" mode
-    for every governed key."""
-    from financialtransactionmonitoringsystem_spark.operators.dedup import (
-        CORPUS_MATERIALIZE_CONF)
-
-    for fn in (text.q_text_tfidf, text.q_text_linededup,
-               text.q_text_novelty):
-        assert spark.conf.get(CORPUS_MATERIALIZE_CONF, "checkpoint") \
-            == "checkpoint"
-        base = sorted(map(tuple, fn(spark, sf_dir).collect()))
-        spark.conf.set(CORPUS_MATERIALIZE_CONF, "rederive")
-        try:
-            rows = sorted(map(tuple, fn(spark, sf_dir).collect()))
-        finally:
-            spark.conf.unset(CORPUS_MATERIALIZE_CONF)
-        assert rows == base and rows, fn.__name__
 
 
 def test_corpus_contract_text_never_null(spark, sf_dir):

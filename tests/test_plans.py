@@ -202,35 +202,33 @@ def test_stratified_sample_has_no_shuffle(spark, sf_dir):
     assert plan.index("md5") < plan.index("Exchange "), plan
 
 
-def test_scan_wide_light_work_size_gate(spark, sf_dir):
-    """The r18 LIGHT_WORK refinement of the r17 scan guard: a light
+def test_scan_wide_light_work_size_gate(spark, sf_dir, monkeypatch):
+    """The r18 light-work refinement of the r17 scan guard: a light
     per-row-work caller skips the guard while the compressed input is
     below the size threshold (one extra stage costs more than the
-    serial work it parallelizes), re-enables it above (forced via the
-    conf), and the guard stays value-neutral -- a repartition cannot
-    change what an aggregation computes."""
+    serial work it parallelizes), re-enables it above (forced by
+    lowering the threshold), and the guard stays value-neutral -- a
+    repartition cannot change what an aggregation computes."""
+    from financialtransactionmonitoringsystem_spark import tables
     from financialtransactionmonitoringsystem_spark.operators import text
     from financialtransactionmonitoringsystem_spark.tables import (
-        LIGHT_WORK, SCAN_WIDE_LIGHT_MIN_BYTES_CONF, load_table, scan_wide)
+        load_table, scan_wide)
 
     docs = load_table(spark, sf_dir, "documents")
     # small + light: identity (not merely an equal plan -- the SAME
     # object, the production-width contract's sibling)
-    assert scan_wide(docs, "doc_id", min_bytes=LIGHT_WORK) is docs
+    assert scan_wide(docs, "doc_id", light=True) is docs
     # heavy (default) on the same small input: guard applies
     assert scan_wide(docs, "doc_id") is not docs
     small = text.q_text_bpe_pairs(spark, sf_dir)
     assert "hashpartitioning(doc_id" not in P.plan_str(small, "simple")
     rows_small = small.collect()
-    spark.conf.set(SCAN_WIDE_LIGHT_MIN_BYTES_CONF, "1")
-    try:
-        # narrow input past the threshold: the r17 guard re-appears
-        assert scan_wide(docs, "doc_id", min_bytes=LIGHT_WORK) is not docs
-        big = text.q_text_bpe_pairs(spark, sf_dir)
-        assert "hashpartitioning(doc_id" in P.plan_str(big, "simple")
-        rows_big = big.collect()
-    finally:
-        spark.conf.unset(SCAN_WIDE_LIGHT_MIN_BYTES_CONF)
+    monkeypatch.setattr(tables, "SCAN_WIDE_LIGHT_MIN_BYTES", 1)
+    # narrow input past the threshold: the r17 guard re-appears
+    assert scan_wide(docs, "doc_id", light=True) is not docs
+    big = text.q_text_bpe_pairs(spark, sf_dir)
+    assert "hashpartitioning(doc_id" in P.plan_str(big, "simple")
+    rows_big = big.collect()
     assert rows_small == rows_big
 
 
@@ -247,7 +245,7 @@ def test_input_bytes_reads_percent_encoded_paths(spark, tmp_path):
 
 def test_input_bytes_unknown_for_in_memory_frames(spark):
     """A frame with no input files has an unknown size (``None``, treated
-    as big), not 0 -- 0 would let the LIGHT_WORK gate skip the guard."""
+    as big), not 0 -- 0 would let the light-work gate skip the guard."""
     from financialtransactionmonitoringsystem_spark.tables import _input_bytes
 
     assert _input_bytes(spark.createDataFrame([(1,), (2,)], "x int")) is None
@@ -415,7 +413,8 @@ def test_sessionize_is_single_user_exchange(spark, sf_dir):
     assert not P.has_cartesian(df)
 
 
-def test_url_dedup_and_shard_card_are_single_pass_jvm_plans(spark, sf_dir):
+def test_url_dedup_and_shard_card_are_single_pass_jvm_plans(spark, sf_dir,
+                                                            monkeypatch):
     """The two r7 scan+agg keys must stay pure JVM single-aggregation
     plans: canonicalization / bucketing are scan-level projections
     (no Python eval in the plan), and the only exchange is the final
@@ -430,11 +429,11 @@ def test_url_dedup_and_shard_card_are_single_pass_jvm_plans(spark, sf_dir):
     assert not P.has_cartesian(df)
     # q_dedup_url carries a count(DISTINCT url), which Catalyst expands
     # to the standard two-phase distinct-agg plan: exchange on
-    # (canon, url) then on canon.  The scan guard is LIGHT_WORK-gated
+    # (canon, url) then on canon.  The scan guard is light-work-gated
     # (r18): on SMALL narrow input (the testdata files, below the
     # light-work size threshold) the guard stays out and the plan is
     # exactly the two distinct-agg exchanges; once the narrow input
-    # outgrows the threshold (forced here via the conf) the r17 guard
+    # outgrows the threshold (forced here by lowering it) the r17 guard
     # adds EXACTLY one more exchange, keyed by doc_id, below the
     # projection (still a no-op at production widths -- pinned once
     # for the guard in test_stratified_sample_has_no_shuffle); no
@@ -446,14 +445,10 @@ def test_url_dedup_and_shard_card_are_single_pass_jvm_plans(spark, sf_dir):
     assert "count(distinct url" in s, s
     assert "BatchEvalPython" not in s and "ArrowEvalPython" not in s, s
     assert not P.has_cartesian(df)
-    from financialtransactionmonitoringsystem_spark.tables import (
-        SCAN_WIDE_LIGHT_MIN_BYTES_CONF)
+    from financialtransactionmonitoringsystem_spark import tables
 
-    spark.conf.set(SCAN_WIDE_LIGHT_MIN_BYTES_CONF, "1")
-    try:
-        s = P.plan_str(dedup.q_dedup_url(spark, sf_dir), "simple")
-    finally:
-        spark.conf.unset(SCAN_WIDE_LIGHT_MIN_BYTES_CONF)
+    monkeypatch.setattr(tables, "SCAN_WIDE_LIGHT_MIN_BYTES", 1)
+    s = P.plan_str(dedup.q_dedup_url(spark, sf_dir), "simple")
     assert s.count("Exchange") == 3, s
     assert s.count("hashpartitioning(doc_id") == 1, s
     assert "BatchEvalPython" not in s and "ArrowEvalPython" not in s, s
@@ -849,4 +844,21 @@ def test_parquet_reads_go_through_one_helper():
                     and node.func.attr == "parquet"
                     and _reads_via_spark_read(node.func.value)):
                 offenders.append(f"{f.relative_to(root)}:{node.lineno}")
+    assert not offenders, offenders
+
+
+def test_engine_reads_no_fintxmon_conf():
+    """The engine has no settings of its own: no string constant in the
+    package names a ``spark.fintxmon.*`` conf.  Materialization and the
+    scan guard are fixed policies, so every plan is the one the tests
+    and the benchmark run."""
+    import financialtransactionmonitoringsystem_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = [
+        f"{f.relative_to(root)}:{node.lineno}"
+        for f in sorted(root.rglob("*.py"))
+        for node in ast.walk(ast.parse(f.read_text(), str(f)))
+        if isinstance(node, ast.Constant) and isinstance(node.value, str)
+        and node.value.startswith("spark.fintxmon.")]
     assert not offenders, offenders

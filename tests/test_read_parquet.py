@@ -70,9 +70,10 @@ def test_warm_reads_plan_without_jobs(spark, sf_dir, tmp_path):
 
     serving = str(tmp_path / "serving")
     _compacted(spark, serving)
-    pipeline.serving_lookup(spark, serving, 3)
+    pipeline.serving_lookup(spark, serving, 3, key="event_id")
     df, warm = _plan_jobs(
-        spark, lambda: pipeline.serving_lookup(spark, serving, 5))
+        spark,
+        lambda: pipeline.serving_lookup(spark, serving, 5, key="event_id"))
     assert warm == 0
     assert [r.value for r in df.collect()] == [5.0]
 

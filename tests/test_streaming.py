@@ -106,7 +106,8 @@ def test_compaction_rewrites_only_touched_buckets(spark):
             assert p in after and after[p] == t, f"untouched bucket rewritten: {p}"
         assert any(p not in before for p in after), "touched bucket not rewritten"
 
-        got = pipeline.serving_lookup(spark, serving, 3).collect()
+        got = pipeline.serving_lookup(spark, serving, 3,
+                                      key="event_id").collect()
         assert len(got) == 1 and got[0].value == 99.0
         assert spark.read.parquet(serving).count() == 16  # still 1 row/key
     finally:
