@@ -29,7 +29,8 @@ Scale notes:
   body.  Bulk loads go through ``json_ingest.stream_transactions_json``.
 * Point lookups scan parquet with the id predicate pushed to row-group
   stats; for hot serving, ``streaming.pipeline.compact_latest_to``
-  maintains a compacted keyed table instead.
+  maintains a compacted table instead: the latest row per key, written
+  in key order and replaced by an atomic rename each micro-batch.
 """
 
 from __future__ import annotations

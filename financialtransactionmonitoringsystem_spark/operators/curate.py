@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..tables import load_table
+from ..tables import load_table, shuffle_width
 from ..util import rnd, sql_round as R
 from .dedup import ORACLES as _DEDUP_ORACLES
 from .dedup import _scoped_build, q_dedup_cluster
@@ -90,7 +90,7 @@ def _ranged_running_sum(spark: SparkSession, df: DataFrame, val_col: str,
     cancels out).  ``pid`` is kept visible for plan tests.
     """
     if n_parts is None:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        n_parts = shuffle_width(spark)
     ranged = (
         df.repartitionByRange(n_parts, part_col, *order_cols)
         .withColumn("pid", F.spark_partition_id())

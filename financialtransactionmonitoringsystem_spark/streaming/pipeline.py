@@ -3,8 +3,7 @@ path (O1, ``monitoring-service/src/main.rs:79-89``) restated as
 incremental dataflow (SURVEY.md §3 E2).
 
 One path lives here: ``sources.json_ingest.stream_transactions_json`` ->
-:func:`compact_latest_to` -> :func:`serving_lookup`, one hash-bucket
-layout (:func:`_key_bucket`) shared by the sink and the lookup.
+:func:`compact_latest_to` -> :func:`serving_lookup`.
 
 Design:
 * Source: a JSON file stream; swap ``readStream.format`` for ``kafka``
@@ -14,6 +13,15 @@ Design:
   parquet table refreshed per micro-batch, and the checkpoint replaces
   the reference's process-local Vec (``main.rs:25``), which is lost on
   restart.
+* Layout: immutable generations.  The table is ``serving_dir/gen=<n>/``,
+  one key-ordered run holding the latest row per key, and exactly one
+  committed generation exists at rest.  Each micro-batch merges into the
+  newest generation, writes the result to ``serving_dir/_tmp-<n+1>``,
+  commits it with one atomic rename to ``gen=<n+1>`` and then deletes
+  the older generations (a log-structured merge with merge factor 1:
+  O'Neil et al., *The Log-Structured Merge-Tree*, 1996).  Names that
+  start with ``_`` are hidden from Spark's file listing, so a leftover
+  ``_tmp-*`` is invisible to every reader.
 """
 
 from __future__ import annotations
@@ -21,10 +29,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tables import read_engine_table, read_parquet
+from .. import fsio
+from ..tables import read_parquet
+
+_GEN = "gen="
 
 
-SERVING_BUCKETS = 16
+def _generations(spark: SparkSession, serving_dir: str) -> list[int]:
+    """The committed generation numbers under ``serving_dir``, ascending
+    ([] when there is no table yet)."""
+    return sorted(int(n[len(_GEN):]) for n in fsio.list_names(spark, serving_dir)
+                  if n.startswith(_GEN) and n[len(_GEN):].isdigit())
 
 
 def compact_latest_to(serving_dir: str, key: str = "transaction_id"):
@@ -32,55 +47,67 @@ def compact_latest_to(serving_dir: str, key: str = "transaction_id"):
     serving table, turning the reference's O(n) point lookup
     (``main.rs:94-95``) into a keyed scan over a small table.
 
-    The table is hash-bucketed on the key (partition column ``__kb``) and
-    each micro-batch rewrites only the buckets it touches via dynamic
-    partition overwrite: O(batch + touched buckets).  That is O(table)
-    for any batch with many more keys than buckets.  ``n`` random keys
-    touch ``16 x (1 - (15/16)^n)`` of the 16 buckets on average, so a
-    50-key batch touches about 15.4 and rewrites about 96% of the table.
-    The touched-bucket list collected to the driver is at most
-    ``SERVING_BUCKETS`` integers.  Point lookups get partition pruning
-    for free by filtering on the same :func:`_key_bucket` (see
-    :func:`serving_lookup`).
+    Each micro-batch reads the batch once and the newest generation once
+    (with the batch's schema, so no inference job), keeps the latest row
+    per key, and writes the result once, sorted by key, as the next
+    generation: two Spark jobs (the write and its shuffle stage) and one
+    file at small sizes.  The rename to ``gen=<n+1>`` is the commit, so a
+    reader sees the old generation or the new one, never a mix.  ``n``
+    comes from the directory listing, not from ``epoch_id``: a fresh
+    checkpoint restarts epochs at 0 but must still merge with the table.
+
+    Failure and replay:
+    * a crash before the rename leaves ``_tmp-<n+1>``, which no reader
+      lists and the next batch overwrites;
+    * a crash between the rename and the delete leaves two generations;
+      readers take the newest and the next batch deletes both old ones;
+    * a batch replayed after its commit-log entry was lost merges into
+      the generation it wrote itself and writes the same rows again.
+
+    Ties: "latest" is the greatest ``ts``; on a ``ts`` tie between a batch
+    row and a stored row the batch row wins, so the later arrival is
+    served and a replay keeps the row it replaces.  Two rows of one key
+    with the same ``ts`` inside one batch stay an arbitrary pick: the
+    JSON source carries no column that orders them.
+
+    A lookup that listed generation ``n`` and reads it after the next
+    batch deleted it fails loudly (the file is gone) instead of
+    returning a partial answer; it succeeds when run again.
     """
     from pyspark.sql import Window as W
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch = batch_df.withColumn("__kb", _key_bucket(F.col(key)))
-        touched = [r["__kb"] for r in batch.select("__kb").distinct().collect()]
-        if not touched:
-            return
-        existing = read_engine_table(spark, serving_dir)
-        # first batch (no table yet) -> nothing to merge; real read errors
-        # propagate instead of silently dropping serving-table history.
-        merged = batch if existing is None else (
-            existing.filter(F.col("__kb").isin(touched)).unionByName(batch))
-        w = W.partitionBy(key).orderBy(F.col("ts").desc())
+        gens = _generations(spark, serving_dir)
+        # __src ranks a batch row (0) ahead of a stored one (1) on a ts tie.
+        merged = batch_df.withColumn("__src", F.lit(0))
+        if gens:
+            stored = read_parquet(spark, f"{serving_dir}/{_GEN}{gens[-1]}",
+                                  batch_df.schema)
+            merged = merged.unionByName(stored.withColumn("__src", F.lit(1)))
+        w = W.partitionBy(key).orderBy(F.col("ts").desc(), F.col("__src"))
+        # The window's sort already orders each partition by key, so
+        # sortWithinPartitions adds no sort to the plan.
         latest = (merged.withColumn("__rn", F.row_number().over(w))
-                  .filter(F.col("__rn") == 1).drop("__rn"))
-        (latest.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("__kb").parquet(serving_dir))
+                  .filter(F.col("__rn") == 1).drop("__rn", "__src")
+                  .sortWithinPartitions(key))
+        n = gens[-1] + 1 if gens else 0
+        tmp = f"{serving_dir}/_tmp-{n}"
+        latest.write.mode("overwrite").parquet(tmp)
+        fsio.rename(spark, tmp, f"{serving_dir}/{_GEN}{n}")
+        for g in gens:
+            fsio.delete(spark, f"{serving_dir}/{_GEN}{g}")
 
     return _sink
 
 
-def _key_bucket(key_col: "F.Column") -> "F.Column":
-    """The serving table's hash layout: ``__kb`` of a key value.  The sink
-    and the lookup both call this, so they cannot disagree on it."""
-    # int (not long): partition discovery reads __kb back as int32, and
-    # unionByName(existing, batch) needs the two sides to agree.
-    return F.pmod(F.xxhash64(key_col), F.lit(SERVING_BUCKETS)).cast("int")
-
-
 def serving_lookup(spark: SparkSession, serving_dir: str, key_value,
                    key: str = "transaction_id") -> DataFrame:
-    """Point lookup against the compacted serving table: the ``__kb``
-    equality prunes to one partition directory, then the key equality is
-    pushed into that partition's parquet scan."""
-    df = read_parquet(spark, serving_dir)
-    # xxhash64 is type-sensitive: hash the literal at the key column's
-    # exact type or the bucket won't match the one the sink computed.
-    bucket = _key_bucket(F.lit(key_value).cast(df.schema[key].dataType))
-    return df.filter(F.col("__kb") == bucket).filter(F.col(key) == key_value)
+    """Point lookup against the compacted serving table: the key equality
+    is pushed into the newest generation's parquet scan, whose key order
+    lets row-group min/max statistics skip the groups that cannot hold
+    the key.  With no generation the bare directory is read, so a missing
+    table raises ``PATH_NOT_FOUND`` as any absent parquet path does."""
+    gens = _generations(spark, serving_dir)
+    path = f"{serving_dir}/{_GEN}{gens[-1]}" if gens else serving_dir
+    return read_parquet(spark, path).filter(F.col(key) == key_value)

@@ -78,3 +78,16 @@ def tx_rows() -> list[dict]:
 def part_files(path: str) -> list[str]:
     """The parquet part files directly under a store directory, sorted."""
     return sorted(glob.glob(os.path.join(path, "part-*.parquet")))
+
+
+def plan_jobs(spark, build):
+    """``(build(), number of Spark jobs it started)``; jobs are counted
+    from the status tracker once the listener bus has drained.  Only jobs
+    outside any job group are seen, so ``build`` runs on this thread."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup())
+    out = build()
+    bus.waitUntilEmpty()
+    return out, len(set(sc.statusTracker().getJobIdsForGroup()) - before)

@@ -19,21 +19,10 @@ from financialtransactionmonitoringsystem_spark.tables import (
     load_table, read_engine_table, read_parquet)
 
 from .compare import assert_frames_match
+from .conftest import plan_jobs
 
 NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 BINARY_CONF = "spark.sql.parquet.binaryAsString"
-
-
-def _plan_jobs(spark, build):
-    """``(build(), number of Spark jobs it started)``; jobs are counted
-    from the status tracker once the listener bus has drained."""
-    sc = spark.sparkContext
-    bus = sc._jsc.sc().listenerBus()
-    bus.waitUntilEmpty()
-    before = set(sc.statusTracker().getJobIdsForGroup())
-    out = build()
-    bus.waitUntilEmpty()
-    return out, len(set(sc.statusTracker().getJobIdsForGroup()) - before)
 
 
 def _compacted(spark, serving: str, n_rows: int = 12) -> None:
@@ -56,22 +45,22 @@ def _overwrite_in_place(path: str) -> None:
 
 def test_warm_reads_plan_without_jobs(spark, sf_dir, tmp_path):
     shutil.copy(f"{sf_dir}/orders.parquet", tmp_path / "orders.parquet")
-    _, cold = _plan_jobs(spark, lambda: load_table(spark, str(tmp_path), "orders"))
+    _, cold = plan_jobs(spark, lambda: load_table(spark, str(tmp_path), "orders"))
     assert cold >= 1  # the inferring read: the counter sees plan-time jobs
-    _, warm = _plan_jobs(spark, lambda: load_table(spark, str(tmp_path), "orders"))
+    _, warm = plan_jobs(spark, lambda: load_table(spark, str(tmp_path), "orders"))
     assert warm == 0
 
     table = str(tmp_path / "engine_table")
     spark.range(40).selectExpr("id", "id % 4 AS __epoch") \
         .write.partitionBy("__epoch").parquet(table)
     read_engine_table(spark, table)
-    df, warm = _plan_jobs(spark, lambda: read_engine_table(spark, table))
+    df, warm = plan_jobs(spark, lambda: read_engine_table(spark, table))
     assert warm == 0 and df.columns == ["id", "__epoch"]
 
     serving = str(tmp_path / "serving")
     _compacted(spark, serving)
     pipeline.serving_lookup(spark, serving, 3, key="event_id")
-    df, warm = _plan_jobs(
+    df, warm = plan_jobs(
         spark,
         lambda: pipeline.serving_lookup(spark, serving, 5, key="event_id"))
     assert warm == 0
@@ -124,7 +113,7 @@ def test_inferred_types_follow_the_confs(spark, tmp_path):
 def test_cached_and_uncached_frames_collect_equal(spark, sf_dir, name):
     path = f"{sf_dir}/{name}.parquet"
     read_parquet(spark, path)
-    cached, jobs = _plan_jobs(spark, lambda: read_parquet(spark, path))
+    cached, jobs = plan_jobs(spark, lambda: read_parquet(spark, path))
     assert jobs == 0
     uncached = spark.read.parquet(path)
     assert cached.schema == uncached.schema
@@ -136,18 +125,18 @@ def test_corrupt_serving_part_file_raises_after_cached_read(spark, tmp_path):
     serving = str(tmp_path / "serving")
     _compacted(spark, serving)
     assert read_engine_table(spark, serving).count() == 12
-    parts = sorted(glob.glob(f"{serving}/__kb=*/part-*.parquet"))
+    [part] = glob.glob(f"{serving}/gen=*/part-*.parquet")
 
     # Same size and mtime: the schema comes from the cache, the rows do not.
-    _overwrite_in_place(parts[0])
-    df, jobs = _plan_jobs(spark, lambda: read_engine_table(spark, serving))
+    _overwrite_in_place(part)
+    df, jobs = plan_jobs(spark, lambda: read_engine_table(spark, serving))
     assert jobs == 0
     with pytest.raises(Exception, match="FAILED_READ_FILE"):
         df.collect()
 
     # A rewrite that changes the size misses the cache; whichever of the
     # read or its first action meets the broken file raises.
-    with open(parts[1], "wb") as fh:
+    with open(part, "wb") as fh:
         fh.write(b"not a parquet file")
     with pytest.raises(Exception):
         read_engine_table(spark, serving).collect()
@@ -176,7 +165,7 @@ def test_events_ts_physical_forms_match_duckdb(spark, tmp_path, unit):
     finally:
         con.close()
     for expect_jobs in (True, False):  # miss, then hit
-        df, jobs = _plan_jobs(spark, lambda: load_table(spark, str(tmp_path), "events"))
+        df, jobs = plan_jobs(spark, lambda: load_table(spark, str(tmp_path), "events"))
         assert (jobs > 0) == expect_jobs
         assert isinstance(df.schema["ts"].dataType, T.TimestampType)
         assert_frames_match(df.toPandas(), want, f"events.ts[{unit}]")

@@ -4,16 +4,19 @@ back with ``serving_lookup``."""
 
 from __future__ import annotations
 
+import glob
 import json
+import os
 import shutil
-import tempfile
-from datetime import timedelta
+from datetime import datetime, timedelta
 
-from pyspark.sql import functions as F
+import pyarrow.parquet as pq
+import pytest
 
+from financialtransactionmonitoringsystem_spark import fsio
 from financialtransactionmonitoringsystem_spark.sources import json_ingest
 from financialtransactionmonitoringsystem_spark.streaming import pipeline
-from tests.conftest import TX_START, make_tx_rows
+from tests.conftest import TX_START, make_tx_rows, plan_jobs
 
 
 def _land(path, rows: list[dict]) -> None:
@@ -68,47 +71,148 @@ def test_foreachbatch_compaction_point_lookup(spark, tmp_path):
                                    key="transaction_id").collect() == []
 
 
-def test_compaction_rewrites_only_touched_buckets(spark):
-    """Compaction rewrites only the buckets a micro-batch touches.  A
-    batch touching one key bucket must leave every other bucket's files
-    byte-for-byte alone (same paths, same mtimes), while the touched key
-    serves the new latest row.  This bounds the rewrite by the touched
-    buckets, which is not O(batch): ``n`` random keys touch
-    ``16 x (1 - (15/16)^n)`` of the 16 buckets, so a 50-key batch
-    rewrites about 96% of the table."""
-    import datetime
-    import glob
-    import os
+SCHEMA = "event_id bigint, ts timestamp, value double"
+T0 = datetime(2025, 1, 1)
 
-    schema = "event_id bigint, ts timestamp, value double"
-    tmp = tempfile.mkdtemp(prefix="fintxmon_bucketed_")
-    serving = f"{tmp}/serving"
-    try:
-        sink = pipeline.compact_latest_to(serving, key="event_id")
-        t0 = datetime.datetime(2025, 1, 1)
-        sink(spark.createDataFrame(
-            [(i, t0, float(i)) for i in range(16)], schema), 0)
 
-        def listing():
-            return {p: os.path.getmtime(p)
-                    for p in glob.glob(f"{serving}/__kb=*/*.parquet")}
+def _batch(spark, rows):
+    """A micro-batch of ``(event_id, hours after T0, value)`` rows."""
+    return spark.createDataFrame(
+        [(k, T0 + timedelta(hours=h), v) for k, h, v in rows], SCHEMA)
 
-        before = listing()
-        sink(spark.createDataFrame(
-            [(3, t0 + datetime.timedelta(hours=1), 99.0)], schema), 1)
-        after = listing()
 
-        kb3 = (spark.read.parquet(serving)
-               .filter(F.col("event_id") == 3).select("__kb").first()["__kb"])
-        untouched = {p: t for p, t in before.items() if f"__kb={kb3}/" not in p}
-        assert untouched, "test needs at least one untouched bucket"
-        for p, t in untouched.items():
-            assert p in after and after[p] == t, f"untouched bucket rewritten: {p}"
-        assert any(p not in before for p in after), "touched bucket not rewritten"
+def _model(*batches):
+    """Latest row per key over ``batches`` applied in order: the greatest
+    ``ts``, and on a ``ts`` tie the row of the later batch."""
+    out = {}
+    for rows in batches:
+        for k, h, v in rows:
+            if k not in out or h >= out[k][0]:
+                out[k] = (h, v)
+    return {k: (T0 + timedelta(hours=h), v) for k, (h, v) in out.items()}
 
-        got = pipeline.serving_lookup(spark, serving, 3,
-                                      key="event_id").collect()
-        assert len(got) == 1 and got[0].value == 99.0
-        assert spark.read.parquet(serving).count() == 16  # still 1 row/key
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+def _table(spark, serving):
+    """The serving table read raw, as ``{key: (ts, value)}``; asserts it
+    holds one row per key."""
+    rows = spark.read.parquet(serving).collect()
+    got = {r.event_id: (r.ts, r.value) for r in rows}
+    assert len(got) == len(rows), "more than one row for a key"
+    return got
+
+
+def _entries(serving):
+    """The visible entries of the serving directory (no ``_``/``.``)."""
+    return sorted(n for n in os.listdir(serving) if n[0] not in "_.")
+
+
+def _served(spark, serving, key):
+    return [(r.ts, r.value) for r in
+            pipeline.serving_lookup(spark, serving, key, key="event_id").collect()]
+
+
+B1 = [(k, 0, float(k)) for k in range(16)]
+B2 = [(3, 1, 99.0), (20, 0, 20.0)]
+B3 = [(5, 2, -5.0)]
+
+
+def test_compaction_leaves_one_key_ordered_generation(spark, tmp_path):
+    """A batch leaves exactly one generation, written as one part file
+    whose rows are in key order, with no helper column left in it."""
+    serving = str(tmp_path / "serving")
+    sink = pipeline.compact_latest_to(serving, key="event_id")
+    sink(_batch(spark, B1), 0)
+    sink(_batch(spark, B2), 1)
+
+    assert _entries(serving) == ["gen=1"]
+    [part] = glob.glob(f"{serving}/gen=1/*.parquet")
+    got = pq.read_table(part)
+    assert got.column_names == ["event_id", "ts", "value"]
+    keys = got.column("event_id").to_pylist()
+    assert keys == sorted(_model(B1, B2))
+    assert _table(spark, serving) == _model(B1, B2)
+    assert _served(spark, serving, 3) == [_model(B2)[3]]
+
+
+def test_tied_ts_serves_the_later_batch(spark, tmp_path):
+    """The same key and ``ts`` in two batches: the second batch's row is
+    served, and replaying that batch keeps it."""
+    serving = str(tmp_path / "serving")
+    sink = pipeline.compact_latest_to(serving, key="event_id")
+    first, second = [(7, 0, 1.0), (8, 0, 8.0)], [(7, 0, 2.0)]
+    sink(_batch(spark, first), 0)
+    sink(_batch(spark, second), 1)
+    assert _served(spark, serving, 7) == [(T0, 2.0)]
+    sink(_batch(spark, second), 1)
+    assert _table(spark, serving) == _model(first, second)
+
+
+def test_replayed_batch_changes_nothing(spark, tmp_path):
+    """A batch applied twice, as a replay after a lost commit-log entry
+    would, leaves the table one application leaves."""
+    serving = str(tmp_path / "serving")
+    sink = pipeline.compact_latest_to(serving, key="event_id")
+    sink(_batch(spark, B1), 0)
+    sink(_batch(spark, B2), 1)
+    once = _table(spark, serving)
+    sink(_batch(spark, B2), 1)
+    assert _table(spark, serving) == once == _model(B1, B2)
+    assert _entries(serving) == ["gen=2"]
+
+
+def test_leftover_tmp_is_invisible_and_overwritten(spark, tmp_path):
+    """A crash before the rename leaves ``_tmp-<n>``: no reader sees it,
+    and the next batch writes over it and commits."""
+    serving = str(tmp_path / "serving")
+    sink = pipeline.compact_latest_to(serving, key="event_id")
+    sink(_batch(spark, B1), 0)
+    _batch(spark, [(3, 9, -1.0), (99, 9, -1.0)]).write.parquet(
+        f"{serving}/_tmp-1")
+
+    assert _served(spark, serving, 3) == [_model(B1)[3]]
+    assert _served(spark, serving, 99) == []
+    assert _table(spark, serving) == _model(B1)
+
+    sink(_batch(spark, B2), 1)
+    assert sorted(os.listdir(serving)) == ["gen=1"]
+    assert _table(spark, serving) == _model(B1, B2)
+
+
+def test_two_generations_read_newest_and_next_batch_removes_older(
+        spark, tmp_path):
+    """A crash between the rename and the delete leaves two generations:
+    the lookup serves the newest (by number: 10 after 9), and the next
+    batch leaves one."""
+    serving = str(tmp_path / "serving")
+    sink = pipeline.compact_latest_to(serving, key="event_id")
+    sink(_batch(spark, B1), 0)
+    os.rename(f"{serving}/gen=0", f"{serving}/gen=9")
+    shutil.copytree(f"{serving}/gen=9", tmp_path / "gen9")
+    sink(_batch(spark, B2), 1)
+    shutil.copytree(tmp_path / "gen9", f"{serving}/gen=9")
+    assert _entries(serving) == ["gen=10", "gen=9"]
+
+    assert _served(spark, serving, 3) == [_model(B1, B2)[3]]
+    sink(_batch(spark, B3), 2)
+    assert _entries(serving) == ["gen=11"]
+    assert _table(spark, serving) == _model(B1, B2, B3)
+
+
+def test_second_batch_runs_two_jobs(spark, tmp_path):
+    """Merging a batch into an existing table runs the write and its
+    shuffle stage only: no collect, no schema inference."""
+    serving = str(tmp_path / "serving")
+    sink = pipeline.compact_latest_to(serving, key="event_id")
+    sink(_batch(spark, B1), 0)
+    _, jobs = plan_jobs(spark, lambda: sink(_batch(spark, B2), 1))
+    assert jobs <= 2
+    assert _table(spark, serving) == _model(B1, B2)
+
+
+def test_rename_refuses_an_existing_target(spark, tmp_path):
+    (tmp_path / "a").mkdir()
+    (tmp_path / "b").mkdir()
+    with pytest.raises(FileExistsError):
+        fsio.rename(spark, str(tmp_path / "a"), str(tmp_path / "b"))
+    fsio.rename(spark, str(tmp_path / "a"), str(tmp_path / "c"))
+    assert sorted(os.listdir(tmp_path)) == ["b", "c"]
