@@ -394,12 +394,11 @@ def _dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Registered as ``q_dedup_ngram`` through rounds 2-11 (last driver
     attestation: CORRECTNESS_r10, hash-green).  The pair ENUMERATION is
     quadratic in block size by construction -- 21 s at 1x, >560 s at
-    10x on the replica corpora -- so once the registry hit its 150-key
-    rotation capacity the judge approved retiring it (VERDICT r10/r11):
-    its output is byte-identical to ``q_dedup_prefix`` under the SAME
-    oracle SQL (:data:`DEDUP_NGRAM_ORACLE`, kept for the tests), so the
-    registered PPJoin scale path attests the identical answer without
-    the quadratic surface.  The function stays module-private as the
+    10x on the replica corpora -- and its output is byte-identical to
+    ``q_dedup_prefix`` under the SAME oracle SQL
+    (:data:`DEDUP_NGRAM_ORACLE`, kept for the tests), so the registered
+    PPJoin scale path attests the identical answer without the
+    quadratic surface.  The function stays module-private as the
     ground-truth side of the prefix/minhash/simhash/fuzzy recall tests
     (tests/test_llm_pipeline.py -- the ``_decontam_naive`` precedent).
 

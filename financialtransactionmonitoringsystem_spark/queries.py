@@ -24,136 +24,15 @@ _MODULES = [relational, aggregates, windows, setops, topk, scalar,
             curate, timeseries, udfs, layout, txfeed]
 
 
-# The driver's correctness gate evaluates queries() in registration order with
-# a bounded window (observed: first ~50 keys; re-validate each round).  The
-# window is therefore filled OLDEST-ATTESTATION-FIRST so coverage self-rotates:
-# LAST_ATTESTED records the round each key last received a driver-side verdict
-# (transcribed from the committed CORRECTNESS_r{N}.json files); keys absent
-# from the map (new operators) and keys whose implementation changed this
-# round (TOUCHED) sort as most-stale.  tests/test_oracle_parity.py remains the
-# authoritative full-registry gate regardless of window position, and
-# test_window_rotation pins that every stale key actually fits the window.
-LAST_ATTESTED: dict[str, int] = {
-    # round 16 window (CORRECTNESS_r16.json: 49 hash-green + 1 no_oracle
-    # rows-only verdict (q_agg_approx), all 50 attested, zero errors --
-    # the r13 cohort re-attested on schedule, including both round-16
-    # in-window free swaps (q_fn_json json_tuple single-streaming-parse,
-    # q_agg_stats one-pass exact percentile()))
-    **{k: 16 for k in (
-        'q_shard_balance',
-        'q_agg_approx', 'q_agg_group', 'q_agg_rollup', 'q_agg_salted',
-        'q_agg_stats', 'q_cte', 'q_curate_epochs', 'q_dedup',
-        'q_dedup_exact', 'q_filter_range',
-        'q_fn_array', 'q_fn_date', 'q_fn_json',
-        'q_funnel_sessionized', 'q_ingest_feed', 'q_join_asof',
-        'q_join_inner', 'q_join_interval', 'q_join_multiway',
-        'q_join_salted', 'q_mm_audio', 'q_mm_decode_png',
-        'q_mm_keyframes', 'q_pipeline_curate', 'q_pivot',
-        'q_scan_all', 'q_shard_card', 'q_sim_lsh', 'q_stream_dedup',
-        'q_stream_flag', 'q_stream_session', 'q_stream_sliding',
-        'q_stream_topk', 'q_stream_tumbling', 'q_subquery_in',
-        'q_subquery_scalar', 'q_text_decontam', 'q_text_fingerprint',
-        'q_text_langid', 'q_text_quality', 'q_text_stats',
-        'q_text_tokencount', 'q_text_tokens', 'q_topk_per_group',
-        'q_union', 'q_unpivot', 'q_win_frame', 'q_win_range',
-        'q_win_rank',
-    )},
-    # round 15 window (CORRECTNESS_r15.json: 46 hash-green + 4 no_oracle
-    # rows-only verdicts (q_agg_hll, q_dedup_fuzzy, q_dedup_minhash,
-    # q_dedup_simhash), all 50 attested, zero errors -- the r12 cohort
-    # re-attested on schedule, including both round-15 in-window free
-    # swaps (q_dedup_minhash min-band residual, q_dedup_simhash
-    # min-chunk residual))
-    **{k: 15 for k in (
-        "q_agg_collect", "q_agg_cube", "q_agg_distinct", "q_agg_global",
-        "q_agg_gsets", "q_agg_having", "q_agg_hll", "q_curate_budget",
-        "q_dedup_cluster", "q_dedup_fuzzy", "q_dedup_incremental",
-        "q_dedup_minhash", "q_dedup_prefix", "q_dedup_simhash",
-        "q_embed_stats", "q_except", "q_export_shards",
-        "q_filter_compound", "q_filter_null", "q_fn_cond",
-        "q_fn_decimal", "q_fn_map", "q_fn_math", "q_fn_string",
-        "q_ingest_json", "q_intersect", "q_join_anti",
-        "q_join_asof_fwd", "q_join_broadcast", "q_join_full",
-        "q_join_left", "q_join_semi", "q_join_theta", "q_mm_resize",
-        "q_pack_sequences", "q_point_lookup", "q_project_compute",
-        "q_retention_funnel", "q_sample_stratified", "q_scan_prune",
-        "q_sort_multi", "q_stream_distinct", "q_stream_state",
-        "q_text_linededup", "q_text_pii", "q_text_tfidf", "q_topk",
-        "q_ts_resample", "q_win_lag", "q_win_ntile",
-    )},
-    # round 14 window (CORRECTNESS_r14.json: 48 hash-green + 2 no_oracle
-    # rows-only verdicts (q_agg_approx_quantile, q_sim_ivf — by-nature
-    # approximate keys), all 50 attested, zero errors -- the r11 cohort
-    # re-attested on schedule, including both round-14 in-window free
-    # swaps (q_cte_recursive doubling+carried-bound spine, q_dedup_embed
-    # chunked-BLAS vectorized form))
-    **{k: 14 for k in (
-        "q_text_decontam_bylang", "q_text_novelty",
-        "q_agg_approx_quantile", "q_agg_argmax", "q_agg_bitmap",
-        "q_agg_corr", "q_agg_ddsketch", "q_agg_histogram", "q_agg_mode",
-        "q_align_crosslingual", "q_anomaly", "q_cte_recursive",
-        "q_curate_mixture", "q_dedup_embed", "q_dedup_keep_best",
-        "q_dedup_url", "q_dq_checks", "q_embed_quantize", "q_fn_try",
-        "q_funnel", "q_join_bloom", "q_join_lateral", "q_layout_zorder",
-        "q_license_propagate", "q_merge_upsert", "q_mm_decode",
-        "q_mm_features", "q_mm_frames", "q_mm_histogram", "q_mm_meta",
-        "q_profile", "q_retention", "q_sample_hash",
-        "q_sample_proportional", "q_sample_weighted", "q_scd2",
-        "q_sessionize", "q_sim_cosine", "q_sim_ivf",
-        "q_sim_knn_per_label", "q_snapshot_diff", "q_stream_join",
-        "q_stream_join_agg", "q_text_bpe_pairs",
-        "q_text_perplexity", "q_text_repetition", "q_ts_interpolate",
-        "q_udaf_centsum", "q_udtf_gaps", "q_win_timerange",
-    )},
-}
-
-# Implementations materially changed this round -> re-attest regardless of
-# history.  Round-17 touches: NONE -- the round-17 window is exactly the
-# 50-key r14-attested cohort (r11 cohort) re-attesting on schedule; all
-# FOUR round-17 swaps are r14-attested keys, i.e. in-window free swaps
-# needing no TOUCHED slot: q_fn_try (regexp-guarded try_cast, old form
-# scalar.fn_try_unguarded), q_text_repetition (hashed-gram keys, old form
-# text.repetition_stringgram), q_text_novelty (chained-hash fps, old form
-# text._novelty_fps_stringgram), q_align_crosslingual (chained-hash gram
-# keys, old form text.align_stringgram).
-# Round-17 OPTIMIZATION-round swaps (the driver re-oracles the FULL
-# registry after an optimization round, so every key is attested this
-# round regardless of window position; each swap is additionally
-# pinned row-identical to its retained reference by a test and was
-# oracle-MATCHed at sf0.01 + sf0.1 at swap time): q_udtf_gaps (JVM
-# lag-window aggregate, old form udfs.udtf_gaps_pandas),
-# q_text_decontam (chained-hash fps via text._decontam_fps, old form
-# text.decontam_stringgram -- the banked r19 swap executed early under
-# the judge's composed-child contract, child verified same-session).
-TOUCHED: tuple[str, ...] = ()
-
-# Among equally-stale keys, spread families across the window edge instead of
-# alphabetical clumping; anything unlisted tiebreaks alphabetically after.
-REPRESENTATIVES = (
-    "q_agg_group", "q_join_multiway", "q_stream_tumbling", "q_text_tokens",
-    "q_sim_lsh", "q_join_asof", "q_win_frame", "q_fn_date", "q_scan_all",
-    "q_dedup", "q_mm_meta", "q_pivot",
-)
-
-
-def _staleness(key: str) -> tuple[int, int, str]:
-    round_ = 0 if key in TOUCHED else LAST_ATTESTED.get(key, 0)
-    rep = REPRESENTATIVES.index(key) if key in REPRESENTATIVES else len(REPRESENTATIVES)
-    return (round_, rep, key)
-
-
-def _module_order() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every key in registration order: ``_MODULES`` order, then each
+    module's ``QUERIES`` order."""
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for mod in _MODULES:
         for key, fn in getattr(mod, "QUERIES", {}).items():
             assert key not in out, f"duplicate query key {key}"
             out[key] = fn
     return out
-
-
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    by_mod = _module_order()
-    return {key: by_mod[key] for key in sorted(by_mod, key=_staleness)}
 
 
 def all_oracles() -> dict[str, str]:

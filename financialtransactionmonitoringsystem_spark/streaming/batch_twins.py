@@ -152,10 +152,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     group comes from a packed-struct MIN aggregate -- map-side
     combinable, no window sort, state O(live keys) never O(events).
 
-    Registered round 10 (shipped round 9 as ``stream_dedup_twin`` while
-    the r9 window was full at 48 r6-stale + 2 TOUCHED; pre-verified vs
-    its oracle at sf0.1 before registration).  Closes the last SURVEY
-    §2.2 streaming row without a registry key.
+    Closes the last SURVEY §2.2 streaming row without a registry key.
     """
     ev = load_table(spark, sf_dir, "events")
     first = F.min(F.struct("ts", "event_id", "value")).alias("f")

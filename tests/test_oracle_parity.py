@@ -17,6 +17,9 @@ ORACLES = registry.all_oracles()
 def test_every_oracle_key_has_a_query():
     missing = set(ORACLES) - set(ALL)
     assert not missing, f"oracles without queries: {missing}"
+    # oracle_sql() iterates in queries() order, so a caller that zips the
+    # two registries pairs each key with its own oracle
+    assert list(ORACLES) == [k for k in ALL if k in ORACLES]
 
 
 @pytest.mark.parametrize("key", sorted(ORACLES))
@@ -306,48 +309,6 @@ EXPECTED_KEYS = {
     "q_win_rank",
     "q_win_timerange",
 }
-
-
-def test_window_rotation():
-    """ADVICE r2: the driver-window ordering must be derivable and
-    validated, not a frozen list.  Every key named in the rotation
-    metadata must resolve in the registry (a typo would silently backfill
-    the window), and every key needing a fresh driver verdict -- new,
-    touched, or oldest-attested -- must land inside the observed ~50-key
-    window.  With 128 keys the stale set can exceed 50 by a bounded
-    remainder; since slots fill oldest-attestation-first, overflow is
-    only legal from the LEAST-stale attested cohort (never a new or
-    touched key, and never while a staler cohort holds a slot), and the
-    50 slots must all be spent on stale keys (no fresh key occupying a
-    slot a stale key needs)."""
-    keys = set(ALL)
-    for name, named in (("LAST_ATTESTED", set(registry.LAST_ATTESTED)),
-                        ("TOUCHED", set(registry.TOUCHED)),
-                        ("REPRESENTATIVES", set(registry.REPRESENTATIVES))):
-        unknown = named - keys
-        assert not unknown, f"{name} names unregistered keys: {sorted(unknown)}"
-    newest = max(registry.LAST_ATTESTED.values())
-    stale = {k for k in keys
-             if k in registry.TOUCHED
-             or registry.LAST_ATTESTED.get(k, 0) < newest}
-    window = set(list(ALL)[:50])
-    missed = stale - window
-    # new (never-attested) and touched keys must never miss the window
-    priority = {k for k in stale
-                if k in registry.TOUCHED or k not in registry.LAST_ATTESTED}
-    assert not priority & missed, (
-        f"new/touched keys fell outside the 50-key window: "
-        f"{sorted(priority & missed)}")
-    if missed:
-        least_stale = max(registry.LAST_ATTESTED[k] for k in stale - priority)
-        not_least = {k for k in missed
-                     if registry.LAST_ATTESTED.get(k) != least_stale}
-        assert not not_least, (
-            f"window overflow must come only from the round-{least_stale} "
-            f"cohort, got: {sorted(not_least)}")
-        assert window <= stale, (
-            "window holds fresh keys while stale keys overflow: "
-            f"{sorted(window - stale)}")
 
 
 def test_registry_is_complete():

@@ -198,6 +198,64 @@ def test_two_generations_read_newest_and_next_batch_removes_older(
     assert _table(spark, serving) == _model(B1, B2, B3)
 
 
+ISO = "%Y-%m-%dT%H:%M:%S.%fZ"
+
+
+def _tx_rows(rows):
+    """``(event_id, hours after T0, value)`` rows as transaction JSON:
+    ``tx-<event_id>``, ``timestamp`` T0 + hours, ``amount`` value."""
+    return [{"transaction_id": f"tx-{k}", "user_id": 1001, "amount": v,
+             "currency": "EUR", "type": "credit", "metadata": {},
+             "timestamp": (T0 + timedelta(hours=h)).strftime(ISO)}
+            for k, h, v in rows]
+
+
+def _tx_table(spark, serving):
+    """The transaction serving table in ``_table``'s terms."""
+    rows = spark.read.parquet(serving).collect()
+    got = {int(r.transaction_id[3:]):
+           (datetime.strptime(r.timestamp, ISO), r.amount) for r in rows}
+    assert len(got) == len(rows), "more than one row for a key"
+    return got
+
+
+def test_checkpoint_replay_after_lost_commit(spark, tmp_path):
+    """A crash after the generation's rename and before Spark's commit
+    leaves the epoch's offsets without its ``commits/<id>`` entry.  The
+    next run from the checkpoint re-executes that epoch: the table then
+    equals the uninterrupted run and the model, in one generation."""
+    landing, serving, ckpt = (str(tmp_path / d)
+                              for d in ("landing", "serving", "ckpt"))
+    (tmp_path / "landing").mkdir()
+    _land(tmp_path / "landing" / "b1.json", _tx_rows(B1))
+    _compact(spark, landing, serving, ckpt)
+    _land(tmp_path / "landing" / "b2.json", _tx_rows(B2))
+    _compact(spark, landing, serving, ckpt)
+    uninterrupted = _tx_table(spark, serving)
+    assert _entries(serving) == ["gen=1"]
+
+    for name in ("1", ".1.crc"):  # the commit and its checksum file
+        os.remove(f"{ckpt}/commits/{name}")
+    _compact(spark, landing, serving, ckpt)
+    assert _entries(serving) == ["gen=2"]  # the sink ran epoch 1 again
+    assert _tx_table(spark, serving) == uninterrupted == _model(B1, B2)
+
+
+def test_stale_lookup_raises_after_the_next_batch(spark, tmp_path):
+    """A lookup frame built on generation ``n`` and collected after the
+    next batch deleted it raises instead of returning empty or partial
+    rows; a lookup built afterwards serves the new latest row."""
+    serving = str(tmp_path / "serving")
+    sink = pipeline.compact_latest_to(serving, key="event_id")
+    sink(_batch(spark, B1), 0)
+    stale = pipeline.serving_lookup(spark, serving, 3, key="event_id")
+    sink(_batch(spark, B2), 1)
+
+    with pytest.raises(Exception, match="FILE_NOT_EXIST|FileNotFound"):
+        stale.collect()
+    assert _served(spark, serving, 3) == [_model(B1, B2)[3]]
+
+
 def test_second_batch_runs_two_jobs(spark, tmp_path):
     """Merging a batch into an existing table runs the write and its
     shuffle stage only: no collect, no schema inference."""

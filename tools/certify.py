@@ -1,13 +1,12 @@
 """End-of-round certification runner -- the verify-skill recipe as one
 command (driver-mimic vanilla session, NOT session.get_spark):
 
-    python tools/certify.py                 # window + full + codegen
-    python tools/certify.py --window-only   # the cheap pre-driver check
+    python tools/certify.py                 # probe + full + codegen
     python tools/certify.py --skip-codegen
 
 Stages (each prints one summary line; any failure aborts loudly):
-1. WINDOW   -- the first 50 of queries() vs DuckDB at sf0.01: exactly
-              what the driver attests this round.
+1. JSONPROBE -- the corpus has no duplicate-key props JSON (q_fn_json's
+              oracle parity rests on it).
 2. FULL     -- every registry key vs DuckDB at sf0.01 (rows-only keys
               get the driver's weaker count check).
 3. CODEGEN  -- all keys at sf0.001 under codegen.fallback=false +
@@ -88,7 +87,6 @@ def _sweep(spark, keys, sf_dir: str, label: str) -> None:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--window-only", action="store_true")
     ap.add_argument("--skip-codegen", action="store_true")
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--codegen-sf", default="/root/testdata/sf0.001")
@@ -106,12 +104,10 @@ def main() -> None:
     print(f"registry: {len(keys)} keys; entry() rows:",
           len(E.entry(spark).collect()), flush=True)
     _probe_json_dupkeys(spark, args.sf)
-    _sweep(spark, keys[:50], args.sf, "WINDOW50")
-    if not args.window_only:
-        _sweep(spark, keys, args.sf, f"FULL{len(keys)}")
+    _sweep(spark, keys, args.sf, f"FULL{len(keys)}")
     spark.stop()
 
-    if args.window_only or args.skip_codegen:
+    if args.skip_codegen:
         return
     spark = (SparkSession.builder.master("local[8]")
              .config("spark.ui.enabled", "false")
