@@ -7,7 +7,7 @@ whose entire query surface is append, list-all, and point-lookup over an
 in-memory transactions table.  This package rebuilds that surface
 idiomatically on Spark (DataFrame/SQL + Catalyst + Structured Streaming) and
 extends it into the full analytics engine the reference gestures at:
-relational operators, streaming windows/watermarks/alerting, and
+relational operators, a streamed serving table (latest row per key), and
 LLM-data-pipeline operators (text analysis, dedup, similarity search).
 
 Layout:
@@ -17,8 +17,8 @@ Layout:
     operators/  -- relational, aggregate, window, set, dedup, similarity,
                    text, multimodal operators (one ``q_*`` per SURVEY.md §2.2)
     functions/  -- scalar function family queries
-    sources/    -- batch/streaming sources (JSON ingest of the reference
-                   transaction shape)
+    sources/    -- JSON ingest of the reference transaction shape, and
+                   the synthetic ``txfeed`` batch source
     streaming/  -- Structured Streaming pipelines + oracle-checkable batch twins
     plans/      -- plan inspection helpers (pushdown/broadcast assertions)
     queries     -- the full registry consumed by __spark_entry__.py

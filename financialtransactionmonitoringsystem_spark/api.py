@@ -23,10 +23,18 @@ Scale notes:
   streaming source offset (Kafka partition+offset) -- a driver-side
   max() per batch serializes ingest.  The engine has no such source
   yet.
+* Appends to one store path are serialized within a process: every
+  ``TransactionStore`` on the same path string shares one lock, held
+  from the ``max(ingest_seq)`` read through the write.  Appends from
+  other processes are still unsafe -- their jobs share the store's
+  ``_temporary`` directory and may reuse ``ingest_seq`` values -- until
+  a batch is claimed by an exclusive create (ROADMAP item 1).
 * ``append`` hands its batch to the JVM as one Arrow table
   (``json_ingest.ingest_rows``), so its write task starts no Python
   worker; the whole batch is built in local memory, which suits a POST
-  body.  Bulk loads go through ``json_ingest.stream_transactions_json``.
+  body.  There is no bulk route into the store yet:
+  ``json_ingest.stream_transactions_json`` feeds only the serving table
+  (``streaming.pipeline.compact_latest_to``), never the store.
 * Point lookups scan parquet with the id predicate pushed to row-group
   stats; for hot serving, ``streaming.pipeline.compact_latest_to``
   maintains a compacted table instead: the latest row per key, written
@@ -35,12 +43,18 @@ Scale notes:
 
 from __future__ import annotations
 
+import threading
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .schemas import TRANSACTION_TABLE_SCHEMA
 from .sources import json_ingest
-from .tables import read_engine_table
+from .tables import read_parquet
+
+# One append lock per store path, shared by every store on that path.
+_append_locks: dict[str, threading.Lock] = {}
 
 
 class TransactionStore:
@@ -50,15 +64,18 @@ class TransactionStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
+        # dict.setdefault is atomic, so racing constructors get one lock
+        self._append_lock = _append_locks.setdefault(path, threading.Lock())
 
     # -- O1: POST /transactions ------------------------------------------
     def append(self, rows: list[dict]) -> DataFrame:
         """Ingest JSON-shaped rows; returns the echoed batch (the
         reference echoes each stored row back, ``main.rs:85``)."""
-        base = self._max_seq() + 1
-        batch = json_ingest.ingest_rows(self.spark, rows) \
-            .withColumn("ingest_seq", F.col("ingest_seq") + F.lit(base))
-        batch.write.mode("append").parquet(self.path)
+        batch = json_ingest.ingest_rows(self.spark, rows)
+        with self._append_lock:
+            batch = batch.withColumn(
+                "ingest_seq", F.col("ingest_seq") + F.lit(self._max_seq() + 1))
+            batch.write.mode("append").parquet(self.path)
         return batch
 
     # -- O2: GET /transactions -------------------------------------------
@@ -81,11 +98,16 @@ class TransactionStore:
         return self._table().count()
 
     def _table(self) -> DataFrame:
-        df = read_engine_table(self.spark, self.path, TRANSACTION_TABLE_SCHEMA)
-        if df is None:  # no partitions: actions on it start no task
-            return self.spark.createDataFrame(
-                self.spark.sparkContext.emptyRDD(), TRANSACTION_TABLE_SCHEMA)
-        return df
+        # With a schema an empty directory reads as an empty frame, and a
+        # corrupt part file fails the first action instead of planning.
+        try:
+            return read_parquet(self.spark, self.path, TRANSACTION_TABLE_SCHEMA)
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+        # no partitions: actions on it start no task
+        return self.spark.createDataFrame(
+            self.spark.sparkContext.emptyRDD(), TRANSACTION_TABLE_SCHEMA)
 
     def _max_seq(self) -> int:
         df = self._table()

@@ -75,25 +75,13 @@ def write_marker(marker_path: str, fingerprint: str) -> None:
         fh.write(fingerprint + "\n")
 
 
-def build_corpus_artifacts(spark, sf_dir: str) -> dict[str, str]:
-    """Build (or no-op when current) every persisted corpus artifact for
-    ``sf_dir``: token-set table, rarest-first prefix index, MinHash band
-    table, SimHash chunk table, duplicate-cluster table, IVF index.
-
-    The one call a deployment runs after each corpus snapshot lands --
-    afterwards every dedup/similarity query is pure probe cost.  Returns
-    ``{artifact_name: base_path}``.  Raises on the first failed build
-    (a silent partial warm-up would hide the build cost inside query
-    timings -- the bench harness wraps each build itself to keep
-    running and flag the failure instead).
-    """
-    return {name: fn(spark, sf_dir) for name, fn in corpus_builders().items()}
-
-
 def corpus_builders() -> dict:
-    """Name -> builder for every persisted corpus artifact (the registry
-    behind :func:`build_corpus_artifacts`; the bench harness iterates it
-    with per-build error flagging instead of fail-fast)."""
+    """Name -> builder for every persisted corpus artifact: token-set
+    table, rarest-first prefix index, MinHash band table, SimHash chunk
+    table, duplicate-cluster table, IVF index.  Each builder takes
+    ``(spark, sf_dir)``, no-ops when its artifact is current and returns
+    its base path; the bench harnesses iterate this registry with
+    per-build error flagging."""
     from .operators.dedup import (build_band_table, build_cluster_table,
                                   build_prefix_index, build_simhash_table,
                                   build_token_table)

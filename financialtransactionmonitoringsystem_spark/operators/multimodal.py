@@ -8,9 +8,9 @@ builds genuine Netpbm P5/PGM files JVM-side and the worker runs a
 complete stdlib P5 parser -- header, comments, maxval, pixels), and the
 COMPRESSED path is real too: ``decode_png`` is a complete pure-stdlib
 baseline PNG decoder (chunk walk + CRC, zlib inflate, full scanline
-unfiltering incl. Paeth) that ``decode_image`` falls back to when
-Pillow is absent; Pillow, when installed, extends coverage to JPEG and
-friends.  ``q_mm_features`` decodes nothing: its worker maps each
+unfiltering incl. Paeth), which ``q_mm_decode_png`` checks against
+its DuckDB oracle.  Other compressed formats (JPEG and friends) are
+not decoded.  ``q_mm_features`` decodes nothing: its worker maps each
 payload to a deterministic 4x4 grayscale from the content's md5, which
 keeps the key stable for its hash-match check.
 
@@ -55,30 +55,6 @@ def with_binary_content(docs: DataFrame) -> DataFrame:
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}          # color type -> channels
 _PNG_MODE = {1: "L", 2: "LA", 3: "RGB", 4: "RGBA"}  # channels -> mode name
-
-
-def decode_image(content: bytes) -> tuple[int, int, str, bytes]:
-    """Real compressed-format decode, normalized to
-    ``(width, height, mode, raw_pixel_bytes)`` regardless of backend.
-
-    Pillow handles every format when present; without it, PNG decodes
-    through the complete pure-stdlib decoder below (zlib inflate +
-    per-scanline unfilter including Paeth -- VERDICT r5 #5), so the
-    compressed path is exercised for real even in codec-less
-    environments.  Other formats without Pillow raise
-    ``NotImplementedError``.
-    """
-    try:
-        from PIL import Image
-        import io
-
-        im = Image.open(io.BytesIO(content))
-        return im.width, im.height, im.mode, im.tobytes()
-    except ImportError:
-        if content[:8] == _PNG_SIG:
-            return decode_png(content)
-        raise NotImplementedError(
-            "non-PNG image decoding requires Pillow") from None
 
 
 def decode_png(content: bytes) -> tuple[int, int, str, bytes]:
@@ -306,9 +282,9 @@ def _make_decode_pgm():
     """Factory for the REAL image-decode worker: a complete Netpbm P5
     parser (magic, whitespace/comment-tolerant header, maxval, raw
     pixels) in pure stdlib -- the uncompressed-format proof that the
-    decode stage is genuinely wired, with Pillow still gating the
-    compressed formats (``decode_image``).  Closure for the same
-    ship-by-value reason as the other workers."""
+    decode stage is genuinely wired (``decode_png`` covers the
+    compressed format).  Closure for the same ship-by-value reason as
+    the other workers."""
 
     def decode_pgm(it):
         import pandas as pd

@@ -4,17 +4,11 @@ reference's transaction feed as a first-class Spark source.
 The reference ingests transactions one HTTP POST at a time into a
 process-local Vec (``monitoring-service/src/main.rs:79-89``) and can never
 replay, parallelize, or recover that feed.  This source re-expresses the
-same feed Spark-natively:
-
-* **Batch** (``spark.read.format("txfeed")``): a deterministic generator
-  of reference-shaped transactions (SURVEY.md §1.2/§1.3 value domains),
-  partitioned -- each task generates its own row range, so a 10^12-row
-  backfill is executor-parallel with no driver bottleneck.
-* **Streaming** (``spark.readStream.format("txfeed")``): micro-batches of
-  the same feed with a numeric offset (rows emitted so far) -- the
-  replayable, checkpointable stand-in for the POST endpoint / a Kafka
-  topic.  Offsets make redelivery exactly-once downstream, which the
-  reference cannot do at all.
+same feed Spark-natively, in batch only (``spark.read.format("txfeed")``):
+a deterministic generator of reference-shaped transactions (SURVEY.md
+§1.2/§1.3 value domains), partitioned -- each task generates its own row
+range, so a 10^12-row backfill is executor-parallel with no
+single-process bottleneck.
 
 Rows are generated from ``md5(seed, i)`` so any (seed, i) pair yields the
 same transaction on every executor, every run -- replay-safe by
@@ -28,12 +22,7 @@ import hashlib
 import json
 from collections.abc import Iterator
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql import types as T
 
 CURRENCIES = ["EUR", "GBP", "KES", "NGN", "USD"]  # mock_transactions.json domain
@@ -94,30 +83,6 @@ class _FeedBatchReader(DataSourceReader):
             yield _tx(self.seed, i)
 
 
-class _FeedStreamReader(SimpleDataSourceStreamReader):
-    """Offset = number of rows emitted so far; each micro-batch emits up
-    to ``rowsperbatch`` new rows until ``maxrows``, then empty batches.
-    Note: ``availableNow`` performs a single ``read()`` for simple stream
-    readers -- drive multiple micro-batches with a processing-time
-    trigger (see tests)."""
-
-    def __init__(self, options: dict):
-        self.per_batch = int(options.get("rowsperbatch", 100))
-        self.max_rows = int(options.get("maxrows", 1000))
-        self.seed = int(options.get("seed", 42))
-
-    def initialOffset(self) -> dict:
-        return {"pos": 0}
-
-    def read(self, start: dict):
-        lo = start["pos"]
-        hi = min(lo + self.per_batch, self.max_rows)
-        return [_tx(self.seed, i) for i in range(lo, hi)], {"pos": hi}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        return [_tx(self.seed, i) for i in range(start["pos"], end["pos"])]
-
-
 class TransactionFeedDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
@@ -128,9 +93,6 @@ class TransactionFeedDataSource(DataSource):
 
     def reader(self, schema) -> DataSourceReader:
         return _FeedBatchReader(self.options)
-
-    def simpleStreamReader(self, schema) -> SimpleDataSourceStreamReader:
-        return _FeedStreamReader(self.options)
 
 
 N_FEED_ROWS = 1000

@@ -1,7 +1,6 @@
-"""Loaders for the driver-generated testdata tables (TESTDATA.md), the
-one reader for parquet tables the engine writes itself
-(:func:`read_engine_table`), and :func:`read_parquet`, the only place
-in the engine that reads parquet in batch.
+"""Loaders for the generated testdata tables (TESTDATA.md), and
+:func:`read_parquet`, the only place in the engine that reads parquet
+in batch.
 
 Tables: region nation customer supplier part orders lineitem events
 documents embeddings -- one parquet file per table under
@@ -46,18 +45,12 @@ import threading
 from collections import OrderedDict
 from urllib.parse import unquote, urlparse
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .artifacts import corpus_fingerprint
 from .session import apply_runtime_confs
-
-TABLE_NAMES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
 
 
 def _normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -146,29 +139,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def read_engine_table(spark: SparkSession, path: str,
-                      schema: T.StructType | None = None) -> DataFrame | None:
-    """Read a parquet table the engine itself writes (the transaction
-    store, a foreachBatch sink's output), or ``None`` when it does not
-    exist yet.
-
-    "Does not exist yet" is exactly ``PATH_NOT_FOUND`` (no directory) or
-    ``UNABLE_TO_INFER_SCHEMA`` (a directory with no data files, e.g. one
-    pre-created by ``mkdtemp``).  Any other failure propagates: a reader
-    that treats a real error as "no table" silently discards history.
-    With ``schema`` the read infers nothing, so an empty directory reads
-    as an empty frame and a corrupt part file fails the first action
-    instead of planning."""
-    try:
-        return read_parquet(spark, path, schema)
-    except AnalysisException as e:
-        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            raise
-        return None
-
-
 def register_views(spark: SparkSession, sf_dir: str,
-                   names: tuple[str, ...] = TABLE_NAMES) -> None:
+                   names: tuple[str, ...]) -> None:
     """Register temp views (used by SQL-form queries and notebooks)."""
     for name in names:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)

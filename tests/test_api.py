@@ -6,11 +6,13 @@ fixture (``conftest.make_tx_rows``)."""
 from __future__ import annotations
 
 import os
+import threading
+from collections import Counter
 
 import pytest
 
 from financialtransactionmonitoringsystem_spark.api import TransactionStore
-from tests.conftest import part_files
+from tests.conftest import make_tx_rows, part_files
 
 
 @pytest.fixture()
@@ -64,3 +66,37 @@ def test_absent_or_empty_store_reads_empty(spark, store):
     assert store.count() == 0
     assert store.lookup("no-such-id").count() == 0
     assert store.list_all().collect() == []
+
+
+def test_concurrent_appends_keep_every_row_once(spark, store):
+    """Appends racing on one store path from several threads, each
+    through its own ``TransactionStore``, all return and leave each
+    batch's rows exactly once with unique ``ingest_seq``."""
+    n_threads, n_rounds, n_rows = 4, 3, 5
+    rows = make_tx_rows(n_threads * n_rounds * n_rows)
+    batches = [rows[i:i + n_rows] for i in range(0, len(rows), n_rows)]
+    barrier = threading.Barrier(n_threads)
+    errors = []
+
+    def worker(t):
+        mine = TransactionStore(spark, store.path)
+        for r in range(n_rounds):
+            barrier.wait()
+            try:
+                mine.append(batches[r * n_threads + t])
+            except Exception as e:  # collected, so the barrier still fills
+                errors.append(e)
+
+    threads = [threading.Thread(target=worker, args=(t,))
+               for t in range(n_threads)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=600)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    got = store.list_all().collect()
+    ids = Counter(r.transaction_id for r in got)
+    assert ids == Counter(r["transaction_id"] for r in rows)
+    seqs = [r.ingest_seq for r in got]
+    assert len(set(seqs)) == len(seqs) == len(rows)

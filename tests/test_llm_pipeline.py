@@ -482,28 +482,9 @@ def test_frame_sampling_fanout(spark, sf_dir):
     assert frames.groupBy("doc_id").count().filter(F.col("count") != 4).count() == 0
 
 
-def test_decode_image_non_png_raises():
-    """Without Pillow the non-PNG path must raise NotImplementedError;
-    with Pillow installed (the supported JPEG configuration) the same
-    bytes raise PIL's UnidentifiedImageError instead -- accept either so
-    the test is valid in both environments (ADVICE r6)."""
-    import importlib.util
-
-    if importlib.util.find_spec("PIL") is None:
-        expected: tuple[type[BaseException], ...] = (NotImplementedError,)
-    else:
-        from PIL import UnidentifiedImageError
-
-        expected = (UnidentifiedImageError,)
-    with pytest.raises(expected):
-        multimodal.decode_image(b"not-an-image")
-
-
 def test_png_roundtrip_bit_exact():
     """VERDICT r5 #5: a COMPRESSED format decodes for real.  Encode ->
-    decode must return the exact input pixels for every supported mode,
-    and decode_image must route PNG through the stdlib decoder when
-    Pillow is absent."""
+    decode must return the exact input pixels for every supported mode."""
     import hashlib
 
     for mode, ch in (("L", 1), ("LA", 2), ("RGB", 3), ("RGBA", 4)):
@@ -513,7 +494,6 @@ def test_png_roundtrip_bit_exact():
         png = multimodal.encode_png(w, h, mode, px)
         assert png[:8] == b"\x89PNG\r\n\x1a\n"
         assert multimodal.decode_png(png) == (w, h, mode, px)
-        assert multimodal.decode_image(png) == (w, h, mode, px)
 
 
 def test_png_decoder_unfilters_all_filter_types():
@@ -1307,16 +1287,18 @@ def test_pgm_parsers_reject_padded_separator(worker):
             list(fn(iter([pd.DataFrame({"doc_id": [1], "content": [bad]})])))
 
 
-def test_build_corpus_artifacts_builds_all_and_is_idempotent(spark, sf_dir,
-                                                             tmp_path,
-                                                             request):
-    """The one-call warm-up must cover every artifact family and no-op
-    on a second call (markers current)."""
+def test_corpus_builders_build_all_and_are_idempotent(spark, sf_dir,
+                                                      tmp_path, request):
+    """Running every registered builder must cover every artifact family
+    and no-op on a second run (markers current)."""
     import os
     import shutil
 
     from financialtransactionmonitoringsystem_spark.artifacts import (
-        build_corpus_artifacts, corpus_builders)
+        corpus_builders)
+
+    def build_all():
+        return {n: fn(spark, str(corpus)) for n, fn in corpus_builders().items()}
 
     corpus = tmp_path / "sf_api"
     corpus.mkdir()
@@ -1326,13 +1308,13 @@ def test_build_corpus_artifacts_builds_all_and_is_idempotent(spark, sf_dir,
         shutil.rmtree(b, ignore_errors=True)
         for b in _artifact_bases(str(corpus))])
 
-    out = build_corpus_artifacts(spark, str(corpus))
+    out = build_all()
     assert set(out) == set(corpus_builders())
     for base in out.values():
         assert os.path.exists(os.path.join(base, "_BUILT")), base
     mtimes = {n: os.path.getmtime(os.path.join(b, "_BUILT"))
               for n, b in out.items()}
-    again = build_corpus_artifacts(spark, str(corpus))
+    again = build_all()
     assert again == out
     for n, b in again.items():
         assert os.path.getmtime(os.path.join(b, "_BUILT")) == mtimes[n], n

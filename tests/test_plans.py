@@ -862,3 +862,23 @@ def test_engine_reads_no_fintxmon_conf():
         if isinstance(node, ast.Constant) and isinstance(node.value, str)
         and node.value.startswith("spark.fintxmon.")]
     assert not offenders, offenders
+
+
+def test_engine_has_no_import_guards():
+    """No ``except ImportError`` in the engine package: a missing
+    dependency fails the import loudly instead of silently dropping the
+    code path that needed it."""
+    import financialtransactionmonitoringsystem_spark as pkg
+
+    guarded = {"ImportError", "ModuleNotFoundError"}
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for f in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(f.read_text(), str(f))):
+            if not isinstance(node, ast.ExceptHandler) or node.type is None:
+                continue
+            types = (node.type.elts if isinstance(node.type, ast.Tuple)
+                     else [node.type])
+            if any(isinstance(t, ast.Name) and t.id in guarded for t in types):
+                offenders.append(f"{f.relative_to(root)}:{node.lineno}")
+    assert not offenders, offenders

@@ -16,7 +16,7 @@ import pytest
 
 from financialtransactionmonitoringsystem_spark.streaming import pipeline
 from financialtransactionmonitoringsystem_spark.tables import (
-    load_table, read_engine_table, read_parquet)
+    load_table, read_parquet)
 
 from .compare import assert_frames_match
 from .conftest import plan_jobs
@@ -53,8 +53,8 @@ def test_warm_reads_plan_without_jobs(spark, sf_dir, tmp_path):
     table = str(tmp_path / "engine_table")
     spark.range(40).selectExpr("id", "id % 4 AS __epoch") \
         .write.partitionBy("__epoch").parquet(table)
-    read_engine_table(spark, table)
-    df, warm = plan_jobs(spark, lambda: read_engine_table(spark, table))
+    read_parquet(spark, table)
+    df, warm = plan_jobs(spark, lambda: read_parquet(spark, table))
     assert warm == 0 and df.columns == ["id", "__epoch"]
 
     serving = str(tmp_path / "serving")
@@ -124,12 +124,12 @@ def test_cached_and_uncached_frames_collect_equal(spark, sf_dir, name):
 def test_corrupt_serving_part_file_raises_after_cached_read(spark, tmp_path):
     serving = str(tmp_path / "serving")
     _compacted(spark, serving)
-    assert read_engine_table(spark, serving).count() == 12
+    assert read_parquet(spark, serving).count() == 12
     [part] = glob.glob(f"{serving}/gen=*/part-*.parquet")
 
     # Same size and mtime: the schema comes from the cache, the rows do not.
     _overwrite_in_place(part)
-    df, jobs = plan_jobs(spark, lambda: read_engine_table(spark, serving))
+    df, jobs = plan_jobs(spark, lambda: read_parquet(spark, serving))
     assert jobs == 0
     with pytest.raises(Exception, match="FAILED_READ_FILE"):
         df.collect()
@@ -139,7 +139,7 @@ def test_corrupt_serving_part_file_raises_after_cached_read(spark, tmp_path):
     with open(part, "wb") as fh:
         fh.write(b"not a parquet file")
     with pytest.raises(Exception):
-        read_engine_table(spark, serving).collect()
+        read_parquet(spark, serving).collect()
 
 
 @pytest.mark.parametrize("unit", ["ns", "us"])
