@@ -70,8 +70,11 @@ class TransactionStore:
     # -- O1: POST /transactions ------------------------------------------
     def append(self, rows: list[dict]) -> DataFrame:
         """Ingest JSON-shaped rows; returns the echoed batch (the
-        reference echoes each stored row back, ``main.rs:85``)."""
+        reference echoes each stored row back, ``main.rs:85``).  An
+        empty list stores nothing: no lock, no sequence read, no file."""
         batch = json_ingest.ingest_rows(self.spark, rows)
+        if not rows:
+            return batch
         with self._append_lock:
             batch = batch.withColumn(
                 "ingest_seq", F.col("ingest_seq") + F.lit(self._max_seq() + 1))

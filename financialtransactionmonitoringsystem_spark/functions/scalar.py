@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tables import load_table, register_views, scan_wide
+from ..tables import load_table, scan_wide
 from ..util import rnd, sql_round as R
 
 
@@ -96,48 +96,32 @@ def q_fn_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O4/O5 JSON extraction (``main.rs:49-52``): typed path extraction,
     missing-path -> NULL, matching serde's unknown/missing tolerance.
 
-    r16 in-window swap: ``json_tuple`` extracts BOTH paths from ONE
-    Jackson streaming parse per row, where the previous form
-    (:func:`fn_json_multiprobe`, retained as the equality reference)
-    paid a full parse per distinct path -- codegen subexpression
-    elimination merges the two identical ``$.k`` probes, but
-    ``$.missing`` re-parsed the string.  Interleaved A/B on replicas:
-    1.57x / 1.76x / 1.79x at 1x/10x/50x; rows-equal at all three SFs.
-    The ``from_json`` single-parse struct form was also measured and
-    is WORSE than the multiprobe baseline (0.85-0.93x: it materializes
-    an InternalRow per row where both string paths stream) -- recorded
-    in PLANS so it is not re-litigated.
+    ``json_tuple`` extracts BOTH paths from ONE Jackson streaming parse
+    per row, where one ``get_json_object`` per path pays a full parse
+    per distinct path -- codegen subexpression elimination merges the
+    two identical ``$.k`` probes, but ``$.missing`` re-parses the
+    string.  Interleaved A/B on replicas over the per-path form:
+    1.57x / 1.76x / 1.79x at 1x/10x/50x.  The ``from_json``
+    single-parse struct form was also measured and is WORSE than the
+    per-path form (0.85-0.93x: it materializes an InternalRow per row
+    where both string paths stream) -- recorded in PLANS so it is not
+    re-litigated.
 
     KNOWN edge divergence (review finding, pinned by a planted test,
     not hidden): on DUPLICATE-KEY JSON (``{"k": 7, "k": 8}``)
     json_tuple keeps the LAST occurrence (8) while get_json_object and
     DuckDB's json_extract_string keep the FIRST (7).  Last-wins is
-    what the reference's own serde_json does (``main.rs:49-52``), so
-    the swap moves TOWARD reference semantics; the corpus generator
-    emits single-key props only, so oracle parity is unaffected --
-    but if a future corpus ever hash-fails on this key, check props
-    for duplicate keys FIRST.  On duplicate-free JSON the forms are
-    row-identical (equality-tested at all three SFs).
+    what the reference's own serde_json does (``main.rs:49-52``); the
+    corpus generator emits single-key props only, so oracle parity is
+    unaffected -- but if a future corpus ever hash-fails on this key,
+    check props for duplicate keys FIRST.  On duplicate-free JSON the
+    forms are row-identical (a planted test pins the edge shapes).
 
-    r17 optimization round: the events scan rides
+    The events scan rides
     :func:`tables.scan_wide` so the per-row Jackson parse does not run
     at one-row-group scan width (no-op at real input widths)."""
     return json_props_extract(
         scan_wide(load_table(spark, sf_dir, "events"), "event_id"))
-
-
-def fn_json_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-r16 q_fn_json, retained module-level as the live equality
-    reference for the json_tuple swap (the q_dedup_embed/_band_join
-    precedent): one ``get_json_object`` per path -- the ``$.missing``
-    probe is a second full parse of the same string per row."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        F.get_json_object("props", "$.k").cast("long").alias("k"),
-        F.get_json_object("props", "$.missing").alias("missing_val"),
-        (F.get_json_object("props", "$.k").cast("long") % 10).alias("k_bucket"),
-    )
 
 
 def q_fn_array(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -195,15 +179,14 @@ def q_fn_cond(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The integer-cents ingress expressions for q_fn_decimal -- ONE copy
-# shared with the swap-insurance test (the TRY_CAST_INT_SHAPE lesson:
+# shared with the planted ingress test (the TRY_CAST_INT_SHAPE lesson:
 # impl and test must not be able to drift).  The decimal hop makes the
 # double -> cents mapping value-identical to the double -> decimal(18,2)
-# cast the reference form uses (HALF_UP on the shortest decimal
+# cast the oracle uses (HALF_UP on the shortest decimal
 # representation), which a direct round(x * 100) would NOT be (the
 # pre-round multiply can cross a half-way boundary in double).
 #
-# r18 (VERDICT r17 #4): the decimal hop is now taken only on the
-# AMBIGUOUS rows; everything else rounds in pure double/long math.
+# The decimal hop is taken only on the AMBIGUOUS rows; everything else rounds in pure double/long math.
 # Spark's double->decimal cast goes through java.math.BigDecimal OF THE
 # SHORTEST DECIMAL REPRESENTATION (Double.toString) and was the
 # dominant per-row cost left in q_fn_decimal (5.7x the all-double floor
@@ -222,9 +205,9 @@ def q_fn_cond(spark: SparkSession, sf_dir: str) -> DataFrame:
 # floor result is < 10^13 so the double product with +/-1.0 is exact.
 # The half-way traps the planted test pins (1.005, 2.675, 0.005,
 # 999999999.995) all land inside the guard band and take the hop;
-# bit-identity on the corpus + planted edges is test-pinned
-# (test_fn_decimal_cents_equals_decimal_types_reference) and the A/B
-# is in OPTIMIZATION_r18.md.
+# identity with the decimal cast on the planted edges is test-pinned
+# (test_fn_decimal_cents_equals_decimal_types_reference), the corpus
+# rows are oracle-checked, and the A/B is in OPTIMIZATION_r18.md.
 
 
 def _cents_expr(col: str, precision: int, scale: int) -> str:
@@ -254,9 +237,8 @@ def q_fn_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     double only converts the already-exact result, so both engines
     agree bit-for-bit with no rounding formula at all.
 
-    r17 optimization-round swap (the pre-swap DecimalType(18,2) body
-    is retained as :func:`fn_decimal_decimal_types`, the live equality
-    reference): money enters through the SAME double->decimal cast
+    Money enters through the SAME double->decimal cast as the
+    DecimalType(18,2) oracle
     (HALF_UP on the double's shortest decimal representation), is
     converted ONCE per row to integer cents, and all per-row
     arithmetic is 64-bit integer -- Spark's Decimal multiply always
@@ -288,21 +270,18 @@ def q_fn_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     realistic prices -- INSIDE the 100 TB envelope); summing per-row
     longs as decimal(18,0) is far worse than the baseline (25.24 at
     50x -- per-row long->Decimal boxing into a non-compact buffer).
-    Shipped two-level A/B vs the decimal form (interleaved min-of-2,
-    warm): 1.11 vs 0.77 s at 1x (fixed extra-stage cost; key is not
-    in HEADLINE), 4.55 vs 5.28 at 10x, **11.84 vs 17.22 at 50x
-    (1.45x)** -- the q_agg_stats-swap trade: slower at 1x, the
-    scale-correct shape.  Value-identical at sf0.1 and 10x replicas
-    (all six aggregates, bit-for-bit) and oracle MATCH at sf0.01 +
-    sf0.1 at swap time.
+    Two-level A/B vs all-DecimalType(18,2) arithmetic (interleaved
+    min-of-2, warm): 1.11 vs 0.77 s at 1x (fixed extra-stage cost),
+    4.55 vs 5.28 at 10x, **11.84 vs 17.22 at 50x (1.45x)** -- the
+    q_agg_stats trade: slower at 1x, the scale-correct shape.
 
-    r18 (VERDICT r17 #4): the remaining per-row cost -- the
+    The remaining per-row cost -- the
     double->decimal ingress cast, 5.7x the all-double floor -- now
     takes a guarded fast path (:func:`_cents_expr`: pure double/long
     rounding, with the decimal hop kept for the half-way guard band,
     the overflow region, and NaN; derivation in the block comment
-    above).  Interleaved A/B (min-of-2/3, warm, r18 host): 0.76 ->
-    0.57 s at 1x, 2.79 -> 1.06 at 10x, **9.79 -> 2.34 at 50x (4.2x)**.
+    above).  Interleaved A/B (min-of-2/3, warm): 0.76 -> 0.57 s at 1x,
+    2.79 -> 1.06 at 10x, **9.79 -> 2.34 at 50x (4.2x)**.
     Value-identical to the pure-hop ingress on the corpus, the 10x
     replica, and the extended planted half-way edges
     (test_fn_decimal_cents_equals_decimal_types_reference).
@@ -332,29 +311,6 @@ def q_fn_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def fn_decimal_decimal_types(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-r17 q_fn_decimal, retained module-level as the live equality
-    reference for the integer-cents swap (the fn_json_multiprobe /
-    fn_try_unguarded precedent): all arithmetic on DecimalType(18,2),
-    exact but per-row BigDecimal.  Any corpus divergence from the
-    registered form means the cents ingress is NOT value-faithful to
-    the double->decimal(18,2) cast and the swap must be reverted."""
-    li = load_table(spark, sf_dir, "lineitem")
-    price = F.col("l_extendedprice").cast("decimal(18,2)")
-    disc = F.col("l_discount").cast("decimal(18,2)")
-    one = F.lit(1).cast("decimal(18,2)")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(F.sum(price).alias("__sp"),
-             F.sum(price * (one - disc)).alias("__sr"),
-             F.count(F.lit(1)).alias("n"))
-        .select("l_returnflag",
-                F.col("__sp").cast("double").alias("sum_price"),
-                F.col("__sr").cast("double").alias("sum_revenue"),
-                "n")
-    )
-
-
 # The numeric-shape guard for q_fn_try, as a SQL-literal regex
 # ('\\xNN' reaches Java regex as \xNN).  Pad class = what the ANSI
 # cast's UTF8String.trimAll strips: ASCII controls + space + DEL.
@@ -371,13 +327,10 @@ def q_fn_try(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream query can count/filter, attested row-for-row against the
     oracle's NULLIF/TRY_CAST equivalents.
 
-    r17 in-window swap (banked r15, guard hardened r16, executed in the
-    key's legal window): the previous bare form
-    (:func:`fn_try_unguarded`, retained as the equality reference) ran
-    ``try_cast(o_orderpriority AS INT)`` where the column is
-    "1-URGENT"-style non-numerics, so the ANSI cast's
+    A bare ``try_cast(o_orderpriority AS INT)`` over a column of
+    "1-URGENT"-style non-numerics makes the ANSI cast's
     throw-and-catch -- SparkNumberFormatException message +
-    query-context construction included -- was the STEADY-STATE path
+    query-context construction included -- the STEADY-STATE path
     (~8.7 us/row; 65 s at 50x, the heaviest per-row cost in the
     registry).  The guard makes NULL the computed fast path: a
     numeric-shape rlike admits exactly the strings an ANSI string->int
@@ -392,19 +345,18 @@ def q_fn_try(spark: SparkSession, sf_dir: str) -> DataFrame:
     empirically in r16: NUL/US/DEL-padded numerics parse (a
     ``\\s``-based guard would wrongly reject them) while C1 controls
     (0x85-0x9F) and Unicode spaces (NBSP, EN QUAD, IDEOGRAPHIC) do
-    NOT parse, so the class is exact, not conservative.  Equality is
-    pinned row-for-row against the unguarded form on the corpus AND on
-    a planted edge-case table (control-char pads, whitespace, signs,
-    overflow, decimals, empty, NULL) by tests/test_llm_pipeline.py.
+    NOT parse, so the class is exact, not conservative.  Guarded and
+    bare casts are pinned equal on a planted edge-case table
+    (control-char pads, whitespace, signs, overflow, decimals, empty,
+    NULL) by tests/test_llm_pipeline.py.
 
-    r17 optimization round, measured NO-GUARD verdict: with the rlike
+    Measured NO-GUARD verdict: with the rlike
     guard making NULL the computed fast path, per-row cost is too
     cheap for the narrow-scan exchange to pay for itself --
     :func:`tables.scan_wide` was A/B'd at 0.71 vs 0.92 s (10x) and
     2.31 vs 3.40 s (50x) AGAINST the plain scan and reverted; the
     ``selectExpr`` form (needed so a guard could apply without
-    mutating the shared ``orders`` view) is kept -- expression-
-    identical to the previous SQL text."""
+    mutating the shared ``orders`` view) is kept."""
     orders = load_table(spark, sf_dir, "orders")
     return orders.selectExpr(
         "o_orderkey",
@@ -413,23 +365,6 @@ def q_fn_try(spark: SparkSession, sf_dir: str) -> DataFrame:
         "THEN try_cast(o_orderpriority AS INT) END AS pri_num",
         "try_cast(substring(o_orderpriority, 1, 1) AS INT) AS pri_digit",
     )
-
-
-def fn_try_unguarded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-r17 q_fn_try, retained module-level as the live equality
-    reference for the regexp-guard swap (the fn_json_multiprobe
-    precedent): the bare ``try_cast`` pays a caught JVM
-    NumberFormatException on every non-numeric row -- correct and
-    linear, but exception-as-control-flow is a real 100 TB cost bug
-    (the r15 audit's lesson this swap records)."""
-    register_views(spark, sf_dir, ("orders",))
-    return spark.sql("""
-        SELECT o_orderkey,
-               try_divide(o_totalprice, o_custkey % 5) AS safe_div,
-               try_cast(o_orderpriority AS INT) AS pri_num,
-               try_cast(substring(o_orderpriority, 1, 1) AS INT) AS pri_digit
-        FROM orders
-    """)
 
 
 ORACLES: dict[str, str] = {

@@ -161,9 +161,7 @@ def q_agg_gsets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dispersion + exact interpolated percentiles, in ONE grouped pass
-    (r16 in-window swap; the previous window-sort form is retained as
-    :func:`agg_stats_windowed`, the live equality reference).
+    """Dispersion + exact interpolated percentiles, in ONE grouped pass.
 
     Engines disagree at rounding boundaries when each uses its own
     quantile implementation, so the family invariant is doubles that
@@ -173,16 +171,15 @@ def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the builtin is an ObjectHashAggregate whose partial buffers are
     (value -> count) maps, so the shuffle carries
     distinct-values-per-partition, map-side combine applies, and
-    parallelism follows the scan -- where the windowed form funneled
-    the whole fact table through #groups (THREE) sort partitions, plus
-    a second scan and a join.  Interleaved A/B on replicas: 0.50x at
-    1x (per-row map upkeep costs more than a 3-partition sort of small
-    data), 0.93x at 10x, 1.63x at 50x and diverging -- the windowed
-    form's parallelism ceiling is the structural bug this swap
-    removes.  The scan rides :func:`tables.scan_wide` (r17
-    optimization round): the partial (value -> count) map upkeep fuses
-    into the scan stage, which is ONE task on the one-row-group
-    testdata file."""
+    parallelism follows the scan.  A window-rank form funnels the whole
+    fact table through #groups (THREE) sort partitions, plus a second
+    scan and a join.  Interleaved A/B on replicas, speed of this pass
+    over the window-rank form: 0.50x at 1x (per-row map upkeep costs
+    more than a 3-partition sort of small data), 0.93x at 10x and 1.63x
+    at 50x, diverging.  The scan
+    rides :func:`tables.scan_wide`: the partial (value -> count) map
+    upkeep fuses into the scan stage, which is ONE task on the
+    one-row-group testdata file."""
     li = scan_wide(load_table(spark, sf_dir, "lineitem"),
                    "l_orderkey", "l_linenumber")
     return li.groupBy("l_returnflag").agg(
@@ -191,35 +188,6 @@ def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         rnd(F.percentile("l_extendedprice", F.lit(0.5))).alias("median_price"),
         rnd(F.percentile("l_extendedprice", F.lit(0.9))).alias("p90_price"),
     )
-
-
-def agg_stats_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-r16 q_agg_stats, retained module-level as the live equality
-    reference for the one-pass percentile swap: explicit row_number
-    rank + 1-based lerp interpolation.  Its unrounded percentiles
-    differ from the builtin's by ~1 ulp (different but algebraically
-    equal op order); the 2dp floor-round makes the OUTPUTS equal, and
-    the equality test pins exactly that rounded contract."""
-    li = load_table(spark, sf_dir, "lineitem")
-    ranked = li.select("l_returnflag", F.col("l_extendedprice").alias("v")).withColumn(
-        "rn", F.row_number().over(W.partitionBy("l_returnflag").orderBy("v"))
-    ).withColumn("n", F.count(F.lit(1)).over(W.partitionBy("l_returnflag")))
-
-    def pct(q: str, alias: str):
-        lo = f"CAST(floor({q}*(n-1)+1) AS BIGINT)"
-        frac = f"({q}*(n-1)+1 - floor({q}*(n-1)+1))"
-        v_lo = f"MAX(CASE WHEN rn = {lo} THEN v END)"
-        v_hi = f"MAX(CASE WHEN rn = LEAST({lo}+1, n) THEN v END)"
-        return F.expr(R(f"{v_lo} + MAX({frac}) * ({v_hi} - {v_lo})")).alias(alias)
-
-    pcts = ranked.groupBy("l_returnflag").agg(
-        pct("5e-1", "median_price"), pct("9e-1", "p90_price"))
-    disp = li.groupBy("l_returnflag").agg(
-        rnd(F.stddev_samp("l_extendedprice")).alias("sd_price"),
-        rnd(F.var_samp("l_quantity")).alias("var_qty"),
-    )
-    return disp.join(pcts, "l_returnflag").select(
-        "l_returnflag", "sd_price", "var_qty", "median_price", "p90_price")
 
 
 def _pct_sql_spark_order(q: str, alias: str) -> str:
@@ -241,10 +209,9 @@ def _pct_sql_spark_order(q: str, alias: str) -> str:
     return f"{R(raw)} AS {alias}"
 
 
-# The oracle that rides with the r16 one-pass percentile swap:
-# percentiles in the builtin's op order.  The DISPERSION aggregates
-# deliberately stay on the bare lineitem scan (separate CTE + join,
-# like the pre-swap oracle) rather than the window-sorted ranked CTE:
+# The oracle: percentiles in the builtin's op order.  The DISPERSION
+# aggregates deliberately stay on the bare lineitem scan (separate CTE +
+# join) rather than the window-sorted ranked CTE:
 # DuckDB's stddev/var accumulation is FP-order-sensitive, and feeding
 # it post-window row order would silently shift the unrounded doubles
 # away from the r13-attested values for no benefit (review finding --

@@ -387,40 +387,6 @@ def corpus_prefix_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             scan_wide(corpus_tok_sets(spark, sf_dir), "doc_id"))))
 
 
-def _dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact token-set Jaccard near-dup pairs within a lang block --
-    the all-pairs GROUND TRUTH, retired from the registry in round 12.
-
-    Registered as ``q_dedup_ngram`` through rounds 2-11 (last driver
-    attestation: CORRECTNESS_r10, hash-green).  The pair ENUMERATION is
-    quadratic in block size by construction -- 21 s at 1x, >560 s at
-    10x on the replica corpora -- and its output is byte-identical to
-    ``q_dedup_prefix`` under the SAME oracle SQL
-    (:data:`DEDUP_NGRAM_ORACLE`, kept for the tests), so the registered
-    PPJoin scale path attests the identical answer without the
-    quadratic surface.  The function stays module-private as the
-    ground-truth side of the prefix/minhash/simhash/fuzzy recall tests
-    (tests/test_llm_pipeline.py -- the ``_decontam_naive`` precedent).
-
-    Design notes retained: the self-join carries no broadcast hint
-    (Catalyst's stats pick broadcast at test scale and reverse at
-    corpus scale, VERDICT r6 #1); the lossless PPJoin length-filter
-    residual was tried and MEASURED at parity (21.07 vs 20.78 s at 1x,
-    enumeration-bound, not intersect-bound) and reverted.
-    """
-    t = corpus_tok_sets(spark, sf_dir)
-    a = t.alias("a")
-    b = t.alias("b")
-    j = _jaccard(F.col("a.toks"), F.col("b.toks"), F.col("a.n_toks"), F.col("b.n_toks"))
-    return (
-        a.join(b, (F.col("a.lang") == F.col("b.lang"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"),
-                rnd(j, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
-
-
 def _jaccard_accepts(ta_toks: Column, tb_toks: Column,
                      na: Column, nb: Column) -> Column:
     """The verify acceptance predicate ``rnd(J, 6) >= 0.8`` in EXACT
@@ -697,11 +663,12 @@ def _scoped_build(build_side: DataFrame) -> DataFrame:
 def q_dedup_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact token-set Jaccard near-dup pairs at scale: prefix-filtered
     candidates + exact verification.  Produces BYTE-IDENTICAL results to
-    the all-pairs ground truth ``_dedup_ngram`` (same oracle SQL,
-    registered as q_dedup_ngram until its round-12 retirement) without
-    ever materializing the
-    blocked all-pairs product -- this is the scale path for *exact*
-    dedup, alongside MinHash for the approximate trade."""
+    the blocked all-pairs join its oracle spells out (prefix filtering is
+    lossless) without ever materializing the blocked all-pairs product
+    -- this is the scale path for *exact* dedup, alongside MinHash for
+    the approximate trade.  The all-pairs self-join itself is quadratic
+    in block size by construction (21 s at 1x, >560 s at 10x on the
+    replica corpora)."""
     cands = _prefix_join(corpus_prefix_table(spark, sf_dir))
     return _verify_jaccard(
         cands, corpus_tok_sets(spark, sf_dir).select("doc_id", "toks", "n_toks"))
@@ -876,8 +843,9 @@ def _band_join(exploded: DataFrame) -> DataFrame:
     shared band.  Exactly one band survives per candidate pair (the
     minimum always exists and is unique), so the output is
     duplicate-free BY CONSTRUCTION -- set-identical to the distinct
-    form (:func:`_band_join_distinct`, retained as the equality
-    reference) with zero post-join exchange on the PAIR table.
+    form (:func:`_band_join_distinct`, this key's reference, since
+    ``q_dedup_minhash`` has no oracle) with zero post-join exchange on
+    the PAIR table.
 
     The probe side rides :func:`_pinned_repartition` (rationale and
     both measured hazards documented there) ON ``doc_id``, NOT on the
@@ -946,10 +914,10 @@ def _band_join(exploded: DataFrame) -> DataFrame:
 
 
 def _band_join_distinct(exploded: DataFrame) -> DataFrame:
-    """The pre-r15 once-per-shared-band + DISTINCT band join, retained
-    module-level as the equality reference for the min-band-residual
-    swap (the q_dedup_embed fold-form precedent): both forms must
-    produce the same candidate-pair SET on any input."""
+    """The once-per-shared-band + DISTINCT band join: the reference for
+    :func:`_band_join`'s min-band residual, which must produce the same
+    candidate-pair SET on any input.  ``q_dedup_minhash`` has no oracle,
+    so this form is its only reference."""
     p, q = PRUNE_NUM, PRUNE_DEN
     a = exploded.alias("a")
     b = exploded.alias("b")
@@ -1014,7 +982,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup detection: band-bucket candidates, then exact
     Jaccard verification.  Probabilistic recall -> rows-only check; a
     test asserts candidates are a subset of (and near-complete vs) the
-    exact ``_dedup_ngram`` ground-truth answer.
+    exact answer, ``q_dedup_prefix``'s DuckDB oracle.
 
     Candidates come from the persisted band-table artifact when one is
     current (signature computation is per-corpus work, not per-query
@@ -1037,8 +1005,8 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY.md §2.2's `q_dedup_fuzzy` key: the canonical fuzzy near-dup
     operator is MinHash+LSH with exact-Jaccard verification (probabilistic
-    recall -> rows-only check; ``_dedup_ngram``/`q_dedup_prefix` is the
-    oracle-checked exact ground truth of the same predicate)."""
+    recall -> rows-only check; ``q_dedup_prefix`` is the oracle-checked
+    exact answer of the same predicate)."""
     return q_dedup_minhash(spark, sf_dir)
 
 
@@ -1140,8 +1108,8 @@ def _chunk_join(ex: DataFrame, max_hamming: int = 3) -> DataFrame:
     extra column -- the chunk layout comes from the {bits, n_chunks}
     column metadata :func:`_chunk_table` stamps on ``chunk``.  Output
     rows are identical to the distinct form (:func:`_chunk_join_distinct`,
-    retained as the equality reference): hamming is a function of the
-    pair, and exactly one chunk is the pair's minimum.
+    the reference, since ``q_dedup_simhash`` has no oracle): hamming is
+    a function of the pair, and exactly one chunk is the pair's minimum.
 
     The probe side rides :func:`_pinned_repartition` (rationale and
     both measured hazards documented there) on the JOIN KEYS, unlike
@@ -1191,9 +1159,10 @@ def _chunk_join(ex: DataFrame, max_hamming: int = 3) -> DataFrame:
 
 
 def _chunk_join_distinct(ex: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """The pre-r15 once-per-shared-chunk + DISTINCT chunk join, retained
-    module-level as the equality reference for the min-chunk-residual
-    swap (the _band_join_distinct pattern)."""
+    """The once-per-shared-chunk + DISTINCT chunk join: the reference for
+    :func:`_chunk_join`'s min-chunk residual (the
+    :func:`_band_join_distinct` pattern).  ``q_dedup_simhash`` has no
+    oracle, so this form is its only reference."""
     a = ex.alias("a")
     b = ex.alias("b")
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
@@ -1327,70 +1296,34 @@ SQL_COSINE = """
 """
 
 
-def embed_pairs_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The JVM zip_with/aggregate pair-fold form of the blocked
-    embedding near-dup -- q_dedup_embed's registered implementation
-    through round 13, kept module-level as the equality reference for
-    the vectorized form that replaced it (swap executed in round 14,
-    the r11 cohort's free-swap window).
-
-    The blocked self-join shuffles both sides on ``label`` -- no forced
-    broadcast of the embeddings table (round-2 VERDICT "What's wrong"
-    #2): at 10^9 vectors the block key is the shuffle key and each
-    block's pair space stays partition-local.  Why it was swapped: the
-    r13 embedding-replica sweep measured the per-pair sequential fold
-    at ~12 us/pair -- 121.7 s at 50x (10M in-block pairs), LINEAR but
-    constant-heavy vs 0.65 s for the BLAS matmul form.  The join shape
-    (and its hint-free plan) is still what the no-broadcast plan test
-    pins, and the sequential fold is the bit-exact ground truth the
-    vectorized equality test compares against.
-    """
-    emb = load_table(spark, sf_dir, "embeddings") \
-        .withColumn("nrm", norm_fold(F.col("embedding")))
-    a = emb.alias("a")
-    b = emb.alias("b")
-    cos = dot_fold(F.col("a.embedding"), F.col("b.embedding")) \
-        / (F.col("a.nrm") * F.col("b.nrm"))
-    return (
-        a.join(b, (F.col("a.label") == F.col("b.label"))
-               & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"),
-                F.col("a.label").alias("label"), rnd(cos, 6).alias("cos"))
-        .filter(F.col("cos") >= EMBED_NEARDUP_THRESHOLD)
-    )
-
-
 def q_dedup_embed(spark: SparkSession, sf_dir: str,
                   chunk_doubles: int = 1 << 22) -> DataFrame:
     """Embedding-cosine near-duplicate pairs within a label block
     (IVF-style coarse blocking at scale).
 
-    Registered implementation since round 14: the Arrow-vectorized
-    form (swap executed in the r11 cohort's free-swap window; the
-    sequential-fold join form it replaced stays module-level as
-    :func:`embed_pairs_fold`, the equality reference).  Why: the r13
-    embedding-replica sweep measured the JVM zip_with/aggregate pair
-    fold at ~12 us/pair -- 121.7 s at 50x (10M in-block pairs), LINEAR
-    but constant-heavy vs 0.65 s here.  Each label block becomes one
+    Arrow-vectorized: on the embedding replicas a JVM zip_with/aggregate
+    pair fold over a blocked self-join measured ~12 us/pair -- 121.7 s
+    at 50x (10M in-block pairs), LINEAR but constant-heavy vs 0.65 s
+    here.  Each label block becomes one
     ``applyInPandas`` group and the pair space is one BLAS matmul
     (``X @ X.T``), turning the per-pair fold into a vectorized
     multiply-accumulate.
 
-    Same output contract: pairs (vec_a < vec_b) within a label block
-    with floor-rounded cosine >= the threshold.  The rounding replays
+    Output contract: pairs (vec_a < vec_b) within a label block with
+    floor-rounded cosine >= the threshold.  The rounding replays
     :func:`..util.rnd`'s formula (floor(c*1e6 + 5e-1)/1e6) in numpy;
-    BLAS summation order differs from the sequential fold in the last
-    ulp, which can flip a 6-dp floor only when a cosine sits within
-    ~1e-15 of a rounding boundary (~1e-9 odds per pair -- the
-    q_text_linededup probabilistic-parity class; equality vs the fold
-    form and the DuckDB oracle is pinned empirically at suite SFs).
+    BLAS summation order differs from the oracle's sequential fold in
+    the last ulp, which can flip a 6-dp floor only when a cosine sits
+    within ~1e-15 of a rounding boundary (~1e-9 odds per pair -- the
+    q_text_linededup probabilistic-parity class; equality with the
+    DuckDB oracle is pinned empirically at suite SFs).
 
-    Scale shape: groups shuffle on ``label`` exactly like the join
-    form, but each group must FIT one task (the grouped-map contract),
+    Scale shape: groups shuffle on ``label`` exactly like a blocked
+    self-join, but each group must FIT one task (the grouped-map contract),
     so this form is for IVF-style coarse blocking where block size is
     bounded; the chunked matmul (``chunk_doubles`` caps the scratch
     pair matrix, default 32 MB) bounds the pair-space memory, not the
-    block itself.  For unbounded blocks keep the join form or probe
+    block itself.  For unbounded blocks use a blocked self-join or probe
     IVF cells (:func:`q_sim_ivf`), which bound the block by
     construction.
     """
@@ -1419,7 +1352,7 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str,
             C = np.floor(C * 1e6 + 0.5) / 1e6  # util.rnd, replayed
             ii, jj = np.nonzero(C >= EMBED_NEARDUP_THRESHOLD)
             # ID-based predicate, not index-based (review finding): the
-            # fold form's join condition is a.vec_id < b.vec_id, so two
+            # oracle's join condition is a.vec_id < b.vec_id, so two
             # rows SHARING a vec_id must never pair.  On the sorted ids
             # jj > ii+lo and ids[jj] > ids[ii+lo] agree wherever ids are
             # unique (the corpus contract), but only the id comparison
@@ -1544,7 +1477,7 @@ def _compute_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster assignment: connected components over the exact
-    near-dup pair graph (``_dedup_ngram`` ground-truth edges), giving
+    near-dup pair graph (``q_dedup_prefix``'s edges), giving
     every document
     a canonical ``cluster_id`` = the smallest doc_id in its component.
     Near-dup similarity is NOT transitive, so clusters are genuinely
@@ -1691,8 +1624,7 @@ ORACLES: dict[str, str] = {
           FROM documents
         ) WHERE rn = 1
     """,
-    # Same predicate as the retired all-pairs ground truth
-    # (DEDUP_NGRAM_ORACLE below): the prefix-filtered plan must be
+    # The blocked all-pairs join: the prefix-filtered plan must be
     # value-identical to it (lossless filter).
     "q_dedup_prefix": f"""
         WITH t AS (
@@ -1733,14 +1665,6 @@ ORACLES: dict[str, str] = {
         WHERE {R(SQL_COSINE.format(a='a.embedding', b='b.embedding'), 6)} >= {EMBED_NEARDUP_THRESHOLD}
     """,
 }
-
-# Retired-key oracle (round 12): the DuckDB side of the all-pairs
-# Jaccard ground truth :func:`_dedup_ngram`, kept module-level so the
-# recall/parity tests in tests/test_llm_pipeline.py can keep checking
-# the private form against an exact oracle.  Deliberately byte-equal in
-# intent to ORACLES["q_dedup_prefix"]: the registered PPJoin scale path
-# attests the identical answer.
-DEDUP_NGRAM_ORACLE: str = ORACLES["q_dedup_prefix"]
 
 QUERIES = {
     name: fn for name, fn in list(globals().items())

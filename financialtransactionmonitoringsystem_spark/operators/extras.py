@@ -174,46 +174,16 @@ def q_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def cte_recursive_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The LINEAR month-spine WITH RECURSIVE form -- q_cte_recursive's
-    registered implementation through round 13, kept module-level as
-    the equality reference for the doubling form that replaced it
-    (swap executed in round 14, the r11 cohort's free-swap window).
-
-    Spark executes ONE JOB PER RECURSION STEP, so this form costs ~one
-    scheduler round-trip per month of history (~11s for 80 months at
-    any data size) -- the reason it was the registry's last perf-weak
-    key.  It remains the most literal rendering of the SQL-standard
-    work-table semantics, which is exactly what makes it the right
-    ground truth for the equality test."""
-    register_views(spark, sf_dir, ("orders",))
-    return spark.sql("""
-        WITH RECURSIVE m(mon) AS (
-          SELECT date_trunc('month', (SELECT min(o_orderdate) FROM orders))
-          UNION ALL
-          SELECT mon + INTERVAL '1' MONTH FROM m
-          WHERE mon < date_trunc('month', (SELECT max(o_orderdate) FROM orders))
-        )
-        SELECT date_format(mon, 'yyyy-MM') AS month,
-               COALESCE(o.n, 0) AS n_orders
-        FROM m LEFT JOIN (
-          SELECT date_trunc('month', o_orderdate) AS mo, COUNT(*) AS n
-          FROM orders GROUP BY 1) o ON m.mon = o.mo
-    """)
-
-
 # Branching factor of q_cte_recursive's offset generator.  Spark runs
 # one job per recursion step, so steps -- not rows -- are the cost:
-# depth is ceil(log_B(months)) + 1 (the terminal empty step).  B=2 (the
-# r14 doubling form) paid 7 jobs for 80 months; B=16 pays 3 (one
-# productive step covers 16..255, one more empties), and ~500 months of
-# history still fits in 4.  Rows per step grow by B, but the work table
-# is O(months) metadata rows -- scheduling dominates at any realistic
-# history length.  Interleaved A/B at sf0.1 (min-of-4, warm,
-# OPTIMIZATION_r18.md): B=2 1.34 s, B=8 0.96, B=16 0.79, B=32 0.92
-# (anchor width costs more than the saved step past 16); output
-# byte-identical at every width (the equality test vs
-# cte_recursive_linear pins it, plus the in-session B=2-vs-16 check).
+# depth is ceil(log_B(months)) + 1 (the terminal empty step).  B=2 paid
+# 7 jobs for 80 months; B=16 pays 3 (one productive step covers
+# 16..255, one more empties), and ~500 months of history still fits in
+# 4.  Rows per step grow by B, but the work table is O(months) metadata
+# rows -- scheduling dominates at any realistic history length.
+# Interleaved A/B at sf0.1 (min-of-4, warm, OPTIMIZATION_r18.md): B=2
+# 1.34 s, B=8 0.96, B=16 0.79, B=32 0.92 (anchor width costs more than
+# the saved step past 16); output byte-identical at every width.
 CTE_BRANCH = 16
 
 
@@ -223,26 +193,22 @@ def q_cte_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts -- the recursive-CTE form of the dense-grid resample
     (``q_ts_resample`` builds the same shape with ``sequence()``).
 
-    Registered implementation since round 14: a RECURSIVE base-B
-    offset generator (B = :data:`CTE_BRANCH`; the r14 form was B=2,
-    widened in r18 -- VERDICT r17 #7).  Spark executes one job per
-    recursion step, so the literal linear spine
-    (:func:`cte_recursive_linear`, the registered form through r13,
-    kept as the equality reference) pays ~one scheduler round-trip per
-    month of history.  The wide form keeps the WITH RECURSIVE surface
+    A RECURSIVE base-B offset generator (B = :data:`CTE_BRANCH`).
+    Spark executes one job per recursion step, so the literal linear
+    spine (the DuckDB oracle's form) would pay ~one scheduler
+    round-trip per month of history.  The wide form keeps the WITH RECURSIVE surface
     attestation (anchor + recursive member + work-table semantics) but
     each step emits offsets ``B*j + d`` (d in 0..B-1) from every
     work-table row ``j >= 1`` (anchor {0..B-1}), so every integer in
     [0, n] is produced exactly once -- n >= B has the unique parent
     floor(n/B) >= 1, n < B comes from the anchor alone -- in
     ceil(log_B n) steps: 3 scheduler round-trips for 80 months at B=16
-    instead of ~80 linear / ~7 doubling (r14 warm A/B at sf0.1: 1.79 s
+    instead of ~80 linear / ~7 doubling (warm A/B at sf0.1: 1.79 s
     doubling vs 11.68 s linear; the gap is pure scheduler latency, so
     it is data-size-independent).
     ``sequence()`` (q_ts_resample) remains the non-recursive scale path
-    for spines.  Output byte-identical to the linear form (same DuckDB
-    oracle; equality test at suite SF, swap insurance at sf0.01 +
-    sf0.1 in PLANS), INCLUDING on an empty orders table (review
+    for spines.  Output byte-identical to the linear form (the DuckDB
+    oracle), INCLUDING on an empty orders table (review
     finding): the linear form's anchor always emits one NULL-month
     row, so off=0 must pass the anchor unconditionally -- ``off = 0 OR
     off <= bound`` keeps the one-row output when the bound is NULL,
@@ -287,35 +253,18 @@ def q_win_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE frame on a numeric ordering: count of orders within 5000 of
     each order's price (value-based frame, not row-based).
 
-    Since round 10 the registered plan is the bucketed decomposition
-    (``_win_range_bucketed_core``): the direct RANGE window partitions
-    on ``o_orderstatus`` -- cardinality 3 -- so however large the
-    cluster, the sort+frame sweep runs on THREE tasks (round-9 sweep:
-    38.7 s at 50x vs 2.2 s at 1x, pure parallelism starvation; at
-    100 TB it is three single-task sorts).  The bucketed form is
-    output-identical (pinned vs the retained monolithic reference
-    ``_win_range_monolithic`` at m in {1, 4, 10}, plus planted-edge and
-    brute-force property tests) and 6.9x faster at 50x, with
+    The plan is the bucketed decomposition
+    (``_win_range_bucketed_core``): the direct RANGE window (the DuckDB
+    oracle's form) partitions on ``o_orderstatus`` -- cardinality 3 --
+    so however large the cluster, the sort+frame sweep runs on THREE
+    tasks (sweep: 38.7 s at 50x vs 2.2 s at 1x, pure parallelism
+    starvation; at 100 TB it is three single-task sorts).  The bucketed
+    form is output-identical (pinned vs the oracle at m in {1, 4, 10},
+    plus planted-edge and brute-force property tests) and 6.9x faster
+    at 50x, with
     parallelism = |statuses| x |price range| / bucket width instead of
     |statuses|."""
     return win_range_bucketed(spark, sf_dir)
-
-
-def _win_range_monolithic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The direct RANGE-frame form of :func:`q_win_range`, retained ONLY
-    as the reference side of the bucketed-identity tests (its window
-    partitions on a cardinality-3 key -- parallelism-starved at scale;
-    see q_win_range's docstring).  Never registered."""
-    orders = load_table(spark, sf_dir, "orders")
-    w = (W.partitionBy("o_orderstatus").orderBy("o_totalprice")
-         .rangeBetween(-5000, 0))
-    return orders.select(
-        "o_orderkey", "o_orderstatus", "o_totalprice",
-        F.count(F.lit(1)).over(w).alias("n_within_5000_below"),
-        # SUM of 2-decimal money is exactly recoverable by rounding; AVG is
-        # not (engines differ in frame summation order at the .xx5 boundary)
-        rnd(F.sum("o_totalprice").over(w)).alias("sum_nearby"),
-    )
 
 
 WIN_RANGE_FRAME = 5000.0  # the q_win_range value-frame width

@@ -11,7 +11,7 @@ metrics are narrow projections with no shuffle at all.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..tables import load_table, scan_wide
@@ -280,15 +280,12 @@ def _wordgrams(col, n: int):
     associates), measured 3.3x faster for 2-grams and 1.9x for 5-grams
     at sf0.1.
 
-    Registered consumers after the r17 hashed-key swaps (incl. the
-    decontam swap executed in the r17 optimization round): gram TEXT
-    users only -- q_text_bpe_pairs, whose OUTPUT carries the gram
-    string.  Key-only consumers (q_text_repetition, q_text_novelty,
-    q_align_crosslingual, q_text_decontam) moved to
-    :func:`_hashed_wordgrams`; their string forms survive here only
-    via the retained equality references (repetition_stringgram,
-    _novelty_fps_stringgram, align_stringgram, decontam_stringgram /
-    _decontam_naive) and the swap tests."""
+    Consumers: gram TEXT users only -- q_text_bpe_pairs, whose OUTPUT
+    carries the gram string, and the tests' hash-collision detectors,
+    which count true grams against :func:`_hashed_wordgrams`' keys.
+    Key-only consumers (q_text_repetition, q_text_novelty,
+    q_align_crosslingual, q_text_decontam) use
+    :func:`_hashed_wordgrams`."""
     toks = F.split(col, " ")
     m = F.size(toks) - n + 1
     g = F.slice(toks, 1, m)
@@ -313,7 +310,7 @@ def _hashed_wordgrams(col, n: int) -> F.Column:
     ambiguity); the chained hash is deterministic and
     collision-equivalent to hashing the gram string (~(grams)^2/2^64
     within any compared scope) -- the q_text_linededup / decontam
-    caveat class, asserted zero on the corpora by the swap tests'
+    caveat class, asserted zero on the corpora by the tests'
     distinct-cardinality checks.  Module-level so those tests pin the
     exact expression that ships (the TRY_CAST_INT_SHAPE lesson).  Only
     for key/fingerprint uses -- anything that needs the gram TEXT
@@ -328,48 +325,26 @@ def _hashed_wordgrams(col, n: int) -> F.Column:
     return F.when(m >= 1, g).otherwise(F.array().cast("array<bigint>"))
 
 
-def _repetition_from_grams(docs: DataFrame, grams: DataFrame) -> DataFrame:
-    """Shared tail of the repetition score: per-doc gram counting as
-    explode + two map-side-combinable aggregations keyed by doc -- no
-    corpus-wide state, no join except the left join back to keep
-    gramless (sub-2-token) docs with frac 0."""
-    per = grams.groupBy("doc_id", "gram").agg(F.count(F.lit(1)).alias("c"))
-    agg = per.groupBy("doc_id").agg(F.sum("c").alias("n_grams"),
-                                    F.max("c").alias("top_gram_n"))
-    frac = F.coalesce(F.col("top_gram_n") / F.col("n_grams"), F.lit(0.0))
-    return (
-        docs.select("doc_id").join(agg, "doc_id", "left")
-        .select("doc_id",
-                F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
-                F.coalesce("top_gram_n", F.lit(0)).alias("top_gram_n"),
-                rnd(frac, 4).alias("top_gram_frac"),
-                (frac > REPETITION_FRAC).alias("repetitive"))
-    )
-
-
 def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-document repetition scoring (the Gopher-style repetition
     filter): fraction of a doc's word 2-grams taken by its single most
     frequent 2-gram; high values mean boilerplate/looped text that the
     type-token ratio in ``q_text_quality`` under-penalizes.
 
-    r17 in-window swap (banked r16, executed in the key's legal
-    window): the previous form (:func:`repetition_stringgram`, retained
-    as the equality reference) built every 2-gram as a STRING
-    (zip_with + concat_ws) and shuffled those strings, when the gram is
-    only ever a GROUPING KEY.  This form hashes the token pair inside
-    the zip_with (:func:`_hashed_wordgrams` -- no string is ever
-    built) and shuffles 8-byte longs.  Semantics-preserving up to
-    64-bit collisions WITHIN one document (two distinct grams of the
-    same doc colliding merges their counts) -- the q_text_linededup /
+    The gram is only ever a GROUPING KEY, so it is hashed inside the
+    zip_with (:func:`_hashed_wordgrams` -- no string is ever built) and
+    the shuffle carries 8-byte longs.  Semantics-preserving up to 64-bit
+    collisions WITHIN one document (two distinct grams of the same doc
+    colliding merges their counts) -- the q_text_linededup /
     decontam-n_hits caveat class, ~(grams/doc)^2/2^64 per doc; zero on
-    the generated corpora (the swap test asserts gram-table
-    cardinality equality directly, per ADVICE r16).  Interleaved A/B
-    (r16, warm artifacts, min-of-2): 0.88 vs 1.21 s at 1x, 4.57 vs
-    6.85 at 10x, 24.01 vs 28.03 at 50x (1.17x).  Hashing the BUILT
-    string instead (transform + xxhash64(gram)) was also measured and
-    is WORSE at 50x (30.55 s -- the extra whole-array transform pass
-    costs more than the string shuffle saves); do not re-litigate.
+    the generated corpora (a test asserts gram-table cardinality
+    equality directly).  Interleaved A/B against a form that built and
+    shuffled the gram STRINGS (warm artifacts, min-of-2): 0.88 vs
+    1.21 s at 1x, 4.57 vs 6.85 at 10x, 24.01 vs 28.03 at 50x (1.17x).
+    Hashing the BUILT string instead (transform + xxhash64(gram)) was
+    also measured and is WORSE at 50x (30.55 s -- the extra whole-array
+    transform pass costs more than the string shuffle saves); do not
+    re-litigate.
 
     Measured negative result (round 10, do not re-apply): a zero-shuffle
     in-row rewrite -- array_sort the gram array + a sequential
@@ -387,21 +362,21 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = scan_wide(load_table(spark, sf_dir, "documents"), "doc_id")
     grams = docs.select(
         "doc_id", F.explode(_hashed_wordgrams(F.col("text"), 2)).alias("gram"))
-    return _repetition_from_grams(docs, grams)
-
-
-def repetition_stringgram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-r17 q_text_repetition, retained module-level as the live
-    equality reference for the hashed-gram swap (the
-    fn_json_multiprobe / fn_try_unguarded precedent): builds every
-    2-gram as a string via :func:`_wordgrams` and shuffles the strings.
-    Collision-free by construction, so any corpus divergence from the
-    registered form is a within-doc xxhash64 collision -- exactly what
-    the insurance test detects via gram-table cardinality equality."""
-    docs = scan_wide(load_table(spark, sf_dir, "documents"), "doc_id")
-    grams = docs.select(
-        "doc_id", F.explode(_wordgrams(F.col("text"), 2)).alias("gram"))
-    return _repetition_from_grams(docs, grams)
+    # per-doc gram counting as explode + two map-side-combinable
+    # aggregations keyed by doc -- no corpus-wide state, no join except
+    # the left join back to keep gramless (sub-2-token) docs with frac 0
+    per = grams.groupBy("doc_id", "gram").agg(F.count(F.lit(1)).alias("c"))
+    agg = per.groupBy("doc_id").agg(F.sum("c").alias("n_grams"),
+                                    F.max("c").alias("top_gram_n"))
+    frac = F.coalesce(F.col("top_gram_n") / F.col("n_grams"), F.lit(0.0))
+    return (
+        docs.select("doc_id").join(agg, "doc_id", "left")
+        .select("doc_id",
+                F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
+                F.coalesce("top_gram_n", F.lit(0)).alias("top_gram_n"),
+                rnd(frac, 4).alias("top_gram_frac"),
+                (frac > REPETITION_FRAC).alias("repetitive"))
+    )
 
 
 def q_text_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -421,62 +396,20 @@ def q_text_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the drop-in replacement -- an 8 KB filter plus this same
     FP-tolerant-then-exact-join structure.)
 
-    This broadcast-semi form replaced the round-8-attested plan in
-    round 10: the old plan's ``train.distinct()`` exchanged EVERY
-    distinct corpus gram just to de-duplicate pairs -- the round-9
-    sweep measured it at 30x wall for 50x data, while this form is
-    -49% at 50x and never loses (PLANS.md round-9 sweep).  Row-identity
-    with the old plan is pinned by test_decontam_prefiltered_identical
-    against the retained reference form :func:`_decontam_naive`.
-    Output: contaminated doc ids with hit counts.
+    A plain ``train.distinct()`` would exchange EVERY distinct corpus
+    gram just to de-duplicate pairs -- a sweep measured that plan at 30x
+    wall for 50x data, while this form is -49% at 50x and never loses
+    (PLANS.md round-9 sweep).  Output: contaminated doc ids with hit
+    counts.
 
-    r17 optimization-round swap (banked in-session r17 as
-    ``decontam_hashed_twin``, executed this round -- the driver
-    re-oracles the full registry in an optimization round, which
-    discharges the rotation-window constraint the r19 banking assumed;
-    both the parent and the composed child q_text_decontam_bylang were
-    additionally oracle-MATCHed at sf0.01 + sf0.1 in the swap session
-    per the judge's contract): the gram fingerprint is now the CHAINED
-    token hash (:func:`_decontam_fps` / :func:`_hashed_wordgrams` --
-    no 5-gram string is ever materialized) instead of xxhash64 over
-    the built string (:func:`_decontam_fps_stringgram`, retained as
-    the equality reference via :func:`decontam_stringgram`).
-    Interleaved A/B on replicas (r17, warm artifacts, min-of-2):
-    1.93 vs 1.42 s at 1x, 8.89 vs 6.02 at 10x, 42.89 vs 23.49 at 50x
-    (1.83x and DIVERGING).
+    The gram fingerprint is the CHAINED token hash
+    (:func:`_decontam_fps` / :func:`_hashed_wordgrams` -- no 5-gram
+    string is ever materialized).  Interleaved A/B on replicas against
+    xxhash64 over the built string (warm artifacts, min-of-2): 1.42 vs
+    1.93 s at 1x, 6.02 vs 8.89 at 10x, 23.49 vs 42.89 at 50x (1.83x
+    and DIVERGING).
     """
-    return _decontam_from_fps(spark, sf_dir, _decontam_fps())
-
-
-def _decontam_fps():
-    """The gram-fingerprint identity the decontam family shares (core
-    operator and bylang child -- one definition; no fingerprint is
-    persisted across sessions, so it can evolve freely as long as every
-    consumer routes through here).  Grams shuffle as
-    64-bit fingerprints, not ~40-byte strings; a collision would alias
-    two distinct grams (odds ~|grams|^2 / 2^64, ~1e-8 here) -- the
-    standard n-gram-fingerprint trade.  Since r17 the fingerprint is
-    the chained token hash: four zip_with passes over longs, no gram
-    string ever allocated."""
-    return _hashed_wordgrams(F.col("text"), DECONTAM_NGRAM)
-
-
-def _decontam_fps_stringgram():
-    """Pre-r17 :func:`_decontam_fps`, retained module-level as the live
-    equality reference for the chained-hash swap (the _novelty_fps
-    precedent): builds every 5-gram string via :func:`_wordgrams`,
-    then hashes it in one more whole-array pass."""
-    return F.transform(_wordgrams(F.col("text"), DECONTAM_NGRAM),
-                       lambda g: F.xxhash64(g))
-
-
-def _decontam_from_fps(spark: SparkSession, sf_dir: str,
-                       fps: Column) -> DataFrame:
-    """The broadcast-semi decontam core over a given per-doc gram
-    fingerprint expression (shared by the registered chained-hash form
-    and the string-gram equality reference -- the
-    _align_from_gram_expr factoring the r19 banking note called for,
-    executed at swap time)."""
+    fps = _decontam_fps()
     docs = scan_wide(load_table(spark, sf_dir, "documents"), "doc_id")
     grams = docs.select("doc_id", F.explode(fps).alias("gram"))
     # The bench table feeds BOTH the broadcast gram set and the final
@@ -505,47 +438,17 @@ def _decontam_from_fps(spark: SparkSession, sf_dir: str,
     )
 
 
-def _decontam_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The round-8-attested decontam plan, retained ONLY as the
-    reference side of test_decontam_prefiltered_identical: its
-    ``train.distinct()`` exchanges every distinct corpus gram (30x wall
-    at 50x data in the round-9 sweep), which is why the registered
-    :func:`q_text_decontam` is now the broadcast-semi form.  Never
-    registered; do not use at scale."""
-    docs = load_table(spark, sf_dir, "documents")
-    fps = F.transform(_wordgrams(F.col("text"), DECONTAM_NGRAM),
-                      lambda g: F.xxhash64(g))
-    grams = docs.select("doc_id", F.explode(fps).alias("gram"))
-    bench = (docs.filter(F.col("doc_id") % 50 == 0)
-             .select(F.col("doc_id").alias("bench_id"), F.explode(fps).alias("gram"))
-             .distinct())
-    train = grams.filter(F.col("doc_id") % 50 != 0).distinct()
-    return (
-        train.join(bench, "gram")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_hits"),
-             F.countDistinct("bench_id").alias("n_bench_docs"))
-    )
-
-
-def decontam_stringgram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-r17 q_text_decontam (string-built gram fingerprints),
-    retained module-level as the live equality reference for the
-    chained-hash swap -- the repetition_stringgram / align_stringgram
-    precedent.  Same broadcast-semi core (:func:`_decontam_from_fps`),
-    only the fingerprint differs; the swap-insurance test additionally
-    asserts CORPUS-WIDE distinct-gram cardinality equality across
-    representations, the scope that matters since train and bench
-    grams join ACROSS docs.
-
-    Swap history: banked in-session r17 as ``decontam_hashed_twin``
-    with a planned r19 execution window under the judge's
-    composed-child contract (child q_text_decontam_bylang oracle MATCH
-    at sf0.01 + sf0.1 in the swap session, child re-attestation next
-    window); executed in the r17 optimization round, where the driver
-    re-oracles the full registry and the contract's verification steps
-    were run and recorded in PLANS."""
-    return _decontam_from_fps(spark, sf_dir, _decontam_fps_stringgram())
+def _decontam_fps():
+    """The gram-fingerprint identity the decontam family shares (core
+    operator and bylang child -- one definition; no fingerprint is
+    persisted across sessions, so it can evolve freely as long as every
+    consumer routes through here).  Grams shuffle as
+    64-bit fingerprints, not ~40-byte strings; a collision would alias
+    two distinct grams (odds ~|grams|^2 / 2^64, ~1e-8 here) -- the
+    standard n-gram-fingerprint trade.  The fingerprint is
+    the chained token hash: four zip_with passes over longs, no gram
+    string ever allocated."""
+    return _hashed_wordgrams(F.col("text"), DECONTAM_NGRAM)
 
 
 def q_text_decontam_bylang(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -656,14 +559,10 @@ def q_text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle), so the one corpus-sized exchange shrinks to
     seen-fraction-sized.  Exact output regardless of FPR.
 
-    Registered round 11 (built and verified as ``novelty_twin`` in
-    round 10: MATCH vs ``NOVELTY_ORACLE`` at sf0.001/0.01/0.1 plus
-    planted-fraction tests).  Grams travel as xxhash64 fingerprints --
-    the decontam collision caveat (~1e-8 here) applies to
-    n_grams/n_seen alike.  r17 in-window swap: the fingerprint is now
-    the chained token hash (see :func:`_novelty_fps` for the A/B and
-    the retained string-gram reference) -- 1.31x at 50x, plan
-    otherwise unchanged.
+    Grams travel as 64-bit fingerprints -- the decontam collision
+    caveat (~1e-8 here) applies to n_grams/n_seen alike.  The
+    fingerprint is the chained token hash (see :func:`_novelty_fps` for
+    the A/B).
     """
     return _novelty_core(load_table(spark, sf_dir, "documents"))
 
@@ -675,30 +574,15 @@ def _novelty_fps():
     so the definition can evolve freely as long as every consumer goes
     through this one function).
 
-    r17 in-window swap (q_text_novelty is r14-attested): fingerprints
-    are now the CHAINED token hash (:func:`_hashed_wordgrams` -- no
-    5-gram string is ever materialized) instead of xxhash64 over the
-    built gram string (:func:`_novelty_fps_stringgram`, retained as
-    the equality reference).  The operator was ALREADY
-    fingerprint-based -- n_grams/n_seen count hashes, with the
-    documented ~(grams)^2/2^64 collision caveat -- so which hash
-    function produces the fingerprint is invisible to the output
-    absent collisions (zero on the corpora, asserted directly by the
-    swap test's distinct-cardinality check).  Interleaved A/B on
-    replicas (r17, warm artifacts, min-of-2): 1.00 vs 0.97 s at 1x,
-    2.05 vs 1.49 at 10x, 5.55 vs 4.24 at 50x (1.31x)."""
+    Fingerprints are the CHAINED token hash (:func:`_hashed_wordgrams`
+    -- no 5-gram string is ever materialized).  n_grams/n_seen count
+    hashes, with the documented ~(grams)^2/2^64 collision caveat (zero
+    on the corpora, asserted directly by a test's distinct-cardinality
+    check).  Interleaved A/B on replicas against xxhash64 over the
+    built gram string (warm artifacts, min-of-2): 0.97 vs 1.00 s at
+    1x, 1.49 vs 2.05 at 10x, 4.24 vs 5.55 at 50x (1.31x)."""
     return F.array_distinct(
         _hashed_wordgrams(F.col("text"), DECONTAM_NGRAM))
-
-
-def _novelty_fps_stringgram():
-    """Pre-r17 _novelty_fps, retained module-level as the live equality
-    reference for the chained-hash swap (the fn_json_multiprobe /
-    repetition_stringgram precedent): builds every 5-gram string via
-    :func:`_wordgrams`, then hashes it in one more whole-array pass."""
-    return F.array_distinct(
-        F.transform(_wordgrams(F.col("text"), DECONTAM_NGRAM),
-                    lambda g: F.xxhash64(g)))
 
 
 def _novelty_ref_grams(ref_docs: DataFrame) -> DataFrame:
@@ -819,7 +703,7 @@ def q_align_crosslingual(spark: SparkSession, sf_dir: str) -> DataFrame:
     are capped at ALIGN_DF_MAX regardless of corpus size, so pair
     volume is O(|rare grams| x 15), not O(n^2).
 
-    Materialization (r17 optimization round): the df band is a WINDOW
+    Materialization: the df band is a WINDOW
     COUNT over the single exploded gram stream, so the gram table has
     ONE consumer and nothing corpus-sized is ever materialized -- only
     the TINY banded posting table (<= ALIGN_DF_MAX rows per rare gram)
@@ -829,59 +713,31 @@ def q_align_crosslingual(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers, the df aggregate and the band join); measured 1.87 ->
     1.07 s at sf0.1 vs the checkpointed df-join form, row-identical.
 
-    r17 in-window swap: grams travel as CHAINED-TOKEN-HASH longs
-    (:func:`_hashed_wordgrams` -- no 8-gram string is ever built;
-    the previous string-gram form is retained as
-    :func:`align_stringgram`, the equality reference).  The gram is
-    key-only here (df aggregate + band self-join), so the change is
-    semantics-preserving up to corpus-level 64-bit collisions (two
-    distinct grams anywhere aliasing merges their df and could
-    fabricate/shift a pair) -- the q_text_linededup caveat class,
-    ~|grams|^2/2^64, zero on the corpora (the swap test asserts
+    Grams travel as CHAINED-TOKEN-HASH longs (:func:`_hashed_wordgrams`
+    -- no 8-gram string is ever built).  The gram is key-only here (df
+    aggregate + band self-join), so this is exact up to corpus-level
+    64-bit collisions (two distinct grams anywhere aliasing merges their
+    df and could fabricate/shift a pair) -- the q_text_linededup caveat
+    class, ~|grams|^2/2^64, zero on the corpora (a test asserts
     corpus-wide distinct-gram cardinality equality directly).
-    Interleaved A/B (r17, min-of-2, both arms paying fresh scoped
-    builds): 2.61 vs 1.89 s at 1x, 21.80 vs 11.64 at 10x, 85.56 vs
-    46.65 at 50x (1.83x) -- 8-gram string construction was the
-    single biggest cost in the build, and the gram checkpoint
-    shrinks to 8-byte keys."""
-    docs = load_table(spark, sf_dir, "documents")
-    return _align_from_gram_expr(
-        spark, docs, _hashed_wordgrams(F.col("text"), ALIGN_NGRAM))
+    Interleaved A/B against 8-gram strings (min-of-2, both arms paying
+    fresh scoped builds): 1.89 vs 2.61 s at 1x, 11.64 vs 21.80 at 10x,
+    46.65 vs 85.56 at 50x (1.83x) -- 8-gram string construction was
+    the single biggest cost in the build, and the gram checkpoint
+    shrinks to 8-byte keys.
 
-
-def align_stringgram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-r17 q_align_crosslingual, retained module-level as the live
-    equality reference for the hashed-gram swap (the
-    repetition_stringgram precedent): explodes 8-gram STRINGS into the
-    df aggregate and band self-join.  Collision-free by construction,
-    so any corpus divergence from the registered form is a
-    corpus-level hash collision."""
-    docs = load_table(spark, sf_dir, "documents")
-    return _align_from_gram_expr(
-        spark, docs, _wordgrams(F.col("text"), ALIGN_NGRAM))
-
-
-def _align_from_gram_expr(spark: SparkSession, docs: DataFrame,
-                          gram_expr) -> DataFrame:
-    """Shared body of the alignment query over any per-doc gram-array
-    expression (string grams or hashed keys): distinct grams per doc,
-    df band via a WINDOW COUNT over the exploded gram stream
-    (r17 optimization round -- one consumer of the gram stream, so
-    nothing corpus-sized is materialized; see
-    :func:`q_align_crosslingual`), bounded self-join, (doc_a, doc_b)
-    rollup.
-
-    The docs scan rides :func:`tables.scan_wide` keyed by
-    doc_id: the sf-scale documents parquet is a single split (one row
-    group), so without the pin the gram hashing of the whole corpus
-    runs as ONE task (measured 0.65 s single-task at sf0.1); at real
-    input widths the guard sees >= width splits and skips the
-    exchange."""
+    The docs scan rides :func:`tables.scan_wide` keyed by doc_id: the
+    sf-scale documents parquet is a single split (one row group), so
+    without the pin the gram hashing of the whole corpus runs as ONE
+    task (measured 0.65 s single-task at sf0.1); at real input widths
+    the guard sees >= width splits and skips the exchange."""
     from .dedup import _scoped_build
 
+    docs = load_table(spark, sf_dir, "documents")
     g = scan_wide(docs, "doc_id").select(
         "doc_id", "lang",
-        F.explode(F.array_distinct(gram_expr)).alias("gram"))
+        F.explode(F.array_distinct(
+            _hashed_wordgrams(F.col("text"), ALIGN_NGRAM))).alias("gram"))
     post = _scoped_build(
         g.withColumn("df", F.count(F.lit(1)).over(W.partitionBy("gram")))
         .filter(F.col("df").between(ALIGN_DF_MIN, ALIGN_DF_MAX))

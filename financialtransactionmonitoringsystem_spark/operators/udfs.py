@@ -1,18 +1,17 @@
-"""The user-extension surface: Arrow-vectorized UDAF (grouped-agg
-``pandas_udf``) and UDTF-style grouped-map (``applyInPandas``).
+"""The user-extension surface: an Arrow-vectorized UDAF (grouped-agg
+``pandas_udf``), and the UDTF-shaped per-user gap statistics, which
+run on built-ins.
 
 The reference has no extension mechanism at all (204 LoC of hard-coded
 handlers); SURVEY.md §2.2 commits this engine to the standard PySpark
 surface instead.  ``mapInPandas`` (multimodal.py) is attested
 elsewhere; ``q_udaf_centsum`` attests the grouped-agg pandas UDF with
-a registry key + oracle, and the grouped-map surface is attested by
-:func:`udtf_gaps_pandas` (the r17 pre-swap q_udtf_gaps, test-pinned
-row-identical to the registered JVM form) plus the registered
-``q_dedup_embed`` (operators/dedup.py), whose chunked-BLAS grouped
-map is a computation a built-in genuinely cannot express.
+a registry key + oracle.  Only the registered ``q_dedup_embed``
+(operators/dedup.py) covers the grouped-map surface: its chunked-BLAS
+grouped map is a computation a built-in genuinely cannot express.
 
-Both deliberately compute in EXACT INTEGER units (micro-cents /
-microseconds) inside the Python worker: integer addition is associative,
+``q_udaf_centsum`` deliberately computes in EXACT INTEGER units
+(micro-cents) inside the Python worker: integer addition is associative,
 so the result is bit-identical whatever partitioning or batch order
 Arrow delivers -- the same determinism trick as q_text_perplexity's
 micro-nat NLLs.  A float UDAF would be partition-order-dependent and
@@ -27,8 +26,8 @@ Spark can plan it (it cannot for arbitrary Python -- the whole group's
 column ships to the worker); that is the documented cost of dropping
 out of Catalyst, and why ``q_udaf_centsum``'s built-in twin is the
 production form.  ``applyInPandas`` shuffles each group to one task --
-fine for per-user groups (bounded), the wrong tool for corpus-sized
-groups.
+fine for bounded groups (``q_dedup_embed``'s label blocks), the wrong
+tool for corpus-sized groups.
 """
 
 # NO `from __future__ import annotations` here: postponed evaluation
@@ -39,10 +38,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..tables import load_table
-
-GAP_SCHEMA = ("user_id bigint, n_events bigint, max_gap_us bigint, "
-              "p50_gap_us double")
-
 
 def q_udaf_centsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-type money totals via a grouped-agg pandas UDF summing
@@ -76,26 +71,22 @@ def q_udtf_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user inter-event-gap statistics: lag window + one-pass
     aggregate, all JVM codegen.
 
-    r17 optimization-round swap (guide §4: eliminate the Python
-    boundary where a built-in exists): the previous registered form
-    (:func:`udtf_gaps_pandas`, retained as the live equality
-    reference) shipped the ENTIRE events table through Arrow to a
-    grouped-map pandas worker -- a FlatMapGroupsInPandas over
-    corpus-sized input for what is a lag + max/percentile.  This form
-    computes the same gaps with ``F.lag`` over (user_id | ts_us,
-    event_id) and aggregates with built-in ``max`` +
+    No Python boundary where a built-in exists: a grouped-map pandas
+    form ships the ENTIRE events table through Arrow -- a
+    FlatMapGroupsInPandas over corpus-sized input for what is a lag +
+    max/percentile.  This form computes the gaps with ``F.lag`` over
+    (user_id | ts_us, event_id) and aggregates with built-in ``max`` +
     exact ``percentile(gap, 0.5)``; the window's hash exchange on
-    user_id is reused by the groupBy (one Exchange total, same as
-    before -- the win is removing the Arrow round-trip and Python
-    eval, not a shuffle).  A/B at sf0.1 (interleaved min-of-2, warm):
-    3.73 s -> 0.44 s (8.5x); row-identical to the pandas reference at
-    sf0.001/0.01/0.1 (exceptAll both ways = 0).
+    user_id is reused by the groupBy (one Exchange total, the same as
+    the grouped map -- the win is removing the Arrow round-trip and
+    Python eval, not a shuffle).  A/B at sf0.1 (interleaved min-of-2,
+    warm): 0.44 s vs 3.73 s for the pandas form (8.5x).
 
     Exactness: gaps are integer microseconds; ``percentile`` at 0.5
     interpolates the two middle integers as doubles, which is exact
     for any |gap| < 2^52 (corpus gaps are < 2^40), so the result is
-    bit-identical to numpy's median and to the DuckDB oracle's
-    ``median`` whatever the op order.  Single-event users aggregate
+    bit-identical to the DuckDB oracle's ``median`` whatever the op
+    order.  Single-event users aggregate
     all-NULL gaps to NULL stats, mirroring the oracle's left join.
     """
     ev = load_table(spark, sf_dir, "events").select(
@@ -109,34 +100,6 @@ def q_udtf_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
              F.max("gap").alias("max_gap_us"),
              F.percentile("gap", F.lit(0.5)).alias("p50_gap_us"))
     )
-
-
-def udtf_gaps_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-r17 q_udtf_gaps, retained module-level as the live equality
-    reference for the JVM swap (the fn_try_unguarded /
-    repetition_stringgram precedent) AND as the grouped-map
-    ``applyInPandas`` surface attestation this module documents: each
-    user's ordered timeline ships to one pandas worker, which emits
-    one row of exact-integer gap stats.  Correct and deterministic;
-    the registered form exists because corpus-sized input should not
-    cross the Arrow boundary for a lag + aggregate (guide §4)."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", F.unix_micros("ts").alias("ts_us"), "event_id")
-
-    def gap_stats(pdf):
-        import numpy as np
-        import pandas as pd
-
-        pdf = pdf.sort_values(["ts_us", "event_id"])
-        gaps = np.diff(pdf["ts_us"].to_numpy())
-        return pd.DataFrame({
-            "user_id": [pdf["user_id"].iloc[0]],
-            "n_events": [len(pdf)],
-            "max_gap_us": [None if gaps.size == 0 else int(gaps.max())],
-            "p50_gap_us": [None if gaps.size == 0 else float(np.median(gaps))],
-        })
-
-    return ev.groupBy("user_id").applyInPandas(gap_stats, GAP_SCHEMA)
 
 
 ORACLES: dict[str, str] = {

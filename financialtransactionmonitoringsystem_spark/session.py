@@ -84,7 +84,7 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     q_curate_mixture, a zero-norm embedding in the cosine family)
     would surface as a loud Spark-side error, never a silent value
     mismatch.  Flipping ANSI off to chase NULL-parity would relax
-    semantics for all 147 attested keys at once; if an edge ever
+    semantics for every attested key at once; if an edge ever
     becomes reachable, guard that one site with ``try_divide``/
     ``F.when`` instead (the q_fn_try surface exists for exactly this).
     """

@@ -65,3 +65,21 @@ def assert_frames_match(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, key: st
     d_rows = normalize(duck_pdf)
     mism = [(i, a, b) for i, (a, b) in enumerate(zip(s_rows, d_rows)) if a != b]
     assert not mism, f"{key}: {len(mism)} mismatched rows; first 3: {mism[:3]}"
+
+
+def duck_over(d: str, *tables: str):
+    """A DuckDB connection with one view per planted table under ``d``
+    (``<d>/<table>.parquet``, a single file or a Spark-written directory
+    of part files), in UTC like the suite's ``duck`` fixture."""
+    import os
+
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("SET TimeZone='UTC'")
+    for t in tables:
+        path = f"{d}/{t}.parquet"
+        if os.path.isdir(path):
+            path = f"{path}/*.parquet"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con

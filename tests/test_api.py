@@ -68,6 +68,18 @@ def test_absent_or_empty_store_reads_empty(spark, store):
     assert store.list_all().collect() == []
 
 
+def test_empty_append_writes_nothing(spark, store, tx_rows):
+    """``append([])`` stores nothing: an absent store stays absent, and
+    a live one keeps its part files and its next ``ingest_seq``."""
+    assert store.append([]).count() == 0
+    assert not os.path.exists(store.path)
+    store.append(tx_rows[:3])
+    parts = part_files(store.path)
+    assert store.append([]).count() == 0
+    assert part_files(store.path) == parts
+    assert [r.ingest_seq for r in store.append(tx_rows[3:4]).collect()] == [3]
+
+
 def test_concurrent_appends_keep_every_row_once(spark, store):
     """Appends racing on one store path from several threads, each
     through its own ``TransactionStore``, all return and leave each

@@ -13,6 +13,14 @@ from financialtransactionmonitoringsystem_spark.operators import (
     dedup, multimodal, similarity, text)
 
 
+def _exact_pairs(duck):
+    """The exact lang-blocked Jaccard near-dup pairs
+    ``(doc_a, doc_b, jaccard)``: ``q_dedup_prefix``'s DuckDB oracle,
+    the blocked all-pairs join."""
+    return list(duck.execute(dedup.ORACLES["q_dedup_prefix"]).df()
+                .itertuples(index=False))
+
+
 def test_fingerprint_collides_on_planted_near_dups(spark, sf_dir):
     """The corpus plants token-set-identical docs; the order-insensitive
     fingerprint must collide exactly for those."""
@@ -22,9 +30,8 @@ def test_fingerprint_collides_on_planted_near_dups(spark, sf_dir):
     assert dup_groups > 0
 
 
-def test_minhash_candidates_subset_of_exact(spark, sf_dir):
-    exact = {(r.doc_a, r.doc_b)
-             for r in dedup._dedup_ngram(spark, sf_dir).collect()}
+def test_minhash_candidates_subset_of_exact(spark, duck, sf_dir):
+    exact = {(r.doc_a, r.doc_b) for r in _exact_pairs(duck)}
     mh = {(r.doc_a, r.doc_b)
           for r in dedup.q_dedup_minhash(spark, sf_dir).collect()}
     assert mh <= exact                 # verification step guarantees precision
@@ -178,17 +185,17 @@ def test_chunk_join_rejects_metadata_free_table(spark):
         dedup._chunk_join(tbl)
 
 
-def test_simhash_finds_near_dups(spark, sf_dir):
+def test_simhash_finds_near_dups(spark, duck, sf_dir):
     pairs = dedup.q_dedup_simhash(spark, sf_dir)
     got = {(r.doc_a, r.doc_b) for r in pairs.collect()}
-    exact = {(r.doc_a, r.doc_b)
-             for r in dedup._dedup_ngram(spark, sf_dir).collect()}
+    exact = {(r.doc_a, r.doc_b) for r in _exact_pairs(duck)}
     # token-set-identical docs have identical simhash -> hamming 0
     assert got & exact
 
 
 @pytest.mark.parametrize("bits,chunks", [(48, 4), (64, 6)])
-def test_simhash_widths_catch_planted_identicals(spark, sf_dir, bits, chunks):
+def test_simhash_widths_catch_planted_identicals(spark, duck, sf_dir, bits,
+                                                chunks):
     """VERDICT r4 #8: both signature widths must honor the pigeonhole
     recall guarantee.  Token-set-identical pairs (jaccard == 1.0 in the
     exact ground truth) have Hamming distance 0 at ANY width, so every
@@ -198,7 +205,7 @@ def test_simhash_widths_catch_planted_identicals(spark, sf_dir, bits, chunks):
     docs = load_table(spark, sf_dir, "documents")
     got = {(r.doc_a, r.doc_b)
            for r in dedup.simhash_pairs(docs, bits, chunks).collect()}
-    exact = dedup._dedup_ngram(spark, sf_dir).collect()
+    exact = _exact_pairs(duck)
     identical = {(r.doc_a, r.doc_b) for r in exact if r.jaccard == 1.0}
     assert identical, "corpus should contain token-set-identical pairs"
     assert identical <= got, f"width {bits}/{chunks} missed hamming-0 pairs"
@@ -306,16 +313,6 @@ def test_dedup_queries_leave_no_dataframe_cache(spark, sf_dir):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def test_prefix_join_equals_all_pairs_ground_truth(spark, sf_dir):
-    """Prefix filtering is lossless: the equi-join plan must return
-    byte-identical pairs to the blocked all-pairs form."""
-    exact = {(r.doc_a, r.doc_b, r.jaccard)
-             for r in dedup._dedup_ngram(spark, sf_dir).collect()}
-    pref = {(r.doc_a, r.doc_b, r.jaccard)
-            for r in dedup.q_dedup_prefix(spark, sf_dir).collect()}
-    assert exact and pref == exact
-
-
 def test_connected_components_transitive_chain(spark):
     """A chain 1-2, 2-3, 3-4 is ONE component even though 1 and 4 share
     no edge (near-dup similarity is not transitive; clustering must be)."""
@@ -325,7 +322,8 @@ def test_connected_components_transitive_chain(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
-def test_dedup_cluster_covers_all_docs_and_respects_pairs(spark, sf_dir):
+def test_dedup_cluster_covers_all_docs_and_respects_pairs(spark, duck,
+                                                          sf_dir):
     """Every doc gets a cluster id; any near-dup pair shares one; a
     cluster's id is its smallest member."""
     clusters = dedup.q_dedup_cluster(spark, sf_dir)
@@ -333,7 +331,7 @@ def test_dedup_cluster_covers_all_docs_and_respects_pairs(spark, sf_dir):
     rows = clusters.collect()
     assert len(rows) == docs_n
     cid = {r.doc_id: r.cluster_id for r in rows}
-    pairs = dedup._dedup_ngram(spark, sf_dir).collect()
+    pairs = _exact_pairs(duck)
     assert pairs, "corpus should contain near-duplicate pairs"
     for p in pairs:
         assert cid[p.doc_a] == cid[p.doc_b]
@@ -1223,7 +1221,7 @@ def test_perplexity_matches_python_reference(spark, sf_dir):
     assert got == want and got
 
 
-def test_dedup_incremental_matches_allpairs_truth(spark, sf_dir):
+def test_dedup_incremental_matches_allpairs_truth(spark, duck, sf_dir):
     """The incremental gate must equal the ground truth: a delta doc is
     rejected iff some CORPUS doc pairs with it in the all-pairs
     lang-blocked Jaccard join (within-delta pairs are explicitly not
@@ -1238,7 +1236,7 @@ def test_dedup_incremental_matches_allpairs_truth(spark, sf_dir):
                 dedup.q_dedup_incremental(spark, sf_dir).collect()}
     assert admitted <= delta_ids
     rejected_truth = set()
-    for r in dedup._dedup_ngram(spark, sf_dir).collect():
+    for r in _exact_pairs(duck):
         ina, inb = r.doc_a in delta_ids, r.doc_b in delta_ids
         if ina and not inb:
             rejected_truth.add(r.doc_a)
@@ -1361,20 +1359,6 @@ def test_checkpoint_backed_queries_are_run_to_run_deterministic(spark, sf_dir):
         a = sorted(map(tuple, fn(spark, sf_dir).collect()))
         b = sorted(map(tuple, fn(spark, sf_dir).collect()))
         assert a == b and a, fn.__name__
-
-
-def test_decontam_prefiltered_identical(spark, sf_dir):
-    """Round-9 scale path, registered as q_text_decontam in round 10
-    (sweep finding: the old plan distinct-shuffles EVERY corpus gram,
-    30x wall at 50x data): the broadcast-semi-prefiltered form must be
-    row-identical to the retained naive reference -- the semi join on
-    the benchmark gram set drops no pair that could reach the final
-    inner join, because that join's key IS membership in the same
-    set."""
-    base = sorted(map(tuple, text._decontam_naive(spark, sf_dir).collect()))
-    got = sorted(map(tuple,
-                     text.q_text_decontam(spark, sf_dir).collect()))
-    assert got == base and got
 
 
 def test_decontam_bylang_oracle_parity(spark, duck, sf_dir):
@@ -1526,41 +1510,18 @@ def test_corpus_contract_text_never_null(spark, sf_dir):
     assert docs.select("doc_id").distinct().count() == docs.count()
 
 
-def test_dedup_ngram_private_form_oracle_parity(spark, duck, sf_dir):
-    """The all-pairs Jaccard ground truth was RETIRED from the registry
-    in round 12 (quadratic enumeration; judge-approved two-step swap)
-    but survives module-private as the recall baseline for the
-    minhash/simhash/fuzzy/prefix tests above.  The driver no longer
-    attests it, so this test does: exact rows vs DEDUP_NGRAM_ORACLE
-    (deliberately the same SQL as the registered q_dedup_prefix key --
-    the lossless-filter equivalence both keys always shared)."""
-    from tests.compare import assert_frames_match
-
-    assert_frames_match(dedup._dedup_ngram(spark, sf_dir).toPandas(),
-                        duck.execute(dedup.DEDUP_NGRAM_ORACLE).df(),
-                        "_dedup_ngram[private]")
-    assert dedup.DEDUP_NGRAM_ORACLE == dedup.ORACLES["q_dedup_prefix"]
-
-
-def test_embed_pairs_vectorized_matches_fold_form_and_oracle(spark, duck,
-                                                             sf_dir):
+def test_embed_pairs_vectorized_matches_oracle(spark, duck, sf_dir):
     """The registered q_dedup_embed (Arrow grouped-map + BLAS matmul
-    per label block since the r14 swap) must produce EXACTLY the
-    sequential-fold join form's rows (embed_pairs_fold, the pre-r14
-    implementation kept as the equality reference) -- and match the
-    same DuckDB oracle -- at the suite SF.  Also exercises the chunked-matmul path with a scratch
-    budget small enough to force multiple chunks per block, which must
-    not change a single pair (the chunk boundary is the bug surface:
-    an off-by-one drops or duplicates the pairs whose vec_a sits at a
-    chunk edge)."""
+    per label block) must match its DuckDB oracle at the suite SF on
+    the chunked-matmul path too: a scratch budget small enough to force
+    multiple chunks per block must not change a single pair (the chunk
+    boundary is the bug surface: an off-by-one drops or duplicates the
+    pairs whose vec_a sits at a chunk edge).  The default path is
+    test_oracle_parity[q_dedup_embed]."""
     from tests.compare import assert_frames_match
 
-    fold = dedup.embed_pairs_fold(spark, sf_dir).toPandas()
-    vec = dedup.q_dedup_embed(spark, sf_dir).toPandas()
-    assert_frames_match(vec, fold, "q_dedup_embed(vectorized) vs fold")
-    assert_frames_match(vec, duck.execute(dedup.ORACLES["q_dedup_embed"]).df(),
-                        "q_dedup_embed(vectorized) vs oracle")
-    assert len(vec) > 0  # the corpus has in-block near-dups to find
+    oracle = duck.execute(dedup.ORACLES["q_dedup_embed"]).df()
+    assert len(oracle) > 0  # the corpus has in-block near-dups to find
     # chunked path: budget of N doubles over blocks of ~N/4 rows forces
     # ceil((n-1)/chunk) >= 2 chunks in every populated block
     from financialtransactionmonitoringsystem_spark.tables import load_table
@@ -1569,14 +1530,14 @@ def test_embed_pairs_vectorized_matches_fold_form_and_oracle(spark, duck,
     chunked = dedup.q_dedup_embed(
         spark, sf_dir, chunk_doubles=max(1, max_block // 2) * max_block
     ).toPandas()
-    assert_frames_match(chunked, fold, "q_dedup_embed(vectorized) chunked")
+    assert_frames_match(chunked, oracle, "q_dedup_embed(vectorized) chunked")
 
 
-def test_embed_pairs_duplicate_vec_id_matches_fold_form(spark):
-    """The fold form's join predicate is a.vec_id < b.vec_id, so two
-    rows SHARING a vec_id never pair -- and the vectorized form's
-    numpy predicate must be ID-based, not row-index-based, to agree on
-    such input (review finding: jj > ii+lo would emit a vec_a == vec_b
+def test_embed_pairs_duplicate_vec_id_matches_oracle(spark):
+    """The oracle's join predicate is a.vec_id < b.vec_id, so two rows
+    SHARING a vec_id never pair -- and the vectorized form's numpy
+    predicate must be ID-based, not row-index-based, to agree on such
+    input (review finding: jj > ii+lo would emit a vec_a == vec_b
     self-pair for duplicate ids).  Planted block: two rows with vec_id
     10 (near-dups of each other -- excluded by BOTH forms) and one
     vec_id 20 near-dup of both 10-rows, which must pair with EACH of
@@ -1584,7 +1545,7 @@ def test_embed_pairs_duplicate_vec_id_matches_fold_form(spark):
     import shutil
     import tempfile
 
-    from tests.compare import assert_frames_match
+    from tests.compare import assert_frames_match, duck_over
 
     rows = [(10, [1.0, 0.0, 0.0, 0.0], 1),
             (10, [0.98, 0.2, 0.0, 0.0], 1),
@@ -1595,14 +1556,15 @@ def test_embed_pairs_duplicate_vec_id_matches_fold_form(spark):
         (spark.createDataFrame(
             rows, "vec_id long, embedding array<float>, label int")
          .write.parquet(f"{tmp}/embeddings.parquet"))
-        fold = dedup.embed_pairs_fold(spark, tmp).toPandas()
+        oracle = duck_over(tmp, "embeddings").execute(
+            dedup.ORACLES["q_dedup_embed"]).df()
         vec = dedup.q_dedup_embed(spark, tmp).toPandas()
-        assert_frames_match(vec, fold, "dup-vec_id vectorized vs fold")
+        assert_frames_match(vec, oracle, "dup-vec_id vectorized vs oracle")
         assert sorted(zip(vec.vec_a, vec.vec_b)) == [(10, 20), (10, 20)]
         # forced multi-chunk path over the 3-row id-sorted block
         chunked = dedup.q_dedup_embed(spark, tmp,
                                       chunk_doubles=4).toPandas()
-        assert_frames_match(chunked, fold, "dup-vec_id chunked")
+        assert_frames_match(chunked, oracle, "dup-vec_id chunked")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1683,15 +1645,14 @@ def test_corpus_contract_doubles_all_finite(spark, sf_dir):
             assert bad == 0, (t, c)
 
 
-def test_fn_try_guarded_equals_unguarded_reference(spark, sf_dir):
-    """r17 swap EXECUTED (banked r15, hardened r16): the registered
-    q_fn_try is now the regexp-guarded form; it must stay row-identical
-    to the retained unguarded reference on the corpus, AND on a planted
-    table of every string shape where an ANSI string->int try_cast and
-    a numeric-shape rlike could plausibly disagree (control-char pads,
-    whitespace, signs, overflow past int range, decimals, empty, NULL,
-    embedded text).  Any disagreement here means the guard is NOT a
-    faithful fast path and the swap must be reverted.
+def test_fn_try_guarded_equals_unguarded_reference(spark):
+    """The registered q_fn_try is the regexp-guarded form; the guarded
+    cast must equal the bare try_cast on a planted table of every string
+    shape where an ANSI string->int try_cast and a numeric-shape rlike
+    could plausibly disagree (control-char pads, whitespace, signs,
+    overflow past int range, decimals, empty, NULL, embedded text).
+    Any disagreement here means the guard is NOT a faithful fast path.
+    The corpus rows are test_oracle_parity[q_fn_try].
 
     The guard pattern is imported from the implementation
     (scalar.TRY_CAST_INT_SHAPE) so this test pins what ships.  The
@@ -1699,10 +1660,6 @@ def test_fn_try_guarded_equals_unguarded_reference(spark, sf_dir):
     cast strips [\\x00-\\x20\\x7F] (NUL/US/DEL-padded numerics PARSE)
     but not C1 controls or Unicode spaces (those are NULL both ways)."""
     from financialtransactionmonitoringsystem_spark.functions import scalar
-
-    reg = {tuple(r) for r in scalar.q_fn_try(spark, sf_dir).collect()}
-    ref = {tuple(r) for r in scalar.fn_try_unguarded(spark, sf_dir).collect()}
-    assert reg == ref and reg
 
     nasty = ["1-URGENT", "42", " 42 ", "+7", "-7", " -0 ", "2147483647",
              "2147483648", "-2147483649", "99999999999999999999",
@@ -1735,26 +1692,19 @@ def test_fn_try_guarded_equals_unguarded_reference(spark, sf_dir):
 
 
 def test_repetition_hashed_equals_stringgram_reference(spark, sf_dir):
-    """r17 swap EXECUTED (banked r16): the registered q_text_repetition
-    is now the hashed-gram form; it must stay row-identical to the
-    retained string-gram reference on the corpus AND on planted edge
-    docs (gramless 0/1-token docs -> frac 0; a fully repetitive doc; a
-    doc where the top gram ties).  Any corpus divergence would mean a
-    within-doc xxhash64 gram collision (the documented caveat) -- and
-    per ADVICE r16 the collision check is also made DIRECT, not just
-    via downstream row equality: the distinct (doc_id, gram) table must
-    have the same cardinality under string keys and hash keys (a
+    """The registered q_text_repetition counts hashed 2-gram keys.  Any
+    corpus divergence from counting the gram strings would mean a
+    within-doc xxhash64 gram collision (the documented caveat), so the
+    collision check is made DIRECT: the distinct (doc_id, gram) table
+    must have the same cardinality under string keys and hash keys (a
     within-doc collision strictly shrinks the hashed one).  Both gram
     expressions are imported from the implementation so this pins what
-    ships."""
+    ships.  Planted edge docs (gramless 0/1-token docs -> frac 0; a
+    fully repetitive doc; a doc where the top gram ties) must match the
+    DuckDB oracle and the literal values."""
     from financialtransactionmonitoringsystem_spark.operators import text
     from financialtransactionmonitoringsystem_spark.tables import load_table
-
-    reg = text.q_text_repetition(spark, sf_dir)
-    ref = text.repetition_stringgram(spark, sf_dir)
-    assert reg.exceptAll(ref).count() == 0
-    assert ref.exceptAll(reg).count() == 0
-    assert reg.count() > 0
+    from tests.compare import assert_frames_match, duck_over
 
     # ADVICE r16: direct within-doc collision detector -- distinct
     # (doc_id, gram) cardinality must agree between key representations
@@ -1782,12 +1732,15 @@ def test_repetition_hashed_equals_stringgram_reference(spark, sf_dir):
     try:
         (spark.createDataFrame(planted, "doc_id long, text string")
          .write.mode("overwrite").parquet(f"{tmp}/documents.parquet"))
-        a = sorted(map(tuple, text.q_text_repetition(spark, tmp).collect()))
-        b = sorted(map(tuple,
-                       text.repetition_stringgram(spark, tmp).collect()))
+        got = text.q_text_repetition(spark, tmp)
+        assert_frames_match(
+            got.toPandas(),
+            duck_over(tmp, "documents").execute(
+                text.ORACLES["q_text_repetition"]).df(),
+            "q_text_repetition[planted]")
+        a = sorted(map(tuple, got.collect()))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    assert a == b
     by_id = dict((r[0], r) for r in a)
     assert by_id[1][1] == 0 and by_id[1][3] == 0.0      # gramless
     assert by_id[3][2] == 4 and by_id[3][4] is True     # 'a a' x4 of 4
@@ -1795,69 +1748,38 @@ def test_repetition_hashed_equals_stringgram_reference(spark, sf_dir):
 
 
 def test_novelty_hashed_fps_equals_stringgram_reference(spark, sf_dir):
-    """r17 in-window swap (q_text_novelty is r14-attested): the novelty
-    fingerprint is now the chained token hash.  The operator was
-    ALREADY fingerprint-based, so the swap is invisible to the output
-    absent collisions -- pinned two ways: (1) q_text_novelty run with
-    the shipped fps must be row-identical to a run with the retained
-    string-gram reference fps swapped in (the whole composition --
-    ref build, bloom, probe -- exercised both ways); (2) the direct
-    collision detector: distinct (doc_id, fingerprint) cardinality
-    must agree between the two hash definitions (a within-doc
-    collision strictly shrinks one of them)."""
+    """The novelty fingerprint is the chained token hash.  The operator
+    is fingerprint-based, so the hash is invisible to the output absent
+    collisions -- pinned by the direct collision detector: the distinct
+    fingerprint count must equal the distinct TRUE gram count.
+    Novelty's collision exposure is cross-doc (a candidate gram aliasing
+    a distinct reference gram fabricates n_seen), so the count is
+    compared over the whole corpus, not per doc -- ANY two distinct
+    grams aliasing anywhere shrinks the hashed count."""
     from financialtransactionmonitoringsystem_spark.operators import text
     from financialtransactionmonitoringsystem_spark.tables import load_table
 
-    reg = text.q_text_novelty(spark, sf_dir)
-    orig = text._novelty_fps
-    text._novelty_fps = text._novelty_fps_stringgram
-    try:
-        ref = text.q_text_novelty(spark, sf_dir)
-        assert reg.exceptAll(ref).count() == 0
-        assert ref.exceptAll(reg).count() == 0
-        assert reg.count() > 0
-    finally:
-        text._novelty_fps = orig
-
-    # CORPUS-WIDE detector (review r17): novelty's collision exposure
-    # is cross-doc (a candidate gram aliasing a distinct reference
-    # gram fabricates n_seen), so the distinct-fingerprint count is
-    # compared over the whole corpus, not per doc -- ANY two distinct
-    # grams aliasing anywhere shrinks the hashed count.
-    # ... and against TRUE gram strings, so collisions in EITHER hash
-    # definition (old string-hash included) are caught, not just
-    # disagreements between the two.
     docs = load_table(spark, sf_dir, "documents")
     n_true = (docs.select(F.explode(F.array_distinct(
         text._wordgrams(F.col("text"), text.DECONTAM_NGRAM))).alias("g"))
         .select("g").distinct().count())
     n_hash = (docs.select(F.explode(text._novelty_fps()).alias("g"))
               .select("g").distinct().count())
-    n_str = (docs.select(F.explode(text._novelty_fps_stringgram())
-                         .alias("g")).select("g").distinct().count())
-    assert n_true == n_hash == n_str and n_true > 0, (
+    assert n_true == n_hash and n_true > 0, (
         f"corpus-level collision: {n_true} true grams vs "
-        f"{n_str} string-hashed vs {n_hash} chain-hashed fingerprints")
+        f"{n_hash} chain-hashed fingerprints")
 
 
 def test_align_hashed_equals_stringgram_reference(spark, sf_dir):
-    """r17 in-window swap (q_align_crosslingual is r14-attested): the
-    alignment gram key is now the chained token hash.  The gram is
-    key-only (df aggregate + band self-join), so equality with the
-    retained string-gram reference holds exactly when no CORPUS-LEVEL
-    collision exists -- wider scope than the per-doc repetition
-    caveat, so the direct detector here is corpus-wide: the number of
-    distinct grams across the whole corpus must agree between
-    representations (any two grams aliasing anywhere shrinks the
-    hashed count)."""
+    """The alignment gram key is the chained token hash.  The gram is
+    key-only (df aggregate + band self-join), so the output equals a
+    string-gram run exactly when no CORPUS-LEVEL collision exists --
+    wider scope than the per-doc repetition caveat, so the direct
+    detector here is corpus-wide: the number of distinct grams across
+    the whole corpus must agree between representations (any two grams
+    aliasing anywhere shrinks the hashed count)."""
     from financialtransactionmonitoringsystem_spark.operators import text
     from financialtransactionmonitoringsystem_spark.tables import load_table
-
-    reg = text.q_align_crosslingual(spark, sf_dir)
-    ref = text.align_stringgram(spark, sf_dir)
-    assert reg.exceptAll(ref).count() == 0
-    assert ref.exceptAll(reg).count() == 0
-    assert reg.count() > 0  # 20 pairs at sf0.001 -- never vacuous
 
     docs = load_table(spark, sf_dir, "documents")
     n_str = (docs.select(F.explode(F.array_distinct(
@@ -1872,63 +1794,40 @@ def test_align_hashed_equals_stringgram_reference(spark, sf_dir):
 
 
 def test_decontam_hashed_equals_stringgram_reference(spark, sf_dir):
-    """r17 swap EXECUTED (banked in-session as decontam_hashed_twin,
-    executed in the optimization round where the driver re-oracles the
-    full registry): the registered q_text_decontam now chains the
-    token hash; it must stay row-identical to the retained string-gram
-    reference (plan identical, only the gram fingerprint differs --
-    the operator is already fingerprint-based, so equality holds
-    exactly when no cross-representation collision exists, which the
-    cardinality check asserts directly).  The composed child
-    q_text_decontam_bylang was oracle-MATCHed at sf0.01 + sf0.1 in the
-    swap session per the judge's contract."""
+    """The registered q_text_decontam chains the token hash; the
+    operator is fingerprint-based, so its output equals a string-gram
+    run exactly when no collision exists, which the cardinality check
+    asserts directly.  Decontam joins grams ACROSS docs (train vs
+    bench), so a collision between a train gram and a distinct bench
+    gram fabricates a hit -- the distinct gram counts are compared over
+    the whole corpus, where ANY aliasing shrinks the hashed side."""
     from financialtransactionmonitoringsystem_spark.operators import text
     from financialtransactionmonitoringsystem_spark.tables import load_table
 
-    reg = text.q_text_decontam(spark, sf_dir)
-    twin = text.decontam_stringgram(spark, sf_dir)
-    assert reg.exceptAll(twin).count() == 0
-    assert twin.exceptAll(reg).count() == 0
-    assert reg.count() > 0
-
-    # CORPUS-WIDE detector (review r17): decontam joins grams ACROSS
-    # docs (train vs bench), so a collision between a train gram and a
-    # distinct bench gram fabricates a hit -- compare distinct gram
-    # counts over the whole corpus, where ANY aliasing shrinks the
-    # hashed side.
     docs = load_table(spark, sf_dir, "documents")
     n_true = (docs.select(F.explode(
         text._wordgrams(F.col("text"), text.DECONTAM_NGRAM)).alias("g"))
         .select("g").distinct().count())
-    str_fps = F.transform(text._wordgrams(F.col("text"),
-                                          text.DECONTAM_NGRAM),
-                          lambda g: F.xxhash64(g))
-    n_str = (docs.select(F.explode(str_fps).alias("g"))
-             .select("g").distinct().count())
     n_hash = (docs.select(
         F.explode(text._hashed_wordgrams(F.col("text"),
                                          text.DECONTAM_NGRAM)).alias("g"))
         .select("g").distinct().count())
-    assert n_true == n_str == n_hash and n_true > 0, (
+    assert n_true == n_hash and n_true > 0, (
         f"corpus-level 5-gram collision: {n_true} true grams vs "
-        f"{n_str} string-hashed vs {n_hash} chain-hashed")
+        f"{n_hash} chain-hashed")
 
 
-def test_udtf_gaps_jvm_equals_pandas_reference(spark, sf_dir):
-    """r17 optimization-round swap: q_udtf_gaps is now the JVM
-    lag-window + max/percentile aggregate; it must stay row-identical
-    to the retained grouped-map pandas reference (which remains the
-    module's applyInPandas surface attestation).  Exactness rests on
+def test_udtf_gaps_column_types(spark, sf_dir):
+    """q_udtf_gaps is the JVM lag-window + max/percentile aggregate; its
+    rows are test_oracle_parity[q_udtf_gaps].  Exactness rests on
     integer-microsecond gaps being < 2^52 so the even-count median
-    interpolation is exact in double whatever the op order -- a
-    corpus whose gaps ever crossed that bound would diverge here
-    loudly."""
+    interpolation is exact in double whatever the op order -- a corpus
+    whose gaps ever crossed that bound would diverge there loudly.
+    This test pins the column types the comparison cannot see (it
+    compares values, so a long read back as a double would pass)."""
     from financialtransactionmonitoringsystem_spark.operators import udfs
 
     reg = udfs.q_udtf_gaps(spark, sf_dir)
-    ref = udfs.udtf_gaps_pandas(spark, sf_dir)
-    assert reg.exceptAll(ref).count() == 0
-    assert ref.exceptAll(reg).count() == 0
     assert reg.count() > 0
     # schema contract: the oracle compares bigint/bigint/bigint/double
     assert [f.dataType.simpleString() for f in reg.schema.fields] == \

@@ -8,7 +8,7 @@ import pytest
 
 from financialtransactionmonitoringsystem_spark import queries as registry
 
-from .compare import assert_frames_match
+from .compare import assert_frames_match, duck_over
 
 ALL = registry.all_queries()
 ORACLES = registry.all_oracles()
@@ -120,7 +120,6 @@ def test_stream_state_twin_tiebreak_on_planted_tied_timestamps(spark,
     plants a tie where the ORDER decides the reported crossing total
     (both rows individually cross the threshold): the registered form
     picks the LOWER event_id first, and the DuckDB oracle agrees."""
-    import duckdb
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -148,10 +147,7 @@ def test_stream_state_twin_tiebreak_on_planted_tied_timestamps(spark,
             ALL["q_stream_state"](spark, d).collect()}
     assert twin == {(1, 1200.0), (2, 1100.0)}
 
-    con = duckdb.connect()
-    con.execute("SET TimeZone='UTC'")
-    con.execute(f"CREATE VIEW events AS SELECT * FROM "
-                f"read_parquet('{d}/events.parquet')")
+    con = duck_over(d, "events")
     oracle = {(r[0], r[2]) for r in con.execute(
         batch_twins.ORACLES["q_stream_state"]).fetchall()}
     assert oracle == twin

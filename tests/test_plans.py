@@ -86,9 +86,9 @@ def test_codegen_present_in_hot_paths(spark, sf_dir):
 
 def test_dedup_verify_joins_never_force_broadcast(spark, sf_dir):
     """Round-2 VERDICT #2: with stats-driven broadcasting disabled, the
-    minhash-verify and embed near-dup plans must contain no
-    BroadcastExchange at all -- proving no hint ships the corpus token /
-    embedding table to every executor (OOM at 10^9 docs).  A stats-driven
+    minhash-verify plan must contain no BroadcastExchange at all --
+    proving no hint ships the corpus token table to every executor (OOM
+    at 10^9 docs).  A stats-driven
     broadcast chosen by Catalyst at test scale would reverse itself as the
     stats grow; a hint would not, so hints are what this test bans."""
     from financialtransactionmonitoringsystem_spark.operators import dedup
@@ -98,18 +98,8 @@ def test_dedup_verify_joins_never_force_broadcast(spark, sf_dir):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        # The ngram ground truth joined the list in r7 (retired from the
-        # registry in r12, kept module-private): its self-join dropped
-        # the forced corpus broadcast (VERDICT r6 #1) and must stay
-        # hint-free like the verify joins.
-        # embed_pairs_fold is q_dedup_embed's pre-r14 join form, kept
-        # module-level precisely so this blocked-self-join plan shape
-        # stays pinned (the registered form is now an applyInPandas
-        # grouped-map with no join to hint).
-        for q in (dedup.q_dedup_minhash, dedup.embed_pairs_fold,
-                  dedup._dedup_ngram):
-            plan = P.plan_str(q(spark, sf_dir), "simple")
-            assert "BroadcastExchange" not in plan, plan
+        plan = P.plan_str(dedup.q_dedup_minhash(spark, sf_dir), "simple")
+        assert "BroadcastExchange" not in plan, plan
         # The band-bucket candidate join is materialized inside
         # q_dedup_minhash; check its lazy plan too.
         docs = load_table(spark, sf_dir, "documents")
@@ -882,3 +872,63 @@ def test_engine_has_no_import_guards():
             if any(isinstance(t, ast.Name) and t.id in guarded for t in types):
                 offenders.append(f"{f.relative_to(root)}:{node.lineno}")
     assert not offenders, offenders
+
+
+# Spark references kept for keys that have no DuckDB oracle, and the
+# tests' only routes into planted corpora and non-default layouts.
+_KEPT_TEST_ONLY = {"_band_join_distinct", "_chunk_join_distinct",
+                   "prefix_candidates", "lsh_candidates", "simhash_pairs"}
+
+
+def test_every_engine_def_is_reached():
+    """Every top-level function and class in the engine package is
+    reached from non-test code: the package's own module-level code,
+    ``perfbench/``, ``tools/``, ``bench.py`` or ``__spark_entry__.py``,
+    following names through the bodies of reached definitions.  ``q_*``
+    functions are reached (each module registers them through its
+    ``QUERIES`` global), as are the kept references above and
+    ``plans/inspect.py``.  A key's reference is its DuckDB oracle, so
+    an engine form that only a test calls is dead code."""
+    import financialtransactionmonitoringsystem_spark as pkg
+
+    def names(node):
+        out = set()
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.add(n.attr)
+            elif isinstance(n, ast.alias):
+                out.add(n.name.rsplit(".", 1)[-1])
+        return out
+
+    root = pathlib.Path(pkg.__file__).parent
+    repo = root.parent
+    defs, roots = {}, set(_KEPT_TEST_ONLY)
+    for f in sorted(root.rglob("*.py")):
+        tree = ast.parse(f.read_text(), str(f))
+        if f == root / "plans" / "inspect.py":
+            roots |= names(tree)
+            continue
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)):
+                defs.setdefault(node.name, set()).update(names(node))
+                if node.name.startswith("q_"):
+                    roots.add(node.name)
+            else:
+                roots |= names(node)
+    outside = [*sorted((repo / "perfbench").glob("*.py")),
+               *sorted((repo / "tools").glob("*.py")),
+               repo / "bench.py", repo / "__spark_entry__.py"]
+    for f in outside:
+        if not f.name.startswith("test_"):
+            roots |= names(ast.parse(f.read_text(), str(f)))
+    reached, todo = set(), roots & set(defs)
+    while todo:
+        n = todo.pop()
+        reached.add(n)
+        todo |= (defs[n] & set(defs)) - reached
+    unreached = sorted(set(defs) - reached)
+    assert not unreached, unreached
+

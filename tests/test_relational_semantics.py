@@ -217,21 +217,22 @@ def test_dedup_keep_best_prefers_quality_then_low_doc_id(spark):
     assert row.n_dups == 3 and row.keep_doc == 10  # quality tie -> min doc_id
 
 
-def test_win_range_bucketed_equals_window_form(spark, sf_dir):
+def test_win_range_bucketed_equals_window_form(spark, duck, sf_dir):
     """The bucketed value-range decomposition (the registered
-    q_win_range plan since round 10) must be row-identical to the
-    retained monolithic RANGE window at every legal bucket count,
-    including m=1 (no middle buckets) and a width where full middle
-    buckets actually occur."""
+    q_win_range plan) must be row-identical to the direct RANGE window
+    of its DuckDB oracle at every legal bucket count, including m=1 (no
+    middle buckets) and a width where full middle buckets actually
+    occur."""
     from financialtransactionmonitoringsystem_spark.operators import extras
 
-    want = sorted(map(tuple,
-                      extras._win_range_monolithic(spark, sf_dir).collect()))
-    assert want
+    from .compare import assert_frames_match
+
+    want = duck.execute(extras.ORACLES["q_win_range"]).df()
+    assert len(want)
     for m in (1, 4, 10):
-        got = sorted(map(tuple,
-                         extras.win_range_bucketed(spark, sf_dir, m).collect()))
-        assert got == want, f"m={m}"
+        assert_frames_match(
+            extras.win_range_bucketed(spark, sf_dir, m).toPandas(), want,
+            f"win_range_bucketed[m={m}]")
     import pytest
 
     with pytest.raises(ValueError):
@@ -299,35 +300,31 @@ def test_win_range_bucketed_property_vs_brute_force(spark):
 
 
 def test_cte_recursive_doubling_equals_linear_form(spark, sf_dir):
-    """The registered q_cte_recursive (the recursive-DOUBLING month
-    spine since the r14 swap: O(log months) recursion steps -- each
-    work-table row j >= 1 emits offsets 2j and 2j+1, anchor {0, 1}, so
-    every offset is produced exactly once) must be row-identical to the
-    linear WITH RECURSIVE form it replaced (kept module-level as
-    cte_recursive_linear), including on a SINGLE-month frame where the
-    doubling anchor must not overrun (off=1 excluded by the bound)."""
+    """The registered q_cte_recursive (a base-B offset generator:
+    O(log months) recursion steps, every offset produced exactly once)
+    must be row-identical to the linear WITH RECURSIVE form of its
+    DuckDB oracle on edge frames: a SINGLE month, where the anchor must
+    not overrun (off=1 excluded by the bound), and an EMPTY orders
+    table.  The corpus rows are test_oracle_parity[q_cte_recursive]."""
     from financialtransactionmonitoringsystem_spark.operators import extras
 
     import shutil
     import tempfile
 
-    want = sorted(map(tuple,
-                      extras.cte_recursive_linear(spark, sf_dir).collect()))
-    got = sorted(map(tuple, extras.q_cte_recursive(spark, sf_dir).collect()))
-    assert got == want and len(got) > 1
+    from .compare import duck_over
 
     # edge frames drive the MODULE FUNCTION (not a pasted SQL copy that
-    # could drift -- review finding) via temp parquet corpora; both
-    # forms re-register the 'orders' view themselves on the next call,
-    # but re-register the real one afterwards anyway so this test
-    # cannot leak a tiny view into the session (review finding)
+    # could drift -- review finding) via temp parquet corpora; the query
+    # re-registers the 'orders' view itself on the next call, but the
+    # real one is re-registered afterwards anyway so this test cannot
+    # leak a tiny view into the session (review finding)
     schema = "o_orderkey long, o_orderdate date, o_totalprice double"
     cases = [
         # single month: anchor off=1 excluded by the bound -> one row
         ([(1, "1995-03-15", 10.0), (2, "1995-03-28", 20.0)],
          [("1995-03", 2)]),
-        # EMPTY orders: linear anchor emits one NULL-month row; the
-        # doubling anchor's unconditional off=0 must match it
+        # EMPTY orders: the linear anchor emits one NULL-month row; the
+        # offset anchor's unconditional off=0 must match it
         ([], [(None, 0)]),
     ]
     tmp = tempfile.mkdtemp(prefix="cte_dbl_")
@@ -338,8 +335,8 @@ def test_cte_recursive_doubling_equals_linear_form(spark, sf_dir):
                                    schema.replace(" date,", " string,"))
              .withColumn("o_orderdate", F.col("o_orderdate").cast("date"))
              .write.parquet(f"{d}/orders.parquet"))
-            lin = sorted(map(tuple,
-                             extras.cte_recursive_linear(spark, d).collect()))
+            lin = sorted(duck_over(d, "orders").execute(
+                extras.ORACLES["q_cte_recursive"]).fetchall())
             dbl = sorted(map(tuple,
                 extras.q_cte_recursive(spark, d).collect()))
             assert dbl == lin == expect, (i, dbl, lin, expect)
@@ -350,28 +347,21 @@ def test_cte_recursive_doubling_equals_linear_form(spark, sf_dir):
         register_views(spark, sf_dir, ("orders",))
 
 
-def test_fn_json_tuple_equals_multiprobe_form(spark, sf_dir):
-    """r16 in-window swap insurance: the registered q_fn_json (one
-    json_tuple streaming parse for both paths) must be row-identical to
-    the per-path get_json_object form it replaced (kept module-level as
-    fn_json_multiprobe), on the corpus AND on a planted table of the
-    JSON shapes where single-parse and per-path extraction could
-    plausibly disagree (missing key, malformed JSON, NULL props, extra
-    keys, nested object, k=null).  The planted half drives the SHIPPED
-    projection (scalar.json_props_extract), not an inline copy that
-    could drift (review finding).  The one KNOWN divergence --
+def test_fn_json_tuple_equals_multiprobe_form(spark):
+    """The registered q_fn_json (one json_tuple streaming parse for both
+    paths) must be row-identical to per-path get_json_object extraction
+    on a planted table of the JSON shapes where single-parse and
+    per-path extraction could plausibly disagree (missing key,
+    malformed JSON, NULL props, extra keys, nested object, k=null).
+    The corpus rows are test_oracle_parity[q_fn_json].  The test drives
+    the SHIPPED projection (scalar.json_props_extract), not an inline
+    copy that could drift (review finding).  The one KNOWN divergence --
     duplicate-key JSON, where json_tuple keeps the LAST occurrence
     (serde_json's behavior, i.e. the reference's) while
     get_json_object keeps the FIRST -- is pinned explicitly below so a
     future corpus hash-fail on this key has a signposted first
     suspect."""
     from financialtransactionmonitoringsystem_spark.functions import scalar
-
-    old = scalar.fn_json_multiprobe(spark, sf_dir)
-    new = scalar.q_fn_json(spark, sf_dir)
-    assert old.exceptAll(new).count() == 0
-    assert new.exceptAll(old).count() == 0
-    assert new.count() > 0
 
     planted = [
         (1, '{"k": 7}'), (2, '{"k": 7, "extra": "x"}'), (3, '{}'),
@@ -389,8 +379,8 @@ def test_fn_json_tuple_equals_multiprobe_form(spark, sf_dir):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect()))
 
     # the duplicate-key divergence, pinned as a DIVERGENCE: last-wins
-    # for the shipped json_tuple form, first-wins for the multiprobe
-    # reference and the DuckDB oracle (json_extract_string)
+    # for the shipped json_tuple form, first-wins for get_json_object
+    # and the DuckDB oracle (json_extract_string)
     dup = spark.createDataFrame([(1, '{"k": 7, "k": 8}')],
                                 "event_id long, props string")
     assert scalar.json_props_extract(dup).collect()[0].k == 8
@@ -398,27 +388,19 @@ def test_fn_json_tuple_equals_multiprobe_form(spark, sf_dir):
                       .alias("k")).collect()[0].k == 7
 
 
-def test_fn_decimal_cents_equals_decimal_types_reference(spark, sf_dir):
-    """r17 optimization-round swap insurance: the registered
-    q_fn_decimal (integer-cents ingress, two-level long-then-decimal
-    aggregation) must be row-identical -- all six aggregate doubles
-    bit-for-bit -- to the retained DecimalType(18,2) form
-    (scalar.fn_decimal_decimal_types), on the corpus AND on a planted
-    table of every money shape where the cents ingress and the
-    decimal(18,2) cast could plausibly disagree: >2-decimal values,
+def test_fn_decimal_cents_equals_decimal_types_reference(spark):
+    """The registered q_fn_decimal takes money in as integer cents; the
+    cents ingress must equal 100 x the decimal(18,2) cast (the money
+    type of its DuckDB oracle) on a planted table of every money shape
+    where the two could plausibly disagree: >2-decimal values,
     the classic half-way float traps (1.005, 2.675 -- whose doubles sit
     BELOW the half-way point a naive round(x*100) would see after the
     multiply), negatives, zero, NULL, and values near the 10^9 money
-    scale.  The planted half drives the SHIPPED ingress expressions
+    scale.  The corpus rows are test_oracle_parity[q_fn_decimal].  The
+    test drives the SHIPPED ingress expressions
     (scalar.CENTS_PRICE_EXPR / CENTS_DISC_EXPR), not an inline copy
     that could drift (the TRY_CAST_INT_SHAPE lesson)."""
     from financialtransactionmonitoringsystem_spark.functions import scalar
-
-    new = scalar.q_fn_decimal(spark, sf_dir)
-    old = scalar.fn_decimal_decimal_types(spark, sf_dir)
-    assert new.exceptAll(old).count() == 0
-    assert old.exceptAll(new).count() == 0
-    assert new.count() > 0
 
     prices = [0.0, 0.01, -0.01, 1.005, 2.675, 1.0049999, 123.456,
               123.454, 99999.99, 1234567.891, 999999999.995, -4.35,
@@ -450,20 +432,3 @@ def test_fn_decimal_cents_equals_decimal_types_reference(spark, sf_dir):
         "(pc is distinct from cast(p18 * 100 as bigint)) or "
         "(dc is distinct from cast(d18 * 100 as bigint))")
     assert diverge.count() == 0, diverge.collect()
-
-
-def test_agg_stats_onepass_equals_windowed_form(spark, sf_dir):
-    """r16 in-window swap insurance: the registered q_agg_stats (one
-    groupBy pass, builtin exact percentile()) must produce the same
-    ROUNDED rows as the window-rank + lerp form it replaced (kept
-    module-level as agg_stats_windowed).  The unrounded percentiles
-    legitimately differ by ~1 ulp (two-coefficient interpolation at
-    pos=q*(n-1) vs 1-based lerp at q*(n-1)+1); the contract this test
-    pins is output equality after the 2dp floor-round, and the ORACLE's
-    bit-identity to the builtin is pinned separately by certify (the
-    oracle was rewritten into the builtin's op order with the swap)."""
-    from financialtransactionmonitoringsystem_spark.operators import aggregates
-
-    old = sorted(map(tuple, aggregates.agg_stats_windowed(spark, sf_dir).collect()))
-    new = sorted(map(tuple, aggregates.q_agg_stats(spark, sf_dir).collect()))
-    assert old == new and len(new) >= 3
