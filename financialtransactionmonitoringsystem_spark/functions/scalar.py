@@ -186,11 +186,11 @@ def q_fn_cond(spark: SparkSession, sf_dir: str) -> DataFrame:
 # representation), which a direct round(x * 100) would NOT be (the
 # pre-round multiply can cross a half-way boundary in double).
 #
-# The decimal hop is taken only on the AMBIGUOUS rows; everything else rounds in pure double/long math.
-# Spark's double->decimal cast goes through java.math.BigDecimal OF THE
-# SHORTEST DECIMAL REPRESENTATION (Double.toString) and was the
-# dominant per-row cost left in q_fn_decimal (5.7x the all-double floor
-# at 50x).  Derivation of the guard: let v be the shortest-repr value
+# The decimal hop is taken only on the AMBIGUOUS rows; everything else
+# rounds in pure double/long math.  Spark's double->decimal cast goes
+# through java.math.BigDecimal OF THE SHORTEST DECIMAL REPRESENTATION
+# (Double.toString) and was the dominant per-row cost left in
+# q_fn_decimal (5.7x the all-double floor at 50x).  Derivation of the guard: let v be the shortest-repr value
 # of double x (|v - x| <= ulp(x)/2) and y = |x| * 100.0 as computed
 # (one more rounding, ulp(y)/2).  Then |y - 100|v|| <= 2*ulp(y), and
 # HALF_UP(|v|, 2) = floor(100|v| + 0.5) differs from floor(y + 0.5)

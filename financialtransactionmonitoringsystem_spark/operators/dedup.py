@@ -843,9 +843,9 @@ def _band_join(exploded: DataFrame) -> DataFrame:
     shared band.  Exactly one band survives per candidate pair (the
     minimum always exists and is unique), so the output is
     duplicate-free BY CONSTRUCTION -- set-identical to the distinct
-    form (:func:`_band_join_distinct`, this key's reference, since
-    ``q_dedup_minhash`` has no oracle) with zero post-join exchange on
-    the PAIR table.
+    form (:func:`_band_join_distinct`, the reference of
+    ``q_dedup_minhash``, which has no oracle) with zero post-join
+    exchange on the PAIR table.
 
     The probe side rides :func:`_pinned_repartition` (rationale and
     both measured hazards documented there) ON ``doc_id``, NOT on the
@@ -1108,8 +1108,9 @@ def _chunk_join(ex: DataFrame, max_hamming: int = 3) -> DataFrame:
     extra column -- the chunk layout comes from the {bits, n_chunks}
     column metadata :func:`_chunk_table` stamps on ``chunk``.  Output
     rows are identical to the distinct form (:func:`_chunk_join_distinct`,
-    the reference, since ``q_dedup_simhash`` has no oracle): hamming is
-    a function of the pair, and exactly one chunk is the pair's minimum.
+    the reference of ``q_dedup_simhash``, which has no oracle): hamming
+    is a function of the pair, and exactly one chunk is the pair's
+    minimum.
 
     The probe side rides :func:`_pinned_repartition` (rationale and
     both measured hazards documented there) on the JOIN KEYS, unlike

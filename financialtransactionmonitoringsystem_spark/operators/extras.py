@@ -196,8 +196,9 @@ def q_cte_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     A RECURSIVE base-B offset generator (B = :data:`CTE_BRANCH`).
     Spark executes one job per recursion step, so the literal linear
     spine (the DuckDB oracle's form) would pay ~one scheduler
-    round-trip per month of history.  The wide form keeps the WITH RECURSIVE surface
-    attestation (anchor + recursive member + work-table semantics) but
+    round-trip per month of history.  The wide form keeps the WITH
+    RECURSIVE surface attestation (anchor + recursive member +
+    work-table semantics) but
     each step emits offsets ``B*j + d`` (d in 0..B-1) from every
     work-table row ``j >= 1`` (anchor {0..B-1}), so every integer in
     [0, n] is produced exactly once -- n >= B has the unique parent
