@@ -10,6 +10,7 @@ can't achieve that, it should not declare an oracle.
 from __future__ import annotations
 
 import math
+import os
 from datetime import date, datetime
 
 import pandas as pd
@@ -71,8 +72,6 @@ def duck_over(d: str, *tables: str):
     """A DuckDB connection with one view per planted table under ``d``
     (``<d>/<table>.parquet``, a single file or a Spark-written directory
     of part files), in UTC like the suite's ``duck`` fixture."""
-    import os
-
     import duckdb
 
     con = duckdb.connect()
